@@ -59,7 +59,8 @@ object BenchSession {
     // `true` (the Spark default) coalesces only down to minPartitionSize
     // to maximize parallelism; `false` respects advisoryPartitionSizeInBytes
     // — the busy-cluster production recommendation. Default kept at the
-    // Spark default; see OPTIMIZATION_r16.md for the measured comparison.
+    // Spark default; BENCH_NOTES.md, r16 section, has the measured
+    // comparison.
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
       sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
     .config("spark.sql.session.timeZone", "UTC")

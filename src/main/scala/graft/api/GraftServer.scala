@@ -26,15 +26,17 @@ import graft.ingest.Upsert
   *     first query
   *   - `POST /query/sql`  {"queries": ["SELECT ..."]} → AQLResponse JSON
   *   - `POST /data/{table}`  JSON array of row objects → PK upsert into
-  *     the table's LIVE overlay; ingested rows are visible to queries
+  *     the table's overlay; ingested rows are visible to queries
   *     immediately (the reference's live-batch freshness,
   *     memstore/ingestion.go:25-76)
   *   - `GET /schema/tables` and `GET /schema/tables/{t}` → table metadata
   *
-  * The live overlay holds the upserted view per table in memory (cached),
-  * seeded from the catalog's parquet loader — the Spark analogue of live
-  * batches layered over archive batches. Archiving the overlay back to
-  * day-partitioned parquet is [[graft.ingest.Archiver]]'s job.
+  * The overlay holds only the rows ingested since the table's last drain,
+  * PK-deduped and checkpointed in memory — the reference's live batches.
+  * Every query applies it, PK-overwrite, over the layer beneath: the
+  * drained archive, else the catalog's loader (see [[layeredLoad]]). A
+  * drain folds the overlay into day-partitioned parquet
+  * ([[graft.ingest.Archiver]], [[graft.ingest.Backfill]]) and empties it.
   */
 /** @param schemaSyncDir shared directory for cross-instance schema
   *   propagation (see [[SchemaSync]]): mutations publish the schema-store
@@ -60,7 +62,7 @@ import graft.ingest.Upsert
   */
 /** @param journalDir per-table upsert journal directory (None = no
   *   journal): every `/data/{table}` batch appends here BEFORE it is
-  *   applied to the live overlay and replays at construction, so
+  *   applied to the overlay and replays at construction, so
   *   HTTP-ingested rows survive a crash/restart exactly like the
   *   reference's redo log (redolog/file_redolog_manager.go,
   *   memstore/recovery.go); a successful drain truncates the table's
@@ -88,10 +90,9 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
   require(serverThreads > 0, s"serverThreads $serverThreads must be positive")
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private val live = TrieMap.empty[String, DataFrame]
   private val seqCounter = new AtomicLong(0)
-  /** Tables whose live overlay was drained to a day-partitioned archive:
-    * queries answer from the archive directory until new rows arrive.
+  /** Tables whose overlay was drained to a day-partitioned archive:
+    * queries read the archive directory beneath any newer overlay.
     */
   private val drained = TrieMap.empty[String, String]
   /** Metastore for tables created through the schema mutation API. */
@@ -231,132 +232,137 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     */
   def pendingDays(table: String): Seq[String] =
     pending.get(table).flatMap { delta =>
-      catalog(table).timeColumn.map { tc =>
-        import org.apache.spark.sql.functions.{col, date_format, timestamp_seconds}
-        val ts =
-          if (delta.schema(tc).dataType == org.apache.spark.sql.types.TimestampType)
-            col(tc)
-          else timestamp_seconds(col(tc))
-        delta.select(date_format(ts, "yyyy-MM-dd").as("d"))
-          .distinct().collect().map(_.getString(0)).toSeq
-      }
+      catalog(table).timeColumn.map(distinctDays(delta, _))
     }.getOrElse(Nil)
 
-  /** Layered load: live overlay → drained archive → base loader. The
-    * archive read merges per-file schemas — day partitions written before
-    * a column add lack the new column, and the default single-footer
-    * schema inference would silently null it out everywhere.
+  private def distinctDays(df: DataFrame, timeCol: String): Seq[String] =
+    df.select(graft.ingest.Archiver.dayOf(df, timeCol).as("d")).distinct()
+      .collect().map(_.getString(0)).toSeq
+
+  /** Layered load: the pending overlay applied over the layer beneath it
+    * — the drained archive, else the base loader. The archive read merges
+    * per-file schemas — day partitions written before a column add lack
+    * the new column, and the default single-footer schema inference would
+    * silently null it out everywhere.
     *
-    * SLICE-SERVED tables never serve the materialized live view: that
-    * view bakes the assignment-filtered base scan in at INGEST time
-    * (localCheckpoint), so a rebalance moving days between members would
-    * leave this member double-serving its moved days (and not serving
-    * its gained ones) until its next ingest — the exactly-once violation
-    * ClusterSoakSpec caught. Instead the PENDING DELTA applies over the
-    * base load PER QUERY: the base re-reads the assignment each time,
-    * and the delta is a small checkpointed frame whose PK anti-join
-    * broadcasts.
+    * A SLICE-SERVED table always layers over the base loader (see
+    * [[sliceServed]]): the base re-reads the assignment on every query, so
+    * a rebalance that moves days between members takes effect on the next
+    * query — a view built at ingest time would keep double-serving the
+    * moved days until the member's next ingest (the exactly-once violation
+    * ClusterSoakSpec caught).
+    *
+    * The overlay is a small checkpointed frame whose PK anti-join against
+    * the layer broadcasts. Where the layer carries the archive's `day`
+    * column, overlay rows get it too, computed from the time column: the
+    * load's schema never depends on whether rows are pending, so a query
+    * compiled just before an ingest still resolves `day` after it, and
+    * compiled time filters keep pruning day partitions (and filter the
+    * overlay rows by the same day bounds).
     */
   private def layeredLoad(name: String, base: SparkSession => DataFrame)
-      (s: SparkSession): DataFrame =
-    if (sliceServed.contains(name)) {
-      pending.get(name) match {
-        case Some(delta) =>
-          import org.apache.spark.sql.functions.{col, lit}
-          val fresh = base(s).drop(graft.ingest.Archiver.DayCol)
-          // schema drift between the delta's ingest and this query: a
-          // column added since null-fills on the delta side (the same
-          // reconciliation the next ingest would apply)
-          val present = delta.columns.toSet
-          val reconciled = fresh.columns.filterNot(present.contains)
-            .foldLeft(delta) { (acc, c) =>
-              acc.withColumn(c, lit(null).cast(fresh.schema(c).dataType))
-            }
-          // delta rows for days a rebalance moved AWAY from this member:
-          // the new owner serves the day's ARCHIVED copy, so serving a
-          // delta row whose PK exists there would answer it twice — but a
-          // delta row whose PK is ABSENT from the shared copy (a stranded
-          // INSERT, or a whole overlay-only day no drain has landed yet)
-          // is the only copy in the universe and excluding it would be a
-          // hard undercount until the handoff drain (ClusterSoakSpec seed
-          // 0x1111 caught exactly that). So moved-day delta rows serve
-          // IFF their PK is absent from the shared archive's copy of
-          // those days (one day-pruned anti-join, only in the transient
-          // rebalance→handoff window; zero cost otherwise). Updates to
-          // moved archived days defer to the new owner's copy: count
-          // exact at every instant, the new VALUE lands at the handoff
-          // drain (≤ one scheduler tick). Scoping happens BEFORE the
-          // upsert so an excluded row also stops suppressing base rows.
-          val scoped = sliceOwnedDay.get(name).flatMap(f => f()) match {
-            case Some(ownedPred) =>
-              catalog(name).timeColumn.fold(reconciled) { tc =>
-                import org.apache.spark.sql.functions.{date_format, timestamp_seconds}
-                val ts =
-                  if (reconciled.schema(tc).dataType ==
-                      org.apache.spark.sql.types.TimestampType) col(tc)
-                  else timestamp_seconds(col(tc))
-                val dayOf = date_format(ts, "yyyy-MM-dd")
-                // O(distinct delta days) driver-side ownership check keeps
-                // the filter a codegen'd isin instead of a UDF
-                val days = reconciled.select(dayOf.as("d")).distinct()
-                  .collect().map(_.getString(0)).toSeq
-                val moved = days.filterNot(ownedPred)
-                val pk = catalog(name).primaryKey
-                if (moved.isEmpty) reconciled
-                else (drained.get(name), pk.headOption) match {
-                  case (Some(sharedDir), Some(_)) =>
-                    val ownedRows = reconciled
-                      .where(dayOf.isin(days.filter(ownedPred): _*))
-                    val movedRows = reconciled.where(dayOf.isin(moved: _*))
-                    // the deferral decision below reads the shared copy's
-                    // PKs — note the marker FIRST so a backfill committing
-                    // around this read surfaces as a torn archive epoch
-                    // and the broker retries the wave (the new owner's
-                    // listing may sit on the other side of the commit)
-                    graft.exec.ArchiveEpoch.note(graft.ingest.DrainMarker
-                      .read(sharedDir, s.sparkContext.hadoopConfiguration))
-                    val sharedKeys = s.read.option("mergeSchema", "true")
-                      .parquet(sharedDir)
-                      .where(col(graft.ingest.Archiver.DayCol).isin(moved: _*))
-                      .select(pk.map(col): _*)
-                    ownedRows.unionByName(
-                      movedRows.join(sharedKeys, pk, "left_anti"))
-                  case _ =>
-                    // no shared archive / no PK: nothing to defer to —
-                    // the delta rows are the only copy, serve them all
-                    reconciled
-                }
-              }
-            case None => reconciled
-          }
-          val pk = catalog(name).primaryKey
-          if (pk.isEmpty) fresh.unionByName(scoped.select(fresh.columns.map(col): _*))
-          else graft.ingest.Upsert(fresh,
-            scoped.withColumn("__seq", lit(0L)), pk, "__seq")
-        case None => base(s)
+      (s: SparkSession): DataFrame = {
+    val under =
+      if (sliceServed.contains(name)) base(s)
+      else drained.get(name).fold(base(s))(dir =>
+        s.read.option("mergeSchema", "true").parquet(dir))
+    pending.get(name).fold(under)(overlay(name, under, _, s))
+  }
+
+  private def overlay(name: String, under: DataFrame, delta: DataFrame,
+      s: SparkSession): DataFrame = {
+    import graft.ingest.Archiver.DayCol
+    val td = catalog(name)
+    // schema drift null-fills whichever side lacks a column: one added
+    // since the delta's ingest, or one the delta carries that older
+    // archive files predate
+    def fill(df: DataFrame, from: DataFrame): DataFrame =
+      from.columns.filterNot(c => c == DayCol || df.columns.contains(c))
+        .foldLeft(df) { (acc, c) =>
+          acc.withColumn(c, lit(null).cast(from.schema(c).dataType))
+        }
+    val layer = fill(under, delta)
+    val scoped = scopeToOwnedDays(name, fill(delta, under), s)
+    val rows = td.timeColumn match {
+      case Some(tc) if layer.columns.contains(DayCol) =>
+        scoped.withColumn(DayCol, graft.ingest.Archiver.dayOf(scoped, tc))
+      case _ => scoped
+    }
+    // ingest requires a primary key and keeps the delta one row per key,
+    // so the upsert is one anti-join plus a union — no dedup shuffle. The
+    // hint is needed: the delta's JSON-read lineage carries no size
+    // estimate, and without it the anti-join would shuffle the archive
+    val pk = td.primaryKey
+    layer.join(broadcast(rows.select(pk.map(col): _*)), pk, "left_anti")
+      .unionByName(rows.select(layer.columns.map(col): _*))
+  }
+
+  /** A slice-served table's delta, minus the rows for days a rebalance
+    * moved AWAY from this member whose PK the shared archive already
+    * holds; every other table's delta as is.
+    *
+    * The new owner serves a moved day's ARCHIVED copy, so serving a delta
+    * row whose PK exists there would answer it twice — but a delta row
+    * whose PK is ABSENT from the shared copy (a stranded INSERT, or a
+    * whole overlay-only day no drain has landed yet) is the only copy in
+    * the universe, and excluding it would be a hard undercount until the
+    * handoff drain (ClusterSoakSpec seed 0x1111 caught exactly that). So
+    * moved-day delta rows serve IFF their PK is absent from the shared
+    * archive's copy of those days (one day-pruned anti-join, only in the
+    * transient rebalance→handoff window; zero cost otherwise). Updates to
+    * moved archived days defer to the new owner's copy: count exact at
+    * every instant, the new VALUE lands at the handoff drain (≤ one
+    * scheduler tick). Scoping happens BEFORE the upsert so an excluded
+    * row also stops suppressing base rows.
+    */
+  private def scopeToOwnedDays(name: String, delta: DataFrame,
+      s: SparkSession): DataFrame = {
+    val td = catalog(name)
+    val scoped = for {
+      ownedPred <- sliceOwnedDay.get(name).flatMap(f => f())
+      tc <- td.timeColumn
+      sharedDir <- drained.get(name)
+    } yield {
+      val dayOf = graft.ingest.Archiver.dayOf(delta, tc)
+      // O(distinct delta days) driver-side ownership check keeps the
+      // filter a codegen'd isin instead of a UDF
+      val days = distinctDays(delta, tc)
+      val moved = days.filterNot(ownedPred)
+      if (moved.isEmpty) delta
+      else {
+        // the deferral decision below reads the shared copy's PKs — note
+        // the marker FIRST so a backfill committing around this read
+        // surfaces as a torn archive epoch and the broker retries the
+        // wave (the new owner's listing may sit on the other side of the
+        // commit)
+        graft.exec.ArchiveEpoch.note(graft.ingest.DrainMarker
+          .read(sharedDir, s.sparkContext.hadoopConfiguration))
+        val sharedKeys = s.read.option("mergeSchema", "true")
+          .parquet(sharedDir)
+          .where(col(graft.ingest.Archiver.DayCol).isin(moved: _*))
+          .select(td.primaryKey.map(col): _*)
+        delta.where(dayOf.isin(days.filter(ownedPred): _*)).unionByName(
+          delta.where(dayOf.isin(moved: _*))
+            .join(sharedKeys, td.primaryKey, "left_anti"))
       }
-    } else live.get(name)
-      .orElse(drained.get(name).map(dir =>
-        s.read.option("mergeSchema", "true").parquet(dir)))
-      .getOrElse(base(s))
+    }
+    scoped.getOrElse(delta)
+  }
 
   /** TableDef for a runtime-created table: schema from the metastore, rows
-    * from the live overlay (empty before first ingestion). Fact tables
+    * from the overlay (empty before first ingestion). Fact tables
     * designate column 0 as the epoch time column (model.go:55-58).
     *
-    * A drained fact table with NO live overlay is flagged `dayPartitioned`
-    * and keeps the archive's day column through its load, so compiled time
-    * filters statically prune its day partitions — the archive scan path
-    * applies to runtime-created tables too. Once fresh rows arrive (which
-    * carry no day column), the flag drops until the next drain; built
-    * per-lookup, so each compile sees the current state.
+    * A drained fact table is flagged `dayPartitioned` and keeps the
+    * archive's day column through its load, so compiled time filters
+    * statically prune its day partitions — the archive scan path applies
+    * to runtime-created tables too.
     */
   private def createdTableDef(ts: AqlTableSchema): TableDef = {
     def emptyDf(s: SparkSession): DataFrame =
       s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         ts.sparkSchema)
-    val dayPart = ts.isFactTable && drained.contains(ts.name) &&
-      !live.contains(ts.name)
+    val dayPart = ts.isFactTable && drained.contains(ts.name)
     TableDef(ts.name, ts.isFactTable, ts.timeColumn,
       timestampColumns = Set.empty, primaryKey = ts.pkNames,
       dayPartitioned = dayPart,
@@ -378,28 +384,16 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       })
   }
 
-  /** Catalog whose loaders read through the live overlay, with runtime-
-    * created tables resolved dynamically from the schema store.
-    *
-    * EVERY lookup goes through the dynamic function so the TableDef
-    * reflects the table's CURRENT layering: a day-partitioned base table
-    * with a live overlay must compile WITHOUT day-widening (overlay rows
-    * carry no day column — a static `dayPartitioned` flag would silently
-    * filter fresh rows out of every time-filtered query), and the day
-    * column is dropped from layered loads while an overlay is active.
+  /** Catalog whose loaders read through the overlay ([[layeredLoad]]),
+    * with runtime-created tables resolved dynamically from the schema
+    * store.
     */
   private val catalog: Catalog = Catalog(
-    Map.empty,
+    baseCatalog.tables.map { case (name, td) =>
+      name -> td.copy(load = layeredLoad(name, td.load))
+    },
     baseCatalog.timezoneTable,
-    dynamic = name =>
-      baseCatalog.tables.get(name).map { td =>
-        td.copy(
-          dayPartitioned = td.dayPartitioned && !live.contains(name),
-          load = s => {
-            val df = layeredLoad(name, td.load)(s)
-            if (live.contains(name)) df.drop(graft.ingest.Archiver.DayCol) else df
-          })
-      }.orElse(schemaStore.get(name).map(createdTableDef)))
+    dynamic = name => schemaStore.get(name).map(createdTableDef))
 
   /** Per-server query metrics, served at GET /metrics. */
   val metrics = new Metrics
@@ -478,6 +472,22 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
   /** Every mounted HTTP context path. */
   def routes: Seq[String] = mountedPaths.toList
 
+  /** Queries vs file swaps in the drained dirs they read. A query lists
+    * a drained dir when it compiles and reads the listed files when it
+    * runs; a drain that swaps files there in between fails the query (a
+    * listed file is gone) or drops a day from it (listed mid-swap).
+    * Queries hold the read side for their whole run, and [[drain]] holds
+    * the write side only while it swaps files in a dir this server
+    * serves: a slice-served table serves from its base loader, and the
+    * archive epoch covers the shared archive its drains write.
+    */
+  private val archiveSwap = new java.util.concurrent.locks.ReentrantReadWriteLock
+  private def holding[T](l: java.util.concurrent.locks.Lock)(f: => T): T = {
+    l.lock()
+    try f finally l.unlock()
+  }
+  private[api] def serving[T](f: => T): T = holding(archiveSwap.readLock)(f)
+
   /** Run `f`, then stamp the assignment version(s) this query served
     * under onto the response as `X-Graft-Assignment-Version` — the
     * broker's fan-out consistency signal (see
@@ -489,7 +499,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     graft.exec.SliceRebalance.beginVersionCapture()
     graft.exec.ArchiveEpoch.begin()
     try {
-      val out = f
+      val out = serving(f)
       val vs = graft.exec.SliceRebalance.capturedVersions()
       if (vs.nonEmpty)
         ex.getResponseHeaders.set("X-Graft-Assignment-Version",
@@ -592,7 +602,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     * operator kicking a job by hand wants, and what lets integration
     * tests drive drains deterministically.
     *
-    *   POST /dbg/trigger/<table>/archive   drain live overlay -> archive
+    *   POST /dbg/trigger/<table>/archive   drain overlay -> archive
     *   POST /dbg/trigger/<table>/backfill  same entry (drain() dispatches
     *                                       Archiver vs Backfill by state)
     *   POST /dbg/trigger/<table>/snapshot  same entry (dim tables take
@@ -1092,7 +1102,6 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
         // empty
         tableLocks.getOrElseUpdate(t, new Object).synchronized {
           schemaStore.delete(t)
-          live.remove(t)
           drained.remove(t)
           pending.remove(t)
           mutationCounts.remove(t)
@@ -1130,14 +1139,14 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     }
   })
 
-  /** Per-table ingest locks: the read-modify-write on the live overlay
+  /** Per-table ingest locks: the read-modify-write on the overlay
     * (and the enum auto-expansion) must be atomic per table — handlers
     * run CONCURRENTLY on the bounded request pool, so these locks are
     * load-bearing, not defensive.
     */
   private val tableLocks = TrieMap.empty[String, Object]
 
-  /** JSON array of row objects → PK upsert into the live overlay. */
+  /** JSON array of row objects → PK upsert into the overlay. */
   private def ingest(td: TableDef, jsonBody: String): Long = {
     import spark.implicits._
     val parsed0 = JsonMethods.parse(jsonBody) match {
@@ -1212,11 +1221,10 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
         if (dictsGrew) schemaSync.foreach(_.publish())
       }
       val rows = parsed.map(o => JsonMethods.compact(JsonMethods.render(o)))
-      // ALWAYS load through the TableDef: it reconciles the overlay to the
-      // CURRENT schema, so a column added since the last ingest appears in
-      // the batch read schema (reading live.get's raw overlay would
-      // silently drop the new column's values); the overlay never carries
-      // the archive's synthetic day column
+      // the batch read schema comes from the TableDef's load: it
+      // reconciles to the CURRENT schema, so a column added since the last
+      // ingest keeps its values; the delta never carries the archive's
+      // synthetic day column
       val current = td.load(spark).drop(graft.ingest.Archiver.DayCol)
       // arrival order within the batch: later record wins (ingestion.go:172+);
       // single-partition read makes monotonically_increasing_id the row order
@@ -1224,14 +1232,11 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       val withSeq = spark.read.schema(current.schema)
         .json(rows.toDS().coalesce(1))
         .withColumn("__seq", monotonically_increasing_id() + seq0)
-      val updated = Upsert(current, withSeq, td.primaryKey, "__seq")
-        .localCheckpoint(true) // pin the view; breaks unbounded lineage growth
-      live.put(td.name, updated)
       // the DELTA since the last drain (upsert batches folded among
-      // themselves) — what an incremental drain promotes. The stored
-      // delta reconciles to the CURRENT schema first: Upsert keeps the
-      // existing side's columns, so a delta built before a column add
-      // would silently drop the new column's values
+      // themselves) — what queries layer over the archive and a drain
+      // promotes. The stored delta reconciles to the CURRENT schema
+      // first: Upsert keeps the existing side's columns, so a delta built
+      // before a column add would silently drop the new column's values
       val delta = pending.get(td.name) match {
         case Some(p) =>
           val present = p.columns.toSet
@@ -1244,7 +1249,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
         case None => Upsert.dedupBatch(withSeq, td.primaryKey, "__seq")
           .select(current.columns.map(col): _*)
       }
-      pending.put(td.name, delta.localCheckpoint(true))
+      pending.put(td.name, delta.localCheckpoint(true)) // breaks lineage growth
       mutationCounts.updateWith(td.name)(c => Some(c.getOrElse(0L) + parsed0.length))
       // accumulate the batch's serialized size — the backfill buffer size
       // the scheduler's size trigger compares against the threshold (ref
@@ -1273,20 +1278,6 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     */
   private val pendingByteCounts = TrieMap.empty[String, Long]
 
-  /** Drain the table's live overlay into a day-partitioned archive at
-    * `dir` and release the overlay — the reference's live→archive
-    * promotion (/root/reference/memstore/archiving.go:59-141): after the
-    * drain, queries answer from the archive scan path (partition-pruned
-    * parquet) instead of pinned in-memory blocks, and the overlay's
-    * checkpoint blocks are unpinned.
-    *
-    * The FIRST drain of a fact table writes the full day-partitioned
-    * archive; subsequent drains to the same directory promote only the
-    * DELTA through [[graft.ingest.Backfill]], rewriting just the affected
-    * day partitions — at scale that is the difference between a daily
-    * full rewrite and touching 1/retention of the data. Dimension tables
-    * (no time column) snapshot wholesale (memstore/snapshot.go:25-87).
-    */
   /** Archive sort columns: the schema's declared archivingSortColumns
     * when present (the reference sorts archive batches by them so
     * equality prefilters get zone-map skips), else the non-time primary
@@ -1301,39 +1292,61 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     }.filter(_.nonEmpty)
       .getOrElse(td.primaryKey.filterNot(td.timeColumn.contains))
 
+  /** Drain the table's overlay into a day-partitioned archive at `dir`
+    * and release it — the reference's live→archive promotion
+    * (memstore/archiving.go:59-141): after the drain,
+    * queries answer from the archive scan path (partition-pruned parquet)
+    * alone.
+    *
+    * The FIRST drain of a fact table writes the full day-partitioned
+    * archive; subsequent drains to the same directory promote only the
+    * DELTA through [[graft.ingest.Backfill]], rewriting just the affected
+    * day partitions — at scale that is the difference between a daily
+    * full rewrite and touching 1/retention of the data. Dimension tables
+    * (no time column) snapshot wholesale (memstore/snapshot.go:25-87).
+    */
   def drain(table: String, dir: String): Unit = {
     val td = catalog(table)
     tableLocks.getOrElseUpdate(table, new Object).synchronized {
-      live.get(table).foreach { view =>
+      pending.get(table).foreach { delta =>
         val sortCols = archiveSortCols(table, td)
+        // the whole-table view a first drain or a snapshot writes, pinned
+        // BEFORE the write: a snapshot re-drain overwrites the very files
+        // the layered load reads
+        def view = td.load(spark).drop(graft.ingest.Archiver.DayCol)
+          .localCheckpoint(true)
+        val exclusive: (=> Unit) => Unit =
+          if (!sliceServed.contains(table) && drained.get(table).contains(dir))
+            swap => holding(archiveSwap.writeLock)(swap)
+          else swap => swap
         // in slice mode every member drains into the SAME shared archive:
         // Backfill serializes the day rewrites under a cross-process lock
         // (see Backfill.apply — two unsynchronized members rewriting the
         // same day would race the read-merge-swap and permanently lose
         // the loser's rows after its journal truncated). Contention SKIPS
-        // the drain instead of waiting: the rows stay in the live overlay
-        // and the journal (still served, still durable) and the next
+        // the drain instead of waiting: the rows stay in the overlay and
+        // the journal (still served, still durable) and the next
         // scheduler tick retries against the winner's committed rewrite.
         val wrote =
-          try Some((td.timeColumn, pending.get(table)) match {
-            case (Some(tc), Some(delta)) if drained.get(table).contains(dir) =>
-              graft.ingest.Backfill(spark, dir, delta, tc, td.primaryKey, sortCols)
-            case (Some(tc), _) =>
-              graft.ingest.Archiver.archive(view, tc, sortCols, dir)
-            case (None, _) => graft.ingest.Snapshot.write(view, dir)
+          try Some(td.timeColumn match {
+            case Some(tc) if drained.get(table).contains(dir) =>
+              graft.ingest.Backfill(spark, dir, delta, tc, td.primaryKey,
+                sortCols, exclusive = exclusive)
+            case Some(tc) => graft.ingest.Archiver.archive(view, tc, sortCols, dir)
+            case None =>
+              val snapshot = view
+              exclusive(graft.ingest.Snapshot.write(snapshot, dir))
           })
           catch { case _: graft.exec.GenerationLock.Busy => None }
         if (wrote.isEmpty) {
           log.warn(s"drain of table $table skipped: another member is " +
-            s"draining into $dir — rows stay in the live overlay and " +
+            s"draining into $dir — rows stay in the overlay and " +
             "journal, retried next tick")
         } else {
           drained.put(table, dir)
-          live.remove(table)
           pending.remove(table)
           mutationCounts.remove(table)
           pendingByteCounts.remove(table)
-          view.unpersist(blocking = false)
           // the drained rows are durably in the archive now — their journal
           // records have done their job (ref: redo-log truncation once
           // batches are archived, file_redolog_manager.go checkpoint); the
@@ -1360,7 +1373,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
   def jobConfig(table: String): graft.ingest.TableJobConfig =
     schemaStore.get(table).map(_.config).getOrElse(graft.ingest.TableJobConfig())
 
-  def hasLiveRows(table: String): Boolean = live.contains(table)
+  def hasLiveRows(table: String): Boolean = pending.contains(table)
 
   def mutationsSinceDrain(table: String): Long =
     mutationCounts.getOrElse(table, 0L)
@@ -1395,8 +1408,8 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
   // ---- journal replay (construction-time recovery) ------------------------
   // The reference replays its redo logs before a datanode serves
   // (memstore/recovery.go) — same here: every clean journal record
-  // re-applies through the normal ingest path, restoring the live
-  // overlay this instance held when it died. A record that no longer
+  // re-applies through the normal ingest path, restoring the overlay
+  // this instance held when it died. A record that no longer
   // applies (its table was deleted, a bad batch that 400'd at ingest
   // time) is skipped with a warning, not fatal — recovery must converge.
   journal.foreach { j =>

@@ -81,7 +81,7 @@ object OpenApi {
       pathParams("table", "job"),
       "post" -> op("Manually kick one scheduler job INLINE (response " +
         "returns after it commits): job is archive|backfill|snapshot " +
-        "(all drain the live overlay) or purge (requires " +
+        "(all drain the overlay) or purge (requires " +
         "?retain_from=yyyy-MM-dd) — the reference's debug triggers " +
         "(api/debug_handler.go:82-85)")),
     "/bootstrap/{table}/days" -> JObject(

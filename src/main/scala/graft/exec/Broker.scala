@@ -590,43 +590,14 @@ final class Broker private (sliceProvider: () => Seq[Seq[String]],
         }
       }
     }
-    // fresh dictionaries over the merged case set; dim types re-derived
-    // from merged dictionary sizes (a SmallEnum dim can widen to BigEnum
-    // after the merge), widths re-slotted the way the instance writer does
+    // fresh dictionaries over the merged case set; the writer re-derives
+    // dim types from their sizes (a SmallEnum dim can widen to BigEnum
+    // after the merge) and re-slots widths the way an instance does
     val dicts: Map[Int, Seq[String]] = (0 until n).flatMap { d =>
       if (!isEnum(d)) None
       else Some(d -> merged.keys.flatMap(_(d)).map(_.toString).toSeq.distinct.sorted)
     }.toMap
-    val dictIndex: Map[Int, Map[String, Long]] = dicts.map { case (d, cases) =>
-      d -> cases.zipWithIndex.map { case (s, i) => s -> i.toLong }.toMap
-    }
-    val dimTypes: Seq[Long] = (0 until n).map { d =>
-      if (isEnum(d)) {
-        if (dicts(d).length <= 256) 0x00080008L else 0x00090010L
-      } else template.dataTypes(d)
-    }
-    val widthOf: Long => Int = t => ((t & 0xFFFF) / 8).toInt
-    val slotOrder = (0 until n).sortBy(d => -widthOf(dimTypes(d)))
-    val dimIndexes = {
-      val slotOf = slotOrder.zipWithIndex.map { case (dim, slot) => dim -> slot }.toMap
-      (0 until n).map(slotOf)
-    }
-    val dimsPerWidth = Seq(16, 8, 4, 2, 1).map(w =>
-      (0 until n).count(d => widthOf(dimTypes(d)) == w))
-    val rows = merged.map { case (key, regs) =>
-      val dims = (0 until n).map { d =>
-        key(d).map {
-          case s: String => dictIndex(d)(s)
-          case l: Long => l
-          case other => other.toString.toLong
-        }
-      }
-      var nonZero = 0
-      regs.foreach(b => if (b != 0) nonZero += 1)
-      RefHllWire.RefRow(dims, regs, nonZero)
-    }.toSeq
-    val block = RefHllWire.RefBlock(dimsPerWidth, dimIndexes, dimTypes, dicts, rows)
-    RefHllWire.writeResults(Seq(Right(RefHllWire.writeBlock(block))))
+    RefHllWire.encodeResult(n, dicts, template.dataTypes, merged)
   }
 
   private def mergeHll(q: AqlQuery): JValue = {

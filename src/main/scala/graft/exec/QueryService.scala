@@ -191,53 +191,22 @@ final class QueryService(catalog: Catalog, spark: SparkSession,
         })
       if (strings.isEmpty) None else Some(i -> strings.distinct.sorted.toSeq)
     }.toMap
-    val dictIndex: Map[Int, Map[String, Long]] =
-      dicts.map { case (i, cases) =>
-        i -> cases.zipWithIndex.map { case (s, k) => s -> k.toLong }.toMap
-      }
-
-    // per-dim AQL storage type + width: strings become Small/BigEnum by
-    // dictionary size; integral dims ride as Uint32 epoch/bucket values
-    // (the reference's time/numeric dim representation)
-    val dimTypes: Seq[Long] = (0 until n).map { i =>
-      dicts.get(i) match {
-        case Some(cases) if cases.length <= 256 => 0x00080008L // SmallEnum
-        case Some(_) => 0x00090010L // BigEnum
-        case None => 0x00060020L // Uint32
-      }
-    }
-    val widthOf: Long => Int = t => ((t & 0xFFFF) / 8).toInt
-    // slots are assigned in width-descending order (dim_util.go:43-58)
-    val slotOrder = (0 until n).sortBy(i => -widthOf(dimTypes(i)))
-    val dimIndexes = {
-      val slotOf = slotOrder.zipWithIndex.map { case (dim, slot) => dim -> slot }.toMap
-      (0 until n).map(slotOf)
-    }
-    val dimsPerWidth = Seq(16, 8, 4, 2, 1).map(w =>
-      (0 until n).count(i => widthOf(dimTypes(i)) == w))
-
+    // integral dims ride as Uint32 epoch/bucket values (the reference's
+    // time/numeric dim representation)
     val rows = collected.map { r =>
       val dims = (0 until n).map { i =>
         if (r.isNullAt(i)) None
         else r.get(i) match {
           case l: Long => Some(l)
           case i2: Int => Some(i2.toLong)
-          case s: String => Some(dictIndex(i)(s))
+          case s: String => Some(s)
           case other => throw ParseException(
             s"application/hll dims must be integral or string, got ${other.getClass.getSimpleName}", 0)
         }
       }
-      val regs = graft.functions.Hll.decode(r.getAs[Array[Byte]](n))
-      var nonZero = 0
-      regs.foreach(b => if (b != 0) nonZero += 1)
-      // the count field is ALWAYS NonZeroRegisters (the reference's result
-      // writer, hll.go:1107-1121) — at >= DenseThreshold readers take the
-      // dense branch from the same value
-      RefHllWire.RefRow(dims, regs, nonZero)
+      (dims, graft.functions.Hll.decode(r.getAs[Array[Byte]](n)))
     }
-    val block = RefHllWire.RefBlock(dimsPerWidth, dimIndexes, dimTypes,
-      dicts, rows.toSeq)
-    RefHllWire.writeResults(Seq(Right(RefHllWire.writeBlock(block))))
+    RefHllWire.encodeResult(n, dicts, _ => 0x00060020L, rows)
   }
 
   /** The query re-planned to produce SKETCHES instead of estimates: a

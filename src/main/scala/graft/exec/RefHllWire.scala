@@ -7,12 +7,12 @@ import graft.functions.Hll
 
 /** BYTE-EXACT reader/writer for the reference's `application/hll` wire
   * format (/root/reference/query/common/hll.go:44-70 layout doc; parser at
-  * :364-500, envelope at :961-990) — as opposed to [[HllWire]], this
-  * module's engine-native format, which deviates by design (uniform 8-byte
-  * dims, 3-byte sparse registers). RefHllWire exists to replay the
-  * reference's golden fixtures (`testing/data/query/hll*`, written by
-  * query/hll_test.go:210-271) and to serve compat clients that parse the
-  * reference layout:
+  * :364-500, envelope at :961-990) — the body of every `application/hll`
+  * response, from a member ([[QueryService.aqlBinary]]) and from the
+  * broker's merge alike. The reader replays the reference's golden
+  * fixtures (`testing/data/query/hll*`, written by
+  * query/hll_test.go:210-271), so compat clients that parse the reference
+  * layout read these bodies unchanged:
   *
   *  - envelope: `[u32 0xACED0102][u32 pad]` then per query
   *    `[u32 size][u8 isErr][3 pad][body]`; error bodies are the error
@@ -305,6 +305,44 @@ object RefHllWire {
       } else buf.put(r.registers, 0, DenseDataLength)
     }
     out
+  }
+
+  /** One-result envelope from logical rows, each a (dims, dense
+    * registers) pair: a dim that has an entry in `dicts` carries its case
+    * string, any other dim an integral value of AQL type `valueType(dim)`.
+    * Enum dims type as SmallEnum, or BigEnum past 256 cases; slots are
+    * assigned in width-descending order (dim_util.go:43-58); each row's
+    * count field is its non-zero register count — the reference's result
+    * writer stores NonZeroRegisters unconditionally (hll.go:1107-1121),
+    * and readers take the dense branch from the same value.
+    */
+  def encodeResult(numDims: Int, dicts: Map[Int, Seq[String]],
+      valueType: Int => Long,
+      rows: Iterable[(Seq[Option[Any]], Array[Byte])]): Array[Byte] = {
+    val dictIndex = dicts.map { case (d, cases) =>
+      d -> cases.zipWithIndex.map { case (c, i) => c -> i.toLong }.toMap
+    }
+    val dimTypes = (0 until numDims).map { d =>
+      dicts.get(d) match {
+        case Some(cases) if cases.length <= 256 => 0x00080008L // SmallEnum
+        case Some(_) => 0x00090010L // BigEnum
+        case None => valueType(d)
+      }
+    }
+    val widthOf = (t: Long) => ((t & 0xFFFF) / 8).toInt
+    val slotOf = (0 until numDims).sortBy(d => -widthOf(dimTypes(d))).zipWithIndex.toMap
+    val refRows = rows.map { case (dims, regs) =>
+      val values = dims.zipWithIndex.map { case (v, d) =>
+        v.map {
+          case c: String => dictIndex(d)(c)
+          case l: Long => l
+        }
+      }
+      RefRow(values, regs, regs.count(_ != 0))
+    }.toSeq
+    val block = RefBlock(Widths.toSeq.map(w => dimTypes.count(widthOf(_) == w)),
+      (0 until numDims).map(slotOf), dimTypes, dicts, refRows)
+    writeResults(Seq(Right(writeBlock(block))))
   }
 
   /** Serialize the full envelope (HLLQueryResults, hll.go:961-990). */

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Archive lifecycle: day-partitioned sorted parquet + retention purge.
@@ -29,11 +29,22 @@ object Archiver {
 
   val DayCol = "day"
 
+  /** The UTC day (yyyy-MM-dd) of `df`'s `timeCol` — a TimestampType
+    * column, or an integral epoch-seconds column (the reference's native
+    * Uint32 time column representation, metastore/common/model.go:136).
+    * This is the value of the archive's [[DayCol]] partition column.
+    */
+  def dayOf(df: DataFrame, timeCol: String): Column = {
+    val ts =
+      if (df.schema(timeCol).dataType == org.apache.spark.sql.types.TimestampType)
+        col(timeCol)
+      else timestamp_seconds(col(timeCol))
+    date_format(ts, "yyyy-MM-dd")
+  }
+
   /** Write `df` as day-partitioned parquet under `outDir`, one partition
-    * per UTC day of `timeCol` — a TimestampType column, or an integral
-    * epoch-seconds column (the reference's native Uint32 time column
-    * representation, metastore/common/model.go:136) — rows sorted by
-    * `sortCols` within each file.
+    * per UTC day of `timeCol` (see [[dayOf]]), rows sorted by `sortCols`
+    * within each file.
     */
   /** @param bloomFilterCols columns to write parquet BLOOM FILTERS for —
     *   the point-lookup complement of the sort-column zone maps: min/max
@@ -50,14 +61,10 @@ object Archiver {
   def archive(df: DataFrame, timeCol: String, sortCols: Seq[String],
       outDir: String, bloomFilterCols: Seq[String] = Nil,
       bloomNdv: Long = 100000L): Unit = {
-    val ts =
-      if (df.schema(timeCol).dataType == org.apache.spark.sql.types.TimestampType)
-        col(timeCol)
-      else timestamp_seconds(col(timeCol))
     // the day column leads the sort: the dynamic-partition writer requires
     // rows clustered by partition value and would otherwise inject its own
     // sort on `day`, destroying the sort-column order inside each file
-    val writer = df.withColumn(DayCol, date_format(ts, "yyyy-MM-dd"))
+    val writer = df.withColumn(DayCol, dayOf(df, timeCol))
       .repartition(col(DayCol))
       .sortWithinPartitions((DayCol +: sortCols).map(col): _*)
       .write

@@ -31,9 +31,14 @@ object Backfill {
     * one single-task file, while untouched partitions stay byte-stable.
     * The reference shards exactly this merge across workers
     * (memstore/backfill.go:436+).
+    *
+    * `exclusive` runs the day-directory swap, the only step in which a
+    * reader of `dir` can see a day missing or a listed file gone; a
+    * caller that serves queries from `dir` passes its reader exclusion.
     */
   def apply(spark: SparkSession, dir: String, late: DataFrame, timeCol: String,
-      pk: Seq[String], sortCols: Seq[String], numFiles: Int = 0): Seq[String] =
+      pk: Seq[String], sortCols: Seq[String], numFiles: Int = 0,
+      exclusive: (=> Unit) => Unit = swap => swap): Seq[String] =
     // the read-merge-swap below is a lost-update hazard under concurrent
     // writers (two merges each missing the other's delta, last rename
     // winning — and a shared .backfill_tmp), so the WHOLE job holds a
@@ -50,19 +55,14 @@ object Backfill {
         spark.sparkContext.hadoopConfiguration),
       ".graft-archive.lock", staleMs = 120000L, role = "backfill",
       noun = "archive write lock", heartbeatMs = 15000L) { _ =>
-      locked(spark, dir, late, timeCol, pk, sortCols, numFiles)
+      locked(spark, dir, late, timeCol, pk, sortCols, numFiles, exclusive)
     }
 
   private def locked(spark: SparkSession, dir: String, late: DataFrame,
       timeCol: String, pk: Seq[String], sortCols: Seq[String],
-      numFiles: Int): Seq[String] = {
+      numFiles: Int, exclusive: (=> Unit) => Unit): Seq[String] = {
     val day = Archiver.DayCol
-    // TimestampType or integral epoch-seconds time column, like Archiver
-    val ts =
-      if (late.schema(timeCol).dataType == org.apache.spark.sql.types.TimestampType)
-        col(timeCol)
-      else timestamp_seconds(col(timeCol))
-    val withDay = late.withColumn(day, date_format(ts, "yyyy-MM-dd"))
+    val withDay = late.withColumn(day, Archiver.dayOf(late, timeCol))
     val days = withDay.select(day).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
     if (days.isEmpty) return Nil
@@ -141,7 +141,7 @@ object Backfill {
     // operator restores from trash), where a crash after a delete left
     // the day's archived rows existing NOWHERE and the replay rewrote
     // the day as late-rows-only
-    days.foreach { d =>
+    exclusive(days.foreach { d =>
       val src = child(s".backfill_tmp/$day=$d")
       if (fs.exists(src)) {
         val target = child(s"$day=$d")
@@ -152,7 +152,7 @@ object Backfill {
         require(fs.rename(src, target), s"backfill: rename $src -> $target failed")
         fs.delete(trash, true)
       }
-    }
+    })
     fs.delete(child(".backfill_tmp"), true)
     // record the rewritten days in the drain marker (we hold the archive
     // lock): members serving these days from a local cache learn, with

@@ -167,6 +167,9 @@ object Dedup {
     */
   def bandBuckets(sigs: DataFrame, idCol: String,
       rowsPerBand: Int = RowsPerBand): DataFrame = {
+    // a non-divisor would silently drop the signature's tail positions
+    require(rowsPerBand > 0 && NumHashes % rowsPerBand == 0,
+      s"rowsPerBand $rowsPerBand must divide the $NumHashes minhash positions")
     val bands = NumHashes / rowsPerBand
     sigs.select(
       col(idCol),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
 
 /** Attribution probe for the ~0.1–0.15 s per-gate session floor
-  * (OPTIMIZATION_r16.md): decompose a trivial gate's wall time into
+  * (BENCH_NOTES.md, r16 section): decompose a trivial gate's wall time into
   * driver-side planning (analysis → physical plan, forced without
   * execution) vs execution (noop write: AQE stage jobs + task scheduling
   * + codegen), and measure the irreducible minimum (a pre-planned

@@ -137,9 +137,9 @@ class GraftServerSpec extends SparkSpec {
   }
 
   test("ingestion into the archive-backed fact table keeps fresh rows visible") {
-    // events is day-partitioned archive-backed by DEFAULT; overlay rows
-    // carry no day column, so the compiler must NOT day-widen while an
-    // overlay is active (a static flag silently filtered fresh rows out)
+    // events is day-partitioned archive-backed by DEFAULT, and the
+    // compiler day-widens its time filters; overlay rows take the day
+    // column computed from `ts`, so the widened filter keeps them
     implicit val fmts: Formats = DefaultFormats
     def clicks(): Double = {
       val r = aqlResult("""{"table": "events",
@@ -155,6 +155,115 @@ class GraftServerSpec extends SparkSpec {
        "user_id": 7, "event_type": "click", "value": 1.0, "props": "x"}]""")
     assert(ingest.statusCode() == 200, new String(ingest.body()))
     assert(clicks() == before + 1, "fresh overlay row dropped by day-widening")
+  }
+
+  test("a pending overlay keeps day-partition pruning and counts its rows") {
+    val srv = new GraftServer(Catalog.testdata(sfDir), spark)
+    srv.start()
+    try {
+      val url = s"http://localhost:${srv.boundPort}"
+      def send(path: String, body: String) = client.send(
+        HttpRequest.newBuilder(URI.create(url + path))
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      val query = """{"table": "events",
+        "measures": [{"alias": "n", "sqlExpression": "count(*)"}],
+        "timeFilter": {"from": "1705276800", "to": "1705363200"},
+        "now": 1706659200}"""
+      def count(): Double = {
+        val r = send("/query/aql", s"""{"queries": [$query]}""")
+        assert(r.statusCode() == 200, r.body())
+        implicit val fmts: Formats = DefaultFormats
+        ((JsonMethods.parse(r.body()) \ "results")(0) \ "n").extract[Double]
+      }
+      val before = count()
+      val ingest = send("/data/events", """[
+        {"event_id": 99999981, "ts": "2024-01-15T06:00:00.000Z",
+         "user_id": 7, "event_type": "view", "value": 1.0, "props": "x"}]""")
+      assert(ingest.statusCode() == 200, ingest.body())
+      assert(count() == before + 1, "pending overlay row missing from the count")
+      val plan = client.send(HttpRequest.newBuilder(URI.create(url + "/dbg/plan?query=" +
+        java.net.URLEncoder.encode(query, "UTF-8"))).GET().build(),
+        HttpResponse.BodyHandlers.ofString()).body()
+      assert("PartitionFilters: \\[[^\\]]*day".r.findFirstIn(plan).nonEmpty,
+        s"no day partition filter while the overlay is pending:\n$plan")
+    } finally srv.stop()
+  }
+
+  test("a drain's day swap waits for a query in flight on the drained dir") {
+    val srv = new GraftServer(Catalog.testdata(sfDir), spark)
+    srv.start()
+    try {
+      val url = s"http://localhost:${srv.boundPort}"
+      def send(path: String, body: String) = client.send(
+        HttpRequest.newBuilder(URI.create(url + path))
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      def count(): Double = {
+        val r = send("/query/aql", """{"queries": [{"table": "events",
+          "measures": [{"alias": "n", "sqlExpression": "count(*)"}],
+          "timeFilter": {"from": "1704067200", "to": "1706659200"},
+          "now": 1706659200}]}""")
+        assert(r.statusCode() == 200, r.body())
+        implicit val fmts: Formats = DefaultFormats
+        ((JsonMethods.parse(r.body()) \ "results")(0) \ "n").extract[Double]
+      }
+      def upsert(id: Long): Unit = {
+        val r = send("/data/events", s"""[{"event_id": $id,
+          "ts": "2024-01-15T06:00:00.000Z", "user_id": 7, "event_type": "view",
+          "value": 1.0, "props": "x"}]""")
+        assert(r.statusCode() == 200, r.body())
+      }
+      val dir = java.nio.file.Files.createTempDirectory("graft_swap").toString
+      upsert(99999971L)
+      srv.drain("events", dir)
+      upsert(99999972L)
+      val n = count()
+      // a query that listed the archive and has not read it yet: the
+      // backfill may merge and stage, but not swap the day's files
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      srv.serving {
+        new Thread(() => { srv.drain("events", dir); drained.countDown() }).start()
+        assert(!drained.await(5, java.util.concurrent.TimeUnit.SECONDS),
+          "the drain swapped day files under an in-flight query")
+      }
+      assert(drained.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(!srv.hasLiveRows("events"))
+      assert(count() == n)
+    } finally srv.stop()
+  }
+
+  test("a dimension table re-drained into its own snapshot dir keeps every row") {
+    val srv = new GraftServer(Catalog.testdata(sfDir), spark)
+    srv.start()
+    try {
+      val url = s"http://localhost:${srv.boundPort}"
+      def send(path: String, body: String) = client.send(
+        HttpRequest.newBuilder(URI.create(url + path))
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      def regions(): Double = {
+        val r = send("/query/sql",
+          """{"queries": ["SELECT count(*) AS n FROM region"]}""")
+        assert(r.statusCode() == 200, r.body())
+        implicit val fmts: Formats = DefaultFormats
+        ((JsonMethods.parse(r.body()) \ "results")(0) \ "n").extract[Double]
+      }
+      val n0 = regions()
+      val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString
+      def upsert(key: Int): Unit = {
+        val r = send("/data/region", s"""[{"r_regionkey": $key, "r_name": "R$key"}]""")
+        assert(r.statusCode() == 200, r.body())
+      }
+      upsert(9001)
+      srv.drain("region", dir)
+      assert(regions() == n0 + 1)
+      // the second snapshot reads the files it overwrites
+      upsert(9002)
+      srv.drain("region", dir)
+      assert(!srv.hasLiveRows("region"))
+      assert(regions() == n0 + 2, "rows lost by the snapshot re-drain")
+    } finally srv.stop()
   }
 
   test("health and version probes answer") {

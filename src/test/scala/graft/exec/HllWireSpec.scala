@@ -1,77 +1,9 @@
 package graft.exec
 
-import scala.util.Random
-
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.Hll
-
-/** Round-trip + merge-interop tests for the application/hll binary format. */
+/** The application/hll body: the reference's byte layout ([[RefHllWire]]). */
 class HllWireSpec extends AnyFunSuite {
-
-  private def sketchOf(values: Seq[Long]): Array[Byte] = {
-    val regs = new Array[Byte](Hll.M)
-    values.foreach(v => Hll.insert(regs, Hll.hashAny(v, org.apache.spark.sql.types.LongType)))
-    regs
-  }
-
-  test("sparse and dense rows round-trip bit-for-bit") {
-    val rnd = new Random(42)
-    val sparse = sketchOf(Seq.tabulate(100)(_ => rnd.nextLong())) // ~100 regs -> sparse
-    val dense = sketchOf(Seq.tabulate(40000)(_ => rnd.nextLong())) // >4096 regs -> dense
-    val rows = Seq(
-      HllWire.HllRow(Seq(Some(1L), Some(10L)), sparse),
-      HllWire.HllRow(Seq(Some(2L), None), dense))
-
-    val bytes = HllWire.write(rows)
-    val back = HllWire.read(bytes)
-
-    assert(back.rows.length == 2)
-    assert(back.rows(0).dims == Seq(Some(1L), Some(10L)))
-    assert(back.rows(1).dims == Seq(Some(2L), None))
-    assert(back.rows(0).registers.toSeq == sparse.toSeq)
-    assert(back.rows(1).registers.toSeq == dense.toSeq)
-    assert(back.estimates == Seq(Hll.estimate(sparse), Hll.estimate(dense)))
-  }
-
-  test("magic header enforced") {
-    val bytes = HllWire.write(Seq(HllWire.HllRow(Seq(Some(1L)), sketchOf(Seq(1, 2, 3)))))
-    assert(java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt() == 0xACED0102)
-    bytes(0) = 0x00
-    intercept[IllegalArgumentException](HllWire.read(bytes))
-  }
-
-  test("string-dim dictionaries round-trip through the dictionary section") {
-    val rows = Seq(
-      HllWire.HllRow(Seq(Some(0L), Some(5L)), sketchOf(Seq(1, 2))),
-      HllWire.HllRow(Seq(Some(1L), None), sketchOf(Seq(3))),
-      HllWire.HllRow(Seq(Some(2L), Some(7L)), sketchOf(Seq(4, 5, 6))))
-    val dicts = Map(0 -> Seq("click", "purchase", "view"))
-    val back = HllWire.read(HllWire.writeWithDicts(rows, dicts))
-    assert(back.dicts == dicts)
-    assert(back.dimString(0, 0).contains("click"))
-    assert(back.dimString(1, 0).contains("purchase"))
-    assert(back.dimString(2, 0).contains("view"))
-    assert(back.dimString(0, 1).contains("5")) // numeric dim unaffected
-    assert(back.dimString(1, 1).isEmpty)       // null stays null
-    assert(back.rows.map(_.registers.toSeq) == rows.map(_.registers.toSeq))
-  }
-
-  test("deserialized sketches merge to the same estimate as a direct union sketch") {
-    val a = Seq.tabulate(5000)(i => i.toLong)
-    val b = Seq.tabulate(5000)(i => (i + 2500).toLong)
-    val bytes = HllWire.write(Seq(
-      HllWire.HllRow(Seq(Some(1L)), sketchOf(a)),
-      HllWire.HllRow(Seq(Some(2L)), sketchOf(b))))
-    val back = HllWire.read(bytes)
-
-    val merged = back.rows(0).registers.clone()
-    Hll.mergeInto(merged, back.rows(1).registers)
-    val direct = sketchOf(a ++ b)
-    assert(merged.toSeq == direct.toSeq)
-    assert(Hll.estimate(merged) == Hll.estimate(direct))
-  }
 
   // ---- reference golden fixtures (RefHllWire) -----------------------------
 
@@ -123,6 +55,23 @@ class HllWireSpec extends AnyFunSuite {
     assert(blocks.length == 1)
     val reencoded = RefHllWire.writeResults(Seq(Right(Array.empty[Byte])))
     assert(java.util.Arrays.equals(reencoded, data))
+  }
+
+  test("encodeResult: enum and integral dims decode back with width-descending slots") {
+    val regs = new Array[Byte](graft.functions.Hll.M)
+    regs(3) = 2; regs(9000) = 5
+    val body = RefHllWire.encodeResult(2, Map(1 -> Seq("click", "view")),
+      _ => 0x00060020L,
+      Seq((Seq(Some(7L), Some("view")), regs), (Seq(None, Some("click")), regs)))
+    val b = RefHllWire.readResults(body).head.toOption.get
+    // Uint32 (4 bytes) slots before the SmallEnum (1 byte)
+    assert(b.numDimsPerDimWidth == Seq(0, 0, 1, 0, 1))
+    assert(b.dimIndexes == Seq(0, 1))
+    assert(b.dataTypes == Seq(0x00060020L, 0x00080008L))
+    assert((0 until 2).map(r => (0 until 2).map(b.dimString(r, _))) ==
+      Seq(Seq(Some("7"), Some("view")), Seq(None, Some("click"))))
+    assert(b.rows.map(_.storedCount) == Seq(2, 2))
+    assert(b.rows.forall(_.registers.toSeq == regs.toSeq))
   }
 
   test("native sketches translate into the reference wire format losslessly") {

@@ -53,6 +53,14 @@ class SkewStressSpec extends SparkSpec {
     } finally sigs.unpersist()
   }
 
+  test("minhash banding rejects a band width that does not divide the signature") {
+    val sigs = Seq((1L, Seq.fill(Dedup.NumHashes)(0L))).toDF("doc_id", "sig")
+    assert(Dedup.bandBuckets(sigs, "doc_id", rowsPerBand = 2).count() == Dedup.NumHashes / 2)
+    val e = intercept[IllegalArgumentException](
+      Dedup.bandBuckets(sigs, "doc_id", rowsPerBand = 3))
+    assert(e.getMessage.contains("rowsPerBand 3"))
+  }
+
   test("simhash banding: the degenerate bucket is dropped, planted recall intact") {
     val corpus = skewedCorpus
     val pairs = Dedup.simhashNearDups(corpus, "doc_id", "text",
