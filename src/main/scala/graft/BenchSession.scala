@@ -55,14 +55,11 @@ object BenchSession {
     // scale-adaptive in both directions.
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
       "true")
-    // post-shuffle coalesce policy, parameterized for A/B measurement:
-    // `true` (the Spark default) coalesces only down to minPartitionSize
-    // to maximize parallelism; `false` respects advisoryPartitionSizeInBytes
-    // — the busy-cluster production recommendation. Default kept at the
-    // Spark default; BENCH_NOTES.md, r16 section, has the measured
-    // comparison.
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
+    // post-shuffle coalesce policy: `true` (the Spark default) coalesces
+    // only down to minPartitionSize to maximize parallelism; `false`
+    // respects advisoryPartitionSizeInBytes. `false` showed no win in the
+    // r16 A/B (BENCH_NOTES.md); FloorProbe flips it in its own session.
+    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // real 100 TB inputs arrive as MANY files and scan with one task per

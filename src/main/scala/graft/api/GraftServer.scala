@@ -476,10 +476,11 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     * a drained dir when it compiles and reads the listed files when it
     * runs; a drain that swaps files there in between fails the query (a
     * listed file is gone) or drops a day from it (listed mid-swap).
-    * Queries hold the read side for their whole run, and [[drain]] holds
-    * the write side only while it swaps files in a dir this server
-    * serves: a slice-served table serves from its base loader, and the
-    * archive epoch covers the shared archive its drains write.
+    * Queries hold the read side for their whole run, and [[drain]],
+    * [[compact]] and [[purge]] hold the write side only while they swap
+    * or delete files in a dir this server serves ([[swapping]]): a
+    * slice-served table serves from its base loader, and the archive
+    * epoch covers the shared archive its drains write.
     */
   private val archiveSwap = new java.util.concurrent.locks.ReentrantReadWriteLock
   private def holding[T](l: java.util.concurrent.locks.Lock)(f: => T): T = {
@@ -487,6 +488,14 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     try f finally l.unlock()
   }
   private[api] def serving[T](f: => T): T = holding(archiveSwap.readLock)(f)
+
+  /** Run a file swap in `dir` under the write side when queries on
+    * `table` read that dir: a non-slice table serves from its drained dir.
+    */
+  private def swapping[T](table: String, dir: String)(f: => T): T =
+    if (!sliceServed.contains(table) && drained.get(table).contains(dir))
+      holding(archiveSwap.writeLock)(f)
+    else f
 
   /** Run `f`, then stamp the assignment version(s) this query served
     * under onto the response as `X-Graft-Assignment-Version` — the
@@ -1315,10 +1324,6 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
         // the layered load reads
         def view = td.load(spark).drop(graft.ingest.Archiver.DayCol)
           .localCheckpoint(true)
-        val exclusive: (=> Unit) => Unit =
-          if (!sliceServed.contains(table) && drained.get(table).contains(dir))
-            swap => holding(archiveSwap.writeLock)(swap)
-          else swap => swap
         // in slice mode every member drains into the SAME shared archive:
         // Backfill serializes the day rewrites under a cross-process lock
         // (see Backfill.apply — two unsynchronized members rewriting the
@@ -1331,11 +1336,11 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
           try Some(td.timeColumn match {
             case Some(tc) if drained.get(table).contains(dir) =>
               graft.ingest.Backfill(spark, dir, delta, tc, td.primaryKey,
-                sortCols, exclusive = exclusive)
+                sortCols, exclusive = swap => swapping(table, dir)(swap))
             case Some(tc) => graft.ingest.Archiver.archive(view, tc, sortCols, dir)
             case None =>
               val snapshot = view
-              exclusive(graft.ingest.Snapshot.write(snapshot, dir))
+              swapping(table, dir)(graft.ingest.Snapshot.write(snapshot, dir))
           })
           catch { case _: graft.exec.GenerationLock.Busy => None }
         if (wrote.isEmpty) {
@@ -1389,7 +1394,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
   def purge(table: String, retainFromDay: String): Seq[String] =
     drained.get(table)
       .map(dir => tableLocks.getOrElseUpdate(table, new Object).synchronized {
-        graft.ingest.Archiver.purge(dir, retainFromDay)
+        swapping(table, dir)(graft.ingest.Archiver.purge(dir, retainFromDay))
       })
       .getOrElse(Nil)
 
@@ -1397,12 +1402,14 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     * (incremental drains append files) back to sorted files, restoring
     * the one-sorted-batch-per-day invariant of the reference's archiving
     * merge. Under the table lock like drain/purge — a concurrent drain
-    * must not append into a partition mid-swap.
+    * must not append into a partition mid-swap — and, like them, each
+    * day's swap waits out queries reading the dir.
     */
   override def compact(table: String, dir: String): Unit =
     tableLocks.getOrElseUpdate(table, new Object).synchronized {
       graft.ingest.Compactor.compact(spark, dir,
-        archiveSortCols(table, catalog(table)))
+        archiveSortCols(table, catalog(table)),
+        exclusive = swap => swapping(table, dir)(swap))
     }
 
   // ---- journal replay (construction-time recovery) ------------------------

@@ -5,34 +5,39 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.time.Duration
 
+import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.DurationInt
 
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.aql.{AqlJson, AqlMeasure, AqlQuery, BinOp, Expr, ExprParser, Render}
+import graft.aql.{AqlJson, AqlQuery, BinOp, Expr, ExprParser, Render}
 import graft.functions.Hll
 
 /** Scatter-gather broker over N running [[graft.api.GraftServer]]
   * instances — the reference's broker tier re-expressed for the HTTP
-  * facade. The reference builds a merge tree over datanode partials
-  * (/root/reference/broker/query_plan_agg.go:218-255) and folds results
-  * recursively in place (result_merge.go:42-141); the fold algebra is:
+  * facade. The reference folds datanode partials with one algebra
+  * (result_merge.go:42-141) and splits avg into a sum plan and a count
+  * plan divided at the root (query_plan_agg.go:438-470). An aggregate
+  * measure takes one path here:
   *
-  *   - sum / count → add,  min / max → compare
-  *   - avg → TWO scattered subqueries (sum + count(*),
-  *     query_plan_agg.go:239-245 + splitAvgQuery:439-469), each merged
-  *     additively, divided leaf-wise at the root (result_merge.go Avg)
-  *   - HLL → the `application/hll` binary bodies are fetched instead of
-  *     JSON estimates, registers merged by element-wise max (the HLL
-  *     semilattice), and the ESTIMATE computed once over the merged
-  *     sketch — merging estimates would double-count overlap
-  *   - non-agg → matrixData concatenated, explicit limit re-applied
-  *   - derived measures (`sum(a) / count(*)`, the single-instance
-  *     extension) → one scattered subquery per distinct aggregate
-  *     component, each folded under its own algebra, arithmetic evaluated
-  *     per group at the root — the avg split generalized
+  *   1. parse the measure and rewrite every `avg(a)` to
+  *      `sum(a) / count(a)` — count(a) skips nulls exactly like the
+  *      instance's own avg
+  *   2. scatter every distinct aggregate component in ONE concurrent wave
+  *      (each component is its own [[consistentWave]])
+  *   3. fold each component's partials per flat dimension path:
+  *      sum / count add, min / max compare, HLL registers merge by
+  *      element-wise max over the `application/hll` binary bodies (the
+  *      estimate is taken once over the merged sketch — merging estimates
+  *      would double-count overlap); null and missing leaves are
+  *      identities
+  *   4. evaluate the measure's arithmetic once per path
+  *   5. build the JSON tree once
+  *
+  * Non-aggregate queries concatenate matrixData and re-apply the limit
+  * (distributed top-k when sorted).
   *
   * Deployment shape: each instance owns a slice of the fact table
   * (disjoint day ranges / shard assignments, ref util.CalculateShardAssignment);
@@ -44,7 +49,9 @@ import graft.functions.Hll
   * HLL dimension keys are rebuilt from the wire's raw values (enum dims
   * decode through their dictionaries, numeric dims print as numbers) —
   * time-FORMATTED dimension labels are a JSON-path nicety the binary wire
-  * does not carry, matching the reference's HLL response contract.
+  * does not carry, matching the reference's HLL response contract. For
+  * the same reason an HLL component cannot share a path space with JSON
+  * components, so HLL inside arithmetic is refused.
   */
 final class Broker private (sliceProvider: () => Seq[Seq[String]],
     timeout: Duration, trials: Int, healthMemoryMillis: Long,
@@ -209,39 +216,14 @@ final class Broker private (sliceProvider: () => Seq[Seq[String]],
   def merged(q0: AqlQuery): JValue = {
     require(q0.measures.length == 1,
       "broker merges single-measure queries (the reference compiler enforces the same)")
-    val parsed = ExprParser.parse(q0.measures.head.sqlExpression)
-    parsed match {
+    ExprParser.parse(q0.measures.head.sqlExpression) match {
       case Expr.Num(1.0, _, true) => mergeNonAgg(q0)
-      case Expr.Call("avg", Seq(arg)) =>
-        // ref splitAvgQuery: same filters/dims, measure rewritten; aliases
-        // kept identical so the two trees share leaf keys. The two
-        // subqueries scatter CONCURRENTLY (the reference fans both plans
-        // in one wave, query_plan_agg.go:239-245) — behind a
-        // multithreaded instance the pair costs ~one query's wall time
-        val m = q0.measures.head
-        val sumsF = Future(scatterJson(stripSort(q0).copy(measures =
-          Seq(m.copy(sqlExpression = s"sum(${Render(arg)})"))))
-          .reduce(mergeTrees("sum")))
-        val countsF = Future(scatterJson(stripSort(q0).copy(measures =
-          Seq(m.copy(sqlExpression = "count(*)"))))
-          .reduce(mergeTrees("count")))
-        val (sums, counts) =
-          awaitGather(sumsF.zip(countsF), slices, 30.seconds)
-        mergeTrees("avg")(sums, counts)
-      case Expr.Call(op, _) if op == "sum" || op == "count" || op == "min" || op == "max" =>
-        scatterJson(stripSort(q0)).reduce(mergeTrees(op))
-      case Expr.Call(op, _) if op == "countdistincthll" || op == "hll" =>
-        mergeHll(stripSort(q0))
       // exact distinct is NOT distributable by summing per-slice counts —
-      // a value appearing in two slices would count twice. Reject loudly
-      // with the supported alternative (same policy for distinct inside
-      // derived arithmetic: countdistinct is absent from MergeableAggs)
+      // a value appearing in two slices would count twice
       case Expr.Call("countdistinct", _) => throw new IllegalArgumentException(
         "broker cannot merge count(distinct ...): per-slice distinct counts " +
           "double-count values present in multiple slices — use countdistincthll")
-      case e if derivedShape(e) => mergeDerived(stripSort(q0), e)
-      case other => throw new IllegalArgumentException(
-        s"broker cannot merge measure '${q0.measures.head.sqlExpression}'")
+      case e => mergeAgg(stripSort(q0), Broker.splitAvg(e))
     }
   }
 
@@ -251,135 +233,37 @@ final class Broker private (sliceProvider: () => Seq[Seq[String]],
   private def stripSort(q: AqlQuery): AqlQuery =
     q.copy(sorts = None, limit = Some(-1))
 
-  // ---- derived measures (arithmetic over aggregates) ----------------------
-
-  private val MergeableAggs = Set("sum", "count", "min", "max", "avg")
-
-  private def isArith(op: BinOp): Boolean = op match {
-    case BinOp.Add | BinOp.Sub | BinOp.Mul | BinOp.Div | BinOp.Mod => true
-    case _ => false
+  private def mergeAgg(q: AqlQuery, measure: Expr): JValue = {
+    val comps = Broker.components(measure).getOrElse(throw new IllegalArgumentException(
+      s"broker cannot merge measure '${q.measures.head.sqlExpression}'"))
+    val waves = comps.map(c => Future(gather(q, c)))
+    val leaves = comps.zip(awaitGather(Future.sequence(waves), slices, 30.seconds)).toMap
+    val eval = Broker.evaluator(measure, leaves)
+    // a dimensionless answer is always `{measure: leaf}`, like an
+    // instance's; grouped paths are the union over components — a path
+    // one component lacks (its wave saw other rows) evaluates to null,
+    // never a dropped group
+    val paths =
+      if (q.dimensionList.isEmpty) Seq(List(measureName(q)))
+      else comps.iterator.flatMap(c => leaves(c).keysIterator).distinct.toSeq
+    Broker.tree(paths.map(p => p -> eval(p).fold[JValue](JNull)(JDouble(_))))
   }
 
-  /** Shape test for a DERIVED measure — arithmetic over aggregate subtrees
-    * and numeric literals, the single-instance extension
-    * ([[graft.aql.AqlCompiler]] measureColumn's Binary case, e.g.
-    * `sum(fare) / count(*)`). Such a measure is NOT a semilattice fold —
-    * `sum(a)/count(*)` partials cannot be averaged — so the broker
-    * decomposes it: each distinct aggregate component scatters as its own
-    * subquery (the generalization of the reference's avg split,
-    * broker/query_plan_agg.go:439-469), each component's partials merge
-    * under that aggregate's own fold, and the arithmetic is evaluated once
-    * per group at the root. HLL components stay unsupported: their result
-    * trees key dimensions by the binary wire's raw decoded values, not the
-    * JSON path's formatted labels, so the key spaces cannot be joined.
-    */
-  private def derivedShape(e: Expr): Boolean = e match {
-    // at least one aggregate component is required: literal-only arithmetic
-    // (e.g. measure `2 + 3`) has zero components to scatter, and
-    // mergeDerived would return an empty object — keep the degenerate
-    // shape on the loud "cannot merge measure" path instead
-    case Expr.Binary(op, l, r) if isArith(op) =>
-      operandOk(l) && operandOk(r) && containsAgg(e)
-    case Expr.Paren(inner) => derivedShape(inner)
-    case _ => false
-  }
+  private def measureName(q: AqlQuery): String =
+    q.measures.head.alias.filter(_.nonEmpty).getOrElse("value")
 
-  private def containsAgg(e: Expr): Boolean = e match {
-    case Expr.Call(op, _) => MergeableAggs.contains(op)
-    case Expr.Binary(_, l, r) => containsAgg(l) || containsAgg(r)
-    case Expr.Paren(inner) => containsAgg(inner)
-    case _ => false
-  }
-
-  private def operandOk(e: Expr): Boolean = e match {
-    case Expr.Num(_, _, _) => true
-    case Expr.Paren(inner) => operandOk(inner)
-    case Expr.Call(op, _) => MergeableAggs.contains(op)
-    case Expr.Binary(op, l, r) if isArith(op) => operandOk(l) && operandOk(r)
-    case _ => false
-  }
-
-  private def mergeDerived(q: AqlQuery, e: Expr): JValue = {
-    val m = q.measures.head
-    def collect(x: Expr): Seq[Expr] = x match {
-      case Expr.Paren(inner) => collect(inner)
-      case c @ Expr.Call(_, _) => Seq(c)
-      case Expr.Binary(_, l, r) => collect(l) ++ collect(r)
-      case _ => Nil
-    }
-    // distinct components by rendered text: `sum(fare) / sum(fare)` fans
-    // sum(fare) once
-    val comps = collect(e).map(c => Render(c) -> c).distinctBy(_._1)
-    // all components scatter in ONE concurrent wave (the avg pair inside a
-    // component runs sequentially within its future — a component is
-    // already one concurrent unit of the wave)
-    val futures = comps.map { case (_, c) => Future(componentTree(q, m, c)) }
-    val trees = awaitGather(Future.sequence(futures), slices, 30.seconds)
-    val env: Map[String, Map[List[String], Option[Double]]] =
-      comps.map(_._1).zip(trees.map(t => flattenLeaves(t))).toMap
-    // union of leaf paths: well-formed partials group identically across
-    // components (same dims, same filters, same rows), so a path missing
-    // from one component means an upstream inconsistency — it surfaces as
-    // a null leaf, never a dropped group
-    val paths = env.valuesIterator.flatMap(_.keysIterator).toSeq.distinct
-    paths.foldLeft(JObject(): JValue) { case (tree, path) =>
-      val leaf = evalAt(e, path, env).map(JDouble(_): JValue).getOrElse(JNull)
-      insert(tree, path, leaf)
-    }
-  }
-
-  /** One aggregate component's merged tree (its own scatter + fold). */
-  private def componentTree(q: AqlQuery, m: AqlMeasure, c: Expr): JValue = c match {
-    case Expr.Call("avg", Seq(arg)) =>
-      val sums = scatterJson(q.copy(measures =
-        Seq(m.copy(sqlExpression = s"sum(${Render(arg)})")))).reduce(mergeTrees("sum"))
-      val counts = scatterJson(q.copy(measures =
-        Seq(m.copy(sqlExpression = "count(*)")))).reduce(mergeTrees("count"))
-      mergeTrees("avg")(sums, counts)
-    case Expr.Call(op, _) =>
-      scatterJson(q.copy(measures = Seq(m.copy(sqlExpression = Render(c)))))
-        .reduce(mergeTrees(op))
-    case other => throw new IllegalArgumentException(
-      s"not an aggregate component: ${Render(other)}")
-  }
-
-  /** Leaf paths of a merged JSON tree: dim-key chains for grouped results,
-    * the measure-name singleton for dimensionless ones. Null / non-numeric
-    * leaves flatten to None.
-    */
-  private def flattenLeaves(v: JValue,
-      prefix: List[String] = Nil): Map[List[String], Option[Double]] = v match {
-    case JObject(fields) =>
-      fields.flatMap { case (k, c) => flattenLeaves(c, prefix :+ k) }.toMap
-    case leaf => Map(prefix -> num(leaf))
-  }
-
-  /** Evaluate the derived arithmetic at one group path. Null propagates
-    * (any null component leaf nulls the group); division by zero folds to
-    * null — the broker algebra's avg convention (a single instance's
-    * IEEE double division would render Infinity; the broker's null is the
-    * deliberate semantic, consistent with its avg merge).
-    */
-  private def evalAt(e: Expr, path: List[String],
-      env: Map[String, Map[List[String], Option[Double]]]): Option[Double] = e match {
-    case Expr.Paren(inner) => evalAt(inner, path, env)
-    case Expr.Num(v, _, _) => Some(v)
-    case c @ Expr.Call(_, _) => env(Render(c)).getOrElse(path, None)
-    case Expr.Binary(op, l, r) =>
-      for {
-        a <- evalAt(l, path, env)
-        b <- evalAt(r, path, env)
-        v <- op match {
-          case BinOp.Add => Some(a + b)
-          case BinOp.Sub => Some(a - b)
-          case BinOp.Mul => Some(a * b)
-          case BinOp.Div => if (b == 0) None else Some(a / b)
-          // pmod, matching the single-instance compile (ExprCompiler)
-          case BinOp.Mod => if (b == 0) None else Some(((a % b) + b) % b)
-          case _ => None
-        }
-      } yield v
-    case _ => None
+  /** One aggregate component's scatter, folded per flat dimension path. */
+  private def gather(q: AqlQuery, c: Expr.Call): Broker.Leaves = {
+    val cq = q.copy(measures = Seq(q.measures.head.copy(sqlExpression = Render(c))))
+    if (Broker.HllOps(c.name)) {
+      val (_, _, merged) = gatherHll(cq)
+      merged.map { case (key, regs) =>
+        val path =
+          if (q.dimensionList.isEmpty) List(measureName(q))
+          else key.map(_.fold("NULL")(_.toString))
+        path -> Some(Hll.estimate(regs).toDouble)
+      }
+    } else scatterJson(cq).map(Broker.flatten).reduce(Broker.foldLeaves(c.name))
   }
 
   // ---- scatter ------------------------------------------------------------
@@ -421,7 +305,7 @@ final class Broker private (sliceProvider: () => Seq[Seq[String]],
     * loudly. Cross-WAVE drift (e.g. between avg's sum and count waves)
     * needs no retry: each wave is individually exact, and a group-set
     * mismatch between waves surfaces as a null leaf, never a silently
-    * wrong number (see mergeDerived).
+    * wrong number (see mergeAgg).
     */
   private def consistentWave[T](body: String, accept: String)(
       parse: Array[Byte] => T): Seq[T] = {
@@ -483,161 +367,64 @@ final class Broker private (sliceProvider: () => Seq[Seq[String]],
     }
   }
 
-  // ---- merge algebra (result_merge.go:42-141) -----------------------------
-
-  private def num(v: JValue): Option[Double] = v match {
-    case JDouble(d) => Some(d)
-    case JInt(i) => Some(i.toDouble)
-    case JLong(l) => Some(l.toDouble)
-    case JDecimal(d) => Some(d.toDouble)
-    case _ => None
-  }
-
-  /** Spec-visible (BrokerMergeAlgebraSpec): the scatter results fold with
-    * `.reduce(mergeTrees(op))`, so the algebra must be associative and
-    * commutative for the merged answer to be independent of slice count
-    * and arrival order — the fuzz pins that, including missing-key and
-    * null-leaf identities.
-    */
-  private[exec] def mergeTrees(op: String)(lhs: JValue, rhs: JValue): JValue = (lhs, rhs) match {
-    // a key MISSING on one side (matched FIRST so a null-on-A/absent-on-B
-    // group folds to null, not to a render-dropped JNothing): passes
-    // through for fold aggregates; for the avg root it means sum and count
-    // grouped differently — impossible for well-formed partials, error
-    // like the reference (result_merge.go:55-67)
-    case (JNothing, r) =>
-      if (op == "avg") throw new IllegalStateException(
-        "avg merge: dimension has only a count branch")
-      else r
-    case (l, JNothing) =>
-      if (op == "avg") throw new IllegalStateException(
-        "avg merge: dimension has only a sum branch")
-      else l
-    // a NULL leaf (key present, value null — e.g. sum over an all-null
-    // group): for avg the quotient is null (single-node parity; the
-    // reference errors here, a strictness we deliberately soften), for the
-    // other aggregates nulls are identity elements
-    case (JNull, r) => if (op == "avg") JNull else r
-    case (l, JNull) => if (op == "avg") JNull else l
-    case (JObject(lf), JObject(rf)) =>
-      val keys = (lf.map(_._1) ++ rf.map(_._1)).distinct
-      JObject(keys.map(k => k -> mergeTrees(op)(lhs \ k, rhs \ k)): _*)
-    case (l, r) =>
-      // Wire contract: measure leaves are float64, exactly as a single
-      // instance renders them (ResultShaper.leafOf coerces every numeric
-      // leaf via doubleValue(), matching the reference's float64 result
-      // values — result_merge.go merges float64s too). The broker
-      // therefore re-emits JDouble without changing the shape a client
-      // sees: `199.0` from one instance stays `199.0` behind the broker.
-      // BrokerSpec pins broker-leaf-type == instance-leaf-type.
-      (num(l), num(r)) match {
-        case (Some(a), Some(b)) => op match {
-          case "sum" | "count" => JDouble(a + b)
-          case "min" => JDouble(math.min(a, b))
-          case "max" => JDouble(math.max(a, b))
-          case "avg" => if (b == 0) JNull else JDouble(a / b)
-        }
-        case _ => throw new IllegalStateException(
-          s"merge type mismatch: ${l.getClass.getSimpleName} vs ${r.getClass.getSimpleName}")
-      }
-  }
-
   // ---- HLL (register-max over binary partials) ----------------------------
 
   /** Merged BINARY HLL response — the reference broker's ReturnHLLBinary
-    * path (query_plan_agg.go postProcessHLLBinary): fetch per-instance
-    * binary partials, register-max merge, re-encode ONE result block. A
+    * path (query_plan_agg.go postProcessHLLBinary): the same gather and
+    * register merge as the JSON answer, re-encoded as ONE result block. A
     * client written against the reference's `application/hll` wire parses
-    * the broker's response unchanged. Per-instance enum dictionaries are
-    * LOCAL (each instance dictionary-encodes the strings it saw), so rows
-    * merge on decoded strings and the output carries fresh dictionaries
-    * over the merged case set.
+    * the broker's response unchanged.
     */
   def aqlHllBinary(queryJson: String): Array[Byte] = {
     val q = stripSort(AqlJson.parseQuery(queryJson))
-    val parsed = ExprParser.parse(q.measures.head.sqlExpression)
-    parsed match {
-      case Expr.Call(op, _) if op == "countdistincthll" || op == "hll" =>
+    ExprParser.parse(q.measures.head.sqlExpression) match {
+      case Expr.Call(op, _) if Broker.HllOps(op) =>
       case _ => throw new IllegalArgumentException(
         "application/hll requires an HLL measure")
     }
-    val body = requestBody(q)
-    val bodies = consistentWave(body, "application/hll")(identity)
-    val blocks = bodies.map { bytes =>
+    val (dataTypes, isEnum, merged) = gatherHll(q)
+    // fresh dictionaries over the merged case set; the writer re-derives
+    // dim types from their sizes (a SmallEnum dim can widen to BigEnum
+    // after the merge) and re-slots widths the way an instance does
+    val dicts: Map[Int, Seq[String]] = isEnum.indices.filter(isEnum).map { d =>
+      d -> merged.keys.flatMap(_(d)).map(_.toString).toSeq.distinct.sorted
+    }.toMap
+    RefHllWire.encodeResult(isEnum.length, dicts, dataTypes, merged)
+  }
+
+  /** Fetch per-instance binary partials and merge registers by
+    * element-wise max per group. Per-instance enum dictionaries are LOCAL
+    * (each instance dictionary-encodes the strings it saw), so groups key
+    * on decoded values: the dictionary string for an enum dim, the raw
+    * number otherwise. Returns the wire's dim types, which dims are
+    * enum-typed, and the merged registers per group.
+    */
+  private def gatherHll(q: AqlQuery): (Seq[Long], IndexedSeq[Boolean],
+      mutable.LinkedHashMap[List[Option[Any]], Array[Byte]]) = {
+    val blocks = consistentWave(requestBody(q), "application/hll") { bytes =>
       RefHllWire.readResults(bytes).head match {
         case Right(b) => b
         case Left(err) => throw new IllegalStateException(s"instance error: $err")
       }
     }
-    val template = blocks.head
-    val n = template.dataTypes.length
+    val dataTypes = blocks.head.dataTypes
     // a dim is enum-typed if ANY instance shipped a dictionary for it (an
     // instance with no rows ships none)
-    val isEnum = (0 until n).map(d => blocks.exists(_.enumDicts.contains(d)))
-    // merge on decoded logical values: dictionary string for enum dims,
-    // the raw number otherwise
-    val merged = scala.collection.mutable.LinkedHashMap
-      .empty[List[Option[Any]], Array[Byte]]
+    val isEnum = dataTypes.indices.map(d => blocks.exists(_.enumDicts.contains(d)))
+    val merged = mutable.LinkedHashMap.empty[List[Option[Any]], Array[Byte]]
     blocks.foreach { block =>
       block.rows.zipWithIndex.foreach { case (row, r) =>
-        val key: List[Option[Any]] = (0 until n).map { d =>
-          if (isEnum(d)) block.dimString(r, d).map(identity[Any])
-          else row.dims(d).map(identity[Any])
+        val key: List[Option[Any]] = isEnum.indices.map { d =>
+          if (isEnum(d)) block.dimString(r, d) else row.dims(d)
         }.toList
-        merged.get(key) match {
-          case Some(regs) => graft.functions.Hll.mergeInto(regs, row.registers)
-          case None => merged(key) = row.registers.clone()
-        }
-      }
-    }
-    // fresh dictionaries over the merged case set; the writer re-derives
-    // dim types from their sizes (a SmallEnum dim can widen to BigEnum
-    // after the merge) and re-slots widths the way an instance does
-    val dicts: Map[Int, Seq[String]] = (0 until n).flatMap { d =>
-      if (!isEnum(d)) None
-      else Some(d -> merged.keys.flatMap(_(d)).map(_.toString).toSeq.distinct.sorted)
-    }.toMap
-    RefHllWire.encodeResult(n, dicts, template.dataTypes, merged)
-  }
-
-  private def mergeHll(q: AqlQuery): JValue = {
-    val body = requestBody(q)
-    val bodies = consistentWave(body, "application/hll")(identity)
-    // per-instance blocks → (dim keys → registers), merged by register max
-    val merged = scala.collection.mutable.LinkedHashMap.empty[List[String], Array[Byte]]
-    bodies.foreach { bytes =>
-      val block = RefHllWire.readResults(bytes).head match {
-        case Right(b) => b
-        case Left(err) => throw new IllegalStateException(s"instance error: $err")
-      }
-      block.rows.zipWithIndex.foreach { case (row, r) =>
-        val key = row.dims.indices
-          .map(d => block.dimString(r, d).getOrElse("NULL")).toList
         merged.get(key) match {
           case Some(regs) => Hll.mergeInto(regs, row.registers)
           case None => merged(key) = row.registers.clone()
         }
       }
     }
-    val measureName = q.measures.head.alias.filter(_.nonEmpty).getOrElse("value")
-    if (q.dimensionList.isEmpty) {
-      val est = merged.headOption
-        .map(kv => JDouble(Hll.estimate(kv._2).toDouble)).getOrElse(JNull)
-      return JObject(measureName -> est)
-    }
-    merged.foldLeft(JObject(): JValue) { case (tree, (key, regs)) =>
-      insert(tree, key, JDouble(Hll.estimate(regs).toDouble))
-    }
+    (dataTypes, isEnum, merged)
   }
-
-  private def insert(tree: JValue, keys: List[String], leaf: JValue): JValue =
-    keys match {
-      case Nil => leaf
-      case k :: rest =>
-        val obj = tree match { case o: JObject => o; case _ => JObject() }
-        val child = insert(obj \ k, rest, leaf)
-        JObject(obj.obj.filterNot(_._1 == k) :+ (k -> child): _*)
-    }
 
   // ---- non-agg (concat + limit; sorted → distributed top-k) ---------------
 
@@ -734,6 +521,143 @@ object Broker {
   private[exec] def staticSlices(hosts: Seq[String]): Seq[Seq[String]] = {
     require(hosts.nonEmpty, "broker needs at least one instance")
     hosts.map(_.split('|').map(_.trim).filter(_.nonEmpty).toSeq)
+  }
+
+  // ---- the merge algebra (result_merge.go:42-141) -------------------------
+
+  /** One component's answer: a leaf per flat dimension path (the
+    * measure-name singleton for a dimensionless answer), None for null.
+    */
+  private[exec] type Leaves = collection.Map[List[String], Option[Double]]
+
+  private val FoldOps = Set("sum", "count", "min", "max")
+  private val HllOps = Set("countdistincthll", "hll")
+
+  /** The reference's avg split (splitAvgQuery, query_plan_agg.go:439-469):
+    * `avg(a)` becomes `sum(a) / count(a)`, the null-skipping count the
+    * instance's own avg divides by.
+    */
+  private[exec] def splitAvg(e: Expr): Expr = e match {
+    case Expr.Call("avg", Seq(a)) =>
+      Expr.Binary(BinOp.Div, Expr.Call("sum", Seq(a)), Expr.Call("count", Seq(a)))
+    case Expr.Paren(inner) => Expr.Paren(splitAvg(inner))
+    case Expr.Binary(op, l, r) => Expr.Binary(op, splitAvg(l), splitAvg(r))
+    case other => other
+  }
+
+  private def isArith(op: BinOp): Boolean = op match {
+    case BinOp.Add | BinOp.Sub | BinOp.Mul | BinOp.Div | BinOp.Mod => true
+    case _ => false
+  }
+
+  /** The distinct aggregate components of a mergeable measure: one HLL
+    * call alone, or arithmetic over numeric literals and sum / count /
+    * min / max calls with at least one call. None for anything else —
+    * countdistinct, HLL inside arithmetic (its paths are the binary
+    * wire's raw values, not the JSON labels), literal-only arithmetic.
+    */
+  private def components(e: Expr): Option[Seq[Expr.Call]] = {
+    def walk(x: Expr): Option[Seq[Expr.Call]] = x match {
+      case Expr.Paren(inner) => walk(inner)
+      case Expr.Num(_, _, _) => Some(Nil)
+      case c @ Expr.Call(op, _) if FoldOps(op) => Some(Seq(c))
+      case Expr.Binary(op, l, r) if isArith(op) =>
+        for (a <- walk(l); b <- walk(r)) yield a ++ b
+      case _ => None
+    }
+    e match {
+      case c @ Expr.Call(op, _) if HllOps(op) => Some(Seq(c))
+      case _ => walk(e).map(_.distinct).filter(_.nonEmpty)
+    }
+  }
+
+  /** A measure compiled once into a function of the group path. Null
+    * propagates; division by zero folds to null (a single instance's IEEE
+    * division would render Infinity — the broker's null is deliberate).
+    */
+  private[exec] def evaluator(e: Expr,
+      leaves: Map[Expr.Call, Leaves]): List[String] => Option[Double] = e match {
+    case Expr.Paren(inner) => evaluator(inner, leaves)
+    case Expr.Num(v, _, _) => _ => Some(v)
+    case c: Expr.Call =>
+      val ls = leaves(c)
+      p => ls.getOrElse(p, None)
+    case Expr.Binary(op, l, r) =>
+      val (f, g) = (evaluator(l, leaves), evaluator(r, leaves))
+      p => for {
+        a <- f(p)
+        b <- g(p)
+        v <- op match {
+          case BinOp.Add => Some(a + b)
+          case BinOp.Sub => Some(a - b)
+          case BinOp.Mul => Some(a * b)
+          case BinOp.Div => if (b == 0) None else Some(a / b)
+          // pmod, matching the single-instance compile (ExprCompiler)
+          case BinOp.Mod => if (b == 0) None else Some(((a % b) + b) % b)
+          case _ => None
+        }
+      } yield v
+    case other => throw new IllegalArgumentException(
+      s"not a mergeable measure term: ${Render(other)}")
+  }
+
+  /** An instance's result tree as flat paths: dim-key chains for grouped
+    * results, the measure-name singleton for dimensionless ones.
+    */
+  private[exec] def flatten(v: JValue): Leaves = {
+    val out = mutable.LinkedHashMap.empty[List[String], Option[Double]]
+    def walk(x: JValue, rev: List[String]): Unit = x match {
+      case JObject(fields) => fields.foreach { case (k, c) => walk(c, k :: rev) }
+      case JNull => out(rev.reverse) = None
+      // Wire contract: measure leaves are float64, exactly as a single
+      // instance renders them (ResultShaper.leafOf), and the broker
+      // re-emits JDouble — `199.0` from one instance stays `199.0`
+      case JDouble(d) => out(rev.reverse) = Some(d)
+      case JInt(i) => out(rev.reverse) = Some(i.toDouble)
+      case JLong(l) => out(rev.reverse) = Some(l.toDouble)
+      case JDecimal(d) => out(rev.reverse) = Some(d.toDouble)
+      case other => throw new IllegalStateException(
+        s"non-numeric measure leaf ${other.getClass.getSimpleName} at ${rev.reverse.mkString("/")}")
+    }
+    walk(v, Nil)
+    out
+  }
+
+  /** Fold two partials of one component per path. Spec-visible
+    * (BrokerMergeAlgebraSpec): partials reduce in arrival order, so the
+    * fold must be associative and commutative; a path missing on one side
+    * and a null leaf are identities, never zeros.
+    */
+  private[exec] def foldLeaves(op: String)(a: Leaves, b: Leaves): Leaves = {
+    val out = mutable.LinkedHashMap.from(a)
+    b.foreach { case (path, y) =>
+      out(path) = (out.getOrElse(path, None), y) match {
+        case (Some(u), Some(v)) => Some(op match {
+          case "sum" | "count" => u + v
+          case "min" => math.min(u, v)
+          case "max" => math.max(u, v)
+        })
+        case (u, v) => u.orElse(v)
+      }
+    }
+    out
+  }
+
+  /** Nest flat paths into the JSON result tree in one pass, keys in
+    * first-seen order.
+    */
+  private[exec] def tree(leaves: Seq[(List[String], JValue)]): JValue = {
+    final class Node(var leaf: JValue = JNull) {
+      val kids = mutable.LinkedHashMap.empty[String, Node]
+    }
+    val root = new Node
+    leaves.foreach { case (path, v) =>
+      path.foldLeft(root)((n, k) => n.kids.getOrElseUpdate(k, new Node)).leaf = v
+    }
+    def render(n: Node): JValue = JObject(n.kids.iterator.map { case (k, c) =>
+      k -> (if (c.kids.isEmpty) c.leaf else render(c))
+    }.toList)
+    render(root)
   }
 
   /** Broker over a [[BrokerTopology]]: the slice map re-resolves per

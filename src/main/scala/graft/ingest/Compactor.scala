@@ -38,11 +38,15 @@ object Compactor {
     * `bucket=` / `cell=` partitions ([[graft.operators.TextIndex.compact]],
     * [[graft.operators.IvfIndex.compact]]) — appends grow file counts
     * without bound there too, and the swap discipline is identical.
+    * `exclusive` runs each day's rename pair, the step in which a reader
+    * of `dir` can see the day missing; a caller that serves queries from
+    * `dir` passes its reader exclusion, as for [[Backfill]].
     */
   def compact(spark: SparkSession, dir: String, sortCols: Seq[String],
       maxFiles: Int = 8, targetFiles: Int = 1,
       zorderCols: Seq[String] = Nil,
-      partitionPrefix: String = s"${Archiver.DayCol}="): Seq[DayReport] = {
+      partitionPrefix: String = s"${Archiver.DayCol}=",
+      exclusive: (=> Unit) => Unit = swap => swap): Seq[DayReport] = {
     require(maxFiles >= 1, s"maxFiles $maxFiles must be >= 1")
     require(targetFiles >= 1, s"targetFiles $targetFiles must be >= 1")
     require(zorderCols.isEmpty || sortCols.isEmpty,
@@ -62,14 +66,14 @@ object Compactor {
       ".graft-archive.lock", staleMs = 120000L, role = "compaction",
       noun = "archive write lock", heartbeatMs = 15000L) { _ =>
       compactLocked(spark, root, fs, sortCols, maxFiles, targetFiles,
-        zorderCols, partitionPrefix)
+        zorderCols, partitionPrefix, exclusive)
     }
   }
 
   private def compactLocked(spark: SparkSession, root: Path,
       fs: org.apache.hadoop.fs.FileSystem, sortCols: Seq[String],
       maxFiles: Int, targetFiles: Int, zorderCols: Seq[String],
-      partitionPrefix: String): Seq[DayReport] = {
+      partitionPrefix: String, exclusive: (=> Unit) => Unit): Seq[DayReport] = {
     val prefix = partitionPrefix
     val reports = Seq.newBuilder[DayReport]
     // day-partition compactions of a (possibly shared) archive announce
@@ -121,8 +125,10 @@ object Compactor {
           // a crash after the swap leaves only cleanup.
           val trash = new Path(root, s".compact-old-${part.getName}")
           if (fs.exists(trash)) fs.delete(trash, true)
-          require(fs.rename(part, trash), s"compact: rename $part -> $trash failed")
-          require(fs.rename(tmp, part), s"compact: rename $tmp -> $part failed")
+          exclusive {
+            require(fs.rename(part, trash), s"compact: rename $part -> $trash failed")
+            require(fs.rename(tmp, part), s"compact: rename $tmp -> $part failed")
+          }
           fs.delete(trash, true)
           val after = fs.listStatus(part)
             .count(s => s.isFile && s.getPath.getName.startsWith("part-"))

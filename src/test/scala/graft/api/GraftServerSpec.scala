@@ -230,6 +230,26 @@ class GraftServerSpec extends SparkSpec {
       assert(drained.await(120, java.util.concurrent.TimeUnit.SECONDS))
       assert(!srv.hasLiveRows("events"))
       assert(count() == n)
+      // the same for a compaction: fragment the day past Compactor's
+      // maxFiles (8), then compact it under an in-flight query
+      import org.apache.hadoop.fs.Path
+      val day = new Path(dir, s"${graft.ingest.Archiver.DayCol}=2024-01-15")
+      val fs = day.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val frag = new Path(java.nio.file.Files.createTempDirectory("graft_frag").toString, "d")
+      spark.read.parquet(day.toString).repartition(12).write.parquet(frag.toString)
+      assert(fs.delete(day, true) && fs.rename(frag, day))
+      def parts() = fs.listStatus(day).count(_.getPath.getName.startsWith("part-"))
+      assert(parts() > 8)
+      assert(count() == n)
+      val compacted = new java.util.concurrent.CountDownLatch(1)
+      srv.serving {
+        new Thread(() => { srv.compact("events", dir); compacted.countDown() }).start()
+        assert(!compacted.await(5, java.util.concurrent.TimeUnit.SECONDS),
+          "the compaction swapped day files under an in-flight query")
+      }
+      assert(compacted.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(parts() == 1)
+      assert(count() == n)
     } finally srv.stop()
   }
 

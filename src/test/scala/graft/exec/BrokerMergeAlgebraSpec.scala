@@ -1,5 +1,6 @@
 package graft.exec
 
+import graft.aql.{Expr, ExprParser}
 import org.json4s._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -7,11 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Algebraic properties of the broker's partial-result fold.
   *
-  * [[Broker.merged]] reduces per-slice result trees with
-  * `.reduce(mergeTrees(op))`; `Seq.reduce` folds left in arrival order, so
-  * for the merged answer to be independent of HOW the data is sliced and
-  * WHICH order the gathers land, the fold must be associative and
-  * commutative — including the edges the two-slice integration tests
+  * [[Broker.merged]] flattens each slice's result tree to one leaf per
+  * dimension path and reduces the partials with
+  * `.reduce(Broker.foldLeaves(op))`; `Seq.reduce` folds left in arrival
+  * order, so for the merged answer to be independent of HOW the data is
+  * sliced and WHICH order the gathers land, the fold must be associative
+  * and commutative — including the edges the two-slice integration tests
   * rarely hit: a group key missing from one slice but not another, null
   * leaves (all-null groups), and deep dimension nesting. Leaves are
   * integer-valued doubles so floating-point non-associativity can't mask a
@@ -19,9 +21,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * the documented and accepted behavior for fractional measures).
   */
 class BrokerMergeAlgebraSpec extends AnyFunSuite {
-
-  // never contacted: mergeTrees is pure
-  private val broker = new Broker(Seq("http://localhost:9"))
 
   private def forAllN[A](gen: Gen[A], n: Int)(f: A => Unit): Unit =
     (0 until n).foreach { i =>
@@ -51,20 +50,19 @@ class BrokerMergeAlgebraSpec extends AnyFunSuite {
             1 -> Gen.const(Option.empty[JValue])))))
         .map(fields => JObject(fields.collect { case (k, Some(v)) => k -> v }: _*))
 
-  /** Key-order-insensitive comparison form. */
-  private def normalize(v: JValue): Any = v match {
-    case JObject(fields) => fields.map { case (k, c) => k -> normalize(c) }.sortBy(_._1)
-    case JDouble(d) => d
-    case other => other
-  }
+  /** A slice's partial as the fold sees it, in an order-insensitive form. */
+  private def leaves(v: JValue): Map[List[String], Option[Double]] =
+    Broker.flatten(v).toMap
 
   private val FoldOps = Seq("sum", "count", "min", "max")
+
+  private def fold(op: String)(x: JValue, y: JValue) =
+    Broker.foldLeaves(op)(Broker.flatten(x), Broker.flatten(y))
 
   test("merge is commutative (slice gather order cannot change the answer)") {
     val gen = Gen.zip(genTree(2), genTree(2), Gen.oneOf(FoldOps))
     forAllN(gen, n = 400) { case (x, y, op) =>
-      val m = broker.mergeTrees(op) _
-      assert(normalize(m(x, y)) == normalize(m(y, x)),
+      assert(fold(op)(x, y).toMap == fold(op)(y, x).toMap,
         s"$op not commutative for\n  $x\n  $y")
     }
   }
@@ -72,38 +70,53 @@ class BrokerMergeAlgebraSpec extends AnyFunSuite {
   test("merge is associative (slice count and reduce shape cannot change the answer)") {
     val gen = Gen.zip(genTree(2), genTree(2), genTree(2), Gen.oneOf(FoldOps))
     forAllN(gen, n = 400) { case (x, y, z, op) =>
-      val m = broker.mergeTrees(op) _
-      assert(normalize(m(m(x, y), z)) == normalize(m(x, m(y, z))),
+      val m = Broker.foldLeaves(op) _
+      val Seq(a, b, c) = Seq(x, y, z).map(Broker.flatten)
+      assert(m(m(a, b), c).toMap == m(a, m(b, c)).toMap,
         s"$op not associative for\n  $x\n  $y\n  $z")
     }
   }
 
   test("missing keys and null leaves are identities, never zeros") {
-    val m = broker.mergeTrees("sum") _
     // a group absent on one slice keeps the other slice's value
     val only = JObject("a" -> JDouble(7))
-    assert(normalize(m(only, JObject())) == normalize(only))
-    assert(normalize(m(JObject(), only)) == normalize(only))
+    assert(fold("sum")(only, JObject()).toMap == leaves(only))
+    assert(fold("sum")(JObject(), only).toMap == leaves(only))
     // an all-null group (key present, null leaf) is the fold identity,
     // not 0 — summing it as 0 would be right for sum but WRONG for min
     val withNull = JObject("a" -> JNull)
-    val mMin = broker.mergeTrees("min") _
-    assert(normalize(mMin(withNull, only)) == normalize(only))
-    assert(normalize(mMin(only, withNull)) == normalize(only))
+    assert(fold("min")(withNull, only).toMap == leaves(only))
+    assert(fold("min")(only, withNull).toMap == leaves(only))
     // both sides null stays null (the group existed, its measure is null)
-    assert(mMin(withNull, JObject("a" -> JNull)) == JObject("a" -> JNull))
+    assert(fold("min")(withNull, JObject("a" -> JNull)).toMap ==
+      Map(List("a") -> None))
   }
 
-  test("avg pairs a sum branch with a count branch and errors on a lone one") {
-    val mAvg = broker.mergeTrees("avg") _
-    val sums = JObject("a" -> JDouble(10), "b" -> JDouble(3))
-    val counts = JObject("a" -> JDouble(4), "b" -> JDouble(0))
-    // division per leaf; count 0 folds to null, not Infinity
-    assert(normalize(mAvg(sums, counts)) ==
-      normalize(JObject("a" -> JDouble(2.5), "b" -> JNull)))
-    val e = intercept[IllegalStateException] {
-      mAvg(JObject("a" -> JDouble(1)), JObject())
+  test("avg divides sum by count per path, zero count to null") {
+    val avg = ExprParser.parse("avg(x)")
+    val Expr.Call(_, Seq(x)) = avg
+    val eval = Broker.evaluator(Broker.splitAvg(avg), Map(
+      Expr.Call("sum", Seq(x)) ->
+        Map(List("a") -> Some(10.0), List("b") -> Some(3.0), List("c") -> None),
+      Expr.Call("count", Seq(x)) ->
+        Map(List("a") -> Some(4.0), List("b") -> Some(0.0), List("c") -> Some(0.0))))
+    assert(eval(List("a")) == Some(2.5))
+    // a zero count folds to null, not Infinity; an all-null group and a
+    // path no component reported stay null
+    Seq("b", "c", "d").foreach(k => assert(eval(List(k)).isEmpty, k))
+  }
+
+  test("the merged tree nests the folded paths back into the instance shape") {
+    // a tree with no empty objects round-trips through flatten and the
+    // one-pass builder
+    def pruned(v: JValue): JValue = v match {
+      case JObject(fs) => JObject(fs.map { case (k, c) => k -> pruned(c) }
+        .filter { case (_, c) => c != JObject() })
+      case leaf => leaf
     }
-    assert(e.getMessage.contains("only a sum branch"), e.getMessage)
+    forAllN(genTree(3).map(pruned), n = 200) { x =>
+      assert(Broker.tree(Broker.flatten(x).toSeq.map { case (p, v) =>
+        p -> v.fold[JValue](JNull)(JDouble(_)) }) == x, s"$x")
+    }
   }
 }

@@ -15,7 +15,8 @@ import org.json4s.jackson.JsonMethods
   * deployment shape); the broker fans one AQL query over both and merges
   * partials. Every merged result must equal the single-instance answer
   * over the whole table — sum/count add, min/max compare, avg via
-  * sum+count subplans, HLL via register-max over binary sketch bodies.
+  * sum + count(arg) components, HLL via register-max over binary sketch
+  * bodies.
   */
 class BrokerSpec extends SparkSpec {
 
@@ -45,10 +46,10 @@ class BrokerSpec extends SparkSpec {
 
   private val client = HttpClient.newHttpClient()
 
-  private def singleAnswer(queryJson: String): JValue = {
+  private def singleAnswer(queryJson: String, port: => Int = whole.boundPort): JValue = {
     val resp = client.send(
       HttpRequest.newBuilder(URI.create(
-        s"http://localhost:${whole.boundPort}/query/aql"))
+        s"http://localhost:$port/query/aql"))
         .POST(HttpRequest.BodyPublishers.ofString(s"""{"queries": [$queryJson]}"""))
         .build(),
       HttpResponse.BodyHandlers.ofString())
@@ -137,6 +138,30 @@ class BrokerSpec extends SparkSpec {
     assertClose(merged, expected, "avg(value)")
   }
 
+  test("avg skips null arguments exactly like the instance's avg") {
+    // every third event's value is null: the instance's avg divides by the
+    // non-null count, so a broker dividing by count(*) would shrink every
+    // group's average
+    def nulled(c: Catalog): Catalog = {
+      val ev = c.tables("events")
+      c.copy(tables = c.tables + ("events" -> ev.copy(load = s =>
+        ev.load(s).withColumn("value", when(col("event_id") % 3 =!= 0, col("value"))))))
+    }
+    val servers = Seq(sliced(lower = true), sliced(lower = false),
+      Catalog.testdata(sfDir)).map { c =>
+      val s = new GraftServer(nulled(c), spark); s.start(); s
+    }
+    try {
+      val Seq(a, b, one) = servers
+      val b2 = new Broker(Seq(s"http://localhost:${a.boundPort}",
+        s"http://localhost:${b.boundPort}"))
+      Seq("avg(value)", "avg(value) * 2 + 1").foreach { m =>
+        assertClose(JsonMethods.parse(b2.aql(query(m))),
+          singleAnswer(query(m), one.boundPort), s"$m over null values")
+      }
+    } finally servers.foreach(_.stop())
+  }
+
   test("derived measures decompose into per-aggregate scatters") {
     // arithmetic over aggregates is NOT a semilattice fold — the broker
     // must fan each aggregate component separately and evaluate the
@@ -172,9 +197,9 @@ class BrokerSpec extends SparkSpec {
   }
 
   test("aggregate-free arithmetic measure fails loudly, not as an empty object") {
-    // `2 + 3` has zero aggregate components — derivedShape must keep it on
-    // the loud error path (mergeDerived over zero components would return
-    // an empty JObject: a silent empty result)
+    // `2 + 3` has zero aggregate components — it must stay on the loud
+    // error path (a merge over zero components would return an empty
+    // JObject: a silent empty result)
     val e = intercept[IllegalArgumentException](broker.aql(query("2 + 3")))
     assert(e.getMessage.contains("cannot merge"), e.getMessage)
   }
@@ -454,7 +479,8 @@ class BrokerSpec extends SparkSpec {
     // instance whose events load stalls 2 s per query compile: avg fans
     // TWO subqueries at it — scattered serially against a single-threaded
     // server that costs >= 4 s of stall; concurrent scatter against the
-    // multithreaded instance costs ~one stall
+    // multithreaded instance costs ~one stall. An avg inside arithmetic
+    // splits into the same pair and must scatter in the same one wave
     val base = Catalog.testdata(sfDir)
     val ev = base.tables("events")
     val slowCat = base.copy(tables = base.tables +
@@ -463,12 +489,14 @@ class BrokerSpec extends SparkSpec {
     slow.start()
     try {
       val b = new Broker(Seq(s"http://localhost:${slow.boundPort}"))
-      val t0 = System.nanoTime()
-      val merged = JsonMethods.parse(b.aql(query("avg(value)")))
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      assertClose(merged, singleAnswer(query("avg(value)")), "concurrent avg")
-      assert(wallMs < 3500,
-        s"avg over one instance took ${wallMs}ms — sum+count did not overlap")
+      Seq("avg(value)", "avg(value) * 2 + 1").foreach { m =>
+        val t0 = System.nanoTime()
+        val merged = JsonMethods.parse(b.aql(query(m)))
+        val wallMs = (System.nanoTime() - t0) / 1000000
+        assertClose(merged, singleAnswer(query(m)), s"concurrent $m")
+        assert(wallMs < 3500,
+          s"$m over one instance took ${wallMs}ms — sum+count did not overlap")
+      }
     } finally slow.stop()
   }
 
