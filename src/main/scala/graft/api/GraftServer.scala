@@ -1,13 +1,12 @@
 package graft.api
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -30,6 +29,11 @@ import graft.ingest.Upsert
   *     immediately (the reference's live-batch freshness,
   *     memstore/ingestion.go:25-76)
   *   - `GET /schema/tables` and `GET /schema/tables/{t}` → table metadata
+  *
+  * The query endpoints are [[QueryFront]] answering each query with
+  * [[graft.exec.QueryService]], the broker's front too; every route,
+  * `GET /metrics` included, stands on the [[TierHttp]] plumbing the
+  * broker shares.
   *
   * The overlay holds only the rows ingested since the table's last drain,
   * PK-deduped and checkpointed in memory — the reference's live batches.
@@ -395,82 +399,39 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     baseCatalog.timezoneTable,
     dynamic = name => schemaStore.get(name).map(createdTableDef))
 
-  /** Per-server query metrics, served at GET /metrics. */
-  val metrics = new Metrics
-
-  private val service =
-    new QueryService(catalog, spark, strictCompat, Some(metrics), queryTimeoutSec)
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
-  // bounded request pool: without setExecutor the JDK server runs EVERY
-  // exchange on its single dispatcher thread — queries, ingests, and
-  // health probes all serialize. Daemon threads so a forgotten stop()
-  // can't pin the JVM. The pool must be AT LEAST as large as the TOTAL
-  // admission capacity (query + ingest + the always-on bootstrap class):
-  // the executor's queue is unbounded and admission is checked only once
-  // a pool thread picks the exchange up, so a smaller pool would make
-  // the semaphores unreachable (requests queue instead of 503ing). With
-  // bounds set, threads are the reference's thread-per-connection model
-  // (ares.yaml's 650 connections) and the semaphores bind.
-  private val bootstrapCapacity = math.max(2, serverThreads / 4)
-  // The query/ingest isolation guarantee needs BOTH classes bounded: with
-  // one bound set and the other 0, the unbounded class could occupy every
-  // pool thread and the bounded class's requests would sit in the
-  // executor's unbounded queue — never served, never 503'd. So a class
-  // left unbounded BY CONFIG gets an implicit bound of `serverThreads`
-  // whenever the other class is bounded; pool sizing then accounts for
-  // every admission slot and the semaphores stay reachable. With neither
-  // bound set there are no semaphores at all (the original single-pool
-  // behavior).
+  // admission classes: the reference provisions query and ingestion
+  // concurrency SEPARATELY (ares.yaml's 300 + 300), so a query flood
+  // cannot starve ingestion. The isolation needs BOTH classes bounded:
+  // with one bound set and the other 0, the unbounded class could occupy
+  // every pool thread and the bounded class's requests would sit in the
+  // executor's queue — never served, never 503'd. So a class left
+  // unbounded BY CONFIG gets an implicit bound of `serverThreads`
+  // whenever the other class is bounded. With neither bound set there
+  // are no query or ingest semaphores at all.
   private val effQueryBound =
     if (maxQueryConnections > 0) maxQueryConnections
     else if (maxIngestConnections > 0) serverThreads else 0
   private val effIngestBound =
     if (maxIngestConnections > 0) maxIngestConnections
     else if (maxQueryConnections > 0) serverThreads else 0
-  private val poolThreads = math.max(serverThreads,
-    (if (effQueryBound > 0 || effIngestBound > 0)
-      effQueryBound + effIngestBound + bootstrapCapacity + 4 else 0))
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(
-    poolThreads,
-    (r: Runnable) => { val t = new Thread(r, "graft-http"); t.setDaemon(true); t })
-  server.setExecutor(pool)
-
-  /** Per-class admission slots (null = unbounded). A request that gets
-    * no slot within a short bounded wait is REJECTED with 503 — fail
-    * fast beats unbounded queueing at saturation, and the broker's
-    * replica failover treats the 503 as a retryable fetch failure and
-    * routes around the busy instance.
-    */
-  private val querySlots =
-    if (effQueryBound > 0)
-      new java.util.concurrent.Semaphore(effQueryBound) else null
-  private val ingestSlots =
-    if (effIngestBound > 0)
-      new java.util.concurrent.Semaphore(effIngestBound) else null
   // peer-bootstrap file streams pin a pool thread for a whole (possibly
   // multi-hundred-MB) transfer — ALWAYS bounded, so a few bootstrapping
   // peers can never occupy every thread and starve health/query/ingest;
   // a 503'd peer backs off and retries (copySliceFromPeer's 503 loop)
-  private val bootstrapSlots =
-    new java.util.concurrent.Semaphore(bootstrapCapacity)
+  private val bootstrapCapacity = math.max(2, serverThreads / 4)
+  private val http = new TierHttp(port, serverThreads,
+    if (effQueryBound > 0 || effIngestBound > 0)
+      effQueryBound + effIngestBound + bootstrapCapacity else 0,
+    "server")
+  private val querySlots = http.admission(effQueryBound)
+  private val ingestSlots = http.admission(effIngestBound)
+  private val bootstrapSlots = http.admission(bootstrapCapacity)
 
-  private def admitted(ex: HttpExchange,
-      slots: java.util.concurrent.Semaphore)(f: => Unit): Unit =
-    if (slots == null) f
-    else if (!slots.tryAcquire(100, java.util.concurrent.TimeUnit.MILLISECONDS)) {
-      metrics.recordRejected()
-      respond(ex, 503, """{"error":"server at capacity, retry"}""")
-    } else try f finally slots.release()
+  private val service =
+    new QueryService(catalog, spark, strictCompat, Some(http.metrics), queryTimeoutSec)
 
-  // route registry: every mounted context path, in mount order — the
-  // OpenApiSpec asserts the served API description covers each of these
-  private val mountedPaths = scala.collection.mutable.ArrayBuffer.empty[String]
-  private def mount(path: String, h: HttpHandler): Unit = {
-    mountedPaths += path
-    server.createContext(path, h)
-  }
   /** Every mounted HTTP context path. */
-  def routes: Seq[String] = mountedPaths.toList
+  def routes: Seq[String] = http.routes
 
   /** Queries vs file swaps in the drained dirs they read. A query lists
     * a drained dir when it compiles and reads the listed files when it
@@ -532,57 +493,42 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     }
   }
 
-  mount("/query/aql", (ex: HttpExchange) => handle(ex) {
-    admitted(ex, querySlots) {
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
-      if (accept == "application/hll") {
-        val first = graft.aql.AqlJson.parseRequest(body).queries.head
-        val bin = withServingVersion(ex)(service.aqlBinary(write(first)))
-        respondBytes(ex, 200, "application/hll", bin)
-      } else {
-        val out = withServingVersion(ex)(service.aql(body))
-        respond(ex, 200, out)
-      }
+  http.mount("/query/aql") { ex =>
+    http.admitted(ex, querySlots) {
+      http.reply(ex, withServingVersion(ex)(QueryFront.aql(ex, http.metrics)(
+        service.answer(_, "aql"), service.aqlBinary)))
     }
-  })
+  }
 
-  mount("/query/sql", (ex: HttpExchange) => handle(ex) {
-    admitted(ex, querySlots) {
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      val out = withServingVersion(ex)(service.sql(body))
-      respond(ex, 200, out)
+  http.mount("/query/sql") { ex =>
+    http.admitted(ex, querySlots) {
+      http.reply(ex, withServingVersion(ex)(QueryFront.sql(ex, http.metrics)(
+        service.answer(_, "sql"))))
     }
-  })
-
-  // operational metrics: query counts + per-query wall time / rows scanned
-  // (ref utils/reporter.go's metric families, surfaced as one JSON doc)
-  mount("/metrics", (ex: HttpExchange) => handle(ex) {
-    respond(ex, 200, metrics.renderJson)
-  })
+  }
 
   // debug console — the reference ships a swagger + debug UI under
   // api/ui/; this is the equivalent single-page console over the data
   // endpoints that already exist: /metrics (live counters + recent query
   // table), /schema/tables (catalog browser), /dbg/plan (paste an AQL
   // document, read the formatted physical plan)
-  mount("/ui", (ex: HttpExchange) => handle(ex) {
-    respondBytes(ex, 200, "text/html; charset=utf-8",
+  http.mount("/ui") { ex =>
+    http.respondBytes(ex, 200, "text/html; charset=utf-8",
       GraftServer.ConsoleHtml.getBytes(StandardCharsets.UTF_8))
-  })
+  }
 
   // machine-readable API description (the swagger half of the reference's
   // api/ui tree; the console above is the human half)
-  mount("/openapi.json", (ex: HttpExchange) => handle(ex) {
-    respondBytes(ex, 200, "application/json",
+  http.mount("/openapi.json") { ex =>
+    http.respondBytes(ex, 200, "application/json",
       OpenApi.spec.getBytes(StandardCharsets.UTF_8))
-  })
+  }
 
   // plan inspection: `GET /dbg/plan?query=<url-encoded AQL JSON>` or the
   // AQL JSON as a POST body → the formatted physical plan, unexecuted
   // (ref api/debug_handler.go:40+ exposes per-shard internals; the Spark
   // analogue of "what will this query do" is the Catalyst plan)
-  mount("/dbg/plan", (ex: HttpExchange) => handle(ex) {
+  http.mount("/dbg/plan") { ex =>
     val q =
       if (ex.getRequestMethod == "GET")
         Option(ex.getRequestURI.getRawQuery).getOrElse("")
@@ -591,17 +537,17 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
               java.net.URLDecoder.decode(p.stripPrefix("query="), "UTF-8")
           }.getOrElse(throw new IllegalArgumentException("missing ?query="))
       else new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    respondBytes(ex, 200, "text/plain", service.plan(q).getBytes(StandardCharsets.UTF_8))
-  })
+    http.respondBytes(ex, 200, "text/plain", service.plan(q).getBytes(StandardCharsets.UTF_8))
+  }
 
   /** Attached periodic-job scheduler (ServerMain wires one up); its job
     * details serve at GET /dbg/jobs — the reference's GetJobDetails debug
     * surface (memstore/scheduler.go:124-130 via api/debug_handler.go).
     */
   @volatile var jobScheduler: Option[graft.ingest.JobScheduler] = None
-  mount("/dbg/jobs", (ex: HttpExchange) => handle(ex) {
-    respond(ex, 200, jobScheduler.map(_.detailsJson).getOrElse("{}"))
-  })
+  http.mount("/dbg/jobs") { ex =>
+    http.respond(ex, 200, jobScheduler.map(_.detailsJson).getOrElse("{}"))
+  }
 
   /** Manual job triggers — the reference's debug surface for kicking an
     * archive/backfill/snapshot/purge without waiting for the scheduler
@@ -618,9 +564,9 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     *                                       the Snapshot branch)
     *   POST /dbg/trigger/<table>/purge?retain_from=yyyy-MM-dd
     */
-  mount("/dbg/trigger/", (ex: HttpExchange) => handle(ex) {
+  http.mount("/dbg/trigger/") { ex =>
     if (ex.getRequestMethod != "POST")
-      respond(ex, 405, """{"error":"POST only"}""")
+      http.respond(ex, 405, """{"error":"POST only"}""")
     else ex.getRequestURI.getPath.stripPrefix("/dbg/trigger/")
       .split("/").toList.filter(_.nonEmpty) match {
       case table :: job :: Nil =>
@@ -632,7 +578,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
               .getOrElse(throw new IllegalArgumentException(
                 s"no drain target for $table: not drained before and no archiveRoot"))
             drain(table, dir)
-            respond(ex, 200, JsonMethods.compact(JsonMethods.render(JObject(
+            http.respond(ex, 200, JsonMethods.compact(JsonMethods.render(JObject(
               "triggered" -> JString(job), "table" -> JString(table),
               "dir" -> JString(dir)))))
           case "purge" =>
@@ -643,7 +589,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
               }.getOrElse(throw new IllegalArgumentException(
                 "purge requires ?retain_from=yyyy-MM-dd"))
             val deleted = purge(table, retain)
-            respond(ex, 200, JsonMethods.compact(JsonMethods.render(JObject(
+            http.respond(ex, 200, JsonMethods.compact(JsonMethods.render(JObject(
               "triggered" -> JString("purge"), "table" -> JString(table),
               "deleted" -> JArray(deleted.map(JString(_)).toList)))))
           case other => throw new IllegalArgumentException(
@@ -652,7 +598,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       case _ => throw new IllegalArgumentException(
         "expected /dbg/trigger/<table>/<job>")
     }
-  })
+  }
 
   /** Attached hot-partition cache manager; its residency report serves
     * at GET /dbg/cache — the reference's host-memory-manager debug
@@ -660,9 +606,9 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     * managedMemorySize accounting via api/debug_handler.go).
     */
   @volatile var memoryManager: Option[graft.ingest.HostMemoryManager] = None
-  mount("/dbg/cache", (ex: HttpExchange) => handle(ex) {
-    respond(ex, 200, memoryManager.map(_.statusJson).getOrElse("{}"))
-  })
+  http.mount("/dbg/cache") { ex =>
+    http.respond(ex, 200, memoryManager.map(_.statusJson).getOrElse("{}"))
+  }
 
   /** The reference fires a preloadJob when a column's
     * preloadingDays/priority config changes (host_memory_manager.go's
@@ -711,7 +657,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     s
   }
 
-  mount("/bootstrap/", (ex: HttpExchange) => handle(ex) {
+  http.mount("/bootstrap/") { ex =>
     val segs = ex.getRequestURI.getPath.stripPrefix("/bootstrap/")
       .split("/").toList.filter(_.nonEmpty)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -723,7 +669,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
         val days = fs.listStatus(root).filter(_.isDirectory)
           .map(_.getPath.getName).filter(_.startsWith(prefix))
           .map(_.stripPrefix(prefix)).sorted
-        respond(ex, 200, JsonMethods.compact(JsonMethods.render(
+        http.respond(ex, 200, JsonMethods.compact(JsonMethods.render(
           JArray(days.map(JString(_)).toList))))
       case table :: day :: "files" :: Nil =>
         val part = new org.apache.hadoop.fs.Path(bootstrapRoot(table),
@@ -734,9 +680,9 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
           .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
             !s.getPath.getName.startsWith("_"))
           .map(_.getPath.getName).sorted
-        respond(ex, 200, JsonMethods.compact(JsonMethods.render(
+        http.respond(ex, 200, JsonMethods.compact(JsonMethods.render(
           JArray(files.map(JString(_)).toList))))
-      case table :: day :: file :: Nil => admitted(ex, bootstrapSlots) {
+      case table :: day :: file :: Nil => http.admitted(ex, bootstrapSlots) {
         val p = new org.apache.hadoop.fs.Path(bootstrapRoot(table),
           s"${graft.ingest.Archiver.DayCol}=${safeSegment(day)}/${safeSegment(file)}")
         val fs = p.getFileSystem(conf)
@@ -749,7 +695,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
         ex.sendResponseHeaders(200, len)
         val in = fs.open(p)
         // a transfer that dies MID-STREAM cannot be answered again (the
-        // headers are gone) — handle()'s catch would respond() a second
+        // headers are gone) — the mount's 400 catch would respond a second
         // time, throw IllegalStateException, and mask the real I/O error.
         // Log the original failure here instead; the client sees a body
         // shorter than the declared Content-Length and retries the file.
@@ -762,7 +708,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       case other =>
         throw new IllegalArgumentException(s"unsupported bootstrap route: $other")
     }
-  })
+  }
 
   // liveness + version probes (ref api/health_check_handler.go:39-53)
   /** LB-drain switch (ref api/health_check_handler.go:29-45 +
@@ -772,26 +718,26 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     * Serving itself is unaffected — only the probe lies down.
     */
   @volatile private var healthDisabled = false
-  mount("/health", (ex: HttpExchange) => handle(ex) {
+  http.mount("/health") { ex =>
     val sub = ex.getRequestURI.getPath.stripPrefix("/health").stripPrefix("/")
     (ex.getRequestMethod, sub) match {
       case ("POST", "on") | ("POST", "off") =>
         healthDisabled = sub == "off"
-        respondBytes(ex, 200, "text/plain", "OK".getBytes(StandardCharsets.UTF_8))
+        http.respondBytes(ex, 200, "text/plain", "OK".getBytes(StandardCharsets.UTF_8))
       case ("POST", other) =>
         throw new IllegalArgumentException(
           s"must specify on or off in the url, got '$other'")
       case _ =>
         if (healthDisabled)
-          respondBytes(ex, 503, "text/plain",
+          http.respondBytes(ex, 503, "text/plain",
             "Health check disabled".getBytes(StandardCharsets.UTF_8))
         else
-          respondBytes(ex, 200, "text/plain", "OK".getBytes(StandardCharsets.UTF_8))
+          http.respondBytes(ex, 200, "text/plain", "OK".getBytes(StandardCharsets.UTF_8))
     }
-  })
-  mount("/version", (ex: HttpExchange) => handle(ex) {
-    respondBytes(ex, 200, "text/plain", "graft-0.3".getBytes(StandardCharsets.UTF_8))
-  })
+  }
+  http.mount("/version") { ex =>
+    http.respondBytes(ex, 200, "text/plain", "graft-0.3".getBytes(StandardCharsets.UTF_8))
+  }
 
   // `/data/{table}` and the reference's `/data/{table}/{shard}` — the shard
   // segment is accepted and ignored (Spark partitioning replaces shards).
@@ -799,8 +745,8 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
   // upsert batch (`Content-Type: application/upsert-data`, or sniffed by
   // its version word) — a client built against the reference's wire format
   // can POST here unmodified (ref api/data_handler.go:50-67).
-  mount("/data/", (ex: HttpExchange) => handle(ex) {
-    admitted(ex, ingestSlots) {
+  http.mount("/data/") { ex =>
+    http.admitted(ex, ingestSlots) {
       val table = ex.getRequestURI.getPath.stripPrefix("/data/").takeWhile(_ != '/')
       // resolve the table (existence + PK) BEFORE journaling, so a typo'd
       // table name 400s without leaving a poison record behind
@@ -848,9 +794,9 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
         maybeRotateJournal(table)
         applied
       }
-      respond(ex, 200, s"""{"rowsInserted":${n + forwardedCount}}""")
+      http.respond(ex, 200, s"""{"rowsInserted":${n + forwardedCount}}""")
     }
-  })
+  }
 
   /** Split a JSON ingest batch by day ownership: self-owned rows return
     * (re-serialized) for the local journal+apply path; foreign rows POST
@@ -866,12 +812,21 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       case JArray(objs) => objs
       case _ => throw new IllegalArgumentException("expected a JSON array of rows")
     }
+    // the day the overlay files the row under (Archiver.dayOf): Spark's
+    // JSON read honours an ISO string's offset, and a bare one reads in
+    // the session time zone, so the prefix of the text is not the day
+    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    def day(epochMicros: Long): String = java.time.Instant.EPOCH
+      .plus(epochMicros, java.time.temporal.ChronoUnit.MICROS).atZone(zone).toLocalDate.toString
     def dayOf(row: JValue): String = row \ tc match {
-      case JString(s) if s.length >= 10 && s.charAt(4) == '-' => s.take(10)
-      case JInt(e) => epochDay(e.toLong)
-      case JLong(e) => epochDay(e)
-      case JDouble(e) => epochDay(e.toLong)
-      case JString(s) if s.forall(_.isDigit) && s.nonEmpty => epochDay(s.toLong)
+      case JInt(e) => day(e.toLong * 1000000L)
+      case JLong(e) => day(e * 1000000L)
+      case JDouble(e) => day(e.toLong * 1000000L)
+      case JString(s) if s.forall(_.isDigit) && s.nonEmpty => day(s.toLong * 1000000L)
+      case JString(s) => org.apache.spark.sql.catalyst.util.DateTimeUtils.stringToTimestamp(
+          org.apache.spark.unsafe.types.UTF8String.fromString(s), zone).map(day)
+        .getOrElse(throw new IllegalArgumentException(
+          s"cannot route row: time column '$tc' value '$s' is not a timestamp"))
       case other => throw new IllegalArgumentException(
         s"cannot route row: time column '$tc' missing or unparseable ($other)")
     }
@@ -904,9 +859,6 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       .getBytes(StandardCharsets.UTF_8)
     (localBytes, forwarded)
   }
-
-  private def epochDay(e: Long): String =
-    java.time.LocalDate.ofEpochDay(Math.floorDiv(e, 86400L)).toString
 
   private lazy val forwardClient = java.net.http.HttpClient.newBuilder()
     .connectTimeout(java.time.Duration.ofSeconds(10)).build()
@@ -1064,7 +1016,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
   //   DELETE /schema/tables/{t}/columns/{c}       → delete column
   //   GET    /schema/tables/{t}/columns/{c}/enum-cases  → list enum cases
   //   POST   /schema/tables/{t}/columns/{c}/enum-cases  → extend enum dict
-  mount("/schema/tables", (ex: HttpExchange) => handle(ex) {
+  http.mount("/schema/tables") { ex =>
     val segs = ex.getRequestURI.getPath.stripPrefix("/schema/tables")
       .stripPrefix("/").split("/").toList.filter(_.nonEmpty)
     val method = ex.getRequestMethod
@@ -1073,7 +1025,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     // shared sync directory before the response goes out
     def ok(j: JValue): Unit = {
       if (method != "GET") schemaSync.foreach(_.publish())
-      respond(ex, 200, JsonMethods.compact(JsonMethods.render(j)))
+      http.respond(ex, 200, JsonMethods.compact(JsonMethods.render(j)))
     }
 
     (method, segs) match {
@@ -1146,7 +1098,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       case other =>
         throw new IllegalArgumentException(s"unsupported schema route: $other")
     }
-  })
+  }
 
   /** Per-table ingest locks: the read-modify-write on the overlay
     * (and the enum auto-expansion) must be atomic per table — handlers
@@ -1437,41 +1389,16 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     }
   }
 
-  private def write(q: graft.aql.AqlQuery): String = {
-    implicit val formats: Formats = DefaultFormats
-    org.json4s.jackson.Serialization.write(q)
-  }
-
-  private def handle(ex: HttpExchange)(f: => Unit): Unit =
-    try f
-    catch {
-      case NonFatal(e) =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        respond(ex, 400, JsonMethods.compact(JsonMethods.render(
-          JObject("error" -> JString(msg)))))
-    } finally ex.close()
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit =
-    respondBytes(ex, code, "application/json", body.getBytes(StandardCharsets.UTF_8))
-
-  private def respondBytes(ex: HttpExchange, code: Int, contentType: String,
-      body: Array[Byte]): Unit = {
-    ex.getResponseHeaders.set("Content-Type", contentType)
-    ex.sendResponseHeaders(code, body.length)
-    ex.getResponseBody.write(body)
-  }
-
   def start(): Unit = {
     schemaSync.foreach(_.start())
-    server.start()
+    http.start()
   }
   def stop(): Unit = {
     schemaSync.foreach(_.close())
     journal.foreach(_.close())
-    server.stop(0)
-    pool.shutdown()
+    http.stop()
   }
-  def boundPort: Int = server.getAddress.getPort
+  def boundPort: Int = http.boundPort
 }
 
 object GraftServer {

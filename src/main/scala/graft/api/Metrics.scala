@@ -7,12 +7,24 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
-/** Per-server query metrics — the operational surface the reference
-  * exposes through its reporter/debug handlers
-  * (/root/reference/utils/reporter.go, api/debug_handler.go:40+): query
-  * counts, per-query wall time, and rows scanned (summed over the
-  * executed plan's leaf scans, so a partition-pruned archive read shows
-  * the PRUNED row count — the number operators actually decoded).
+/** Per-tier serving metrics, one `GET /metrics` document with the same
+  * meaning on an instance and on the broker — the operational surface
+  * the reference exposes through its reporter/debug handlers
+  * (the reference's utils/reporter.go, api/debug_handler.go:40+):
+  *
+  *  - `queries`: every query a tier answered through [[QueryFront]] —
+  *    each query of an AQL or SQL request and the one query of an
+  *    `application/hll` request — whether it succeeded or failed. A
+  *    request refused before any query ran (400 malformed, 503 at
+  *    capacity) counts none.
+  *  - `errors`: the queries among them that failed.
+  *  - `deadlineCancelled`: the errors that are the named `query deadline
+  *    exceeded` error.
+  *  - `rejected`: requests an admission class refused with 503.
+  *  - `recent`: the last queries an instance executed, with wall time and
+  *    rows scanned (summed over the executed plan's leaf scans, so a
+  *    partition-pruned archive read shows the PRUNED row count). The
+  *    broker executes none, so its list stays empty.
   *
   * A bounded ring of the most recent queries keeps the endpoint O(1):
   * no per-query state accumulates for the server's lifetime.
@@ -24,24 +36,25 @@ final class Metrics {
   private val recent = new java.util.ArrayDeque[QueryStat](MaxRecent)
   private val nQueries = new AtomicLong
   private val nErrors = new AtomicLong
-  // serving-tier health counters (r11): admission rejections (503s per
-  // class) and deadline cancellations — the first numbers an operator
-  // reads when clients report "server busy" or truncated queries
   private val nRejected = new AtomicLong
   private val nDeadline = new AtomicLong
 
   def recordRejected(): Unit = nRejected.incrementAndGet()
-  def recordDeadline(): Unit = nDeadline.incrementAndGet()
 
-  def record(stat: QueryStat): Unit = {
+  /** Count one answered query; `error` is its failure message. */
+  def countQuery(error: Option[String]): Unit = {
     nQueries.incrementAndGet()
-    recent.synchronized {
-      if (recent.size == MaxRecent) recent.removeFirst()
-      recent.addLast(stat)
+    error.foreach { msg =>
+      nErrors.incrementAndGet()
+      if (msg.startsWith("query deadline exceeded")) nDeadline.incrementAndGet()
     }
   }
 
-  def recordError(): Unit = { nQueries.incrementAndGet(); nErrors.incrementAndGet() }
+  /** Keep an executed query's stat in the `recent` ring. */
+  def record(stat: QueryStat): Unit = recent.synchronized {
+    if (recent.size == MaxRecent) recent.removeFirst()
+    recent.addLast(stat)
+  }
 
   def renderJson: String = {
     val stats = recent.synchronized {

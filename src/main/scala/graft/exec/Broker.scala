@@ -34,7 +34,7 @@ import graft.functions.Hll
   *      would double-count overlap); null and missing leaves are
   *      identities
   *   4. evaluate the measure's arithmetic once per path
-  *   5. build the JSON tree once
+  *   5. build the JSON tree once ([[ResultShaper.tree]])
   *
   * Non-aggregate queries concatenate matrixData and re-apply the limit
   * (distributed top-k when sorted).
@@ -246,7 +246,7 @@ final class Broker private (sliceProvider: () => Seq[Seq[String]],
     val paths =
       if (q.dimensionList.isEmpty) Seq(List(measureName(q)))
       else comps.iterator.flatMap(c => leaves(c).keysIterator).distinct.toSeq
-    Broker.tree(paths.map(p => p -> eval(p).fold[JValue](JNull)(JDouble(_))))
+    ResultShaper.tree(paths.map(p => p -> eval(p).fold[JValue](JNull)(JDouble(_))))
   }
 
   private def measureName(q: AqlQuery): String =
@@ -375,8 +375,8 @@ final class Broker private (sliceProvider: () => Seq[Seq[String]],
     * client written against the reference's `application/hll` wire parses
     * the broker's response unchanged.
     */
-  def aqlHllBinary(queryJson: String): Array[Byte] = {
-    val q = stripSort(AqlJson.parseQuery(queryJson))
+  def aqlHllBinary(q0: AqlQuery): Array[Byte] = {
+    val q = stripSort(q0)
     ExprParser.parse(q.measures.head.sqlExpression) match {
       case Expr.Call(op, _) if Broker.HllOps(op) =>
       case _ => throw new IllegalArgumentException(
@@ -641,23 +641,6 @@ object Broker {
       }
     }
     out
-  }
-
-  /** Nest flat paths into the JSON result tree in one pass, keys in
-    * first-seen order.
-    */
-  private[exec] def tree(leaves: Seq[(List[String], JValue)]): JValue = {
-    final class Node(var leaf: JValue = JNull) {
-      val kids = mutable.LinkedHashMap.empty[String, Node]
-    }
-    val root = new Node
-    leaves.foreach { case (path, v) =>
-      path.foldLeft(root)((n, k) => n.kids.getOrElseUpdate(k, new Node)).leaf = v
-    }
-    def render(n: Node): JValue = JObject(n.kids.iterator.map { case (k, c) =>
-      k -> (if (c.kids.isEmpty) c.leaf else render(c))
-    }.toList)
-    render(root)
   }
 
   /** Broker over a [[BrokerTopology]]: the slice map re-resolves per

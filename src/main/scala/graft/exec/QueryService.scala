@@ -4,16 +4,16 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.aql._
 
-/** The engine's query entry point: AQL / SQL request in, AQLResponse JSON
-  * out — the reference's `POST /query/aql` and `POST /query/sql` handler
-  * semantics (/root/reference/api/query_handler.go:67-120) minus the HTTP
-  * transport. Each query in the request compiles and executes
-  * independently; a failure lands in `errors[i]` (null on success) with
-  * `results[i]` empty, matching AQLResponse (query/common/aql.go:161-166).
+/** An instance's query execution: the function [[graft.api.QueryFront]]
+  * calls per typed query on a [[graft.api.GraftServer]] — compile, then
+  * shape the rows under the query's deadline ([[answer]]), or re-plan to
+  * sketches for `application/hll` ([[aqlBinary]]). The front owns the
+  * request, the AQLResponse envelope and the counters; this class owns
+  * what a query costs an instance: its Spark job group, its deadline,
+  * its stale-plan retry and its `recent` stat in [[graft.api.Metrics]].
   */
 /** @param strictCompat compile queries in reference-exact compatibility
   *   mode (see [[graft.aql.AqlCompiler]]) — a deployment diffing results
@@ -97,11 +97,9 @@ final class QueryService(catalog: Catalog, spark: SparkSession,
         // deadline is a contract, not a best effort: a result produced
         // past it is discarded by elapsed time (not by `fired`, so a
         // saturated watchdog can't soften the bound either).
-        if (System.nanoTime() - startNanos >= queryTimeoutSec * 1000000000L) {
-          metrics.foreach(_.recordDeadline())
+        if (System.nanoTime() - startNanos >= queryTimeoutSec * 1000000000L)
           throw new IllegalStateException(
             s"query deadline exceeded (${queryTimeoutSec}s)")
-        }
         out
       }
       catch {
@@ -110,7 +108,6 @@ final class QueryService(catalog: Catalog, spark: SparkSession,
         // cancellations: a real failure that happens to land after the
         // watchdog fired must keep its own message
         case NonFatal(e) if fired.get() && isCancellation(e) =>
-          metrics.foreach(_.recordDeadline())
           throw new IllegalStateException(
             s"query deadline exceeded (${queryTimeoutSec}s)")
       } finally {
@@ -128,21 +125,21 @@ final class QueryService(catalog: Catalog, spark: SparkSession,
         e.isInstanceOf[InterruptedException] || isCancellation(e.getCause, depth + 1)
     }
 
-  /** Execute an AQLRequest JSON body: `{"queries": [{...}, ...]}`. */
-  def aql(requestJson: String): String = {
-    val request = AqlJson.parseRequest(requestJson)
-    respond(request.queries.map(q => () => compiler.compile(q)), "aql")
-  }
-
-  /** Execute SQL statements: `{"queries": ["SELECT ...", ...]}` bodies or a
-    * bare statement string.
+  /** Answer one query as its JSON result, recording its stat under
+    * `endpoint` in `recent`. A stale plan (see [[isStalePlan]]) gets one
+    * fresh compile.
     */
-  def sql(body: String): String = {
-    val statements: Seq[String] =
-      if (body.trim.startsWith("{")) {
-        (JsonMethods.parse(body) \ "queries").children.map(_.values.toString)
-      } else Seq(body)
-    respond(statements.map(s => () => compiler.compile(SqlFront.translate(s))), "sql")
+  def answer(q: AqlQuery, endpoint: String): JValue = {
+    val t0 = System.nanoTime()
+    def attempt(): JValue = {
+      val compiled = compiler.compile(q)
+      val shaped = withDeadline(ResultShaper.shape(compiled))
+      metrics.foreach(_.record(graft.api.Metrics.stat(
+        endpoint, compiled, (System.nanoTime() - t0) / 1000000)))
+      shaped
+    }
+    try attempt()
+    catch { case NonFatal(e) if isStalePlan(e) => attempt() }
   }
 
   /** Compile one AQL query and return its formatted physical plan WITHOUT
@@ -163,8 +160,7 @@ final class QueryService(catalog: Catalog, spark: SparkSession,
     * against the reference parses the response unchanged. Dimensions must
     * be integral or string-valued (strings ride as enum dictionaries).
     */
-  def aqlBinary(queryJson: String): Array[Byte] = {
-    val q = AqlJson.parseQuery(queryJson)
+  def aqlBinary(q: AqlQuery): Array[Byte] = {
     val parsed = ExprParser.parse(q.measures.head.sqlExpression)
     // hll(col) consumes PRECOMPUTED register values (the isHLLColumn path)
     // and must register-max merge them into the sketch; re-hashing them as
@@ -246,43 +242,4 @@ final class QueryService(catalog: Catalog, spark: SparkSession,
         e.isInstanceOf[java.io.FileNotFoundException] ||
         isStalePlan(e.getCause, depth + 1)
     }
-
-  private def respond(thunks: Seq[() => AqlCompiler.Compiled],
-      endpoint: String): String = {
-    val outcomes = thunks.map { t =>
-      val t0 = System.nanoTime()
-      def attempt(): Either[String, JValue] = {
-        val compiled = t()
-        val shaped = withDeadline(ResultShaper.shape(compiled))
-        metrics.foreach(_.record(graft.api.Metrics.stat(
-          endpoint, compiled, (System.nanoTime() - t0) / 1000000)))
-        Right(shaped)
-      }
-      try attempt()
-      catch {
-        case NonFatal(e) if isStalePlan(e) =>
-          try attempt()
-          catch {
-            case NonFatal(e2) =>
-              metrics.foreach(_.recordError())
-              Left(Option(e2.getMessage).getOrElse(e2.getClass.getName))
-          }
-        case NonFatal(e) =>
-          metrics.foreach(_.recordError())
-          Left(Option(e.getMessage).getOrElse(e.getClass.getName))
-      }
-    }
-    val results = JArray(outcomes.map {
-      case Right(j) => j
-      case Left(_) => JObject()
-    }.toList)
-    val errors = JArray(outcomes.map {
-      case Right(_) => JNull
-      case Left(msg) => JString(msg)
-    }.toList)
-    val body = JObject(
-      "results" -> results,
-      "errors" -> (if (outcomes.exists(_.isLeft)) errors else JNull))
-    JsonMethods.compact(JsonMethods.render(body))
-  }
 }

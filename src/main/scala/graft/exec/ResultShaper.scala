@@ -5,7 +5,6 @@ import java.time.{Instant, ZoneOffset}
 import java.util.Locale
 
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.aql.{AqlCompiler, AqlDimension, Bucketizers}
 
@@ -42,9 +41,6 @@ object ResultShaper {
     */
   val MaxNonAggResponseRows = 100000
 
-  def shapeToJson(c: AqlCompiler.Compiled): String =
-    JsonMethods.compact(JsonMethods.render(shape(c)))
-
   def shape(c: AqlCompiler.Compiled): JValue =
     if (c.isNonAgg) shapeNonAgg(c) else shapeAgg(c)
 
@@ -62,45 +58,37 @@ object ResultShaper {
     val rows = c.df.collect()
     val n = dimDefs.length
 
-    def insert(tree: Map[String, Any], keys: List[String], leaf: Any): Map[String, Any] =
-      keys match {
-        case Nil => tree
-        case k :: Nil => tree + (k -> leaf)
-        case k :: rest =>
-          val child = tree.getOrElse(k, Map.empty[String, Any]).asInstanceOf[Map[String, Any]]
-          tree + (k -> insert(child, rest, leaf))
-      }
-
-    def leafOf(row: org.apache.spark.sql.Row): Any =
-      if (row.isNullAt(n)) null
-      else row.get(n) match {
+    def leafOf(row: org.apache.spark.sql.Row): JValue =
+      if (row.isNullAt(n)) JNull
+      else JDouble(row.get(n) match {
         case d: java.lang.Number => d.doubleValue()
         case other => other.toString.toDouble
-      }
+      })
 
     // dimensionless aggregate: single leaf keyed by the measure name
-    if (n == 0) {
-      val leaf = rows.headOption.map(leafOf).orNull
-      return JObject(c.measureName -> (leaf match {
-        case null => JNull
-        case dd: Double => JDouble(dd)
-      }))
-    }
-
-    var out = Map.empty[String, Any]
-    rows.foreach { row =>
-      val keys = (0 until n).map(i => formatDim(row.get(i), dimDefs(i))).toList
-      out = insert(out, keys, leafOf(row))
-    }
-    toJValue(out)
+    if (n == 0) tree(Seq(List(c.measureName) -> rows.headOption.fold[JValue](JNull)(leafOf)))
+    else tree(rows.toSeq.map { row =>
+      (0 until n).map(i => formatDim(row.get(i), dimDefs(i))).toList -> leafOf(row)
+    })
   }
 
-  private def toJValue(v: Any): JValue = v match {
-    case null => JNull
-    case m: Map[_, _] =>
-      JObject(m.toSeq.map { case (k, child) => k.toString -> toJValue(child) }: _*)
-    case d: Double => JDouble(d)
-    case other => JString(other.toString)
+  /** Nest flat paths into the JSON result tree in one pass, keys in
+    * first-seen order; a repeated path keeps its last leaf. Shapes an
+    * instance's rows here and the broker's merged paths
+    * ([[Broker]]).
+    */
+  def tree(leaves: Seq[(List[String], JValue)]): JValue = {
+    final class Node(var leaf: JValue = JNull) {
+      val kids = scala.collection.mutable.LinkedHashMap.empty[String, Node]
+    }
+    val root = new Node
+    leaves.foreach { case (path, v) =>
+      path.foldLeft(root)((n, k) => n.kids.getOrElseUpdate(k, new Node)).leaf = v
+    }
+    def render(n: Node): JValue = JObject(n.kids.iterator.map { case (k, c) =>
+      k -> (if (c.kids.isEmpty) c.leaf else render(c))
+    }.toList)
+    render(root)
   }
 
   private def shapeNonAgg(c: AqlCompiler.Compiled): JValue = {

@@ -77,15 +77,18 @@ object Compactor {
     val prefix = partitionPrefix
     val reports = Seq.newBuilder[DayReport]
     // day-partition compactions of a (possibly shared) archive announce
-    // their swap windows through the drain marker, exactly like Backfill:
+    // each day's swap through the drain marker, exactly like Backfill:
     // the two-rename swap makes a day transiently invisible to a
     // concurrent lister, and a scatter wave straddling it must retry
-    // rather than merge a mid-swap listing. Index-partition compactions
-    // (bucket=/cell=) are member-local artifacts with no cross-member
-    // readers — no marker there. Begun lazily so a no-op pass bumps
-    // nothing.
-    val markerEligible = prefix == s"${Archiver.DayCol}="
-    var rewriteAnnounced = false
+    // rather than merge a mid-swap listing. The announcement spans only
+    // the rename pair, not the day's Spark rewrite before it, so waves
+    // read torn for milliseconds, not for the whole compaction. The bump
+    // flags no days: compaction preserves rows (members' local caches
+    // still hold the same ROWS; SliceSync re-copies on its own file-set
+    // staleness check). Index-partition compactions (bucket=/cell=) are
+    // member-local artifacts with no cross-member readers — no marker.
+    val marker = prefix == s"${Archiver.DayCol}="
+    val conf = spark.sparkContext.hadoopConfiguration
     fs.listStatus(root).filter(_.isDirectory)
       .map(_.getPath).filter(_.getName.startsWith(prefix))
       .sortBy(_.getName)
@@ -93,11 +96,6 @@ object Compactor {
         val dataFiles = fs.listStatus(part)
           .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
         if (dataFiles.length > maxFiles) {
-          if (markerEligible && !rewriteAnnounced) {
-            DrainMarker.beginRewrite(root.toString,
-              spark.sparkContext.hadoopConfiguration)
-            rewriteAnnounced = true
-          }
           val day = part.getName.stripPrefix(prefix)
           val tmp = new Path(root, s".compact-tmp-${part.getName}")
           if (fs.exists(tmp)) fs.delete(tmp, true)
@@ -126,8 +124,10 @@ object Compactor {
           val trash = new Path(root, s".compact-old-${part.getName}")
           if (fs.exists(trash)) fs.delete(trash, true)
           exclusive {
+            if (marker) DrainMarker.beginRewrite(root.toString, conf)
             require(fs.rename(part, trash), s"compact: rename $part -> $trash failed")
             require(fs.rename(tmp, part), s"compact: rename $tmp -> $part failed")
+            if (marker) DrainMarker.bump(root.toString, conf, Nil)
           }
           fs.delete(trash, true)
           val after = fs.listStatus(part)
@@ -135,12 +135,6 @@ object Compactor {
           reports += DayReport(day, dataFiles.length, after)
         }
       }
-    // commit announcement: clears the inflight flag. Compaction preserves
-    // rows, so no days are flagged stale (members' local caches still
-    // hold the same ROWS; SliceSync re-copies on its own file-set
-    // staleness check) — the bump exists only to close the epoch window.
-    if (rewriteAnnounced)
-      DrainMarker.bump(root.toString, spark.sparkContext.hadoopConfiguration, Nil)
     reports.result()
   }
 }

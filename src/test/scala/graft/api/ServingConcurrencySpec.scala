@@ -31,6 +31,11 @@ class ServingConcurrencySpec extends SparkSpec {
       .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
 
+  /** An AQLRequest body answered through the front over `svc`. */
+  private def aql(svc: graft.exec.QueryService, body: String): String =
+    JsonMethods.compact(JsonMethods.render(QueryFront.answer(new Metrics,
+      graft.aql.AqlJson.parseRequest(body).queries)(svc.answer(_, "aql"))))
+
   private def get(port: Int, path: String) =
     client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$port$path"))
       .GET().build(), HttpResponse.BodyHandlers.ofString())
@@ -180,7 +185,7 @@ class ServingConcurrencySpec extends SparkSpec {
       "crawl2", isFact = false, primaryKey = Seq("slow"),
       load = s => s.range(0, 64, 1, 4).select(sleepy(col("id")).as("slow")))))
     val deadlined = new graft.exec.QueryService(cat, spark, queryTimeoutSec = 2)
-    val a = JsonMethods.parse(deadlined.aql(
+    val a = JsonMethods.parse(aql(deadlined,
       """{"queries": [{"table": "crawl2",
         "measures": [{"alias": "value", "sqlExpression": "max(slow)"}]}]}"""))
     (a \ "errors") match {
@@ -195,7 +200,7 @@ class ServingConcurrencySpec extends SparkSpec {
     val okQ = """{"queries": [{"table": "documents",
       "measures": [{"alias": "value", "sqlExpression": "count(*)"}]}]}"""
     (1 to 2).foreach { i =>
-      val b = JsonMethods.parse(survivor.aql(okQ))
+      val b = JsonMethods.parse(aql(survivor, okQ))
       assert((b \ "errors") == JNull,
         s"successor query $i was cancelled by a late watchdog: $b")
     }

@@ -115,7 +115,7 @@ class BrokerMergeAlgebraSpec extends AnyFunSuite {
       case leaf => leaf
     }
     forAllN(genTree(3).map(pruned), n = 200) { x =>
-      assert(Broker.tree(Broker.flatten(x).toSeq.map { case (p, v) =>
+      assert(ResultShaper.tree(Broker.flatten(x).toSeq.map { case (p, v) =>
         p -> v.fold[JValue](JNull)(JDouble(_)) }) == x, s"$x")
     }
   }

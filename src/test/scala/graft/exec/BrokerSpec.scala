@@ -229,7 +229,7 @@ class BrokerSpec extends SparkSpec {
 
   test("broker binary HLL equals the single-instance binary sketch") {
     val q = query("countDistinctHLL(user_id)")
-    val mergedBin = broker.aqlHllBinary(q)
+    val mergedBin = broker.aqlHllBinary(graft.aql.AqlJson.parseQuery(q))
     val single = client.send(
       HttpRequest.newBuilder(URI.create(
         s"http://localhost:${whole.boundPort}/query/aql"))
@@ -290,6 +290,37 @@ class BrokerSpec extends SparkSpec {
       assert(bin.statusCode() == 200)
       assert(RefHllWire.readResults(bin.body()).head.isRight)
     } finally front.stop()
+  }
+
+  test("one /metrics meaning: an instance and the broker count the same requests alike") {
+    val instance = new GraftServer(Catalog.testdata(sfDir), spark)
+    instance.start()
+    val front = new BrokerServer(Seq(
+      s"http://localhost:${serverA.boundPort}",
+      s"http://localhost:${serverB.boundPort}"))
+    front.start()
+    try Seq("instance" -> instance.boundPort, "broker" -> front.boundPort).foreach {
+      case (tier, port) =>
+        def send(measure: String, accept: String): Unit = {
+          val resp = client.send(
+            HttpRequest.newBuilder(URI.create(s"http://localhost:$port/query/aql"))
+              .header("Accept", accept)
+              .POST(HttpRequest.BodyPublishers.ofString(
+                s"""{"queries": [${query(measure)}]}""")).build(),
+            HttpResponse.BodyHandlers.ofByteArray())
+          assert(resp.statusCode() == 200, s"$tier $measure: ${resp.statusCode()}")
+        }
+        // one good JSON query, one failing JSON query, one binary sketch
+        send("sum(value)", "application/json")
+        send("bogus(value)", "application/json")
+        send("countDistinctHLL(user_id)", "application/hll")
+        val m = JsonMethods.parse(client.send(
+          HttpRequest.newBuilder(URI.create(s"http://localhost:$port/metrics")).GET().build(),
+          HttpResponse.BodyHandlers.ofString()).body())
+        implicit val fmts: Formats = DefaultFormats
+        assert((m \ "queries").extract[Long] == 3L && (m \ "errors").extract[Long] == 1L,
+          s"$tier /metrics: ${JsonMethods.compact(JsonMethods.render(m))}")
+    } finally { front.stop(); instance.stop() }
   }
 
   test("non-agg rows concatenate with the limit re-applied") {

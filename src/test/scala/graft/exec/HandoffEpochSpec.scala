@@ -75,6 +75,33 @@ class HandoffEpochSpec extends SparkSpec {
     assert(DrainMarker.staleDays(after, 0L).contains(Set("2030-01-02")))
   }
 
+  test("compaction announces each day's swap alone, not its whole run") {
+    // a wave over a compacting archive must read torn only inside a day's
+    // rename pair: announced for the whole run, every broker query during
+    // a long compaction would exhaust its retries and fail
+    import spark.implicits._
+    val dir = tmp("he-compact")
+    val conf = spark.sparkContext.hadoopConfiguration
+    (0 until 48).map(i => (i.toLong, if (i % 2 == 0) "2030-02-01" else "2030-02-02"))
+      .toDF("id", graft.ingest.Archiver.DayCol)
+      .repartition(6).write.mode("overwrite")
+      .partitionBy(graft.ingest.Archiver.DayCol).parquet(dir)
+    val swaps = scala.collection.mutable.ArrayBuffer.empty[(DrainMarker.Marker, Long)]
+    val reports = graft.ingest.Compactor.compact(spark, dir, Seq("id"), maxFiles = 2,
+      exclusive = swap => {
+        val entry = DrainMarker.read(dir, conf)
+        swap
+        swaps += entry -> DrainMarker.read(dir, conf).seq
+      })
+    assert(reports.map(_.day) == Seq("2030-02-01", "2030-02-02"), s"fixture: $reports")
+    assert(swaps.length == 2)
+    swaps.foreach { case (entry, seqAfter) =>
+      assert(!entry.inflight, "no rewrite may be announced before the day's swap")
+      assert(seqAfter == entry.seq + 1, s"the swap must bump once: ${entry.seq} -> $seqAfter")
+    }
+    assert(!DrainMarker.read(dir, conf).inflight)
+  }
+
   test("archive epoch token: inflight or disagreeing observations read as torn") {
     ArchiveEpoch.begin()
     try {

@@ -1,7 +1,8 @@
 package graft.exec
 
 import graft.SparkSpec
-import graft.aql.Catalog
+import graft.api.{Metrics, QueryFront}
+import graft.aql.{AqlJson, Catalog, SqlFront}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -11,8 +12,18 @@ class QueryServiceSpec extends SparkSpec {
   private lazy val service = new QueryService(Catalog.testdata(sfDir), spark)
   private val Now = 1706659200L
 
+  /** An AQLRequest body answered through the front over `svc`. */
+  private def aql(svc: QueryService, body: String): String =
+    JsonMethods.compact(JsonMethods.render(QueryFront.answer(new Metrics,
+      AqlJson.parseRequest(body).queries)(svc.answer(_, "aql"))))
+
+  /** A SQL request body answered through the front over `svc`. */
+  private def sql(svc: QueryService, body: String): String =
+    JsonMethods.compact(JsonMethods.render(QueryFront.answer(new Metrics,
+      QueryFront.statements(body))(s => svc.answer(SqlFront.translate(s), "sql"))))
+
   test("AQLRequest with one good and one bad query: per-query errors") {
-    val body = service.aql(s"""{"queries": [
+    val body = aql(service, s"""{"queries": [
       {"table": "events",
        "measures": [{"alias": "value", "sqlExpression": "count(*)"}],
        "dimensions": [{"alias": "et", "sqlExpression": "event_type"}],
@@ -31,7 +42,7 @@ class QueryServiceSpec extends SparkSpec {
   }
 
   test("SQL body executes through the SQL front end") {
-    val body = service.sql(
+    val body = sql(service,
       """{"queries": ["SELECT count(*) AS value FROM events WHERE aql_time_filter(ts, \"1704067200\", \"1706659200\", UTC) AND aql_now(ts, 1706659200) GROUP BY event_type"]}""")
     val parsed = JsonMethods.parse(body)
     assert(parsed \ "errors" == JNull)
@@ -41,13 +52,13 @@ class QueryServiceSpec extends SparkSpec {
   }
 
   test("application/hll binary: estimates round-trip within HLL tolerance") {
-    val bin = service.aqlBinary(s"""{
+    val bin = service.aqlBinary(AqlJson.parseQuery(s"""{
       "table": "events",
       "measures": [{"sqlExpression": "countDistinctHLL(user_id)"}],
       "dimensions": [{"alias": "day", "sqlExpression": "ts", "timeBucketizer": "day"}],
       "timeFilter": {"from": "1706400000", "to": "1706659200"},
       "now": $Now
-    }""")
+    }"""))
     // the endpoint emits the REFERENCE byte layout end to end
     val result = RefHllWire.readResults(bin).head.toOption.get
     assert(result.rows.nonEmpty)
@@ -68,10 +79,10 @@ class QueryServiceSpec extends SparkSpec {
     val q = """{"queries": [{"table": "w",
       "measures": [{"alias": "v", "sqlExpression": "count(*)",
                     "rowFilters": ["big + 1 > 0"]}]}]}"""
-    val strict = new QueryService(cat, spark, strictCompat = true).aql(q)
+    val strict = aql(new QueryService(cat, spark, strictCompat = true), q)
     val err = (JsonMethods.parse(strict) \ "errors")(0)
     assert(err.asInstanceOf[JString].s.contains("over 4 bytes"))
-    val loose = new QueryService(cat, spark).aql(q)
+    val loose = aql(new QueryService(cat, spark), q)
     assert(JsonMethods.parse(loose) \ "errors" == JNull)
   }
 
@@ -87,8 +98,8 @@ class QueryServiceSpec extends SparkSpec {
       "timeFilter": {"from": "1704067200", "to": "1706659200"},
       "now": $Now
     }"""
-    val bin = RefHllWire.readResults(service.aqlBinary(q)).head.toOption.get
-    val json = JsonMethods.parse(service.aql(s"""{"queries": [$q]}"""))
+    val bin = RefHllWire.readResults(service.aqlBinary(AqlJson.parseQuery(q))).head.toOption.get
+    val json = JsonMethods.parse(aql(service, s"""{"queries": [$q]}"""))
     val fromJson = (json \ "results")(0).asInstanceOf[JObject].values
       .map { case (k, v) => k -> v.asInstanceOf[Double].toLong }
     val fromBin = bin.rows.indices.map { r =>

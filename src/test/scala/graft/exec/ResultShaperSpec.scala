@@ -26,7 +26,8 @@ class ResultShaperSpec extends SparkSpec {
 
   private def shape(json: String): String = {
     val compiled = new AqlCompiler(catalog, spark).compile(AqlJson.parseQuery(json))
-    ResultShaper.shapeToJson(compiled)
+    org.json4s.jackson.JsonMethods.compact(
+      org.json4s.jackson.JsonMethods.render(ResultShaper.shape(compiled)))
   }
 
   test("aggregate: nested time-series map with NULL sentinel and formatted hour buckets") {

@@ -342,6 +342,32 @@ class SliceServeSpec extends SparkSpec {
             "now": 1900000000}"""
       assert(total(broker.aql(idQuery)) == newValue,
         "the updated value must serve exactly once")
+
+      // an update written in local time with a negative offset: a row of
+      // b's FIRST day before 05:00 UTC reads as the previous day — a's —
+      // in -05:00 text, yet the overlay files it under b's day, so it
+      // must route to b like any other row of that day
+      import org.apache.spark.sql.functions.{expr, hour}
+      val early = spark.read.parquet(sharedDir)
+        .where(col(graft.ingest.Archiver.DayCol) === a0.owners("b").head &&
+          hour(col("ts")) < 5)
+        .select(col("event_id"), date_format(col("ts") - expr("INTERVAL 5 HOURS"),
+          "yyyy-MM-dd'T'HH:mm:ss").as("local"), col("value")).first()
+      val (eid, eLocal, eNew) =
+        (early.getLong(0), early.getString(1), early.getDouble(2) + 1000.0)
+      val r2 = client.send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+          s"http://localhost:${pa.boundPort}/data/events"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
+            s"""[{"event_id": $eid, "ts": "$eLocal-05:00", "user_id": 1,
+                  "event_type": "routed_et", "value": $eNew,
+                  "props": "{}"}]""")).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(r2.statusCode() == 200, r2.body())
+      assert(!pa.hasLiveRows("events"), "an offset time must route by its UTC day")
+      assert(total(broker.aql(wideQuery)) == before)
+      assert(total(broker.aql(idQuery.replace(s"event_id = $vid", s"event_id = $eid"))) == eNew,
+        "the offset-written update must serve exactly once")
     } finally {
       Seq(regA, regB).foreach(_.close())
       Seq(pa, pb).foreach(_.stop())
