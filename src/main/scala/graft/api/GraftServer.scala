@@ -172,10 +172,6 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     */
   @volatile private var sliceServed: Set[String] = Set.empty
   private val postDrainHooks = TrieMap.empty[String, () => Unit]
-  // shared archive dirs whose drain marker the epoch token re-checks
-  // AFTER a query body ran (the seqlock read-side end; see
-  // withServingVersion) — one per slice-served table, usually one total
-  @volatile private var epochDirs: Set[String] = Set.empty
 
   /** Wire `table` for slice-mode drains: scheduler drains land in the
     * SHARED day-partitioned archive (delta-promoted via Backfill once it
@@ -193,7 +189,6 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     sliceServed += table
     postDrainHooks.put(table, onDrained)
     sliceOwnedDay.put(table, ownedDay)
-    epochDirs += sharedArchiveDir
     // pre-seed the drain target: dirFor routes scheduler drains to the
     // shared archive, and drain() takes the Backfill delta path (the
     // shared archive already holds the table's history)
@@ -339,7 +334,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
         // surfaces as a torn archive epoch and the broker retries the
         // wave (the new owner's listing may sit on the other side of the
         // commit)
-        graft.exec.ArchiveEpoch.note(graft.ingest.DrainMarker
+        graft.exec.ArchiveEpoch.note(name, graft.ingest.DrainMarker
           .read(sharedDir, s.sparkContext.hadoopConfiguration))
         val sharedKeys = s.read.option("mergeSchema", "true")
           .parquet(sharedDir)
@@ -474,16 +469,15 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       if (vs.nonEmpty)
         ex.getResponseHeaders.set("X-Graft-Assignment-Version",
           vs.toSeq.sorted.mkString(","))
-      // seqlock read-side end: if the query read a shared archive, check
-      // the marker once more AFTER all its reads ran — a backfill that
-      // began (or committed) since the pre-read makes the epochs
-      // disagree, the token reports torn, and the broker retries the
-      // wave instead of merging a listing that may straddle the swap
-      if (graft.exec.ArchiveEpoch.collect().isDefined)
-        epochDirs.foreach { d =>
-          graft.exec.ArchiveEpoch.note(graft.ingest.DrainMarker.read(d,
-            spark.sparkContext.hadoopConfiguration))
-        }
+      // seqlock read-side end: for each table whose shared archive the
+      // query read, check its marker once more AFTER all its reads ran —
+      // a backfill that began (or committed) since the pre-read makes the
+      // epochs disagree, the token reports torn, and the broker retries
+      // the wave instead of merging a listing that may straddle the swap
+      graft.exec.ArchiveEpoch.tables().foreach { t =>
+        drained.get(t).foreach(d => graft.exec.ArchiveEpoch.note(t,
+          graft.ingest.DrainMarker.read(d, spark.sparkContext.hadoopConfiguration)))
+      }
       graft.exec.ArchiveEpoch.collect().foreach(
         ex.getResponseHeaders.set("X-Graft-Archive-Epoch", _))
       out
@@ -1346,7 +1340,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
   def purge(table: String, retainFromDay: String): Seq[String] =
     drained.get(table)
       .map(dir => tableLocks.getOrElseUpdate(table, new Object).synchronized {
-        swapping(table, dir)(graft.ingest.Archiver.purge(dir, retainFromDay))
+        swapping(table, dir)(graft.ingest.Archiver.purge(spark, dir, retainFromDay))
       })
       .getOrElse(Nil)
 

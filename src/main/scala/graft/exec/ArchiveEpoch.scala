@@ -19,12 +19,18 @@ package graft.exec
   *   - writers announce a swap with [[graft.ingest.DrainMarker.beginRewrite]]
   *     (inflight flag) BEFORE the first rename and clear it with the
   *     post-swap `bump` (seq+1);
-  *   - every serving-side read of the shared archive [[note]]s the marker
-  *     it observed (the serving catalog already reads it per query; the
+  *   - every serving-side read of a shared archive [[note]]s the marker
+  *     it observed under the slice-served table whose archive it read
+  *     (the serving catalog already reads it per query; the
   *     stranded-delta anti-join reads it before listing shared PKs), and
-  *     the HTTP layer notes it once more AFTER the query body ran;
-  *   - [[collect]] folds the observations into one token: the seq when
-  *     every observation agreed and none was inflight, else TORN;
+  *     the HTTP layer re-reads the marker of each [[tables]] entry once
+  *     more AFTER the query body ran;
+  *   - [[collect]] folds the observations into one token: the per-table
+  *     seqs when every table's observations agreed and none was
+  *     inflight, else TORN. Epochs are per archive, like readers of
+  *     Oracle In-Memory on Active Data Guard take a consistent point per
+  *     redo stream: a second table's archive moving never tears a query
+  *     that did not read it;
   *   - the member surfaces the token as `X-Graft-Archive-Epoch`; the
   *     broker retries any wave with a torn token or mixed epochs.
   *
@@ -38,7 +44,7 @@ object ArchiveEpoch {
   val Torn = "torn"
 
   private final class State {
-    val seqs = scala.collection.mutable.Set.empty[Long]
+    val seqs = scala.collection.mutable.Map.empty[String, Set[Long]]
     var torn = false
   }
 
@@ -46,28 +52,35 @@ object ArchiveEpoch {
 
   def begin(): Unit = tl.set(new State)
 
-  /** Record one observed marker. An inflight marker means a writer is
-    * inside its swap window right now; a corrupt one reads as seq 0 (all
+  /** Record one marker observed on `table`'s shared archive. The key is
+    * the table name, which every member agrees on (a mount path can
+    * differ between hosts). An inflight marker means a writer is inside
+    * its swap window right now; a corrupt one reads as seq 0 (all
     * members see the same file, so corruption is consistent across a
     * wave and must not fail queries that still serve exactly — the
     * conservative all-from-shared path stays exact).
     */
-  def note(m: graft.ingest.DrainMarker.Marker): Unit =
+  def note(table: String, m: graft.ingest.DrainMarker.Marker): Unit =
     Option(tl.get).foreach { st =>
       if (m.inflight) st.torn = true
-      st.seqs += m.seq
+      st.seqs(table) = st.seqs.getOrElse(table, Set.empty[Long]) + m.seq
     }
+
+  /** The tables whose shared archive this thread's query read. */
+  def tables(): Set[String] =
+    Option(tl.get).map(_.seqs.keySet.toSet).getOrElse(Set.empty)
 
   /** The epoch token for the response header: None when the query never
     * read a shared archive (non-slice deployments, tables outside slice
     * serving); [[Torn]] when any observation was inflight or two
-    * observations disagreed (a swap committed between them).
+    * observations of one table disagreed (a swap committed between
+    * them); else the seqs in table-name order.
     */
   def collect(): Option[String] =
     Option(tl.get).flatMap { st =>
       if (st.seqs.isEmpty) None
-      else if (st.torn || st.seqs.size > 1) Some(Torn)
-      else Some(st.seqs.head.toString)
+      else if (st.torn || st.seqs.values.exists(_.size > 1)) Some(Torn)
+      else Some(st.seqs.toSeq.sortBy(_._1).map(_._2.head).mkString(","))
     }
 
   def end(): Unit = tl.remove()

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.aql.{Catalog, TableDef}
-import graft.ingest.Archiver
+import graft.ingest.{Archiver, PartitionSwap}
 
 /** Slice bootstrap for the broker tier — the role the reference's
   * datanode bootstrap plays when an instance is added or replaced
@@ -59,7 +59,8 @@ object SliceBootstrap {
 
   /** Shared copy loop for [[copySlice]] / [[copyDays]]: every day the
     * predicate admits lands with the idempotence + crash discipline
-    * (present days skip; in-flight days write to a temp name, rename).
+    * (present days skip; in-flight days stage and swap in through
+    * [[PartitionSwap]]).
     */
   private def copyMatching(spark: SparkSession, sharedArchiveDir: String,
       localDir: String, wanted: String => Boolean): Seq[String] = {
@@ -70,24 +71,15 @@ object SliceBootstrap {
     val dstFs = dst.getFileSystem(conf)
     require(srcFs.exists(src), s"shared archive $sharedArchiveDir does not exist")
     dstFs.mkdirs(dst)
-    val prefix = s"${Archiver.DayCol}="
-    val copied = Seq.newBuilder[String]
-    srcFs.listStatus(src).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith(prefix))
-      .sortBy(_.getName)
-      .foreach { part =>
-        val day = part.getName.stripPrefix(prefix)
-        val target = new Path(dst, part.getName)
-        if (wanted(day) && !dstFs.exists(target)) {
-          val tmp = new Path(dst, s".${part.getName}.copying")
-          if (dstFs.exists(tmp)) dstFs.delete(tmp, true)
-          FileUtil.copy(srcFs, part, dstFs, tmp, false, conf)
-          require(dstFs.rename(tmp, target),
-            s"bootstrap rename failed for $target")
-          copied += day
-        }
+    def part(day: String) = s"${Archiver.DayCol}=$day"
+    localDays(spark, sharedArchiveDir)
+      .filter(day => wanted(day) && !dstFs.exists(new Path(dst, part(day))))
+      .map { day =>
+        FileUtil.copy(srcFs, new Path(src, part(day)), dstFs,
+          PartitionSwap.stage(dstFs, dst, part(day)), false, conf)
+        PartitionSwap.install(dstFs, dst, Seq(part(day)))
+        day
       }
-    copied.result()
   }
 
   /** Bootstrap a slice FROM A LIVE PEER over HTTP instead of shared
@@ -194,16 +186,15 @@ object SliceBootstrap {
       // applies to its own inputs
       fetchList(s"/bootstrap/$table/days").map(safeSegment).sorted.foreach { day =>
         val inRange = fromDay.forall(day >= _) && toDay.forall(day < _)
-        val target = new Path(dst, s"${Archiver.DayCol}=$day")
-        if (inRange && !fs.exists(target)) {
-          val tmp = new Path(dst, s".${Archiver.DayCol}=$day.copying")
-          if (fs.exists(tmp)) fs.delete(tmp, true)
-          fs.mkdirs(tmp)
+        val part = s"${Archiver.DayCol}=$day"
+        if (inRange && !fs.exists(new Path(dst, part))) {
+          val staged = PartitionSwap.stage(fs, dst, part)
+          fs.mkdirs(staged)
           fetchList(s"/bootstrap/$table/$day/files").map(safeSegment).foreach { f =>
-            val out = fs.create(new Path(tmp, f), true)
+            val out = fs.create(new Path(staged, f), true)
             try fetchTo(s"/bootstrap/$table/$day/$f", out) finally out.close()
           }
-          require(fs.rename(tmp, target), s"peer bootstrap rename failed for $target")
+          PartitionSwap.install(fs, dst, Seq(part))
           copied += day
         }
       }
@@ -234,24 +225,8 @@ object SliceBootstrap {
     * present.
     */
   def retainDays(spark: SparkSession, localDir: String,
-      keep: Set[String]): Seq[String] = {
-    val p = new Path(localDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val prefix = s"${Archiver.DayCol}="
-    val dropped = Seq.newBuilder[String]
-    fs.listStatus(p).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith(prefix))
-      .sortBy(_.getName)
-      .foreach { part =>
-        val day = part.getName.stripPrefix(prefix)
-        if (!keep.contains(day)) {
-          fs.delete(part, true)
-          dropped += day
-        }
-      }
-    dropped.result()
-  }
+      keep: Set[String]): Seq[String] =
+    SliceRebalance.retainDaysGuarded(spark, localDir, keep, _ => true)._1
 
   /** Days present in a (local or shared) archive directory — the
     * bootstrap observability surface (`IsBootstrapped` analog: a

@@ -3,6 +3,7 @@ package graft.exec
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -152,58 +153,40 @@ object SliceRebalance {
   }
 
   /** Copy whole day partitions that exist ONLY in a member's local
-    * storage up into the shared archive (bootstrap temp+rename
-    * discipline). Returns slice → days merged. A day two members both
-    * hold un-shared merges from the first (sorted) member; the second
-    * member's divergent copy is then a merge CONFLICT — its files are
-    * not in the shared day — and the guarded drop phase protects it.
+    * storage up into the shared archive (staged, then installed and
+    * announced like any archive day swap). Returns slice → days merged.
+    * A day two members both hold un-shared merges from the first (sorted)
+    * member; the second member's divergent copy is then a merge CONFLICT
+    * — its files are not in the shared day — and the guarded drop phase
+    * protects it.
     */
   private def mergeUp(spark: SparkSession, sharedArchiveDir: String,
       localDirs: Map[String, String]): Map[String, Seq[String]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val shared = new org.apache.hadoop.fs.Path(sharedArchiveDir)
-    val sharedFs = shared.getFileSystem(conf)
-    sharedFs.mkdirs(shared)
-    // the merge-up WRITES the shared archive, so it takes the same
-    // cross-process archive write lock Backfill holds (a drain's day
-    // rewrite mid-merge-up could otherwise interleave with these copies);
-    // a fresh holder means a drain is in flight — abort by name, re-run
-    GenerationLock.withLock(GenerationLock.hadoop(shared, conf),
-      ".graft-archive.lock", staleMs = 120000L, role = "rebalance",
-      noun = "archive write lock",
-      hint = " — a drain backfill is in flight; re-run the rebalance.",
-      heartbeatMs = 15000L) { _ => mergeUpLocked(spark, shared, sharedFs, conf, localDirs) }
-  }
-
-  private def mergeUpLocked(spark: SparkSession,
-      shared: org.apache.hadoop.fs.Path,
-      sharedFs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration,
-      localDirs: Map[String, String]): Map[String, Seq[String]] = {
-    val prefix = s"${graft.ingest.Archiver.DayCol}="
-    localDirs.toSeq.sortBy(_._1).map { case (slice, dir) =>
-      val local = new org.apache.hadoop.fs.Path(dir)
-      val fs = local.getFileSystem(conf)
-      val merged = Seq.newBuilder[String]
-      if (fs.exists(local)) {
-        fs.listStatus(local).filter(_.isDirectory).map(_.getPath)
-          .filter(_.getName.startsWith(prefix)).sortBy(_.getName).foreach { part =>
-            val target = new org.apache.hadoop.fs.Path(shared, part.getName)
-            if (!sharedFs.exists(target)) {
-              val tmp = new org.apache.hadoop.fs.Path(shared, s".${part.getName}.mergeup")
-              if (sharedFs.exists(tmp)) sharedFs.delete(tmp, true)
-              org.apache.hadoop.fs.FileUtil.copy(fs, part, sharedFs, tmp, false, conf)
-              if (sharedFs.rename(tmp, target)) {
-                log.warn(s"rebalance merged locally-drained day " +
-                  s"${part.getName.stripPrefix(prefix)} from member '$slice' " +
-                  "up to the shared archive")
-                merged += part.getName.stripPrefix(prefix)
-              } else sharedFs.delete(tmp, true) // lost a concurrent race; conflict path
-            }
-          }
-      }
-      slice -> merged.result()
-    }.filter(_._2.nonEmpty).toMap
+    val shared = new Path(sharedArchiveDir)
+    // the merge-up WRITES the shared archive, so it takes the archive
+    // write lock Backfill holds (a drain's day rewrite mid-merge-up could
+    // otherwise interleave with these copies); a fresh holder means a
+    // drain is in flight — abort by name, re-run
+    graft.ingest.PartitionSwap.withArchiveLock(sharedArchiveDir, conf, "rebalance",
+      " — a drain backfill is in flight; re-run the rebalance.") { sharedFs =>
+      val prefix = s"${graft.ingest.Archiver.DayCol}="
+      localDirs.toSeq.sortBy(_._1).map { case (slice, dir) =>
+        val local = new Path(dir)
+        val fs = local.getFileSystem(conf)
+        val days = SliceBootstrap.localDays(spark, dir)
+          .filterNot(d => sharedFs.exists(new Path(shared, s"$prefix$d")))
+        days.foreach { day =>
+          FileUtil.copy(fs, new Path(local, s"$prefix$day"), sharedFs,
+            graft.ingest.PartitionSwap.staging(shared, s"$prefix$day"), false, conf)
+          log.warn(s"rebalance merged locally-drained day $day from member " +
+            s"'$slice' up to the shared archive")
+        }
+        if (days.nonEmpty)
+          graft.ingest.PartitionSwap.installDays(sharedFs, shared, conf, days, flagged = days)
+        slice -> days
+      }.filter(_._2.nonEmpty).toMap
+    }
   }
 
   /** True when the shared archive's `day` partition contains every file
@@ -214,18 +197,8 @@ object SliceRebalance {
     */
   private def sharedHoldsAllFiles(spark: SparkSession, sharedArchiveDir: String,
       localDir: String, day: String): Boolean = {
-    val localFiles = dayFiles(spark, localDir, day)
-    val sharedFiles = dayFiles(spark, sharedArchiveDir, day)
-    localFiles.subsetOf(sharedFiles)
-  }
-
-  private def dayFiles(spark: SparkSession, dir: String, day: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir,
-      s"${graft.ingest.Archiver.DayCol}=$day")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).filter(_.isFile).map(_.getPath.getName)
-      .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
+    def names(dir: String) = SliceSync.fileSet(spark, dir, day).map(_._1)
+    names(localDir).subsetOf(names(sharedArchiveDir))
   }
 
   /** [[SliceBootstrap.retainDays]] with a safety predicate: a day outside
@@ -236,31 +209,18 @@ object SliceRebalance {
     */
   def retainDaysGuarded(spark: SparkSession, localDir: String, keep: Set[String],
       droppable: String => Boolean): (Seq[String], Seq[String]) = {
-    val p = new org.apache.hadoop.fs.Path(localDir)
+    val p = new Path(localDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (Nil, Nil)
-    val prefix = s"${graft.ingest.Archiver.DayCol}="
-    val dropped = Seq.newBuilder[String]
-    val skipped = Seq.newBuilder[String]
-    fs.listStatus(p).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith(prefix))
-      .sortBy(_.getName)
-      .foreach { part =>
-        val day = part.getName.stripPrefix(prefix)
-        if (!keep.contains(day)) {
-          if (droppable(day)) {
-            fs.delete(part, true)
-            dropped += day
-          } else {
-            log.warn(s"rebalance REFUSED to drop local day $day from $localDir: " +
-              "the shared archive does not hold all of its files — a drain " +
-              "landed here locally; resolve by merging it up or re-running " +
-              "rebalance (whole-day merges are automatic)")
-            skipped += day
-          }
-        }
-      }
-    (dropped.result(), skipped.result())
+    val (dropped, skipped) = SliceBootstrap.localDays(spark, localDir)
+      .filterNot(keep.contains).partition(droppable)
+    dropped.foreach(day =>
+      fs.delete(new Path(p, s"${graft.ingest.Archiver.DayCol}=$day"), true))
+    skipped.foreach(day =>
+      log.warn(s"rebalance REFUSED to drop local day $day from $localDir: " +
+        "the shared archive does not hold all of its files — a drain " +
+        "landed here locally; resolve by merging it up or re-running " +
+        "rebalance (whole-day merges are automatic)"))
+    (dropped, skipped)
   }
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -354,7 +314,7 @@ object SliceRebalance {
     read(topologyDir).foreach { a =>
       if (a.owners.nonEmpty && !a.owners.contains(slice)) {
         val conf = new org.apache.hadoop.conf.Configuration()
-        val p = new org.apache.hadoop.fs.Path(localDir)
+        val p = new Path(localDir)
         val fs = p.getFileSystem(conf)
         val prefix = s"${graft.ingest.Archiver.DayCol}="
         val hasLocalDays = fs.exists(p) &&
@@ -409,7 +369,7 @@ object SliceRebalance {
               // the epoch token (seqlock read-side begin; GraftServer
               // notes it again after the query body ran)
               val marker = graft.ingest.DrainMarker.read(sharedArchiveDir, conf)
-              ArchiveEpoch.note(marker)
+              ArchiveEpoch.note("events", marker)
               val syncedSeq = graft.ingest.DrainMarker.readSynced(localDir, conf)
               val st = graft.ingest.DrainMarker.staleDays(marker, syncedSeq) match {
                 case Some(days) => days

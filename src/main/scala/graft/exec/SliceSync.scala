@@ -3,6 +3,8 @@ package graft.exec
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
+import graft.ingest.{Archiver, DrainMarker, PartitionSwap}
+
 /** Pull-down half of the drain→serve loop in slice mode: after any
   * member drains fresh live rows into the SHARED archive, the day's
   * serving owner (by [[SliceRebalance.extendedOwner]] over the published
@@ -28,9 +30,14 @@ object SliceSync {
   /** Copy every shared-archive day this slice serves (extended
     * ownership; all days when no assignment is published) whose local
     * copy is missing or stale. Returns the days refreshed. Crash-safe:
-    * fresh bytes land under a temp name and swap in via rename, so a
-    * killed sync re-runs to completion; the swap's delete→rename window
-    * on a REWRITTEN day is the same one the backfill job itself has.
+    * fresh bytes land at the day's staging name and swap in through
+    * [[PartitionSwap]], so a killed sync re-runs to completion.
+    *
+    * An inflight drain marker whose writer's archive lock has gone stale
+    * (a writer that crashed inside its swap) is recovered here first: the
+    * swap rolls back and the marker clears, so broker queries stop
+    * reading a torn archive epoch without an operator. A live writer's
+    * fresh lock makes the recovery skip.
     */
   def sync(spark: SparkSession, sharedArchiveDir: String, localDir: String,
       topologyDir: String, slice: String): Seq[String] = {
@@ -45,38 +52,38 @@ object SliceSync {
     // capture the drain-marker seq BEFORE listing: drains that commit
     // during this sync may or may not be copied below, so only the seq
     // observed first is safely "synced through"
-    val markerSeq = graft.ingest.DrainMarker.read(sharedArchiveDir, conf).seq
-    val prefix = s"${graft.ingest.Archiver.DayCol}="
+    val marker = DrainMarker.read(sharedArchiveDir, conf)
+    if (marker.inflight) PartitionSwap.recoverUnlessHeld(sharedArchiveDir, conf)
     val mine = SliceBootstrap.localDays(spark, sharedArchiveDir).filter { d =>
       assignment.forall(a => SliceRebalance.extendedOwner(a, d).contains(slice))
     }
     val synced = Seq.newBuilder[String]
     mine.foreach { day =>
-      val srcPart = new Path(shared, s"$prefix$day")
-      val dstPart = new Path(local, s"$prefix$day")
-      if (fileSet(sharedFs, srcPart) != fileSet(localFs, dstPart)) {
-        val tmp = new Path(local, s".$prefix$day.syncing")
-        if (localFs.exists(tmp)) localFs.delete(tmp, true)
-        FileUtil.copy(sharedFs, srcPart, localFs, tmp, false, conf)
-        if (localFs.exists(dstPart)) localFs.delete(dstPart, true)
-        require(localFs.rename(tmp, dstPart), s"slice sync rename failed for $dstPart")
+      val part = s"${Archiver.DayCol}=$day"
+      if (fileSet(spark, sharedArchiveDir, day) != fileSet(spark, localDir, day)) {
+        FileUtil.copy(sharedFs, new Path(shared, part), localFs,
+          PartitionSwap.stage(localFs, local, part), false, conf)
+        PartitionSwap.install(localFs, local, Seq(part))
         synced += day
       }
     }
     // record the synced-through seq: the serving catalog stops routing
     // this member's owned rewritten days to the shared archive
-    graft.ingest.DrainMarker.writeSynced(localDir, conf, markerSeq)
+    DrainMarker.writeSynced(localDir, conf, marker.seq)
     synced.result()
   }
 
-  /** (name, length) of every data file in a day partition — the
+  /** (name, length) of every data file in `dir`'s `day` partition — the
     * staleness fingerprint. Missing partition → empty set.
     */
-  private def fileSet(fs: org.apache.hadoop.fs.FileSystem,
-      part: Path): Set[(String, Long)] =
+  private[exec] def fileSet(spark: SparkSession, dir: String,
+      day: String): Set[(String, Long)] = {
+    val part = new Path(dir, s"${Archiver.DayCol}=$day")
+    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(part)) Set.empty
     else fs.listStatus(part).filter(_.isFile)
       .filterNot(s => s.getPath.getName.startsWith(".") ||
         s.getPath.getName.startsWith("_"))
       .map(s => (s.getPath.getName, s.getLen)).toSet
+  }
 }

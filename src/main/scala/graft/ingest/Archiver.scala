@@ -102,37 +102,21 @@ object Archiver {
     * (yyyy-MM-dd). Returns the deleted partition names. Goes through the
     * path's own Hadoop filesystem, so an hdfs/s3a archive purges the same
     * way a local one does.
+    *
+    * Holds the archive write lock like Backfill/Compactor: a purge
+    * deleting a day a concurrent backfill is mid-swap on would either
+    * resurrect the purged rows (the swap recreates the day from its
+    * pre-purge read) or fail the swap. Busy → the scheduler skips the tick.
     */
-  def purge(dir: String, retainFromDay: String): Seq[String] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
+  def purge(spark: SparkSession, dir: String, retainFromDay: String): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return Nil
-    // same cross-process archive write lock as Backfill/Compactor: a
-    // purge deleting a day a concurrent backfill is mid-swap on would
-    // either resurrect the purged rows (the backfill's rename recreates
-    // the day from its pre-purge read) or fail the swap — retention and
-    // rewrites serialize instead. Busy → the scheduler skips the tick.
-    graft.exec.GenerationLock.withLock(
-      graft.exec.GenerationLock.hadoop(root, conf),
-      ".graft-archive.lock", staleMs = 120000L, role = "purge",
-      // heartbeat like Backfill/Compactor/merge-up: a purge deleting many
-      // day partitions on a slow object store can exceed the stale window,
-      // get reclaimed mid-delete, and race a concurrent backfill —
-      // reopening the resurrection race this lock closes
-      noun = "archive write lock", heartbeatMs = 15000L) { _ =>
-      val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
-      fs.listStatus(root).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith(s"$DayCol=")) {
-          val day = name.stripPrefix(s"$DayCol=")
-          if (day < retainFromDay) {
-            fs.delete(st.getPath, true)
-            deleted += day
-          }
-        }
-      }
-      deleted.toSeq.sorted
+    if (!root.getFileSystem(conf).exists(root)) return Nil
+    PartitionSwap.withArchiveLock(dir, conf, "purge") { fs =>
+      fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith(s"$DayCol="))
+        .filter(_.getName.stripPrefix(s"$DayCol=") < retainFromDay)
+        .map { p => fs.delete(p, true); p.getName.stripPrefix(s"$DayCol=") }
+        .sorted.toSeq
     }
   }
 }

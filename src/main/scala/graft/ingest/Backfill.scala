@@ -1,5 +1,6 @@
 package graft.ingest
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,34 +33,27 @@ object Backfill {
     * The reference shards exactly this merge across workers
     * (memstore/backfill.go:436+).
     *
-    * `exclusive` runs the day-directory swap, the only step in which a
-    * reader of `dir` can see a day missing or a listed file gone; a
-    * caller that serves queries from `dir` passes its reader exclusion.
+    * `exclusive` runs the day-directory swap ([[PartitionSwap.installDays]]),
+    * the only step in which a reader of `dir` can see a day missing or a
+    * listed file gone; a caller that serves queries from `dir` passes its
+    * reader exclusion.
+    *
+    * The whole read-merge-swap holds the archive write lock (two
+    * concurrent merges would each miss the other's delta, the last swap
+    * winning): a FRESH holder raises [[graft.exec.GenerationLock.Busy]]
+    * (the drain tick catches it and skips), and a crashed holder's swap
+    * is rolled back before this merge reads the archive.
     */
   def apply(spark: SparkSession, dir: String, late: DataFrame, timeCol: String,
       pk: Seq[String], sortCols: Seq[String], numFiles: Int = 0,
       exclusive: (=> Unit) => Unit = swap => swap): Seq[String] =
-    // the read-merge-swap below is a lost-update hazard under concurrent
-    // writers (two merges each missing the other's delta, last rename
-    // winning — and a shared .backfill_tmp), so the WHOLE job holds a
-    // cross-process generation-ladder lock on the archive dir. Locking
-    // here, at the single mutation site, protects every caller — member
-    // drains, operator backfill jobs, anything else that patches days.
-    // A FRESH contending holder raises [[graft.exec.GenerationLock.Busy]]
-    // (callers with retry loops, like the drain tick, catch it and skip);
-    // the heartbeat keeps a multi-minute rewrite from being reclaimed as
-    // stale, so only a CRASHED writer's lock is ever taken over.
-    graft.exec.GenerationLock.withLock(
-      graft.exec.GenerationLock.hadoop(
-        new org.apache.hadoop.fs.Path(dir),
-        spark.sparkContext.hadoopConfiguration),
-      ".graft-archive.lock", staleMs = 120000L, role = "backfill",
-      noun = "archive write lock", heartbeatMs = 15000L) { _ =>
-      locked(spark, dir, late, timeCol, pk, sortCols, numFiles, exclusive)
+    PartitionSwap.withArchiveLock(dir, spark.sparkContext.hadoopConfiguration,
+      "backfill") { fs =>
+      locked(spark, fs, dir, late, timeCol, pk, sortCols, numFiles, exclusive)
     }
 
-  private def locked(spark: SparkSession, dir: String, late: DataFrame,
-      timeCol: String, pk: Seq[String], sortCols: Seq[String],
+  private def locked(spark: SparkSession, fs: FileSystem, dir: String,
+      late: DataFrame, timeCol: String, pk: Seq[String], sortCols: Seq[String],
       numFiles: Int, exclusive: (=> Unit) => Unit): Seq[String] = {
     val day = Archiver.DayCol
     val withDay = late.withColumn(day, Archiver.dayOf(late, timeCol))
@@ -67,14 +61,11 @@ object Backfill {
       .collect().map(_.getString(0)).sorted.toSeq
     if (days.isEmpty) return Nil
 
-    // the archive may live on any Hadoop filesystem (hdfs/s3a) — probe
-    // and swap through the path's own FS, never java.nio (which silently
-    // reports every remote path as absent, turning the merge into a
+    // probe through the path's own Hadoop FS, never java.nio (which
+    // reports every hdfs/s3a path as absent, turning the merge into a
     // late-rows-only rewrite)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def child(p: String) = new org.apache.hadoop.fs.Path(dir, p)
-    val existingDays = days.filter(d => fs.exists(child(s"$day=$d")))
+    val root = new Path(dir)
+    val existingDays = days.filter(d => fs.exists(new Path(root, s"$day=$d")))
 
     // archived rows of the affected days only (one partition-pruned read);
     // seq 0 loses to the late batch's seq 1 on a PK hit within the day.
@@ -119,46 +110,16 @@ object Backfill {
     // day order, each writer task emits per-day files whose rows are
     // sorted by the archive sort columns — row-group min/max stats stay as
     // tight as the original Archiver layout
-    val tmp = s"$dir/.backfill_tmp"
+    val conf = spark.sparkContext.hadoopConfiguration
     merged.repartitionByRange(n, rangeCols: _*)
       .sortWithinPartitions(rangeCols: _*)
-      .write.partitionBy(day).mode("overwrite").parquet(tmp)
-
-    // announce the swap BEFORE the first rename: between `target → trash`
-    // and `src → target` a concurrent reader listing the archive sees the
-    // day ABSENT, and around the commit instant two members of one
-    // scatter wave can observe opposite sides of the rename (the old
-    // owner's moved-day PK anti-join deferring to a copy the new owner's
-    // listing predates — the ClusterProcessSpec grow-drill undercount).
-    // The inflight marker makes any such read report a torn archive epoch
-    // so the broker retries the wave; the post-swap bump below is the
-    // commit announcement that clears it.
-    DrainMarker.beginRewrite(dir, spark.sparkContext.hadoopConfiguration)
-    // swap only the affected day directories — Compactor's trash
-    // protocol, not delete-then-move: a crash between the two renames
-    // loses no data (the trash dir still holds the old partition, the
-    // tmp dir the new one; the next run clears the stale tmp and an
-    // operator restores from trash), where a crash after a delete left
-    // the day's archived rows existing NOWHERE and the replay rewrote
-    // the day as late-rows-only
-    exclusive(days.foreach { d =>
-      val src = child(s".backfill_tmp/$day=$d")
-      if (fs.exists(src)) {
-        val target = child(s"$day=$d")
-        val trash = child(s".backfill-old-$d")
-        if (fs.exists(trash)) fs.delete(trash, true)
-        if (fs.exists(target))
-          require(fs.rename(target, trash), s"backfill: rename $target -> $trash failed")
-        require(fs.rename(src, target), s"backfill: rename $src -> $target failed")
-        fs.delete(trash, true)
-      }
-    })
-    fs.delete(child(".backfill_tmp"), true)
-    // record the rewritten days in the drain marker (we hold the archive
-    // lock): members serving these days from a local cache learn, with
-    // one small read per query, that their copies are stale and serve
-    // from the shared archive until their sync catches up
-    DrainMarker.bump(dir, spark.sparkContext.hadoopConfiguration, days)
+      .write.partitionBy(day).mode("overwrite")
+      .parquet(new Path(root, PartitionSwap.Staging).toString)
+    // the bump flags the rewritten days in the drain marker: members
+    // serving them from a local cache learn, with one small read per
+    // query, that their copies are stale and serve from the shared
+    // archive until their sync catches up
+    exclusive(PartitionSwap.installDays(fs, root, conf, days, flagged = days))
     days
   }
 }

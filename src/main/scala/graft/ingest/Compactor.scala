@@ -1,6 +1,7 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -19,12 +20,12 @@ import org.apache.spark.sql.functions._
   * `compact` rewrites only the day partitions that exceed `maxFiles`,
   * re-sorting rows by `sortCols` inside the single rewritten file set so
   * the zone-map clustering the Archiver established is RESTORED, not
-  * just preserved. Each day rewrites to a temporary sibling then swaps
-  * by rename — a crash mid-compaction leaves either the old complete
-  * partition or the new complete partition, never a mix (the temp dir
-  * is re-deleted on the next run). Days within budget are untouched, so
-  * the job's cost is proportional to the fragmented tail (typically the
-  * recent backfill days), not the table.
+  * just preserved. Each day rewrites to its staging name and swaps in
+  * through [[PartitionSwap]] — a crash mid-compaction leaves either the
+  * old complete partition or the new complete partition, never a mix,
+  * and the next archive-lock holder rolls a half-done swap back. Days
+  * within budget are untouched, so the job's cost is proportional to the
+  * fragmented tail (typically the recent backfill days), not the table.
   */
 object Compactor {
 
@@ -52,26 +53,22 @@ object Compactor {
     require(zorderCols.isEmpty || sortCols.isEmpty,
       "pass either sortCols (linear clustering) or zorderCols (multi-column), not both")
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"archive $dir does not exist")
-    // same cross-process archive write lock as Backfill: a compaction
-    // rewriting a day that a concurrent drain is backfilling would race
-    // the read-rewrite-swap — if the compacted (pre-delta) version wins,
-    // the drain's rows are gone AFTER its journal truncated. A fresh
-    // holder raises Busy; the scheduler's per-job catch turns that into
-    // a skipped tick (fragmentation waits; rows never race)
-    graft.exec.GenerationLock.withLock(
-      graft.exec.GenerationLock.hadoop(root,
-        spark.sparkContext.hadoopConfiguration),
-      ".graft-archive.lock", staleMs = 120000L, role = "compaction",
-      noun = "archive write lock", heartbeatMs = 15000L) { _ =>
-      compactLocked(spark, root, fs, sortCols, maxFiles, targetFiles,
+    val conf = spark.sparkContext.hadoopConfiguration
+    require(root.getFileSystem(conf).exists(root), s"archive $dir does not exist")
+    // the same archive write lock as Backfill: a compaction rewriting a
+    // day a concurrent drain is backfilling would race the
+    // read-rewrite-swap — if the compacted (pre-delta) version wins, the
+    // drain's rows are gone AFTER its journal truncated. A fresh holder
+    // raises Busy; the scheduler's per-job catch turns that into a
+    // skipped tick
+    PartitionSwap.withArchiveLock(dir, conf, "compaction") { fs =>
+      compactLocked(spark, root, fs, conf, sortCols, maxFiles, targetFiles,
         zorderCols, partitionPrefix, exclusive)
     }
   }
 
   private def compactLocked(spark: SparkSession, root: Path,
-      fs: org.apache.hadoop.fs.FileSystem, sortCols: Seq[String],
+      fs: FileSystem, conf: Configuration, sortCols: Seq[String],
       maxFiles: Int, targetFiles: Int, zorderCols: Seq[String],
       partitionPrefix: String, exclusive: (=> Unit) => Unit): Seq[DayReport] = {
     val prefix = partitionPrefix
@@ -88,7 +85,6 @@ object Compactor {
     // staleness check). Index-partition compactions (bucket=/cell=) are
     // member-local artifacts with no cross-member readers — no marker.
     val marker = prefix == s"${Archiver.DayCol}="
-    val conf = spark.sparkContext.hadoopConfiguration
     fs.listStatus(root).filter(_.isDirectory)
       .map(_.getPath).filter(_.getName.startsWith(prefix))
       .sortBy(_.getName)
@@ -97,8 +93,6 @@ object Compactor {
           .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
         if (dataFiles.length > maxFiles) {
           val day = part.getName.stripPrefix(prefix)
-          val tmp = new Path(root, s".compact-tmp-${part.getName}")
-          if (fs.exists(tmp)) fs.delete(tmp, true)
           // read THIS day's files directly (no partition-column recovery
           // needed — the day value is re-encoded in the directory name on
           // swap), restore the sort clustering, write the target file set
@@ -115,21 +109,12 @@ object Compactor {
                 rep.sortWithinPartitions(sortCols.map(col): _*)
               else rep
             }
-          rewritten.write.mode("overwrite").parquet(tmp.toString)
-          // swap: old → trash, tmp → live, trash deleted. A crash between
-          // the two renames loses no data (trash still holds the old
-          // partition and the tmp dir holds the new one — the next run
-          // deletes the stale tmp and the operator restores from trash);
-          // a crash after the swap leaves only cleanup.
-          val trash = new Path(root, s".compact-old-${part.getName}")
-          if (fs.exists(trash)) fs.delete(trash, true)
+          rewritten.write.mode("overwrite")
+            .parquet(PartitionSwap.staging(root, part.getName).toString)
           exclusive {
-            if (marker) DrainMarker.beginRewrite(root.toString, conf)
-            require(fs.rename(part, trash), s"compact: rename $part -> $trash failed")
-            require(fs.rename(tmp, part), s"compact: rename $tmp -> $part failed")
-            if (marker) DrainMarker.bump(root.toString, conf, Nil)
+            if (marker) PartitionSwap.installDays(fs, root, conf, Seq(day), flagged = Nil)
+            else PartitionSwap.install(fs, root, Seq(part.getName))
           }
-          fs.delete(trash, true)
           val after = fs.listStatus(part)
             .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
           reports += DayReport(day, dataFiles.length, after)

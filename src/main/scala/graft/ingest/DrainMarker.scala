@@ -47,62 +47,58 @@ object DrainMarker {
     *   answer is not comparable with any other member's in the same
     *   scatter wave (see [[graft.exec.ArchiveEpoch]]); the broker retries
     *   the wave instead of merging it.
+    * @param swapping the days an inflight writer is swapping — what
+    *   [[PartitionSwap]]'s recovery bumps when that writer crashed.
     */
   final case class Marker(seq: Long, recent: Seq[(Long, Seq[String])],
-      corrupt: Boolean = false, inflight: Boolean = false)
+      corrupt: Boolean = false, inflight: Boolean = false,
+      swapping: Seq[String] = Nil)
 
   def read(dir: String, conf: Configuration): Marker = {
     val p = new Path(dir, MarkerFile)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Marker(0L, Nil)
+    if (!p.getFileSystem(conf).exists(p)) return Marker(0L, Nil)
     try {
-      val in = fs.open(p)
-      val body = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      val j = JsonMethods.parse(body)
+      val j = JsonMethods.parse(readText(p, conf))
       val seq = j \ "seq" match {
         case JInt(v) => v.toLong
         case JLong(v) => v
         case _ => return Marker(0L, Nil, corrupt = true)
       }
-      val inflight = j \ "inflight" match {
-        case JBool(v) => v
-        case _ => false
-      }
+      def days(v: JValue) = v.children.collect { case JString(d) => d }
       val recent = j \ "recent" match {
         case JArray(es) => es.flatMap { e =>
           (e \ "seq", e \ "days") match {
-            case (JInt(s), JArray(ds)) =>
-              Some(s.toLong -> ds.collect { case JString(d) => d })
-            case (JLong(s), JArray(ds)) =>
-              Some(s -> ds.collect { case JString(d) => d })
+            case (JInt(s), ds: JArray) => Some(s.toLong -> days(ds))
+            case (JLong(s), ds: JArray) => Some(s -> days(ds))
             case _ => None
           }
         }
         case _ => Nil
       }
-      Marker(seq, recent, inflight = inflight)
+      Marker(seq, recent, inflight = j \ "inflight" == JBool(true),
+        swapping = days(j \ "swapping"))
     } catch { case _: Exception => Marker(0L, Nil, corrupt = true) }
   }
 
-  /** Announce an imminent directory swap BEFORE any rename makes it
-    * visible: rewrites the marker with `inflight: true` (seq and recent
-    * unchanged). Readers that observe the inflight flag — or whose
-    * before/after marker reads differ — know their archive listing may
-    * straddle the swap and report a torn epoch (see
+  /** Announce an imminent swap of `days` BEFORE any rename makes it
+    * visible: rewrites the marker with `inflight: true` and the days
+    * (seq and recent unchanged). Readers that observe the inflight flag —
+    * or whose before/after marker reads differ — know their archive
+    * listing may straddle the swap and report a torn epoch (see
     * [[graft.exec.ArchiveEpoch]]) so the broker retries the wave. The
     * finalizing [[bump]] clears the flag. Callers hold the archive write
-    * lock; a crash between begin and bump leaves the flag set until the
-    * next successful rewrite, which only costs retried waves, never a
-    * wrong merge.
+    * lock; a crash between begin and bump leaves the flag set until
+    * [[PartitionSwap]]'s recovery rolls the swap back and bumps `days` —
+    * at the next archive-lock holder, or the next slice sync once the
+    * crashed writer's lock is stale.
     */
-  def beginRewrite(dir: String, conf: Configuration): Unit = {
+  def beginRewrite(dir: String, conf: Configuration, days: Seq[String]): Unit = {
     val prior = read(dir, conf)
     if (prior.corrupt) throw new IllegalStateException(
       s"drain marker $dir/$MarkerFile exists but is unparseable — refusing " +
         "to rewrite it (see bump); restore the marker or delete it along " +
         "with every member's .synced-seq")
-    write(dir, conf, prior.seq, prior.recent, inflight = true)
+    write(dir, conf, prior.seq, prior.recent, Some(days))
   }
 
   /** Append one drain's affected days; returns the new seq. Callers hold
@@ -125,65 +121,57 @@ object DrainMarker {
         "every member's .synced-seq")
     val next = prior.seq + 1
     val recent = (prior.recent :+ (next -> days)).takeRight(RecentCap)
-    write(dir, conf, next, recent, inflight = false)
+    write(dir, conf, next, recent, swapping = None)
     next
   }
 
+  /** @param swapping the days of an inflight swap; None = not inflight */
   private def write(dir: String, conf: Configuration, seq: Long,
-      recent: Seq[(Long, Seq[String])], inflight: Boolean): Unit = {
+      recent: Seq[(Long, Seq[String])], swapping: Option[Seq[String]]): Unit = {
+    def days(ds: Seq[String]): JValue = JArray(ds.map(JString(_)).toList)
     val doc = JObject(
       (Seq(
         "seq" -> (JLong(seq): JValue),
         "recent" -> (JArray(recent.map { case (s, ds) =>
-          JObject("seq" -> JLong(s),
-            "days" -> JArray(ds.map(JString(_)).toList)): JValue
+          JObject("seq" -> JLong(s), "days" -> days(ds)): JValue
         }.toList): JValue)) ++
-        (if (inflight) Seq("inflight" -> (JBool(true): JValue)) else Nil)): _*)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    val tmp = new Path(root, s"$MarkerFile.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(JsonMethods.compact(JsonMethods.render(doc))
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // overwrite-rename, NOT delete-then-rename: a delete first opens a
-    // vacancy window where a concurrent reader finds no marker, computes
-    // an empty stale set, and serves a just-rewritten day from its stale
-    // cache for that one query
-    renameOverwrite(conf, tmp, new Path(root, MarkerFile))
+        swapping.toSeq.flatMap(ds =>
+          Seq("inflight" -> (JBool(true): JValue), "swapping" -> days(ds)))): _*)
+    writeText(new Path(dir), MarkerFile, conf, JsonMethods.compact(JsonMethods.render(doc)))
   }
 
-  private def renameOverwrite(conf: Configuration, src: Path, dst: Path): Unit = {
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, conf)
-    fc.rename(src, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+  private def readText(p: Path, conf: Configuration): String = {
+    val in = p.getFileSystem(conf).open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
+  /** Temp file + overwrite-rename, NOT delete-then-rename: a delete
+    * first opens a vacancy window where a concurrent reader finds no
+    * marker, computes an empty stale set, and serves a just-rewritten day
+    * from its stale cache for that one query.
+    */
+  private def writeText(root: Path, name: String, conf: Configuration,
+      body: String): Unit = {
+    val tmp = new Path(root, s"$name.tmp")
+    val out = root.getFileSystem(conf).create(tmp, true)
+    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
+      .rename(tmp, new Path(root, name), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** The marker seq this member's local store has synced through. */
   def readSynced(localDir: String, conf: Configuration): Long = {
     val p = new Path(localDir, SyncedFile)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return 0L
-    try {
-      val in = fs.open(p)
-      val body = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      body.trim.toLongOption.getOrElse(0L)
-    } catch { case _: Exception => 0L }
+    if (!p.getFileSystem(conf).exists(p)) return 0L
+    try readText(p, conf).trim.toLongOption.getOrElse(0L)
+    catch { case _: Exception => 0L }
   }
 
-  def writeSynced(localDir: String, conf: Configuration, seq: Long): Unit = {
-    val root = new Path(localDir)
-    val fs = root.getFileSystem(conf)
-    fs.mkdirs(root)
-    val tmp = new Path(root, s"$SyncedFile.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(seq.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // same overwrite-rename discipline as the marker (a vacancy would
-    // read as synced-through 0 — conservative, but still a needless
-    // full-shared-serving query)
-    renameOverwrite(conf, tmp, new Path(root, SyncedFile))
-  }
+  /** Same overwrite-rename as the marker (a vacancy would read as
+    * synced-through 0 — conservative, but a needless full-shared query).
+    */
+  def writeSynced(localDir: String, conf: Configuration, seq: Long): Unit =
+    writeText(new Path(localDir), SyncedFile, conf, seq.toString)
 
   /** Days rewritten by drains NEWER than `syncedSeq`. None = the bounded
     * window no longer covers the gap (the member is more than RecentCap

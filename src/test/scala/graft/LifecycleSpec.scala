@@ -49,6 +49,6 @@ class LifecycleSpec extends SparkSpec {
       assert(scan.contains("PartitionFilters") && scan.contains("day"),
         s"no partition filter:\n$scan")
       assert(!scan.contains("day=2024-01-10"), "unselected day partition in scan")
-    } finally Archiver.purge(dir, "9999-99-99")
+    } finally Archiver.purge(spark, dir, "9999-99-99")
   }
 }

@@ -8,8 +8,9 @@ import org.json4s.jackson.JsonMethods
 
 /** Seeded soak over the whole slice-mode loop: random interleavings of
   * ingest / PK-update / drain / sync / rebalance / crash+restart across
-  * two members, with the EXACTLY-ONCE invariant asserted through the
-  * broker after EVERY step. Updates POST at a RANDOM member — ownership
+  * two members (plus a fixed grow and a fixed shared-archive compaction),
+  * with the EXACTLY-ONCE invariant asserted through the broker after
+  * EVERY step. Updates POST at a RANDOM member — ownership
   * routing must land them at the day's owner, or the id answers twice.
   *
   * The individual transitions are each spec'd in isolation
@@ -145,6 +146,16 @@ class ClusterSoakSpec extends SparkSpec {
           dirs.keys.foreach(s =>
             SliceSync.sync(spark, sharedDir, dirs(s), topoDir, s))
           trace += s"$step+: grow a,b -> a,b,c with pending deltas, then handoff drains"
+        }
+        // fixed mid-soak COMPACTION of the shared archive on every seed:
+        // every multi-file day swaps in a re-sorted copy while members
+        // hold local caches, pending deltas and unsynced drains of it
+        if (step == 18) {
+          val rewritten = graft.ingest.Compactor.compact(spark, sharedDir,
+            Tables.EventsSortCols, maxFiles = 1)
+          trace += s"$step+: compact the shared archive (${rewritten.size} days rewritten)"
+          assert(total(broker().aql(wideQuery)) == expected,
+            s"count drifted across the compaction\n" + trace.result().mkString("\n"))
         }
         val op = rng.nextInt(13)
         val slice = {

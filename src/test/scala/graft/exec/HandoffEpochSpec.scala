@@ -3,7 +3,7 @@ package graft.exec
 import graft.{SparkSpec, Tables}
 import graft.api.GraftServer
 import graft.aql.Catalog
-import graft.ingest.DrainMarker
+import graft.ingest.{DrainMarker, PartitionSwap}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -60,7 +60,7 @@ class HandoffEpochSpec extends SparkSpec {
     val dir = tmp("he-marker")
     val conf = spark.sparkContext.hadoopConfiguration
     assert(!DrainMarker.read(dir, conf).inflight)
-    DrainMarker.beginRewrite(dir, conf)
+    DrainMarker.beginRewrite(dir, conf, Seq("2030-01-02"))
     val mid = DrainMarker.read(dir, conf)
     assert(mid.inflight, "beginRewrite must set the inflight flag")
     assert(mid.seq == 0L, "beginRewrite must not advance the seq")
@@ -106,17 +106,17 @@ class HandoffEpochSpec extends SparkSpec {
     ArchiveEpoch.begin()
     try {
       assert(ArchiveEpoch.collect().isEmpty, "no shared reads → no token")
-      ArchiveEpoch.note(DrainMarker.Marker(3L, Nil))
+      ArchiveEpoch.note("events", DrainMarker.Marker(3L, Nil))
       assert(ArchiveEpoch.collect().contains("3"))
-      ArchiveEpoch.note(DrainMarker.Marker(3L, Nil))
+      ArchiveEpoch.note("events", DrainMarker.Marker(3L, Nil))
       assert(ArchiveEpoch.collect().contains("3"), "repeat agreement keeps the seq")
-      ArchiveEpoch.note(DrainMarker.Marker(4L, Nil))
+      ArchiveEpoch.note("events", DrainMarker.Marker(4L, Nil))
       assert(ArchiveEpoch.collect().contains(ArchiveEpoch.Torn),
         "a commit between two reads (seq moved) must read as torn")
     } finally ArchiveEpoch.end()
     ArchiveEpoch.begin()
     try {
-      ArchiveEpoch.note(DrainMarker.Marker(5L, Nil, inflight = true))
+      ArchiveEpoch.note("events", DrainMarker.Marker(5L, Nil, inflight = true))
       assert(ArchiveEpoch.collect().contains(ArchiveEpoch.Torn),
         "an inflight marker must read as torn")
     } finally ArchiveEpoch.end()
@@ -162,13 +162,15 @@ class HandoffEpochSpec extends SparkSpec {
       // freeze the archive INSIDE Backfill's swap window: inflight marker
       // written, the day's directory renamed out, replacement not yet in —
       // exactly the state between Backfill's two renames
-      DrainMarker.beginRewrite(sharedDir, conf)
+      DrainMarker.beginRewrite(sharedDir, conf, Seq(bDay))
       val shared = new org.apache.hadoop.fs.Path(sharedDir)
       val sFs = shared.getFileSystem(conf)
       val dayPath = new org.apache.hadoop.fs.Path(shared,
         s"${graft.ingest.Archiver.DayCol}=$bDay")
-      val trash = new org.apache.hadoop.fs.Path(shared, s".backfill-old-$bDay")
-      require(sFs.rename(dayPath, trash), "fixture: swap-out rename failed")
+      val trash = new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(shared, PartitionSwap.Trash), dayPath.getName)
+      require(sFs.mkdirs(trash.getParent) && sFs.rename(dayPath, trash),
+        "fixture: swap-out rename failed")
 
       // the wave is torn: every slice that read the shared archive saw the
       // inflight marker. The broker must NEVER return a silently short
@@ -248,7 +250,7 @@ class HandoffEpochSpec extends SparkSpec {
       val io = GenerationLock.hadoop(
         new org.apache.hadoop.fs.Path(sharedDir),
         spark.sparkContext.hadoopConfiguration)
-      GenerationLock.withLock(io, ".graft-archive.lock", staleMs = 120000L,
+      GenerationLock.withLock(io, PartitionSwap.LockName, PartitionSwap.StaleMs,
         role = "drain", noun = "archive write lock") { _ =>
         pb.drain("events", sharedDir) // the ServerMain moved-days handoff job
         assert(pb.hasLiveRows("events"),
@@ -269,5 +271,84 @@ class HandoffEpochSpec extends SparkSpec {
       assert(total(broker.aql(wideQuery)) == before + 5,
         "and still exactly once after the new owner's sync lands it locally")
     } finally Seq(pa, pb, pc).foreach(_.stop())
+  }
+
+  /** A two-member slice tier over a fresh copy of the events archive:
+    * `body` gets the shared dir, b's last owned day, b's local dir, the
+    * topology dir and a broker over both members. `wire` adds to each
+    * member's slice serving after `events`.
+    */
+  private def twoMemberTier(tag: String, wire: GraftServer => Unit = _ => ())(
+      body: (String, String, String, String, Broker) => Unit): Unit = {
+    Tables.eventsArchived(spark, sfDir)
+    val sharedDir = tmp(s"$tag-shared")
+    SliceBootstrap.copySlice(spark, Tables.eventsArchivePath(sfDir), sharedDir)
+    val dirs = Map("a" -> tmp(s"$tag-a"), "b" -> tmp(s"$tag-b"))
+    val topoDir = tmp(s"$tag-topo")
+    SliceRebalance.rebalance(spark, sharedDir, dirs, topoDir)
+    val members = dirs.keys.toSeq.sorted.map { slice =>
+      val srv = new GraftServer(
+        SliceRebalance.servingCatalog(Catalog.testdata(sfDir), dirs(slice), topoDir,
+          slice, sharedArchiveDir = sharedDir), spark)
+      srv.sliceServe("events", sharedDir,
+        () => SliceSync.sync(spark, sharedDir, dirs(slice), topoDir, slice))
+      wire(srv)
+      srv.start()
+      srv
+    }
+    try body(sharedDir, SliceRebalance.read(topoDir).get.owners("b").last, dirs("b"),
+      topoDir, new Broker(members.map(m => s"http://localhost:${m.boundPort}")))
+    finally members.foreach(_.stop())
+  }
+
+  test("a second slice-served table's archive epoch never tears an events wave") {
+    // epochs are per archive: the lineitem archive sits at another marker
+    // seq, and an events query that never read it must not read as torn
+    val conf = spark.sparkContext.hadoopConfiguration
+    val otherDir = tmp("he-other")
+    (1 to 3).foreach(_ => DrainMarker.bump(otherDir, conf, Nil))
+    twoMemberTier("he-two", _.sliceServe("lineitem", otherDir)) { (sharedDir, _, _, _, broker) =>
+      assert(DrainMarker.read(sharedDir, conf).seq != DrainMarker.read(otherDir, conf).seq)
+      val expected = Tables.eventsArchived(spark, sfDir).count().toDouble
+      assert(total(broker.aql(wideQuery)) == expected)
+    }
+  }
+
+  test("a writer that crashed inside its swap is rolled back by the next sync once its lock is stale") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    twoMemberTier("he-crash") { (sharedDir, bDay, bLocal, topoDir, broker) =>
+      val before = total(broker.aql(wideQuery))
+      // the crashed Backfill: its archive lock left behind, its swap
+      // announced, b's day renamed to trash and never replaced
+      val lock = java.nio.file.Paths.get(sharedDir, s"${PartitionSwap.LockName}.g1")
+      java.nio.file.Files.writeString(lock, "crashed-writer")
+      DrainMarker.beginRewrite(sharedDir, conf, Seq(bDay))
+      val day = s"${graft.ingest.Archiver.DayCol}=$bDay"
+      val trash = java.nio.file.Paths.get(sharedDir, PartitionSwap.Trash, day)
+      java.nio.file.Files.createDirectories(trash.getParent)
+      java.nio.file.Files.move(java.nio.file.Paths.get(sharedDir, day), trash)
+      val ex = intercept[IllegalStateException](broker.aql(wideQuery))
+      assert(ex.getMessage.contains("archive epoch"),
+        s"expected the torn-epoch scatter failure, got: ${ex.getMessage}")
+
+      // a FRESH lock is a live writer inside its swap: the sync must not
+      // touch it — the writer's own bump ends the window
+      SliceSync.sync(spark, sharedDir, bLocal, topoDir, "b")
+      assert(DrainMarker.read(sharedDir, conf).inflight,
+        "a sync must leave a live writer's swap alone")
+      assert(java.nio.file.Files.exists(trash))
+
+      // the same lock untouched past staleMs belongs to a crashed writer:
+      // one sync rolls the swap back and clears the flag
+      java.nio.file.Files.setLastModifiedTime(lock, java.nio.file.attribute.FileTime
+        .fromMillis(System.currentTimeMillis() - PartitionSwap.StaleMs - 60000L))
+      SliceSync.sync(spark, sharedDir, bLocal, topoDir, "b")
+      assert(!DrainMarker.read(sharedDir, conf).inflight,
+        "a stale writer's inflight marker must clear at the next sync")
+      assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sharedDir, day)),
+        "the trashed day must be renamed back")
+      assert(total(broker.aql(wideQuery)) == before,
+        "after the rollback the wave must settle to the exact count")
+    }
   }
 }

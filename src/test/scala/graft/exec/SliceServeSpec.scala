@@ -203,7 +203,8 @@ class SliceServeSpec extends SparkSpec {
       val io = GenerationLock.hadoop(
         new org.apache.hadoop.fs.Path(sharedDir),
         spark.sparkContext.hadoopConfiguration)
-      GenerationLock.withLock(io, ".graft-archive.lock", staleMs = 120000L,
+      GenerationLock.withLock(io, graft.ingest.PartitionSwap.LockName,
+        graft.ingest.PartitionSwap.StaleMs,
         role = "drain", noun = "archive write lock") { _ =>
         pa.drain("events", sharedDir)
         assert(pa.hasLiveRows("events"),
@@ -257,7 +258,7 @@ class SliceServeSpec extends SparkSpec {
           org.apache.spark.sql.functions.lit(1704067200L)))
         .count()
       assert(dropped > 0, "fixture has no rows in the purged day — test vacuous")
-      val purged = graft.ingest.Archiver.purge(sharedDir, cutoff)
+      val purged = graft.ingest.Archiver.purge(spark, sharedDir, cutoff)
       assert(purged == Seq(days.head), purged.toString)
       assert(SliceBootstrap.localDays(spark, dirs("a")).contains(days.head) ||
         SliceBootstrap.localDays(spark, dirs("b")).contains(days.head),

@@ -10,7 +10,7 @@ class BackfillSpec extends SparkSpec {
   private def withTempDir(f: String => Unit): Unit = {
     val dir = Files.createTempDirectory("graft_backfill").toString
     try f(dir)
-    finally Archiver.purge(dir, "9999-99-99")
+    finally Archiver.purge(spark, dir, "9999-99-99")
   }
 
   test("late records rewrite only their day partitions, with PK overwrite") {
@@ -126,7 +126,7 @@ class BackfillSpec extends SparkSpec {
   test("a crashed swap loses no data: the trash dir still holds the old partition") {
     // delete-then-move had a window where the day's archived rows existed
     // NOWHERE; the trash protocol never does. Simulate the crash point
-    // between the two renames: old partition in trash, tmp holding the
+    // between the two renames: old partition in trash, staging holding the
     // new one — every archived byte is still on disk in one of the two.
     withTempDir { dir =>
       val ev = Tables.events(spark, sfDir)
@@ -137,19 +137,56 @@ class BackfillSpec extends SparkSpec {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val target = new org.apache.hadoop.fs.Path(dir, "day=2024-01-05")
-      val trash = new org.apache.hadoop.fs.Path(dir, ".backfill-old-2024-01-05")
-      assert(fs.rename(target, trash))
-      // recovery: the operator restores from trash (the documented path)
+      val trash = new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(dir, PartitionSwap.Trash), target.getName)
+      assert(fs.mkdirs(trash.getParent) && fs.rename(target, trash))
+      // the old partition comes back whole from trash (the next archive
+      // writer's automatic rollback does this rename; see the next case)
       assert(fs.rename(trash, target))
       assert(spark.read.parquet(s"$dir/day=2024-01-05").count() == day5count)
-      // and a successful run leaves neither trash nor tmp behind
+      // and a successful run leaves neither trash nor staging behind
       val late = ev.where(date_format(col("ts"), "yyyy-MM-dd") === "2024-01-05")
         .limit(3).withColumn("value", lit(-1.0))
       Backfill(spark, dir, late, "ts", Seq("event_id"), Seq("event_type"))
       val residue = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
         .map(_.getPath.getName)
-        .filter(n => n.startsWith(".backfill"))
+        .filter(n => Seq(PartitionSwap.Staging, PartitionSwap.Trash).exists(n.startsWith))
       assert(residue.isEmpty, s"swap residue left behind: ${residue.mkString(",")}")
+    }
+  }
+
+  test("a backfill retried after a crash between the two renames keeps every archived row") {
+    // the crashed writer left its day in trash, a half-written staged
+    // copy and an inflight marker; its journal was never truncated, so
+    // the drain retries the same corrections. The retry's lock takes the
+    // swap back first — merging against the missing day instead would
+    // rewrite it as the late rows alone
+    withTempDir { dir =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val ev = Tables.events(spark, sfDir)
+        .select("event_id", "ts", "user_id", "event_type", "value")
+      Archiver.archive(ev, "ts", Seq("event_type"), dir)
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(conf)
+      val day5count = spark.read.parquet(s"$dir/day=2024-01-05").count()
+      DrainMarker.beginRewrite(dir, conf, Seq("2024-01-05"))
+      val target = new org.apache.hadoop.fs.Path(root, "day=2024-01-05")
+      val trash = new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(root, PartitionSwap.Trash), target.getName)
+      assert(fs.mkdirs(trash.getParent) && fs.rename(target, trash))
+      val staged = Files.createDirectories(Paths.get(dir, PartitionSwap.Staging, target.getName))
+      Files.writeString(staged.resolve("part-junk.parquet"), "junk")
+
+      val late = ev.where(date_format(col("ts"), "yyyy-MM-dd") === "2024-01-05")
+        .limit(3).withColumn("value", lit(-1.0))
+      assert(Backfill(spark, dir, late, "ts", Seq("event_id"), Seq("event_type")) ==
+        Seq("2024-01-05"))
+      val got = spark.read.parquet(s"$dir/day=2024-01-05")
+      assert(got.count() == day5count,
+        s"the retried day must keep all $day5count archived rows, got ${got.count()}")
+      assert(got.where(col("value") === -1.0).count() == 3)
+      assert(!DrainMarker.read(dir, conf).inflight)
+      assert(spark.read.parquet(dir).count() == ev.count())
     }
   }
 

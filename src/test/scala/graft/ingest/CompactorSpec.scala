@@ -55,10 +55,11 @@ class CompactorSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(rows == rows.sorted, s"file $f lost its sort clustering")
     }
-    // no hidden temp/trash leftovers
+    // no hidden staging/trash leftovers
     val leftovers = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    try assert(!leftovers.iterator().asScala.exists(
-      _.getFileName.toString.startsWith(".compact")), "temp dirs leaked")
+    try assert(!leftovers.iterator().asScala.exists(f =>
+      Seq(PartitionSwap.Staging, PartitionSwap.Trash)
+        .exists(f.getFileName.toString.startsWith)), "temp dirs leaked")
     finally leftovers.close()
     // idempotent: a second run finds nothing over budget
     assert(Compactor.compact(spark, dir,
@@ -73,12 +74,34 @@ class CompactorSpec extends SparkSpec {
       .repartition(9)
       .write.partitionBy(Archiver.DayCol).mode("append").parquet(dir)
     // simulate a crash: stale half-written temp dir present
-    val stale = java.nio.file.Paths.get(dir, s".compact-tmp-${Archiver.DayCol}=2024-03-05")
+    val stale = java.nio.file.Paths.get(dir, PartitionSwap.Staging, s"${Archiver.DayCol}=2024-03-05")
     java.nio.file.Files.createDirectories(stale)
     java.nio.file.Files.writeString(stale.resolve("part-junk.parquet"), "junk")
     val before = spark.read.parquet(dir).count()
     val reports = Compactor.compact(spark, dir, Seq("event_id"), maxFiles = 4)
     assert(reports.map(_.day) == Seq("2024-03-05"))
     assert(spark.read.parquet(dir).count() == before)
+  }
+
+  test("a compaction after a crash between the two renames gives the full row count back") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("compact3").toString
+    (1 to 200).map(i => (if (i % 2 == 0) "2024-03-05" else "2024-03-06", i.toLong, s"t${i % 3}", i))
+      .toDF(Archiver.DayCol, "event_id", "event_type", "value")
+      .repartition(9)
+      .write.partitionBy(Archiver.DayCol).mode("append").parquet(dir)
+    assert(spark.read.parquet(dir).count() == 200)
+    // the crashed run: day 2024-03-05 renamed to trash, its compacted
+    // replacement still staged (half written)
+    val day = s"${Archiver.DayCol}=2024-03-05"
+    val trash = java.nio.file.Paths.get(dir, PartitionSwap.Trash, day)
+    java.nio.file.Files.createDirectories(trash.getParent)
+    java.nio.file.Files.move(java.nio.file.Paths.get(dir, day), trash)
+    val staged = java.nio.file.Paths.get(dir, PartitionSwap.Staging, day)
+    java.nio.file.Files.createDirectories(staged)
+    java.nio.file.Files.writeString(staged.resolve("part-junk.parquet"), "junk")
+    Compactor.compact(spark, dir, Seq("event_id"), maxFiles = 4)
+    assert(spark.read.parquet(dir).count() == 200,
+      "the crashed swap must roll back before the compaction lists the archive")
   }
 }

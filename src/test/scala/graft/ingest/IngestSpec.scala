@@ -41,7 +41,7 @@ class ArchiverSpec extends SparkSpec {
   private def withTempDir(f: String => Unit): Unit = {
     val dir = Files.createTempDirectory("graft_archive").toString
     try f(dir)
-    finally Archiver.purge(dir, "9999-99-99") // drop all partitions
+    finally Archiver.purge(spark, dir, "9999-99-99") // drop all partitions
   }
 
   test("archive writes one partition per UTC day, sorted by sort columns") {
@@ -103,7 +103,7 @@ class ArchiverSpec extends SparkSpec {
     withTempDir { dir =>
       val ev = Tables.events(spark, sfDir)
       Archiver.archive(ev, "ts", Seq("event_type"), dir)
-      val deleted = Archiver.purge(dir, "2024-01-25")
+      val deleted = Archiver.purge(spark, dir, "2024-01-25")
       assert(deleted.sorted == (1 to 24).map(d => f"2024-01-$d%02d"))
       val remaining = spark.read.parquet(dir)
       assert(remaining.select(min(col("ts"))).head().getTimestamp(0)

@@ -67,7 +67,7 @@ class StreamArchiverSpec extends SparkSpec {
         .withColumn("event_id", col("event_id") + 10), route, now, batchId = 8L)
       assert(StreamArchiver.readLive(spark, liveDir).count() == 3)
     } finally {
-      Archiver.purge(archiveDir, "9999-99-99")
+      Archiver.purge(spark, archiveDir, "9999-99-99")
       val walk = Files.walk(root)
       try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .forEach(p => if (Files.exists(p)) Files.delete(p))
