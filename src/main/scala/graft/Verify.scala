@@ -9,6 +9,7 @@ object Verify {
     // optional 3rd arg: regex filter for single-query iteration (the
     // driver passes two args and dumps everything)
     val only = args.lift(2).map(_.r)
+    def wanted(name: String) = only.forall(_.findFirstIn(name).isDefined)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -24,7 +25,7 @@ object Verify {
     println(s"[verify] entry rows=$entryRows")
     require(entryRows > 0, "SparkEntry.entry returned no rows")
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
+      .filter { case (name, _) => wanted(name) }
       .foreach { case (name, fn) =>
       spark.catalog.clearCache() // release operator-persisted intermediates
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -45,7 +46,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // a filtered run carries only its own oracle entries, so check.py
+    // reports every one without output as a [MISS]
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => wanted(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

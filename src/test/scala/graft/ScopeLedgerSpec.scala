@@ -1,0 +1,51 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import java.io.File
+import java.nio.file.{Files, Paths}
+
+/** SCOPE.md, the scope ledger, stays in step with the code: the gates it
+  * names above "Retired" are exactly the registered gates, every unit file
+  * under the five ledger directories has exactly one ledger row, and a
+  * retired row names a file that is gone. Adding, removing or retiring a
+  * gate or a unit without a ledger edit fails here.
+  */
+class ScopeLedgerSpec extends AnyFunSuite {
+
+  private val ledger = Files.readString(Paths.get("SCOPE.md"))
+  private val (live, retired) = ledger.indexOf("\n## Retired") match {
+    case -1 => (ledger, "")
+    case i => ledger.splitAt(i)
+  }
+  private val unitDirs = Seq("operators", "streaming", "sources", "sinks", "functions")
+  private val unitRow =
+    """(?m)^\| `((?:operators|streaming|sources|sinks|functions|queries)/\w+\.scala)` \|""".r
+  private val main = "src/main/scala/graft"
+
+  test("the ledger names exactly the registered gates") {
+    val named = """`(q_[a-z0-9_]+)`""".r.findAllMatchIn(live).map(_.group(1)).toSet
+    val registered = SparkEntry.all.map(_.name).toSet
+    assert((registered -- named).isEmpty,
+      s"registered gates missing from SCOPE.md: ${(registered -- named).toSeq.sorted}")
+    assert((named -- registered).isEmpty,
+      s"SCOPE.md names unregistered gates: ${(named -- registered).toSeq.sorted}")
+  }
+
+  test("every unit file has exactly one ledger row") {
+    val rows = unitRow.findAllMatchIn(live).map(_.group(1))
+      .filterNot(_.startsWith("queries/")).toSeq
+    val files = unitDirs.flatMap { d =>
+      Option(new File(s"$main/$d").list()).toSeq.flatten
+        .filter(_.endsWith(".scala")).map(f => s"$d/$f")
+    }
+    assert(rows.diff(rows.distinct).isEmpty, s"duplicate rows: ${rows.diff(rows.distinct)}")
+    assert(files.toSet -- rows == Set.empty, s"files with no row: ${(files.toSet -- rows).toSeq.sorted}")
+    assert(rows.toSet -- files == Set.empty, s"rows with no file: ${(rows.toSet -- files).toSeq.sorted}")
+  }
+
+  test("a retired unit's file is gone") {
+    val left = unitRow.findAllMatchIn(retired).map(_.group(1))
+      .filter(u => new File(s"$main/$u").exists).toSeq
+    assert(left.isEmpty, s"retired units still in the tree: $left")
+  }
+}

@@ -5,7 +5,8 @@ Usage: python3 tools/check.py [sfdir] [outdir]
   1. expects `sbt "runMain graft.Verify <sfdir> <outdir>"` to have run
   2. loads outdir/oracle_sql.json, runs each SQL in DuckDB over the
      sf tables, compares against outdir/<name>/ parquet (sorted rows,
-     columns sorted by name).
+     columns sorted by name). An oracle entry with no output directory
+     (a gate that threw before writing) is a [MISS] and counts as an error.
 
 NOT part of the library — developer tooling only.
 """
@@ -43,8 +44,8 @@ def normdf(df):
     return cols, sorted(rows)
 
 n_ok = n_bad = n_err = 0
-results = sorted(glob.glob(f"{outdir}/*/"))
-names = [p.rstrip("/").split("/")[-1] for p in results]
+written = {p.rstrip("/").split("/")[-1] for p in glob.glob(f"{outdir}/*/")}
+names = sorted(written | set(oracles))
 for name in names:
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
