@@ -1,14 +1,14 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Dedup, Multimodal, Pq, Similarity, TextOps, TextRank}
+import graft.operators.{Dedup, Pq, Similarity, TextOps, TextRank}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Gate queries for the training-data-pipeline operator suite: dedup
   * (exact, MinHash-LSH, SimHash, word-set Jaccard, embedding cosine),
   * similarity search (brute-force + LSH ANN), text analysis (lang-id,
-  * quality, token counts, fingerprints) and multimodal plumbing.
+  * quality, token counts, fingerprints).
   *
   * Hash-based operators (minhash/simhash/LSH/fingerprints) are
   * engine-specific, so their gates emit exact pinnable values (planted
@@ -1307,131 +1307,6 @@ object PipelineQueries {
         .orderBy("source")
     },
 
-    // --- multimodal plumbing -------------------------------------------------
-    QueryDef("q_multimodal_meta",
-      """SELECT ascii(substring(text, 1, 1)) AS magic,
-        |  CAST(COUNT(*) AS BIGINT) AS cnt,
-        |  CAST(SUM(octet_length(encode(text))) AS BIGINT) AS total_bytes
-        |FROM documents GROUP BY 1 ORDER BY magic NULLS FIRST""".stripMargin) { (s, d) =>
-      Multimodal.withPayload(Tables.documents(s, d), "doc_id", "text")
-        .groupBy(col("magic"))
-        .agg(count(lit(1)).as("cnt"), sum("byte_len").cast("long").as("total_bytes"))
-        .orderBy("magic")
-    },
-
-    // resize: REAL codec round trip — synth PNGs (dims/seed SQL-derived
-    // from doc_id), nearest-neighbor resample to 24×24, re-encode as PNG,
-    // then DECODE THE RESIZED BYTES and emit their actual dimensions and
-    // top-left pixel. out(0,0) samples src(0,0) = seed, so the oracle pins
-    // real decoded pixel values through resize + re-encode, not stub
-    // constants.
-    QueryDef("q_multimodal_resize",
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(24 AS INT) AS width, CAST(24 AS INT) AS height,
-        |  CAST(doc_id % 251 AS INT) AS top_left
-        |FROM documents WHERE doc_id < 100
-        |ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val payloads = Multimodal.withImagePayload(
-        Tables.documents(s, d).where(col("doc_id") < 100), "doc_id")
-      val resized = Multimodal.resizeImages(s, payloads, "doc_id", 24, 24)
-      Multimodal.decodeImages(s, resized.toDF(), "doc_id")
-        .select(col("doc_id"), col("width"), col("height"), col("top_left"))
-        .orderBy("doc_id")
-    },
-
-    // frame sampling: n deterministic byte-slice "frames" per payload; the
-    // slice boundaries are SQL-expressible, so the fan-out plumbing gets a
-    // full cross-engine oracle (per-doc frame count + total frame bytes)
-    QueryDef("q_multimodal_frames",
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(4 AS BIGINT) AS n_frames,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS frame_bytes_total
-        |FROM documents WHERE doc_id < 30 ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val payloads = Multimodal.withPayload(
-        Tables.documents(s, d).where(col("doc_id") < 30), "doc_id", "text")
-      Multimodal.sampleFrames(s, payloads, "doc_id", 4)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_frames"),
-          sum(length(col("frame_bytes"))).cast("long").as("frame_bytes_total"))
-        .orderBy("doc_id")
-    },
-
-    // REAL multi-frame extraction: each row carries an actual animated GIF
-    // (frame count + geometry + pixel function SQL-derived from doc_id);
-    // the engine decodes 4 evenly spaced frames (index k·F/4) through
-    // javax.imageio and emits codec-reported geometry + top-left pixel —
-    // the oracle replays the sampling arithmetic and pins the decoded
-    // values cross-engine.
-    QueryDef("q_multimodal_gif_frames",
-      """SELECT CAST(d.doc_id AS BIGINT) AS doc_id, CAST(k.k AS INT) AS frame_idx,
-        |  CAST(16 + d.doc_id % 16 AS INT) AS width,
-        |  CAST(16 + (d.doc_id * 3) % 16 AS INT) AS height,
-        |  CAST((d.doc_id % 251 + ((k.k * (4 + d.doc_id % 5)) // 4) * 17) % 256 AS INT)
-        |    AS top_left
-        |FROM documents d CROSS JOIN (VALUES (0),(1),(2),(3)) k(k)
-        |WHERE d.doc_id < 60
-        |ORDER BY doc_id NULLS FIRST, frame_idx NULLS FIRST""".stripMargin) { (s, d) =>
-      val payloads = Multimodal.withGifPayload(
-        Tables.documents(s, d).where(col("doc_id") < 60), "doc_id")
-      Multimodal.decodeFrames(s, payloads, "doc_id", 4)
-        .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
-          col("top_left"))
-        .orderBy("doc_id", "frame_idx")
-    },
-
-    // REAL video-frame extraction: each row carries an actual MJPEG clip
-    // (concatenated baseline JPEGs; frame count / geometry / flat-gray
-    // pixel value SQL-derived from doc_id). The engine SOI-splits the
-    // stream, decodes 2 evenly spaced frames (index k·F/2) through
-    // javax.imageio and emits codec-reported geometry + top-left pixel —
-    // exact cross-engine because a flat frame at quality 1.0 is DC-only
-    // over an all-ones quantization table (MultimodalSpec pins all 256
-    // gray values round-trip).
-    QueryDef("q_multimodal_video_frames",
-      """SELECT CAST(d.doc_id AS BIGINT) AS doc_id, CAST(k.k AS INT) AS frame_idx,
-        |  CAST(16 + d.doc_id % 16 AS INT) AS width,
-        |  CAST(16 + (d.doc_id * 3) % 16 AS INT) AS height,
-        |  CAST((d.doc_id % 251 + ((k.k * (4 + d.doc_id % 5)) // 2) * 17) % 256 AS INT)
-        |    AS top_left
-        |FROM documents d CROSS JOIN (VALUES (0),(1)) k(k)
-        |WHERE d.doc_id < 60
-        |ORDER BY doc_id NULLS FIRST, frame_idx NULLS FIRST""".stripMargin) { (s, d) =>
-      val payloads = Multimodal.withMjpegPayload(
-        Tables.documents(s, d).where(col("doc_id") < 60), "doc_id")
-      Multimodal.decodeVideoFrames(s, payloads, "doc_id", 2)
-        .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
-          col("top_left"))
-        .orderBy("doc_id", "frame_idx")
-    },
-
-    // REAL audio decode: each row carries an actual WAV container
-    // (synthWav's pure-integer sawtooth, frames/freq SQL-derived from
-    // doc_id); the engine re-parses header + PCM frames through
-    // javax.sound.sampled and emits codec-reported format fields plus
-    // peak / sum-of-squares — the oracle replays the integer sample
-    // function exactly, so real decoded amplitudes pin cross-engine.
-    QueryDef("q_multimodal_audio",
-      """WITH p AS (
-        |  SELECT doc_id, 200 + (doc_id % 100) * 4 AS frames,
-        |         100 + doc_id % 400 AS freq
-        |  FROM documents WHERE doc_id < 40),
-        |s AS (SELECT doc_id, frames, freq, unnest(range(0, frames)) AS n FROM p),
-        |v AS (SELECT doc_id, frames, ((n * freq) % 8000) * 8 - 32000 AS val FROM s)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(8000 AS INT) AS sample_rate,
-        |  CAST(1 AS INT) AS channels, CAST(16 AS INT) AS bits,
-        |  CAST(frames AS BIGINT) AS n_frames,
-        |  CAST(MAX(ABS(val)) AS INT) AS peak,
-        |  CAST(SUM(val * val) AS BIGINT) AS sum_sq
-        |FROM v GROUP BY doc_id, frames
-        |ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val payloads = Multimodal.withWavPayload(
-        Tables.documents(s, d).where(col("doc_id") < 40), "doc_id")
-      Multimodal.decodeAudio(s, payloads, "doc_id")
-        .select(col("doc_id"), col("sample_rate"), col("channels"), col("bits"),
-          col("n_frames"), col("peak"), col("sum_sq"))
-        .orderBy("doc_id")
-    },
-
     // --- end-to-end curation pipeline: exact dedup → minhash near-dup →
     // CC keep-min → decontam → token-budget mix → sequence packing, as ONE
     // job. The oracle recomputes EVERY stage exactly — including the
@@ -1766,146 +1641,6 @@ object PipelineQueries {
           .withColumn("text", concat(col("text"), lit(" zz yy xx"))))
       Dedup.minhashPrecisionAudit(input, "doc_id", "text", 0.35)
         .orderBy("bucket")
-    },
-
-    // --- audio fingerprint: REAL WAV decode → 65-window energy profile
-    // → 64 difference bits as four 16-bit bands (dHash's acoustic
-    // sibling). The sawtooth sample law is pure-integer, so the oracle
-    // replays every window energy and every bit through the actual
-    // codec round trip.
-    QueryDef("q_multimodal_audio_print",
-      """WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-        |p AS (SELECT doc_id, 200 + (doc_id % 100) * 4 AS frames,
-        |        100 + doc_id % 400 AS freq FROM ids),
-        |s AS (SELECT doc_id, frames, n.n,
-        |        abs(((n.n * freq) % 8000) * 8 - 32000) AS a
-        |      FROM p, UNNEST(range(0, frames)) n(n)),
-        |e AS (SELECT doc_id, CAST((n * 65) // frames AS INT) AS w, SUM(a) AS en
-        |      FROM s GROUP BY 1, 2),
-        |bits AS (SELECT a.doc_id, a.w AS w,
-        |           CASE WHEN b.en > a.en THEN 1 ELSE 0 END AS bit
-        |         FROM e a JOIN e b ON b.doc_id = a.doc_id AND b.w = a.w + 1
-        |         WHERE a.w < 64),
-        |bands AS (SELECT doc_id, w // 16 AS band,
-        |            SUM(bit * (1 << (w % 16))) AS v
-        |          FROM bits GROUP BY 1, 2)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(MAX(CASE WHEN band = 0 THEN v END) AS INT) AS b0,
-        |  CAST(MAX(CASE WHEN band = 1 THEN v END) AS INT) AS b1,
-        |  CAST(MAX(CASE WHEN band = 2 THEN v END) AS INT) AS b2,
-        |  CAST(MAX(CASE WHEN band = 3 THEN v END) AS INT) AS b3
-        |FROM bands GROUP BY doc_id ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Multimodal.audioFingerprint(s,
-          Multimodal.withWavPayload(
-            Tables.documents(s, d).where(col("doc_id") < 200), "doc_id"),
-          "doc_id")
-        .toDF()
-        .orderBy("doc_id")
-    },
-
-    // --- perceptual image hash (dHash): REAL codec decode → 9×8
-    // nearest-neighbor luminance grid → 64 difference bits as four
-    // 16-bit bands. The synthetic pixel law is integer-SQL-expressible,
-    // so the oracle replays every band bit-for-bit through the actual
-    // PNG round trip.
-    QueryDef("q_multimodal_dhash",
-      """WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-        |g AS (SELECT doc_id, r.r, c.c,
-        |        16 + doc_id % 32 AS w, 16 + (doc_id*7) % 32 AS h,
-        |        doc_id % 251 AS seed,
-        |        33 + doc_id % 7 AS xs, 17 + doc_id % 5 AS ys
-        |      FROM ids, UNNEST(range(0, 8)) r(r), UNNEST(range(0, 8)) c(c)),
-        |bits AS (SELECT doc_id, r, c,
-        |  CASE WHEN ((((c+1)*w)//9*xs + (r*h)//8*ys + seed) % 256) >
-        |            (((c*w)//9*xs + (r*h)//8*ys + seed) % 256) THEN 1 ELSE 0 END AS bit
-        |  FROM g),
-        |bands AS (SELECT doc_id, (r*8+c)//16 AS band,
-        |            SUM(bit * (1 << ((r*8+c) % 16))) AS v
-        |          FROM bits GROUP BY 1, 2)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(MAX(CASE WHEN band = 0 THEN v END) AS INT) AS b0,
-        |  CAST(MAX(CASE WHEN band = 1 THEN v END) AS INT) AS b1,
-        |  CAST(MAX(CASE WHEN band = 2 THEN v END) AS INT) AS b2,
-        |  CAST(MAX(CASE WHEN band = 3 THEN v END) AS INT) AS b3
-        |FROM bands GROUP BY doc_id ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val gen = udf { (id: Long) =>
-        Multimodal.synthTexturedPng(16 + (id % 32).toInt, 16 + (id * 7 % 32).toInt,
-          (id % 251).toInt, 33 + (id % 7).toInt, 17 + (id % 5).toInt)
-      }
-      Multimodal.dHash(s,
-          Tables.documents(s, d).where(col("doc_id") < 200)
-            .select(col("doc_id")).withColumn("payload", gen(col("doc_id"))),
-          "doc_id")
-        .toDF()
-        .orderBy("doc_id")
-    },
-
-    // --- image near-dup via banded dHash: planted copies at id+100000
-    // carry the same dimensions with seed+1 (the gradient wraps shift by
-    // one sample → a few bits flip), candidates share a 16-bit band,
-    // exact hamming verified per band. Everything — pixel law, bands,
-    // banding candidates, hamming — replays in integer SQL.
-    QueryDef("q_multimodal_image_neardup",
-      """WITH base AS (SELECT doc_id FROM documents WHERE doc_id < 150),
-        |ents AS (SELECT doc_id AS eid, doc_id AS bid, 0 AS sh FROM base
-        |         UNION ALL
-        |         SELECT doc_id + 100000, doc_id, 1 FROM base),
-        |g AS (SELECT eid, r.r, c.c,
-        |        16 + bid % 32 AS w, 16 + (bid*7) % 32 AS h,
-        |        bid % 251 + sh AS seed,
-        |        33 + bid % 7 AS xs, 17 + bid % 5 AS ys
-        |      FROM ents, UNNEST(range(0, 8)) r(r), UNNEST(range(0, 8)) c(c)),
-        |bits AS (SELECT eid, r, c,
-        |  CASE WHEN ((((c+1)*w)//9*xs + (r*h)//8*ys + seed) % 256) >
-        |            (((c*w)//9*xs + (r*h)//8*ys + seed) % 256) THEN 1 ELSE 0 END AS bit
-        |  FROM g),
-        |bands AS (SELECT eid, (r*8+c)//16 AS band,
-        |            CAST(SUM(bit * (1 << ((r*8+c) % 16))) AS INT) AS v
-        |          FROM bits GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT a.eid AS a_id, b.eid AS b_id
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.v = b.v AND a.eid < b.eid),
-        |ham AS (SELECT c.a_id, c.b_id,
-        |          CAST(SUM(bit_count(xor(ba.v, bb.v))) AS INT) AS hamming
-        |        FROM cand c
-        |        JOIN bands ba ON ba.eid = c.a_id
-        |        JOIN bands bb ON bb.eid = c.b_id AND bb.band = ba.band
-        |        GROUP BY 1, 2)
-        |SELECT CAST(a_id AS BIGINT) AS a_id, CAST(b_id AS BIGINT) AS b_id, hamming
-        |FROM ham WHERE hamming <= 16
-        |ORDER BY a_id NULLS FIRST, b_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val base = Tables.documents(s, d).where(col("doc_id") < 150)
-        .select(col("doc_id"))
-      val both = base.unionByName(
-        base.select((col("doc_id") + 100000).as("doc_id")))
-      val gen = udf { (id: Long) =>
-        val b = id % 100000
-        val sh = if (id >= 100000) 1 else 0
-        Multimodal.synthTexturedPng(16 + (b % 32).toInt, 16 + (b * 7 % 32).toInt,
-          (b % 251).toInt + sh, 33 + (b % 7).toInt, 17 + (b % 5).toInt)
-      }
-      Multimodal.nearDupImages(s,
-          both.withColumn("payload", gen(col("doc_id"))), "doc_id",
-          maxHamming = 16)
-        .orderBy("a_id", "b_id")
-    },
-
-    // decode is REAL (javax.imageio PNG): each row carries an actual PNG
-    // whose dims/seed derive SQL-expressibly from doc_id, and the engine
-    // emits what the CODEC decoded — dimensions and the top-left pixel —
-    // so the oracle cross-checks a genuine decode, not stub arithmetic.
-    QueryDef("q_multimodal_decode",
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(16 + doc_id % 32 AS INT) AS width,
-        |  CAST(16 + (doc_id * 7) % 32 AS INT) AS height,
-        |  CAST(doc_id % 251 AS INT) AS top_left
-        |FROM documents WHERE doc_id < 200
-        |ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Multimodal.decodeImages(s,
-          Multimodal.withImagePayload(
-            Tables.documents(s, d).where(col("doc_id") < 200), "doc_id"), "doc_id")
-        .select(col("doc_id"), col("width"), col("height"), col("top_left"))
-        .orderBy("doc_id")
     }
   )
 }

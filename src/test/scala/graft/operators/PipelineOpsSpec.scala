@@ -571,215 +571,3 @@ class TextOpsSpec extends SparkSpec {
     assert(fps(0) != fps(1))
   }
 }
-
-class MultimodalSpec extends SparkSpec {
-
-  test("payload plumbing: byte lengths equal source chars on the ASCII corpus") {
-    val docs = Tables.documents(spark, sfDir).limit(50)
-    val payloads = Multimodal.withPayload(docs, "doc_id", "text")
-    val nChars = docs.select("doc_id", "n_chars").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    payloads.select("doc_id", "byte_len").collect()
-      .foreach(r => assert(r.getInt(1).toLong == nChars(r.getLong(0))))
-  }
-
-  test("synthPng is a real PNG and javax.imageio round-trips it pixel-exactly") {
-    val bytes = Multimodal.synthPng(20, 17, seed = 42)
-    // PNG magic: \x89 P N G
-    assert((bytes(0) & 0xFF) == 0x89 && bytes(1) == 'P' && bytes(2) == 'N')
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    assert(img.getWidth == 20 && img.getHeight == 17)
-    for (y <- 0 until 17; x <- 0 until 20)
-      assert((img.getRGB(x, y) & 0xFF) == ((x + y + 42) & 0xFF), s"($x,$y)")
-  }
-
-  test("decodeImages reports the codec's dimensions and pixels, distributed") {
-    val docs = Tables.documents(spark, sfDir).where(col("doc_id") < 40)
-    val meta = Multimodal
-      .decodeImages(spark, Multimodal.withImagePayload(docs, "doc_id"), "doc_id")
-      .collect()
-    assert(meta.length == 40)
-    meta.foreach { m =>
-      assert(m.width == 16 + (m.doc_id % 32).toInt, m)
-      assert(m.height == 16 + (m.doc_id * 7 % 32).toInt, m)
-      assert(m.top_left == (m.doc_id % 251).toInt, m)
-    }
-  }
-
-  test("decodeImages fails loudly with the row id on a non-image payload") {
-    import spark.implicits._
-    val bad = Seq((7L, "not an image".getBytes("UTF-8"))).toDF("doc_id", "payload")
-    val e = intercept[Exception] {
-      Multimodal.decodeImages(spark, bad, "doc_id").collect()
-    }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("row 7")), messages(e))
-  }
-
-  test("synthGif + decodeFrames: animated GIF round-trips frame-exactly") {
-    import spark.implicits._
-    val gif = Multimodal.synthGif(18, 14, frames = 6, seed = 30)
-    // GIF magic: G I F 8
-    assert(gif(0) == 'G' && gif(1) == 'I' && gif(2) == 'F' && gif(3) == '8')
-    val df = Seq((3L, gif)).toDF("doc_id", "payload")
-    val frames = Multimodal.decodeFrames(spark, df, "doc_id", 3)
-      .collect().sortBy(_.frame_idx)
-    assert(frames.length == 3)
-    frames.foreach { f =>
-      assert(f.width == 18 && f.height == 14)
-      val idx = f.frame_idx * 6 / 3
-      assert(f.top_left == ((30 + idx * 17) & 0xFF), f)
-    }
-  }
-
-  test("flat JPEG at quality 1.0 round-trips every gray value exactly") {
-    // the property the MJPEG oracle rests on: a constant image is DC-only
-    // and the quality-1.0 quantization table is all ones
-    for (v <- 0 until 256) {
-      val jp = Multimodal.synthJpegFlat(20, 12, v)
-      assert((jp(0) & 0xFF) == 0xFF && (jp(1) & 0xFF) == 0xD8, "JPEG SOI")
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(jp))
-      assert((img.getRGB(3, 5) & 0xFF) == v, s"gray $v")
-      assert(((img.getRGB(3, 5) >> 8) & 0xFF) == v, s"gray $v (G channel)")
-    }
-  }
-
-  test("synthMjpeg + decodeVideoFrames: MJPEG stream splits and decodes frame-exactly") {
-    import spark.implicits._
-    val clip = Multimodal.synthMjpeg(20, 12, frames = 5, seed = 40)
-    // splitter finds exactly the 5 planted SOIs — no false positive inside
-    // entropy data or tables
-    assert(Multimodal.mjpegFrameOffsets(clip).length == 5)
-    val df = Seq((9L, clip)).toDF("doc_id", "payload")
-    val all = Multimodal.decodeVideoFrames(spark, df, "doc_id", 5)
-      .collect().sortBy(_.frame_idx)
-    assert(all.length == 5)
-    all.foreach { f =>
-      assert(f.width == 20 && f.height == 12)
-      assert(f.top_left == ((40 + f.frame_idx * 17) & 0xFF), f)
-    }
-    // n < F samples evenly: k·F/n → frames 0 and 2 of 5
-    val two = Multimodal.decodeVideoFrames(spark, df, "doc_id", 2)
-      .collect().sortBy(_.frame_idx)
-    assert(two.map(_.top_left).toSeq ==
-      Seq((40 + 0 * 17) & 0xFF, (40 + 2 * 17) & 0xFF))
-  }
-
-  test("decodeVideoFrames fails loudly with the row id on a non-MJPEG payload") {
-    import spark.implicits._
-    val df = Seq((77L, "definitely not a jpeg".getBytes)).toDF("doc_id", "payload")
-    val e = intercept[org.apache.spark.SparkException] {
-      Multimodal.decodeVideoFrames(spark, df, "doc_id", 2).collect()
-    }
-    assert(e.getMessage.contains("77") ||
-      Option(e.getCause).exists(_.getMessage.contains("77")))
-  }
-
-  test("synthWav + decodeAudio: WAV container round-trips sample-exactly") {
-    import spark.implicits._
-    val wav = Multimodal.synthWav(frames = 250, freq = 120)
-    // RIFF/WAVE magic
-    assert(wav(0) == 'R' && wav(1) == 'I' && wav(2) == 'F' && wav(3) == 'F')
-    assert(wav(8) == 'W' && wav(9) == 'A' && wav(10) == 'V' && wav(11) == 'E')
-    val df = Seq((7L, wav)).toDF("doc_id", "payload")
-    val meta = Multimodal.decodeAudio(spark, df, "doc_id").collect().head
-    // codec-reported format fields, not the synth parameters
-    assert(meta.sample_rate == 8000 && meta.channels == 1 && meta.bits == 16)
-    assert(meta.n_frames == 250L)
-    // replay the pure-integer sawtooth driver-side
-    val samples = (0 until 250).map(n => (n.toLong * 120 % 8000).toInt * 8 - 32000)
-    assert(meta.peak == samples.map(math.abs).max)
-    assert(meta.sum_sq == samples.map(v => v.toLong * v).sum)
-  }
-
-  test("decodeAudio fails loudly with the row id on a non-audio payload") {
-    import spark.implicits._
-    val df = Seq((42L, "not audio".getBytes)).toDF("doc_id", "payload")
-    val e = intercept[org.apache.spark.SparkException] {
-      Multimodal.decodeAudio(spark, df, "doc_id").collect()
-    }
-    assert(e.getMessage.contains("42") ||
-      Option(e.getCause).exists(_.getMessage.contains("42")))
-  }
-
-  test("withWavPayload is total on negative ids (floorMod derivation)") {
-    import spark.implicits._
-    val df = Seq((-3L, "x")).toDF("doc_id", "text")
-    val meta = Multimodal.decodeAudio(spark,
-      Multimodal.withWavPayload(df, "doc_id"), "doc_id").collect().head
-    // floorMod(-3, 100) = 97 → 200 + 97*4 = 588 frames
-    assert(meta.n_frames == 588L, meta.toString)
-  }
-
-  test("resizeImages re-encodes real PNGs at the target size, every pixel " +
-      "the nearest-neighbor sample of the source") {
-    import spark.implicits._
-    val src = Multimodal.synthPng(40, 30, seed = 9)
-    val df = Seq((1L, src)).toDF("doc_id", "payload")
-    val out = Multimodal.resizeImages(spark, df, "doc_id", 24, 24).collect().head
-    assert(out.width == 24 && out.height == 24 && out.orig_len == src.length)
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(out.payload))
-    assert(img.getWidth == 24 && img.getHeight == 24)
-    for (y <- 0 until 24; x <- 0 until 24) {
-      val (sx, sy) = (x * 40 / 24, y * 30 / 24)
-      assert((img.getRGB(x, y) & 0xFF) == ((sx + sy + 9) & 0xFF), s"($x,$y)")
-    }
-  }
-
-  test("dHash: identical images collide, brightness shift preserves, textures differ") {
-    import spark.implicits._
-    val a = Multimodal.synthTexturedPng(32, 24, 50, 35, 19)
-    val sameA = Multimodal.synthTexturedPng(32, 24, 50, 35, 19)
-    val brighter = Multimodal.synthTexturedPng(32, 24, 52, 35, 19)
-    val other = Multimodal.synthTexturedPng(32, 24, 50, 39, 21)
-    val df = Seq((1L, a), (2L, sameA), (3L, brighter), (4L, other))
-      .toDF("doc_id", "payload")
-    val h = Multimodal.dHash(spark, df, "doc_id").collect()
-      .map(x => x.doc_id -> (x.b0, x.b1, x.b2, x.b3)).toMap
-    assert(h(1L) == h(2L), "identical payloads must hash identically")
-    def ham(x: (Int, Int, Int, Int), y: (Int, Int, Int, Int)) =
-      Integer.bitCount(x._1 ^ y._1) + Integer.bitCount(x._2 ^ y._2) +
-        Integer.bitCount(x._3 ^ y._3) + Integer.bitCount(x._4 ^ y._4)
-    assert(ham(h(1L), h(3L)) <= 6,
-      s"small brightness shift moved ${ham(h(1L), h(3L))} bits")
-    assert(ham(h(1L), h(4L)) > 6,
-      s"different texture too close: ${ham(h(1L), h(4L))} bits")
-  }
-
-  test("audioFingerprint: deterministic, frequency-sensitive, guarded") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, Multimodal.synthWav(400, 150)),
-      (2L, Multimodal.synthWav(400, 150)),   // identical
-      (3L, Multimodal.synthWav(400, 370)))   // different tone
-      .toDF("doc_id", "payload")
-    val h = Multimodal.audioFingerprint(spark, df, "doc_id").collect()
-      .map(x => x.doc_id -> (x.b0, x.b1, x.b2, x.b3)).toMap
-    assert(h(1L) == h(2L), "identical audio must fingerprint identically")
-    assert(h(1L) != h(3L), "different tones must differ")
-    val err = intercept[org.apache.spark.SparkException] {
-      Multimodal.audioFingerprint(spark,
-        Seq((9L, Multimodal.synthWav(40, 100))).toDF("doc_id", "payload"),
-        "doc_id").collect()
-    }
-    assert(err.getMessage.contains("65") || err.getCause != null)
-  }
-
-  test("nearDupImages: planted twins found, distant textures excluded") {
-    import spark.implicits._
-    val rows = (0 until 12).flatMap { i =>
-      val (w, hgt, seed) = (20 + i, 16 + i, 40 + i * 17)
-      Seq((i.toLong, Multimodal.synthTexturedPng(w, hgt, seed, 33 + i % 7, 17 + i % 5)),
-        (i + 100L, Multimodal.synthTexturedPng(w, hgt, seed + 1, 33 + i % 7, 17 + i % 5)))
-    }
-    val df = rows.toDF("doc_id", "payload")
-    val pairs = Multimodal.nearDupImages(spark, df, "doc_id", maxHamming = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    (0 until 12).foreach { i =>
-      assert(pairs.contains((i.toLong, i + 100L)),
-        s"planted twin $i missing from $pairs")
-    }
-  }
-}
