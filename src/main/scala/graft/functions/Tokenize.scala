@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass tokenizers — the hot inner loop of every text operator
-  * (dedup shingles, classifier features, LM grams, quality stats, BM25,
-  * subword counting all start from `TextOps.tokens`). Semantically
+  * (dedup shingles, classifier features, LM grams, quality stats and BM25
+  * all start from `TextOps.tokens`). Semantically
   * identical to the regex formulations (`TokenizeSpec` pins equality
   * property-style, values AND schema):
   *

@@ -777,198 +777,6 @@ object PipelineQueries {
         .orderBy("lang")
     },
 
-    // --- text analysis: LEARNED subword segmentation. Vocabulary = top-64
-    // word prefixes (len 2-6) by occurrence, ties lexicographic; encoding
-    // is greedy longest-prefix max-match with a 1-char fallback. The
-    // oracle learns the identical vocabulary and replays the greedy loop
-    // as a recursive CTE with a correlated longest-match subquery —
-    // segmentation is pinned exactly, not statistically.
-    QueryDef("q_text_subword",
-      """WITH RECURSIVE toks AS (
-        |  SELECT lang, unnest(string_split_regex(trim(text), '\s+')) AS w
-        |  FROM documents),
-        |pref AS (
-        |  SELECT substring(t.w, 1, l) AS p
-        |  FROM toks t, UNNEST(range(2, least(6, len(t.w)) + 1)) AS u(l)),
-        |vocab AS (SELECT p FROM (SELECT p, COUNT(*) AS c FROM pref GROUP BY 1)
-        |          ORDER BY c DESC, p LIMIT 64),
-        |words AS (SELECT DISTINCT w FROM toks),
-        |r(w, pos, n) AS (
-        |  SELECT w, 1, 0 FROM words
-        |  UNION ALL
-        |  SELECT r.w, r.pos + COALESCE((SELECT MAX(len(v.p)) FROM vocab v
-        |           WHERE v.p = substring(r.w, r.pos, len(v.p))), 1),
-        |         r.n + 1
-        |  FROM r WHERE r.pos <= len(r.w)),
-        |pieces AS (SELECT w, n FROM r WHERE pos > len(w))
-        |SELECT t.lang, CAST(SUM(p.n) AS BIGINT) AS subword_tokens
-        |FROM toks t JOIN pieces p ON p.w = t.w
-        |GROUP BY 1 ORDER BY lang NULLS FIRST""".stripMargin) { (s, d) =>
-      graft.operators.Subword.subwordTokens(
-          Tables.documents(s, d), "text", "lang", vocabSize = 64, maxLen = 6)
-        .orderBy("lang")
-    },
-
-    // --- iterative BPE merge learning (Sennrich 2016) on a PLANTED
-    // dictionary with a forced pair-count ordering — the merge SEQUENCE
-    // is analytically determined (see SubwordSpec's derivation), so the
-    // oracle is the expected table itself; the engine runs the real
-    // distributed word count + merge loop end to end. qz x900, qzx x700,
-    // vv x600, vvv x100 force (q,z) -> (v,v) -> (qz,x) -> (vv,v), then
-    // early stop (no pairs left) despite nMerges = 6.
-    QueryDef("q_text_bpe_merges",
-      """SELECT * FROM (VALUES
-        |  (1, 'q', 'z'), (2, 'v', 'v'), (3, 'qz', 'x'), (4, 'vv', 'v'))
-        |AS t(mrank, l, r) ORDER BY mrank""".stripMargin) { (s, d) =>
-      import s.implicits._
-      val corpus = Seq(("qz", 900), ("qzx", 700), ("vv", 600), ("vvv", 100))
-        .toDF("w", "n")
-        .select(explode(sequence(lit(1), col("n"))).as("__i"), col("w"))
-        .select(col("w").as("text"))
-      graft.operators.Subword.learnBpeMerges(corpus, "text", nMerges = 6)
-        .toDF("mrank", "l", "r").orderBy("mrank")
-    },
-
-    // --- BPE encode under the learned merges: per-group piece totals,
-    // weighted by occurrence (encode runs once per DISTINCT word). All
-    // four planted words end as ONE symbol under the four merges, so the
-    // totals are the occurrence counts per family (A: 900+700,
-    // B: 600+100).
-    QueryDef("q_text_bpe_tokens",
-      """SELECT * FROM (VALUES ('A', CAST(1600 AS BIGINT)),
-        |  ('B', CAST(700 AS BIGINT)))
-        |AS t(src, bpe_tokens) ORDER BY src""".stripMargin) { (s, d) =>
-      import s.implicits._
-      val corpus = Seq(("qz", 900), ("qzx", 700), ("vv", 600), ("vvv", 100))
-        .toDF("w", "n")
-        .select(explode(sequence(lit(1), col("n"))).as("__i"), col("w"))
-        .select(col("w").as("text"))
-        .withColumn("src",
-          when(col("text").startsWith("q"), "A").otherwise("B"))
-      graft.operators.Subword.bpeTokens(corpus, "text", "src", nMerges = 6)
-        .toDF("src", "bpe_tokens").orderBy("src")
-    },
-
-    // --- tokenize → pack bridge (session 4): per-doc token counts under
-    // the LEARNED subword vocabulary feed concat-and-chunk packing — the
-    // text-to-training-sequences composition in one job (the count the
-    // packer must use is the tokenizer's, not whitespace's). Oracle
-    // chains the two verified replays: the recursive-CTE greedy
-    // segmentation per doc, then the exclusive prefix sum at budget 128.
-    QueryDef("q_pipeline_tokenize_pack",
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
-        |  FROM documents),
-        |pref AS (
-        |  SELECT substring(t.w, 1, l) AS p
-        |  FROM toks t, UNNEST(range(2, least(6, len(t.w)) + 1)) AS u(l)),
-        |vocab AS (SELECT p FROM (SELECT p, COUNT(*) AS c FROM pref GROUP BY 1)
-        |          ORDER BY c DESC, p LIMIT 64),
-        |words AS (SELECT DISTINCT w FROM toks),
-        |r(w, pos, n) AS (
-        |  SELECT w, 1, 0 FROM words
-        |  UNION ALL
-        |  SELECT r.w, r.pos + COALESCE((SELECT MAX(len(v.p)) FROM vocab v
-        |           WHERE v.p = substring(r.w, r.pos, len(v.p))), 1),
-        |         r.n + 1
-        |  FROM r WHERE r.pos <= len(r.w)),
-        |pieces AS (SELECT w, n FROM r WHERE pos > len(w)),
-        |st AS (SELECT t.doc_id, CAST(SUM(p.n) AS BIGINT) AS n
-        |       FROM toks t JOIN pieces p ON p.w = t.w GROUP BY 1),
-        |o AS (SELECT doc_id, n,
-        |    CAST(COALESCE(SUM(n) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS start
-        |  FROM st)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, n AS n_tokens,
-        |  start AS start_tok, start // 128 AS first_seq,
-        |  CASE WHEN n > 0 THEN (start + n - 1) // 128
-        |       ELSE start // 128 END AS last_seq
-        |FROM o ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val st = graft.operators.Subword.subwordTokens(
-        Tables.documents(s, d), "text", "doc_id", vocabSize = 64, maxLen = 6)
-      graft.operators.Packing.packOffsets(st, "doc_id", "subword_tokens", 128)
-        .orderBy("doc_id")
-    },
-
-    // --- tokenizer-coverage / OOV report (r10): per-language fallback rate
-    // under the learned top-64 subword vocabulary — the vocabulary-fit
-    // monitor. Same recursive-CTE greedy replay as q_text_subword, with a
-    // fallback counter threaded through the recursion.
-    QueryDef("q_text_oov_rate",
-      """WITH RECURSIVE toks AS (
-        |  SELECT lang, unnest(string_split_regex(trim(text), '\s+')) AS w
-        |  FROM documents),
-        |pref AS (
-        |  SELECT substring(t.w, 1, l) AS p
-        |  FROM toks t, UNNEST(range(2, least(6, len(t.w)) + 1)) AS u(l)),
-        |vocab AS (SELECT p FROM (SELECT p, COUNT(*) AS c FROM pref GROUP BY 1)
-        |          ORDER BY c DESC, p LIMIT 64),
-        |words AS (SELECT DISTINCT w FROM toks),
-        |r(w, pos, n, f) AS (
-        |  SELECT w, 1, 0, 0 FROM words
-        |  UNION ALL
-        |  SELECT r.w, r.pos + COALESCE((SELECT MAX(len(v.p)) FROM vocab v
-        |           WHERE v.p = substring(r.w, r.pos, len(v.p))), 1),
-        |         r.n + 1,
-        |         r.f + CASE WHEN (SELECT MAX(len(v.p)) FROM vocab v
-        |           WHERE v.p = substring(r.w, r.pos, len(v.p))) IS NULL
-        |           THEN 1 ELSE 0 END
-        |  FROM r WHERE r.pos <= len(r.w)),
-        |pieces AS (SELECT w, n, f FROM r WHERE pos > len(w))
-        |SELECT t.lang, CAST(SUM(p.n) AS BIGINT) AS subword_tokens,
-        |  CAST(SUM(p.f) AS BIGINT) AS fallback_pieces,
-        |  ROUND(SUM(p.f) * 1.0 / SUM(p.n), 6) AS oov_rate
-        |FROM toks t JOIN pieces p ON p.w = t.w
-        |GROUP BY 1 ORDER BY lang NULLS FIRST""".stripMargin) { (s, d) =>
-      graft.operators.Subword.oovReport(
-          Tables.documents(s, d), "text", "lang", vocabSize = 64, maxLen = 6)
-        .orderBy("lang")
-    },
-
-    // --- tokenizer fertility / compression per language: subword pieces
-    // per whitespace word and UTF-8 bytes per subword token under the
-    // learned top-64 vocabulary — the tokenizer-fit dashboard (fertility
-    // spikes on a language mean the vocabulary fragments it; bytes per
-    // token is what a token budget buys). Oracle: the q_text_subword
-    // recursive-CTE replay null-safe-joined to the per-lang byte/word
-    // counts.
-    QueryDef("q_tokenizer_fertility",
-      """WITH RECURSIVE toks AS (
-        |  SELECT lang, unnest(string_split_regex(trim(text), '\s+')) AS w
-        |  FROM documents),
-        |pref AS (
-        |  SELECT substring(t.w, 1, l) AS p
-        |  FROM toks t, UNNEST(range(2, least(6, len(t.w)) + 1)) AS u(l)),
-        |vocab AS (SELECT p FROM (SELECT p, COUNT(*) AS c FROM pref GROUP BY 1)
-        |          ORDER BY c DESC, p LIMIT 64),
-        |words AS (SELECT DISTINCT w FROM toks),
-        |r(w, pos, n) AS (
-        |  SELECT w, 1, 0 FROM words
-        |  UNION ALL
-        |  SELECT r.w, r.pos + COALESCE((SELECT MAX(len(v.p)) FROM vocab v
-        |           WHERE v.p = substring(r.w, r.pos, len(v.p))), 1),
-        |         r.n + 1
-        |  FROM r WHERE r.pos <= len(r.w)),
-        |pieces AS (SELECT w, n FROM r WHERE pos > len(w)),
-        |sw AS (SELECT t.lang, CAST(SUM(p.n) AS BIGINT) AS subword_tokens
-        |       FROM toks t JOIN pieces p ON p.w = t.w GROUP BY 1),
-        |base AS (SELECT lang,
-        |    CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS ws_tokens,
-        |    CAST(SUM(strlen(text)) AS BIGINT) AS text_bytes
-        |  FROM documents GROUP BY 1)
-        |SELECT b.lang, b.ws_tokens, b.text_bytes, s.subword_tokens,
-        |  CASE WHEN b.ws_tokens > 0
-        |       THEN ROUND(s.subword_tokens * 1.0 / b.ws_tokens, 6) END AS fertility,
-        |  CASE WHEN s.subword_tokens > 0
-        |       THEN ROUND(b.text_bytes * 1.0 / s.subword_tokens, 6) END AS bytes_per_token
-        |FROM base b LEFT JOIN sw s ON b.lang IS NOT DISTINCT FROM s.lang
-        |ORDER BY b.lang NULLS FIRST""".stripMargin) { (s, d) =>
-      graft.operators.Subword.fertilityReport(
-          Tables.documents(s, d), "text", "lang", vocabSize = 64, maxLen = 6)
-        .orderBy(asc_nulls_first("lang"))
-    },
-
     // --- text analysis -------------------------------------------------------
     QueryDef("q_text_stats",
       """SELECT lang, CAST(COUNT(*) AS BIGINT) AS docs,
