@@ -820,56 +820,6 @@ object PipelineQueries {
         .orderBy("predicted_lang")
     },
 
-    // --- char-n-gram langid (Cavnar–Trenkle rank profiles): the real
-    // n-gram heuristic next to the stopword vote above. Integer-exact
-    // (out-of-place rank distance), so the oracle replays the whole
-    // method: trigram the normalized text, rank per-lang and per-doc
-    // profiles, score |rank gaps| with a fixed miss penalty, argmin.
-    // Output is the confusion matrix against the labeled lang column.
-    QueryDef("q_text_langid_ngram",
-      """WITH norm AS (
-        |  SELECT doc_id, lang,
-        |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')) AS s
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id, lang, substring(s, CAST(i AS INT), 3) AS g
-        |  FROM norm, UNNEST(range(1, len(s) - 1)) u(i)
-        |  WHERE len(s) >= 3),
-        |lp AS (
-        |  SELECT lang, g,
-        |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY COUNT(*) DESC, g) AS rl
-        |  FROM grams WHERE lang IS NOT NULL GROUP BY lang, g
-        |  QUALIFY rl <= 300),
-        |dp AS (
-        |  SELECT doc_id, g,
-        |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY COUNT(*) DESC, g) AS rd
-        |  FROM grams GROUP BY doc_id, g
-        |  QUALIFY rd <= 50),
-        |langs AS (SELECT DISTINCT lang FROM lp),
-        |dist AS (
-        |  SELECT dp.doc_id, l.lang AS cand,
-        |    SUM(COALESCE(ABS(dp.rd - lp.rl), 300)) AS d
-        |  FROM dp CROSS JOIN langs l
-        |  LEFT JOIN lp ON lp.lang = l.lang AND lp.g = dp.g
-        |  GROUP BY 1, 2),
-        |pred AS (
-        |  SELECT doc_id, cand,
-        |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY d, cand) AS rn
-        |  FROM dist QUALIFY rn = 1)
-        |SELECT d.lang, COALESCE(p.cand, 'und') AS predicted_lang,
-        |  CAST(COUNT(*) AS BIGINT) AS cnt
-        |FROM documents d LEFT JOIN pred p USING (doc_id)
-        |GROUP BY 1, 2
-        |ORDER BY lang NULLS FIRST, predicted_lang""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val prof = graft.operators.LangId.profiles(docs, "text", "lang", k = 300)
-      graft.operators.LangId
-        .predict(docs, "doc_id", "text", prof, docK = 50, penalty = 300)
-        .groupBy("lang", "predicted_lang")
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy("lang", "predicted_lang")
-    },
-
     QueryDef("q_text_fingerprint",
       """SELECT lang, CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS n_fp,
         |  MIN(md5(text)) AS min_fp
