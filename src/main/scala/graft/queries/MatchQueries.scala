@@ -1,27 +1,20 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Dedup, Fuzzy, Sampling, TextRank}
+import graft.operators.{Dedup, Sampling, TextRank}
 import org.apache.spark.sql.functions._
 
-/** Gate queries for the round-9 matching/profiling additions: the
-  * symmetric-delete fuzzy join ([[graft.operators.Fuzzy]]), corpus-wide
+/** Gate queries for the round-9 matching/profiling additions: corpus-wide
   * paragraph dedup ([[graft.operators.Dedup.paragraphDedup]]), the
   * n-gram uniqueness profile
   * ([[graft.operators.TextRank.ngramUniqueness]]) and per-group score
   * calibration ([[graft.operators.Sampling.calibrateScores]]).
   *
-  * Oracle strategy: the fuzzy gate PLANTS one-substitution corruptions of
-  * the distinct part-name vocabulary from SQL-expressible arithmetic
-  * (position = ascii(name) mod length + 1 — both engines replay it), then
-  * the oracle brute-forces the full cross join with DuckDB's
-  * `levenshtein` while the engine runs delete-neighborhood blocking —
-  * same answer, different plan, which is exactly what the gate should
-  * pin. Paragraph dedup injects shared HEAD/TAIL paragraphs around each
-  * single-line document (the boilerplate-gate injection pattern) and pins
-  * the rebuilt text by md5. The float gates follow the established
-  * protocol: exact integer aggregates, a fixed handful of double ops,
-  * ROUND(,4) on both sides.
+  * Oracle strategy: paragraph dedup injects shared HEAD/TAIL paragraphs
+  * around each single-line document (the boilerplate-gate injection
+  * pattern) and pins the rebuilt text by md5. The float gates follow the
+  * established protocol: exact integer aggregates, a fixed handful of
+  * double ops, ROUND(,4) on both sides.
   */
 object MatchQueries {
 
@@ -29,61 +22,6 @@ object MatchQueries {
   private val SqlSep = "chr(10) || chr(10)"
 
   val defs: Seq[QueryDef] = Seq(
-
-    // --- fuzzy join: every planted one-char corruption of a part name
-    // must match its source (dist 1), plus any organic extra matches the
-    // corruption lands near (e.g. '#old bolt' ≤1 from BOTH 'cold bolt'
-    // and 'old bolt' — the insertion case). Engine: symmetric-delete
-    // blocking, no cross join; oracle: brute-force cross join.
-    QueryDef("q_fuzzy_join",
-      """WITH names AS (SELECT DISTINCT p_name AS name FROM part),
-        |dirty AS (
-        |  SELECT DISTINCT substr(name, 1, pos-1) || '#' || substr(name, pos+1) AS dirty
-        |  FROM (SELECT name, (ascii(name) % length(name)) + 1 AS pos FROM names))
-        |SELECT dirty, name, CAST(levenshtein(dirty, name) AS INT) AS dist
-        |FROM dirty CROSS JOIN names
-        |WHERE levenshtein(dirty, name) <= 1
-        |ORDER BY dirty NULLS FIRST, name NULLS FIRST""".stripMargin) { (s, d) =>
-      val names = Tables.part(s, d).select(col("p_name").as("name")).distinct()
-      val pos = (ascii(col("name")) % length(col("name"))) + 1
-      val dirty = names.select(
-        concat(col("name").substr(lit(1), pos - 1), lit("#"),
-          col("name").substr(pos + 1, length(col("name")))).as("dirty"))
-        .distinct()
-      Fuzzy.fuzzyJoin(dirty, "dirty", names, "name", maxDist = 1)
-        .orderBy("dirty", "name")
-    },
-
-    // --- fuzzy canonicalization: the planted corruptions LINK their
-    // sources ('#old bolt' sits ≤1 from both 'cold bolt' and 'old bolt',
-    // merging them transitively); canonical = lexicographic cluster min.
-    // Engine: fuzzy join + large-star/small-star CC; oracle: recursive-CTE
-    // transitive closure over the brute-force edge set.
-    QueryDef("q_fuzzy_canon",
-      """WITH RECURSIVE names AS (SELECT DISTINCT p_name AS s FROM part),
-        |dirty AS (
-        |  SELECT DISTINCT substr(s, 1, pos-1) || '#' || substr(s, pos+1) AS s
-        |  FROM (SELECT s, (ascii(s) % length(s)) + 1 AS pos FROM names)),
-        |vocab AS (SELECT s FROM names UNION SELECT s FROM dirty),
-        |edges AS (SELECT a.s AS src, b.s AS dst
-        |          FROM vocab a CROSS JOIN vocab b
-        |          WHERE levenshtein(a.s, b.s) <= 1),
-        |reach AS (
-        |  SELECT s AS start, s AS node FROM vocab
-        |  UNION
-        |  SELECT r.start, e.dst FROM reach r JOIN edges e ON r.node = e.src)
-        |SELECT start AS s, MIN(node) AS canonical
-        |FROM reach GROUP BY 1
-        |ORDER BY s NULLS FIRST""".stripMargin) { (s, d) =>
-      val names = Tables.part(s, d).select(col("p_name").as("s")).distinct()
-      val pos = (ascii(col("s")) % length(col("s"))) + 1
-      val dirty = names.select(
-        concat(col("s").substr(lit(1), pos - 1), lit("#"),
-          col("s").substr(pos + 1, length(col("s")))).as("s"))
-      val vocab = names.union(dirty).distinct()
-      Fuzzy.canonicalize(vocab, "s", maxDist = 1).orderBy("s")
-    },
-
     // --- per-source duplication / cross-contamination profile: only
     // (source, hash) pairs shuffle; the mixing-rate audit primitive.
     QueryDef("q_source_overlap",

@@ -3,78 +3,12 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Round-9 matching/profiling additions: symmetric-delete fuzzy join,
-  * vocabulary canonicalization, corpus-wide paragraph dedup, the n-gram
-  * uniqueness profile, and per-group score calibration.
+/** Round-9 matching/profiling additions: corpus-wide paragraph dedup,
+  * the n-gram uniqueness profile, and per-group score calibration.
   */
 class MatchOpsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  // --- Fuzzy.fuzzyJoin -----------------------------------------------------
-
-  private def brute(left: Seq[String], right: Seq[String], k: Int) = {
-    def lev(a: String, b: String): Int = {
-      val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) => if (j == 0) i else if (i == 0) j else 0)
-      for (i <- 1 to a.length; j <- 1 to b.length)
-        d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
-          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
-      d(a.length)(b.length)
-    }
-    (for (l <- left.distinct; r <- right.distinct; dd = lev(l, r) if dd <= k)
-      yield (l, r, dd)).toSet
-  }
-
-  private val vocab = Seq("cat", "cats", "bat", "bath", "cart", "dog",
-    "dig", "dug", "doug", "", "a", "b", "ab", "xyzzy", "xyzy", "zyzzy")
-
-  test("fuzzyJoin(k=1) equals the brute-force cross join") {
-    val l = vocab.toDF("l")
-    val r = vocab.toDF("r")
-    val got = Fuzzy.fuzzyJoin(l, "l", r, "r", maxDist = 1)
-      .as[(String, String, Int)].collect().toSet
-    assert(got == brute(vocab, vocab, 1))
-    // sanity: substitution, insertion and identity pairs all present
-    assert(got.contains(("cat", "bat", 1)))
-    assert(got.contains(("cat", "cats", 1)))
-    assert(got.contains(("cat", "cat", 0)))
-  }
-
-  test("fuzzyJoin(k=2) equals the brute-force cross join") {
-    val l = vocab.toDF("l")
-    val r = vocab.toDF("r")
-    val got = Fuzzy.fuzzyJoin(l, "l", r, "r", maxDist = 2)
-      .as[(String, String, Int)].collect().toSet
-    assert(got == brute(vocab, vocab, 2))
-    assert(got.contains(("cat", "cart", 1)))
-    assert(got.contains(("bat", "bath", 1)))
-    assert(got.contains(("dog", "doug", 1)))
-    assert(got.contains(("cat", "ab", 2)))
-  }
-
-  test("fuzzyJoin rejects unsupported radius") {
-    val df = Seq("x").toDF("s")
-    intercept[IllegalArgumentException] {
-      Fuzzy.fuzzyJoin(df, "s", df.withColumnRenamed("s", "t"), "t", maxDist = 3)
-    }
-  }
-
-  // --- Fuzzy.canonicalize --------------------------------------------------
-
-  test("canonicalize maps every variant to the cluster's smallest member") {
-    val df = Seq("color", "colour", "colur", "grey", "gray", "apple").toDF("s")
-    val canon = Fuzzy.canonicalize(df, "s", maxDist = 1)
-      .as[(String, String)].collect().toMap
-    // colour—color (dist 1), colour—colur (dist 1) chain into one cluster
-    assert(canon("color") == "color")
-    assert(canon("colour") == "color")
-    assert(canon("colur") == "color")
-    assert(canon("grey") == "gray")
-    assert(canon("gray") == "gray")
-    assert(canon("apple") == "apple")
-  }
-
-  // --- Dedup.paragraphDedup ------------------------------------------------
 
   test("paragraphDedup keeps first occurrences and rebuilds in order") {
     val docs = Seq(
