@@ -138,7 +138,7 @@ object Similarity {
     * broadcast, map-side codegen'd cosine, per-query top-k window; the
     * label predicate filters BEFORE the window, so discarded pairs never
     * shuffle. At full corpus scale, feed the probed candidate slice of
-    * [[ivfTopK]]/[[IvfIndex]] as `corpus` instead of the whole table —
+    * [[ivfTopK]] as `corpus` instead of the whole table —
     * the constraint composes with any candidate generator.
     *
     * Output: (query_id, rank, neighbor_id, cos), rank ties broken by id.
@@ -412,8 +412,7 @@ object Similarity {
       element_at(nearestCells(centroids, 1)(col(vecCol)), 1))
 
   /** Per-query probe cells: one row per (query, probed cell) — the IVF
-    * probe fan-out as a standalone frame (`ivfTopK` and the persisted
-    * [[IvfIndex]] share it).
+    * probe fan-out as a standalone frame (`ivfTopK` uses it).
     */
   def probeCells(queries: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], nProbe: Int): DataFrame =

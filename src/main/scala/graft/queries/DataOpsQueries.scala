@@ -1,16 +1,14 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Curation, Dedup, Sampling, Similarity, Sq}
+import graft.operators.{Curation, Dedup, Sampling, Similarity}
 import org.apache.spark.sql.functions._
 
-/** Gate queries for the round-8 data-pipeline additions: cosine radius
-  * search (exact and IVF-indexed), cluster-balanced sampling and
-  * hard-negative mining ([[graft.operators.Similarity]] /
-  * [[graft.operators.IvfIndex]]), the Gopher-style quality-rule filter
-  * ([[graft.operators.Curation]]), SQ8 scalar-quantized ANN
-  * ([[graft.operators.Sq]]), the deterministic training-shard shuffle
-  * ([[graft.operators.Sampling]]), hybrid BM25→cosine retrieval
+/** Gate queries for the round-8 data-pipeline additions: exact cosine
+  * radius search, cluster-balanced sampling and hard-negative mining
+  * ([[graft.operators.Similarity]]), the Gopher-style quality-rule filter
+  * ([[graft.operators.Curation]]), the deterministic training-shard
+  * shuffle ([[graft.operators.Sampling]]), hybrid BM25→cosine retrieval
   * ([[graft.operators.TextRank]]) and the quality-gated packing
   * composition ([[graft.operators.Pipeline.qualityPack]]).
   *
@@ -18,11 +16,8 @@ import org.apache.spark.sql.functions._
   * the same double-precision cosine / argmin-L2 exactly (the
   * q_emb_near_dup precedent); quality rules are integer
   * cross-multiplications (float-free); the shard shuffle and pack shards
-  * are the same md5 hex arithmetic in both engines; SQ8 and the indexed
-  * radius search use planted-copy flag contracts (the q_ann_pq pattern —
-  * quantization/index internals are engine-side, the oracle pins the
-  * query set and asserts recovery); hybrid retrieval composes the rounded
-  * BM25 oracle with an exact cosine rerank.
+  * are the same md5 hex arithmetic in both engines; hybrid retrieval
+  * composes the rounded BM25 oracle with an exact cosine rerank.
   */
 object DataOpsQueries {
 
@@ -108,8 +103,8 @@ object DataOpsQueries {
 
     // --- PCA: the data-aware projection next to JL. The eigen basis is
     // not SQL-replayable, so the gate pins the INVARIANTS that define a
-    // correct PCA (the flag-oracle pattern of q_ann_sq8/q_percentile_
-    // approx): fitted components orthonormal, eigenvalues descending and
+    // correct PCA (the flag-oracle pattern of q_percentile_approx):
+    // fitted components orthonormal, eigenvalues descending and
     // non-negative, and top-k eigenvalue mass >= the best k COORDINATE
     // axes' variance mass (optimality over axis-aligned projections —
     // a wrong eigensolver fails this on real data immediately). The fit
@@ -267,53 +262,6 @@ object DataOpsQueries {
       Curation.qualityRules(Tables.documents(s, d), "doc_id", "text")
         .withColumn("keep", col("keep").cast("int"))
         .orderBy("doc_id")
-    },
-
-    // --- similarity search: SQ8 scalar-quantized ANN. Planted EXACT
-    // copies of 10 queries (+100000): a copy shares all d codes with its
-    // source, so its ADC distance is the query's own (tiny — 255 levels
-    // per dimension) quantization error and must rank 1 once the source id
-    // itself is self-excluded. Flag-based oracle pins the query set.
-    QueryDef("q_ann_sq8",
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, TRUE AS copy_at_rank1
-        |FROM embeddings WHERE vec_id < 10
-        |ORDER BY query_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 10)
-      val corpus = emb.select(col("vec_id"), col("embedding"))
-        .unionByName(queries.select((col("vec_id") + 100000).as("vec_id"),
-          col("embedding")))
-      // build-once fixture: bounds trained once per source fingerprint
-      val bounds = AnnFixtures.sqBounds(s, d)
-      val codes = Sq.encode(corpus, "vec_id", "embedding", bounds)
-      Sq.adcTopK(codes, "vec_id", queries, "vec_id", "embedding", bounds, 1)
-        .groupBy("query_id")
-        .agg(max(col("neighbor_id") === col("query_id") + 100000).as("copy_at_rank1"))
-        .orderBy("query_id")
-    },
-
-    // --- similarity search: radius query from the PERSISTED IVF index —
-    // the scale path of q_ann_range (threshold filter over only the probed
-    // ~nProbe/nlist partition-pruned slice). Planted contract as q_ann_ivf:
-    // each query is a lightly-perturbed copy (cos ≈ 0.999) of a corpus
-    // vector, which must fall inside the 0.9-radius of its source.
-    QueryDef("q_ann_ivf_range",
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, TRUE AS found_planted
-        |FROM embeddings WHERE vec_id < 15
-        |ORDER BY query_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val dir = AnnFixtures.ivfIndexDir(s, d, nlist = 32)
-      val queries = emb.where(col("vec_id") < 15)
-        .withColumn("vec_id", col("vec_id") + 100000)
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            (x.cast("double") + sin(i.cast("double") * 1.3) * 0.01).cast("float")))
-      graft.operators.IvfIndex.searchRange(s, dir, queries, "vec_id", "embedding",
-          minCosine = 0.9, nProbe = 4)
-        .groupBy("query_id")
-        .agg(max(col("neighbor_id") === col("query_id") - 100000).as("found_planted"))
-        .select((col("query_id") - 100000).as("query_id"), col("found_planted"))
-        .orderBy("query_id")
     },
 
     // --- hard-negative mining: each query's top-3 most-similar vectors

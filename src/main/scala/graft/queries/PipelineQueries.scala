@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Dedup, Pq, Similarity, TextOps, TextRank}
+import graft.operators.{Dedup, Similarity, TextOps, TextRank}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -405,186 +405,6 @@ object PipelineQueries {
         .orderBy("query_id")
     },
 
-    // --- ANN recall audit (session 4): recall@5 of the IVF path against
-    // brute-force ground truth, through the generic retrievalMetrics
-    // scorecard — the measurement a user runs before trusting nlist/
-    // nProbe at scale. IVF assignments aren't SQL-replayable (k-means
-    // centroids), so the oracle pins the query count and the aggregate
-    // recall floor (the flag-based ANN contract).
-    QueryDef("q_ann_recall",
-      """SELECT CAST((SELECT COUNT(*) FROM embeddings WHERE vec_id < 20)
-        |  AS BIGINT) AS n_queries, TRUE AS monotone_ok, TRUE AS recall_ok"""
-        .stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 20)
-      // truth has three consumers (one per sweep point) — stage it
-      // (bounded: 20 queries × 5 rows) so the brute-force corpus scan
-      // runs once; the ANN side sweeps the PERSISTED index (built once
-      // per corpus fingerprint), so only the probe step varies per point
-      val truth = graft.operators.Staged.materialize(
-        Similarity.topKCosine(emb, "vec_id", "embedding", queries, 5)
-          .select(col("query_id"), col("neighbor_id").as("doc_id")))
-      val dir = AnnFixtures.ivfIndexDir(s, d, nlist = 32)
-      // centroids load ONCE for the whole sweep (r15): three parquet
-      // reads + driver collects of the same nlist×dim model were pure
-      // fixed cost per sweep point
-      val cents = graft.operators.IvfIndex.centroids(s, dir)
-      // recall is monotone in nProbe by construction (more probes = a
-      // candidate superset, exact scoring over candidates) — assert the
-      // tuning curve a user sweeps, plus the floor at the top setting
-      def recallAt(np: Int) =
-        graft.operators.TextRank.retrievalMetrics(
-            graft.operators.IvfIndex.search(s, dir, cents, queries,
-              "vec_id", "embedding", k = 5, nProbe = np)
-              .select(col("query_id"), col("rank"),
-                col("neighbor_id").as("doc_id")),
-            truth, k = 5)
-          .agg((sum("hits") / sum("n_truth")).as(s"__r$np"),
-            count(lit(1)).as(s"__n$np"))
-      recallAt(4).crossJoin(recallAt(8)).crossJoin(recallAt(16))
-        .select(col("__n4").as("n_queries"),
-          (col("__r16") >= col("__r8") && col("__r8") >= col("__r4"))
-            .as("monotone_ok"),
-          (col("__r16") >= 0.6).as("recall_ok"))
-    },
-
-    // --- similarity search: PERSISTED IVF index (build once, search many
-    // — the production form; search reads only the probed cell partitions
-    // via dynamic partition pruning, IvfIndexSpec asserts). Same planted
-    // contract as q_ann_ivf.
-    QueryDef("q_ann_ivf_index",
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, TRUE AS found_planted
-        |FROM embeddings WHERE vec_id < 20
-        |ORDER BY query_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      // build-once fixture: the index is rebuilt only when the source
-      // fingerprint changes (AnnFixtures — atomic promote, race-safe)
-      val dir = AnnFixtures.ivfIndexDir(s, d, nlist = 32)
-      val queries = emb.where(col("vec_id") < 20)
-        .withColumn("vec_id", col("vec_id") + 100000)
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            (x.cast("double") + sin(i.cast("double") * 1.3) * 0.01).cast("float")))
-      graft.operators.IvfIndex.search(s, dir, queries, "vec_id", "embedding",
-          k = 5, nProbe = 4)
-        .groupBy("query_id")
-        .agg(max(col("neighbor_id") === col("query_id") - 100000).as("found_planted"))
-        .select((col("query_id") - 100000).as("query_id"), col("found_planted"))
-        .orderBy("query_id")
-    },
-
-    // --- similarity search: incremental index maintenance. Build a small
-    // IVF index, APPEND perturbed twins of the queries (assign-to-existing-
-    // centroids, files appended under the cell partitions — no rebuild),
-    // and search: every appended twin (cos ≈ 0.999 with its query) must
-    // surface at rank 1, proving searches see appended vectors with
-    // unchanged probe math. The production maintenance path at corpus
-    // scale, where an index is built once and grows.
-    QueryDef("q_ann_ivf_append",
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, TRUE AS found_appended
-        |FROM embeddings WHERE vec_id < 15
-        |ORDER BY query_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val base = emb.where(col("vec_id") < 500)
-      val dir = java.nio.file.Files.createTempDirectory("ivfappend").toString
-      graft.operators.IvfIndex.build(base, "vec_id", "embedding",
-        nlist = 8, dir, refineIterations = 1)
-      val queries = emb.where(col("vec_id") < 15)
-      val twins = queries
-        .withColumn("vec_id", col("vec_id") + 300000)
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            (x.cast("double") + sin(i.cast("double") * 1.7) * 0.01).cast("float")))
-      graft.operators.IvfIndex.append(s, dir, twins, "vec_id", "embedding")
-      graft.operators.IvfIndex.search(s, dir, queries, "vec_id", "embedding",
-          k = 1, nProbe = 2)
-        .groupBy("query_id")
-        .agg(max(col("neighbor_id") === col("query_id") + 300000).as("found_appended"))
-        .orderBy("query_id")
-    },
-
-    // --- similarity search: PERSISTED IVF-SQ8 index (coarse cells +
-    // residual scalar-quantized codes — the composition that makes SQ8 a
-    // search structure instead of a flat-scan compression layer; ADC runs
-    // only over the probed nProbe/nlist cell partitions via dynamic
-    // partition pruning, IvfIndexSpec asserts). Perturbed-query planted
-    // contract as q_ann_ivf_index: each query is a lightly-perturbed copy
-    // (cos ≈ 0.999) of a corpus vector whose source must surface in the
-    // ADC top-5.
-    QueryDef("q_ann_ivf_sq8",
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, TRUE AS found_planted
-        |FROM embeddings WHERE vec_id < 20
-        |ORDER BY query_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      // build-once fixture: rebuilt only when the source fingerprint
-      // changes (AnnFixtures — atomic promote, race-safe)
-      val dir = AnnFixtures.ivfSq8IndexDir(s, d, nlist = 32)
-      val queries = emb.where(col("vec_id") < 20)
-        .withColumn("vec_id", col("vec_id") + 100000)
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            (x.cast("double") + sin(i.cast("double") * 1.3) * 0.01).cast("float")))
-      graft.operators.IvfIndex.searchSq8(s, dir, queries, "vec_id", "embedding",
-          k = 5, nProbe = 4)
-        .groupBy("query_id")
-        .agg(max(col("neighbor_id") === col("query_id") - 100000).as("found_planted"))
-        .select((col("query_id") - 100000).as("query_id"), col("found_planted"))
-        .orderBy("query_id")
-    },
-
-    // --- similarity search: product quantization (the compression layer
-    // under IVF at billion scale). Train an (m=8 × k=16) codebook with
-    // distributed Lloyd, encode the corpus as 8 codes/vector, and ADC-score
-    // planted EXACT copies of 10 queries: a copy shares all m codes with its
-    // source, so its ADC distance (the query's own quantization error) ranks
-    // below any other row's. Flag-based oracle pins the query set and
-    // asserts every planted copy is recovered at rank 1.
-    QueryDef("q_ann_pq",
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, TRUE AS copy_at_rank1
-        |FROM embeddings WHERE vec_id < 10
-        |ORDER BY query_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      // build-once fixture: codebook trained once per source fingerprint
-      val book = AnnFixtures.pqBook(s, d, m = 8, k = 16, iters = 3)
-      val queries = emb.where(col("vec_id") < 10)
-      val corpus = emb.select(col("vec_id"), col("embedding"))
-        .unionByName(queries.select((col("vec_id") + 100000).as("vec_id"),
-          col("embedding")))
-      val codes = Pq.encode(corpus, "vec_id", "embedding", book)
-      Pq.adcTopK(codes, "vec_id", queries, "vec_id", "embedding", book, 1)
-        .groupBy("query_id")
-        .agg(max(col("neighbor_id") === col("query_id") + 100000).as("copy_at_rank1"))
-        .orderBy("query_id")
-    },
-
-    // --- similarity search: IVF-PQ (coarse cells + residual codes — the
-    // billion-scale composition). Planted exact copies share their source's
-    // cell and residual codes, so ADC over the probed nProbe/nlist slice of
-    // the corpus must put the copy at rank 1. Flag-based oracle as above.
-    QueryDef("q_ann_ivfpq",
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, TRUE AS copy_at_rank1
-        |FROM embeddings WHERE vec_id < 10
-        |ORDER BY query_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 10)
-      val corpus = emb.select(col("vec_id"), col("embedding"))
-        .unionByName(queries.select((col("vec_id") + 100000).as("vec_id"),
-          col("embedding")))
-      // build-once fixture: coarse centroids + residual codebook trained
-      // once per source fingerprint (the gate corpus is a pure function of
-      // the table); encode+search stay per-run
-      val model = AnnFixtures.cachedModel(d, "ivfpq-gate-n16-m8-k16-i3") {
-        Pq.ivfpqTrain(corpus, "vec_id", "embedding",
-          nlist = 16, m = 8, kCodes = 16, iters = 3)
-      }
-      Pq.ivfpqTopK(corpus, "vec_id", "embedding",
-          queries, "vec_id", "embedding", k = 1, nlist = 16, nProbe = 2,
-          trained = Some(model))
-        .groupBy("query_id")
-        .agg(max(col("neighbor_id") === col("query_id") + 100000).as("copy_at_rank1"))
-        .orderBy("query_id")
-    },
-
     // --- text retrieval: BM25 top-k per query. Query vocabulary is
     // broadcast to prune term-frequency rows before any shuffle; scores
     // round to 4 decimals on both sides so cross-engine float compare is
@@ -616,111 +436,6 @@ object PipelineQueries {
       TextRank.bm25TopK(Tables.documents(s, d), "doc_id", "text",
           Seq((0L, "hash join batch"), (1L, "vector scan")), k = 5)
         .orderBy("query_id", "rank")
-    },
-
-    // --- text retrieval off the PERSISTED inverted index (build once,
-    // search many — IvfIndex's lexical sibling): the scan prunes
-    // statically to the query vocabulary's term-hash buckets
-    // (TextIndexSpec asserts the PartitionFilters). Scoring arithmetic
-    // is bm25TopK's exactly, so the same oracle pins both paths.
-    QueryDef("q_text_index_search",
-      """WITH q(query_id, qtext) AS (VALUES (0, 'hash join batch'), (1, 'vector scan')),
-        |qt AS (SELECT query_id, unnest(list_distinct(string_split_regex(trim(lower(qtext)), '\s+'))) AS tok FROM q),
-        |dt AS (SELECT doc_id, len(string_split_regex(trim(lower(text)), '\s+')) AS len,
-        |              unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |       FROM documents),
-        |tf AS (SELECT doc_id, len, tok, CAST(COUNT(*) AS DOUBLE) AS tf FROM dt
-        |       WHERE tok IN (SELECT tok FROM qt) GROUP BY 1, 2, 3),
-        |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-        |                 AVG(len(string_split_regex(trim(lower(text)), '\s+'))) AS avg_len
-        |          FROM documents),
-        |dfreq AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS nt FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT qt.query_id, tf.doc_id,
-        |    ROUND(SUM(ln(1 + (n_docs - nt + 0.5) / (nt + 0.5)) *
-        |      tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.len / avg_len))), 4) AS score
-        |  FROM tf JOIN dfreq USING (tok) CROSS JOIN stats JOIN qt USING (tok)
-        |  GROUP BY 1, 2)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS INT) AS rank,
-        |       CAST(doc_id AS BIGINT) AS doc_id, score
-        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY score DESC, doc_id) AS rank FROM scored)
-        |WHERE rank <= 5
-        |ORDER BY query_id NULLS FIRST, rank NULLS FIRST""".stripMargin) { (s, d) =>
-      val dir = AnnFixtures.textIndexDir(s, d, nBuckets = 64)
-      graft.operators.TextIndex.search(s, dir,
-          Seq((0L, "hash join batch"), (1L, "vector scan")), k = 5)
-        .orderBy("query_id", "rank")
-    },
-
-    // --- incremental index append: 60% built + 40% appended must answer
-    // exactly like the one-shot index (same full-corpus oracle) — df is
-    // derived from term-pruned postings, so appends stay appends with no
-    // stored aggregate to rebuild.
-    QueryDef("q_text_index_append",
-      """WITH q(query_id, qtext) AS (VALUES (0, 'hash join batch'), (1, 'vector scan')),
-        |qt AS (SELECT query_id, unnest(list_distinct(string_split_regex(trim(lower(qtext)), '\s+'))) AS tok FROM q),
-        |dt AS (SELECT doc_id, len(string_split_regex(trim(lower(text)), '\s+')) AS len,
-        |              unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |       FROM documents),
-        |tf AS (SELECT doc_id, len, tok, CAST(COUNT(*) AS DOUBLE) AS tf FROM dt
-        |       WHERE tok IN (SELECT tok FROM qt) GROUP BY 1, 2, 3),
-        |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-        |                 AVG(len(string_split_regex(trim(lower(text)), '\s+'))) AS avg_len
-        |          FROM documents),
-        |dfreq AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS nt FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT qt.query_id, tf.doc_id,
-        |    ROUND(SUM(ln(1 + (n_docs - nt + 0.5) / (nt + 0.5)) *
-        |      tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.len / avg_len))), 4) AS score
-        |  FROM tf JOIN dfreq USING (tok) CROSS JOIN stats JOIN qt USING (tok)
-        |  GROUP BY 1, 2)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS INT) AS rank,
-        |       CAST(doc_id AS BIGINT) AS doc_id, score
-        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY score DESC, doc_id) AS rank FROM scored)
-        |WHERE rank <= 5
-        |ORDER BY query_id NULLS FIRST, rank NULLS FIRST""".stripMargin) { (s, d) =>
-      val dir = AnnFixtures.textIndexAppendDir(s, d, nBuckets = 64)
-      graft.operators.TextIndex.search(s, dir,
-          Seq((0L, "hash join batch"), (1L, "vector scan")), k = 5)
-        .orderBy("query_id", "rank")
-    },
-
-    // --- exact phrase search off the POSITIONAL postings (r10): overlapping
-    // occurrences counted ('a a' matches twice inside 'a a a'), first match
-    // position returned; the scan prunes to the phrase vocabulary's bucket
-    // partitions exactly like scoring searches, and the oracle rebuilds
-    // positions from scratch with zipped parallel unnests.
-    QueryDef("q_text_index_phrase",
-      """WITH q(query_id, qtext) AS (VALUES (0, 'table hash'), (1, 'customer join'), (2, 'a a')),
-        |ph AS (SELECT query_id, off - 1 AS off, tok FROM (
-        |  SELECT query_id,
-        |    unnest(string_split_regex(trim(lower(qtext)), '\s+')) AS tok,
-        |    unnest(range(1, len(string_split_regex(trim(lower(qtext)), '\s+')) + 1)) AS off
-        |  FROM q)),
-        |n AS (SELECT query_id, COUNT(*) AS n_terms FROM ph GROUP BY 1),
-        |toks AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-        |         FROM documents),
-        |pos AS (SELECT doc_id, unnest(tk) AS tok, unnest(range(0, len(tk))) AS p
-        |        FROM toks),
-        |cand AS (SELECT ph.query_id, pos.doc_id, pos.p - ph.off AS base
-        |         FROM pos JOIN ph ON pos.tok = ph.tok
-        |         WHERE pos.p - ph.off >= 0),
-        |hit AS (SELECT query_id, doc_id, base, COUNT(*) AS cnt
-        |        FROM cand GROUP BY 1, 2, 3),
-        |m AS (SELECT h.query_id, h.doc_id, h.base
-        |      FROM hit h JOIN n USING (query_id) WHERE h.cnt = n.n_terms)
-        |SELECT CAST(query_id AS BIGINT) AS query_id,
-        |  CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(COUNT(*) AS BIGINT) AS n_hits,
-        |  CAST(MIN(base) AS INT) AS first_pos
-        |FROM m GROUP BY 1, 2
-        |ORDER BY query_id NULLS FIRST, doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val dir = AnnFixtures.textIndexDir(s, d, nBuckets = 64)
-      graft.operators.TextIndex.phraseSearch(s, dir,
-          Seq((0L, "table hash"), (1L, "customer join"), (2L, "a a")))
-        .orderBy("query_id", "doc_id")
     },
 
     // --- corpus statistics: top-k word bigrams above a frequency cutoff.

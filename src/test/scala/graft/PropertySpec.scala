@@ -41,31 +41,6 @@ class PropertySpec extends AnyFunSuite {
     out
   }
 
-  test("SQ8 quantization: bounded round-trip error, clamping, monotonicity") {
-    import graft.operators.Sq
-    val gen = for {
-      min <- Gen.chooseNum(-100.0, 100.0)
-      span <- Gen.chooseNum(0.0, 200.0)
-      frac <- Gen.chooseNum(-0.5, 1.5) // includes out-of-range probes
-    } yield (min, span / 255.0, min + frac * span)
-    forAllN(gen, 400) { case (min, scale, x) =>
-      val c = Sq.quantize(x, min, scale)
-      assert(c >= 0 && c <= 255)
-      val recon = Sq.dequantize(c, min, scale)
-      val max = min + 255 * scale
-      if (x >= min && x <= max)
-        assert(math.abs(recon - x) <= scale / 2 + 1e-12,
-          s"in-range error: x=$x recon=$recon scale=$scale")
-      else // clamped to the nearest grid edge
-        assert(c == 0 || c == 255, s"out-of-range $x must clamp, got $c")
-      // monotone: a larger value never gets a smaller code
-      val c2 = Sq.quantize(x + scale, min, scale)
-      assert(c2 >= c)
-    }
-    // flat dimension: everything codes to 0 and reconstructs the min
-    assert(Sq.quantize(42.0, 42.0, 0.0) == 0 && Sq.dequantize(0, 42.0, 0.0) == 42.0)
-  }
-
   test("HLL merge is commutative, associative, idempotent") {
     forAllN(Gen.zip(genRegs, genRegs, genRegs), 100) { case (a, b, c) =>
       assert(merged(a, b).toSeq == merged(b, a).toSeq)

@@ -4,7 +4,7 @@ import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** Round-8 data-pipeline additions: radius search, cluster-balanced
-  * sampling, the quality-rule filter, SQ8 quantization, and the
+  * sampling, the quality-rule filter, and the
   * deterministic shard shuffle.
   */
 class DataOpsSpec extends SparkSpec {
@@ -129,52 +129,6 @@ class DataOpsSpec extends SparkSpec {
         (col("r_ttr") === 1) =!= (col("n_types") * 2 >= col("n_words")))
     assert(joined.count() == 0)
     assert(got.where(col("keep") === 1).count() > 0)
-  }
-
-  // --- SQ8 -----------------------------------------------------------------
-
-  test("Sq bounds reconstruct within half a quantization step") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val bounds = Sq.train(emb, "embedding")
-    assert(bounds.mins.length == 64)
-    // reconstruction error per dim ≤ scale/2 + eps for in-range values
-    val codes = Sq.encode(emb, "vec_id", "embedding", bounds)
-    val joined = codes.join(emb, "vec_id")
-      .select(col("codes"), col("embedding")).as[(Seq[Int], Seq[Float])]
-      .collect()
-    joined.foreach { case (cs, vs) =>
-      cs.indices.foreach { i =>
-        val recon = bounds.mins(i) + cs(i) * bounds.scales(i)
-        assert(math.abs(recon - vs(i)) <= bounds.scales(i) / 2 + 1e-9,
-          s"dim $i: recon $recon vs ${vs(i)} scale ${bounds.scales(i)}")
-      }
-    }
-  }
-
-  test("Sq handles constant dimensions (zero scale)") {
-    val df = Seq((0L, Array(1.0f, 2.0f)), (1L, Array(1.0f, 3.0f)))
-      .toDF("vec_id", "embedding")
-    val bounds = Sq.train(df, "embedding")
-    assert(bounds.scales(0) == 0.0)
-    val codes = Sq.encode(df, "vec_id", "embedding", bounds)
-      .orderBy("vec_id").as[(Long, Seq[Int])].collect()
-    assert(codes(0)._2(0) == 0 && codes(1)._2(0) == 0)
-    assert(codes(0)._2(1) == 0 && codes(1)._2(1) == 255)
-  }
-
-  test("Sq ADC puts a planted exact copy at rank 1") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val queries = emb.where(col("vec_id") < 10)
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-      .unionByName(queries.select((col("vec_id") + 100000).as("vec_id"),
-        col("embedding")))
-    val bounds = Sq.train(emb, "embedding")
-    val codes = Sq.encode(corpus, "vec_id", "embedding", bounds)
-    val top1 = Sq.adcTopK(codes, "vec_id", queries, "vec_id", "embedding",
-        bounds, 1)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-    assert(top1.length == 10)
-    top1.foreach { case (q, n) => assert(n == q + 100000, s"query $q -> $n") }
   }
 
   // --- hybrid retrieval ------------------------------------------------------

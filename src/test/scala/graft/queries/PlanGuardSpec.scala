@@ -29,15 +29,11 @@ class PlanGuardSpec extends SparkSpec {
     * pinned by its family's dedicated audit or fixture contract.
     */
   private val boundedQueryGates: Set[String] = Set(
-    "q_ann_topk", "q_ann_range", "q_ann_recall", "q_ann_pq", "q_ann_sq8",
+    "q_ann_topk", "q_ann_range",
     "q_retrieval_mmr", "q_hard_negatives", "q_margin_mining",
     "q_emb_near_dup", "q_emb_centroid_sep",
     // vec_id < 2 probe set broadcast into the corpus
     "q_retrieval_metrics",
-    // the persisted index's corpus-stats side is ONE ROW by construction
-    // (a global aggregate written to parquet at build time — structurally
-    // invisible to the scalar detector after the round trip)
-    "q_text_index_search", "q_text_index_append",
     // per-lang sketch frames theta-joined lang_a < lang_b: bounded by
     // language cardinality (~5 rows a side), pinned by the gate oracle
     "q_sketch_kmv")
