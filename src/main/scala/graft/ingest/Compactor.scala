@@ -31,14 +31,9 @@ object Compactor {
 
   final case class DayReport(day: String, filesBefore: Int, filesAfter: Int)
 
-  /** Compact every `<partitionPrefix>…` partition of `dir` holding more
-    * than `maxFiles` parquet files down to `targetFiles` sorted files.
-    * Returns a report per REWRITTEN partition (untouched ones absent).
-    * The default prefix targets the archive's `day=` partitions; the
-    * persisted index families reuse the same machinery over their
-    * `bucket=` / `cell=` partitions ([[graft.operators.TextIndex.compact]],
-    * [[graft.operators.IvfIndex.compact]]) — appends grow file counts
-    * without bound there too, and the swap discipline is identical.
+  /** Compact every `day=` partition of `dir` holding more than
+    * `maxFiles` parquet files down to `targetFiles` sorted files.
+    * Returns a report per REWRITTEN day (untouched ones absent).
     * `exclusive` runs each day's rename pair, the step in which a reader
     * of `dir` can see the day missing; a caller that serves queries from
     * `dir` passes its reader exclusion, as for [[Backfill]].
@@ -46,7 +41,6 @@ object Compactor {
   def compact(spark: SparkSession, dir: String, sortCols: Seq[String],
       maxFiles: Int = 8, targetFiles: Int = 1,
       zorderCols: Seq[String] = Nil,
-      partitionPrefix: String = s"${Archiver.DayCol}=",
       exclusive: (=> Unit) => Unit = swap => swap): Seq[DayReport] = {
     require(maxFiles >= 1, s"maxFiles $maxFiles must be >= 1")
     require(targetFiles >= 1, s"targetFiles $targetFiles must be >= 1")
@@ -63,28 +57,26 @@ object Compactor {
     // skipped tick
     PartitionSwap.withArchiveLock(dir, conf, "compaction") { fs =>
       compactLocked(spark, root, fs, conf, sortCols, maxFiles, targetFiles,
-        zorderCols, partitionPrefix, exclusive)
+        zorderCols, exclusive)
     }
   }
 
   private def compactLocked(spark: SparkSession, root: Path,
       fs: FileSystem, conf: Configuration, sortCols: Seq[String],
       maxFiles: Int, targetFiles: Int, zorderCols: Seq[String],
-      partitionPrefix: String, exclusive: (=> Unit) => Unit): Seq[DayReport] = {
-    val prefix = partitionPrefix
+      exclusive: (=> Unit) => Unit): Seq[DayReport] = {
+    val prefix = s"${Archiver.DayCol}="
     val reports = Seq.newBuilder[DayReport]
-    // day-partition compactions of a (possibly shared) archive announce
-    // each day's swap through the drain marker, exactly like Backfill:
-    // the two-rename swap makes a day transiently invisible to a
-    // concurrent lister, and a scatter wave straddling it must retry
+    // a compaction of a (possibly shared) archive announces each day's
+    // swap through the drain marker, exactly like Backfill: the
+    // two-rename swap makes a day transiently invisible to a concurrent
+    // lister, and a scatter wave straddling it must retry
     // rather than merge a mid-swap listing. The announcement spans only
     // the rename pair, not the day's Spark rewrite before it, so waves
     // read torn for milliseconds, not for the whole compaction. The bump
     // flags no days: compaction preserves rows (members' local caches
     // still hold the same ROWS; SliceSync re-copies on its own file-set
-    // staleness check). Index-partition compactions (bucket=/cell=) are
-    // member-local artifacts with no cross-member readers — no marker.
-    val marker = prefix == s"${Archiver.DayCol}="
+    // staleness check).
     fs.listStatus(root).filter(_.isDirectory)
       .map(_.getPath).filter(_.getName.startsWith(prefix))
       .sortBy(_.getName)
@@ -111,10 +103,7 @@ object Compactor {
             }
           rewritten.write.mode("overwrite")
             .parquet(PartitionSwap.staging(root, part.getName).toString)
-          exclusive {
-            if (marker) PartitionSwap.installDays(fs, root, conf, Seq(day), flagged = Nil)
-            else PartitionSwap.install(fs, root, Seq(part.getName))
-          }
+          exclusive(PartitionSwap.installDays(fs, root, conf, Seq(day), flagged = Nil))
           val after = fs.listStatus(part)
             .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
           reports += DayReport(day, dataFiles.length, after)
