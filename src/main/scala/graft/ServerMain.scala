@@ -106,6 +106,7 @@ object ServerMain {
           s"assignment at $topo" +
           (if (shared.nonEmpty) s", shared fallback $shared" else ""))
         graft.exec.SliceRebalance.servingCatalog(baseCatalog, local, topo, slice,
+          spark.sparkContext.hadoopConfiguration,
           sharedArchiveDir = shared)
       case _ => baseCatalog
     }

@@ -3,6 +3,7 @@ package graft.exec
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 import org.json4s._
@@ -301,7 +302,7 @@ object SliceRebalance {
     Option(servedVersionsTL.get).foreach(_ += version)
 
   def servingCatalog(base: graft.aql.Catalog, localDir: String,
-      topologyDir: String, slice: String,
+      topologyDir: String, slice: String, conf: Configuration,
       sharedArchiveDir: String = ""): graft.aql.Catalog = {
     // startup typo guard: an ESTABLISHED member (its local store already
     // holds day partitions) whose configured slice id is absent from a
@@ -311,9 +312,10 @@ object SliceRebalance {
     // an established member it is a silent undercount behind a
     // static-hosts broker, which performs no assignment-coverage check.
     // Fail here, at construction, where the operator sees it immediately.
+    // The listing goes through the session's Hadoop conf (`conf`): a
+    // store on s3a/hdfs is configured there, not in classpath defaults.
     read(topologyDir).foreach { a =>
       if (a.owners.nonEmpty && !a.owners.contains(slice)) {
-        val conf = new org.apache.hadoop.conf.Configuration()
         val p = new Path(localDir)
         val fs = p.getFileSystem(conf)
         val prefix = s"${graft.ingest.Archiver.DayCol}="

@@ -56,6 +56,7 @@ class ClusterSoakSpec extends SparkSpec {
     def member(slice: String): GraftServer = {
       val srv = new GraftServer(
         SliceRebalance.servingCatalog(base, dirs(slice), topoDir, slice,
+          spark.sparkContext.hadoopConfiguration,
           sharedArchiveDir = sharedDir), spark,
         journalDir = Some(journalDirs(slice)),
         // member a gets a TINY journal bound: every few ingests trigger a

@@ -134,6 +134,7 @@ class HandoffEpochSpec extends SparkSpec {
     def member(slice: String): GraftServer = {
       val srv = new GraftServer(
         SliceRebalance.servingCatalog(base, dirs(slice), topoDir, slice,
+          spark.sparkContext.hadoopConfiguration,
           sharedArchiveDir = sharedDir), spark)
       srv.sliceServe("events", sharedDir,
         () => SliceSync.sync(spark, sharedDir, dirs(slice), topoDir, slice))
@@ -205,6 +206,7 @@ class HandoffEpochSpec extends SparkSpec {
       }
       val srv = new GraftServer(
         SliceRebalance.servingCatalog(base, dirs(slice), topoDir, slice,
+          spark.sparkContext.hadoopConfiguration,
           sharedArchiveDir = sharedDir), spark)
       srv.sliceServe("events", sharedDir,
         () => SliceSync.sync(spark, sharedDir, dirs(slice), topoDir, slice),
@@ -289,7 +291,8 @@ class HandoffEpochSpec extends SparkSpec {
     val members = dirs.keys.toSeq.sorted.map { slice =>
       val srv = new GraftServer(
         SliceRebalance.servingCatalog(Catalog.testdata(sfDir), dirs(slice), topoDir,
-          slice, sharedArchiveDir = sharedDir), spark)
+          slice, spark.sparkContext.hadoopConfiguration,
+          sharedArchiveDir = sharedDir), spark)
       srv.sliceServe("events", sharedDir,
         () => SliceSync.sync(spark, sharedDir, dirs(slice), topoDir, slice))
       wire(srv)

@@ -95,7 +95,8 @@ class RebalanceTriggerSpec extends SparkSpec {
         val base = Catalog.testdata(sfDir)
         val whole = new GraftServer(base, spark)
         val servers = Seq("a", "b", "c").map(s => new GraftServer(
-          SliceRebalance.servingCatalog(base, s"$localRoot/$s", topoDir, s), spark))
+          SliceRebalance.servingCatalog(base, s"$localRoot/$s", topoDir, s,
+            spark.sparkContext.hadoopConfiguration), spark))
         (whole +: servers).foreach(_.start())
         try {
           val q = s"""{"table": "events",

@@ -70,9 +70,11 @@ class SliceRebalanceSpec extends SparkSpec {
     // published assignment grants it, so over-replicated storage can
     // never double count
     val pa = new GraftServer(
-      SliceRebalance.servingCatalog(base, dirs2("a"), topoDir, "a"), spark)
+      SliceRebalance.servingCatalog(base, dirs2("a"), topoDir, "a",
+        spark.sparkContext.hadoopConfiguration), spark)
     val pb = new GraftServer(
-      SliceRebalance.servingCatalog(base, dirs2("b"), topoDir, "b"), spark)
+      SliceRebalance.servingCatalog(base, dirs2("b"), topoDir, "b",
+        spark.sparkContext.hadoopConfiguration), spark)
     Seq(whole, pa, pb).foreach(_.start())
     val client = java.net.http.HttpClient.newHttpClient()
     def answer(port: Int): String = {
@@ -109,7 +111,8 @@ class SliceRebalanceSpec extends SparkSpec {
 
       // merged answers identical through the NEW 3-member placement
       val pc = new GraftServer(
-        SliceRebalance.servingCatalog(base, dirs3("c"), topoDir, "c"), spark)
+        SliceRebalance.servingCatalog(base, dirs3("c"), topoDir, "c",
+          spark.sparkContext.hadoopConfiguration), spark)
       pc.start()
       try {
         val broker3 = new Broker(Seq(
@@ -157,19 +160,46 @@ class SliceRebalanceSpec extends SparkSpec {
     // silent undercount behind a static-hosts broker (which performs no
     // assignment-coverage check) — this must fail AT STARTUP, loudly
     val e = intercept[IllegalStateException](
-      SliceRebalance.servingCatalog(base, dirs("a"), topoDir, "a1"))
+      SliceRebalance.servingCatalog(base, dirs("a"), topoDir, "a1",
+        spark.sparkContext.hadoopConfiguration))
     assert(e.getMessage.contains("a1") &&
       e.getMessage.contains("SPARK_GRAFT_SLICE"), e.getMessage)
 
     // a genuinely FRESH member mid-grow (empty local store, not yet
     // assigned) still constructs and serves zero days until the rebalance
     val freshDir = tmp("typo-fresh")
-    val cat = SliceRebalance.servingCatalog(base, freshDir, topoDir, "c")
+    val cat = SliceRebalance.servingCatalog(base, freshDir, topoDir, "c",
+      spark.sparkContext.hadoopConfiguration)
     assert(cat.tables("events").load(spark).count() == 0L)
 
     // and the correctly-configured established member still serves
-    val ok = SliceRebalance.servingCatalog(base, dirs("a"), topoDir, "a")
+    val ok = SliceRebalance.servingCatalog(base, dirs("a"), topoDir, "a",
+      spark.sparkContext.hadoopConfiguration)
     assert(ok.tables("events").load(spark).count() > 0L)
+  }
+
+  test("the startup typo guard lists the local store through the session's Hadoop conf") {
+    // `sessfs:` is mapped in the session's conf only, the way s3a
+    // credentials or hdfs HA names are: a listing through a fresh
+    // Configuration cannot open this store at all
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.sessfs.impl", classOf[SessionSchemeFs].getName)
+    conf.setBoolean("fs.sessfs.impl.disable.cache", true)
+    try {
+      val local = java.nio.file.Files.createTempDirectory("sessfs-local")
+      java.nio.file.Files.createDirectories(local.resolve("day=2024-01-01"))
+      val topoDir = java.nio.file.Files.createTempDirectory("sessfs-topo")
+      java.nio.file.Files.writeString(topoDir.resolve("assignment.json"),
+        """{"version": 1, "owners": {"a": ["2024-01-01"]}}""")
+      val e = intercept[IllegalStateException](
+        SliceRebalance.servingCatalog(Catalog.testdata(sfDir), s"sessfs://$local",
+          topoDir.toString, "a1", conf))
+      assert(e.getMessage.contains("a1") &&
+        e.getMessage.contains("SPARK_GRAFT_SLICE"), e.getMessage)
+    } finally {
+      conf.unset("fs.sessfs.impl")
+      conf.unset("fs.sessfs.impl.disable.cache")
+    }
   }
 
   test("publish fencing: racing rebalances resolve to one winner; the loser aborts by name, drops nothing") {
@@ -434,9 +464,11 @@ class SliceRebalanceSpec extends SparkSpec {
     // the fresh rows are queryable through assignment-aware members, once
     val base = Catalog.testdata(sfDir)
     val pa = new GraftServer(
-      SliceRebalance.servingCatalog(base, dirs("a"), topoDir, "a"), spark)
+      SliceRebalance.servingCatalog(base, dirs("a"), topoDir, "a",
+        spark.sparkContext.hadoopConfiguration), spark)
     val pb = new GraftServer(
-      SliceRebalance.servingCatalog(base, dirs("b"), topoDir, "b"), spark)
+      SliceRebalance.servingCatalog(base, dirs("b"), topoDir, "b",
+        spark.sparkContext.hadoopConfiguration), spark)
     Seq(pa, pb).foreach(_.start())
     try {
       val broker = new Broker(Seq(
@@ -460,4 +492,11 @@ class SliceRebalanceSpec extends SparkSpec {
         s"merged total $total != shared archive rows ${sharedBefore + freshCount}")
     } finally Seq(pa, pb).foreach(_.stop())
   }
+}
+
+/** The local filesystem under the `sessfs:` scheme, which only a
+  * configuration that maps `fs.sessfs.impl` can open. */
+class SessionSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("sessfs:///")
+  override def getScheme: String = "sessfs"
 }

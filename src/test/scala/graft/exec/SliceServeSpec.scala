@@ -46,6 +46,7 @@ class SliceServeSpec extends SparkSpec {
     def member(slice: String): GraftServer = {
       val srv = new GraftServer(
         SliceRebalance.servingCatalog(base, dirs(slice), topoDir, slice,
+          spark.sparkContext.hadoopConfiguration,
           sharedArchiveDir = sharedDir), spark)
       // the ServerMain slice wiring: drains target the shared archive,
       // this member pulls its served days right after its own drain
@@ -119,7 +120,8 @@ class SliceServeSpec extends SparkSpec {
     val base = Catalog.testdata(sfDir)
     def member(slice: String, dir: String): GraftServer = {
       val srv = new GraftServer(
-        SliceRebalance.servingCatalog(base, dir, topoDir, slice), spark)
+        SliceRebalance.servingCatalog(base, dir, topoDir, slice,
+          spark.sparkContext.hadoopConfiguration), spark)
       srv.start()
       srv
     }
@@ -164,6 +166,7 @@ class SliceServeSpec extends SparkSpec {
     def member(slice: String): GraftServer = {
       val srv = new GraftServer(
         SliceRebalance.servingCatalog(base, dirs(slice), topoDir, slice,
+          spark.sparkContext.hadoopConfiguration,
           sharedArchiveDir = sharedDir), spark)
       srv.sliceServe("events", sharedDir,
         () => SliceSync.sync(spark, sharedDir, dirs(slice), topoDir, slice))
@@ -235,6 +238,7 @@ class SliceServeSpec extends SparkSpec {
     def member(slice: String): GraftServer = {
       val srv = new GraftServer(
         SliceRebalance.servingCatalog(base, dirs(slice), topoDir, slice,
+          spark.sparkContext.hadoopConfiguration,
           sharedArchiveDir = sharedDir), spark)
       srv.start()
       srv
@@ -282,6 +286,7 @@ class SliceServeSpec extends SparkSpec {
     def member(slice: String): GraftServer = {
       val srv = new GraftServer(
         SliceRebalance.servingCatalog(base, dirs(slice), topoDir, slice,
+          spark.sparkContext.hadoopConfiguration,
           sharedArchiveDir = sharedDir), spark,
         ingestRouter = Some(new SliceRouter(topoDir, membersDir, slice)))
       srv.sliceServe("events", sharedDir,
@@ -393,7 +398,8 @@ class SliceServeSpec extends SparkSpec {
     val base = Catalog.testdata(sfDir)
     def member(slice: String, jdir: Option[String]): GraftServer = {
       val srv = new GraftServer(
-        SliceRebalance.servingCatalog(base, dirs(slice), topoDir, slice), spark,
+        SliceRebalance.servingCatalog(base, dirs(slice), topoDir, slice,
+          spark.sparkContext.hadoopConfiguration), spark,
         journalDir = jdir)
       srv.sliceServe("events", sharedDir,
         () => SliceSync.sync(spark, sharedDir, dirs(slice), topoDir, slice))
