@@ -11,9 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass tokenizers — the hot inner loop of every text operator
   * (dedup shingles, classifier features, LM grams, quality stats and BM25
-  * all start from `TextOps.tokens`). Semantically
-  * identical to the regex formulations (`TokenizeSpec` pins equality
-  * property-style, values AND schema):
+  * all start from `TextOps.tokens`). Semantically identical to the regex
+  * formulations (`TokenizeSpec` pins equality property-style, values AND
+  * schema):
   *
   *   ws(s)     == split(trim(s), "\\s+")               (java.util.regex)
   *   bpeish(s) == regexp_extract_all(s,

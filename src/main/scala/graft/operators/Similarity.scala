@@ -338,7 +338,7 @@ object Similarity {
     * production sizes; kmeans refinement can replace the sample without
     * changing the search shape).
     */
-  def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
+  private def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int): Array[Array[Double]] =
     corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .withColumn("__h", xxhash64(col("id")))
@@ -353,7 +353,7 @@ object Similarity {
     * converges to a centroidal tessellation with mildly better probe
     * recall.
     */
-  def refineCentroids(corpus: DataFrame, idCol: String, vecCol: String,
+  private def refineCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], iterations: Int): Array[Array[Double]] = {
     var cents = centroids
     val dim = centroids.headOption.map(_.length).getOrElse(0)
@@ -414,7 +414,7 @@ object Similarity {
   /** Per-query probe cells: one row per (query, probed cell) — the IVF
     * probe fan-out as a standalone frame (`ivfTopK` uses it).
     */
-  def probeCells(queries: DataFrame, idCol: String, vecCol: String,
+  private def probeCells(queries: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], nProbe: Int): DataFrame =
     queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
       .withColumn("probes", nearestCells(centroids, nProbe)(col("q_vec")))
