@@ -91,16 +91,7 @@ object Curation {
     * any scale. Null-text documents are dropped (the SQL oracle's unnest
     * drops them from its GROUP BY; filtering keeps both sides agreeing).
     */
-  def qualityRules(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    qualityRulesWithCount(df, idCol, textCol).drop("n_words")
-
-  /** [[qualityRules]] plus the word count from the SAME stats pass — for
-    * compositions (e.g. [[Pipeline.qualityPack]]) that need token counts
-    * downstream: re-deriving them would scan and tokenize the corpus a
-    * second time.
-    */
-  def qualityRulesWithCount(df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
+  def qualityRules(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val flag = (c: Column) => when(c, 1).otherwise(0)
     df.where(col(textCol).isNotNull)
       .select(col(idCol),
@@ -111,8 +102,7 @@ object Curation {
           col("__s.nWchars") <= col("__s.nWords") * 10).as("r_wordlen"),
         flag(col("__s.nStop") >= 2).as("r_stop"),
         flag(col("__s.nTypes") * 2 >= col("__s.nWords")).as("r_ttr"),
-        flag(col("__s.maxFreq") * 10 <= col("__s.nWords")).as("r_maxfreq"),
-        col("__s.nWords").as("n_words"))
+        flag(col("__s.maxFreq") * 10 <= col("__s.nWords")).as("r_maxfreq"))
       .withColumn("keep",
         col("r_nwords") * col("r_wordlen") * col("r_stop") *
           col("r_ttr") * col("r_maxfreq"))
@@ -265,60 +255,6 @@ object Curation {
       .join(broadcast(benchGrams), Seq("__gram"), "left_semi")
       .select(idCol).distinct()
   }
-
-  /** The benchmark's distinct n-gram set, collected to the driver — the
-    * same driver/executor bound [[contaminatedIds]]' broadcast join
-    * already imposes on the benchmark side (a held-out eval set, small by
-    * construction), just materialized as a probe set for
-    * [[tokenCountContamUdf]].
-    */
-  def benchmarkGramSet(benchmark: DataFrame, textCol: String,
-      n: Int): java.util.HashSet[String] = {
-    val out = new java.util.HashSet[String]()
-    benchmark
-      .select(explode(distinctGramsUdf(TextOps.tokens(col(textCol)), lit(n)))
-        .as("__gram"))
-      .distinct().collect().foreach(r => out.add(r.getString(0)))
-    out
-  }
-
-  /** Fused manifest probe for [[graft.operators.Pipeline.curate]] stage 3:
-    * per document, (token count, contaminated?) from ONE pass over the
-    * token array — token count for the mix manifest, the flag replacing
-    * the [[contaminatedIds]] gram-explode + distinct + anti-join corpus
-    * pass (one corpus tokenization instead of two, no gram rows, early
-    * exit on the first benchmark hit). Semantics identical by
-    * construction: a document is contaminated iff any of its n-grams
-    * (the [[gramAt]] space-joined form both paths share) is in the
-    * benchmark set; null token arrays return a null struct (the caller
-    * keeps those rows, matching the anti-join, with a null count
-    * matching `size(tokens(null))`).
-    *
-    * Declared NONDETERMINISTIC (the function is pure): Catalyst pushes a
-    * filter on the returned struct's flag below the projection and
-    * evaluates the UDF twice per row otherwise — the classic duplicated-
-    * evaluation shape.
-    */
-  def tokenCountContamUdf(
-      bench: org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]],
-      n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (toks: Seq[String]) =>
-      if (toks == null) null
-      else {
-        var contam = false
-        val set = bench.value
-        if (!set.isEmpty && toks.length >= n) {
-          val total = toks.length - n + 1
-          val sb = new java.lang.StringBuilder
-          var t = 0
-          while (t < total && !contam) {
-            if (set.contains(gramAt(toks, t, n, sb))) contam = true
-            t += 1
-          }
-        }
-        (toks.length.toLong, contam)
-      }
-    }.asNondeterministic()
 
   /** Graded companion to [[contaminatedIds]]: per-document overlap COUNTS
     * against the benchmark gram set — (n_grams, n_shared, flagged) where

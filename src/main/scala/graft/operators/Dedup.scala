@@ -240,8 +240,7 @@ object Dedup {
   }
 
   /** Near-dup connected components straight from the corpus — the
-    * signature cache is managed HERE (the [[Pipeline.curate]] stage-2
-    * shape): [[connectedComponents]]' first step already materializes the
+    * signature cache is managed HERE: [[connectedComponents]]' first step already materializes the
     * candidate pairs into its edge-list checkpoint, so routing through
     * the staged [[minhashNearDups]] would pay a second, redundant
     * materialization of the same pair set (r15 — one parquet round trip
@@ -418,8 +417,7 @@ object Dedup {
     * (b_id, c_id, est_jaccard) for every batch document whose minhash
     * signature agrees with a corpus document's at >= `threshold` and
     * shares at least one LSH band — the near-dup half of incremental
-    * ingestion (the batch analogue of StreamingNearDedup's cross-batch
-    * probe, without the persistent store).
+    * ingestion.
     *
     * Scale shape: batch signatures persist for the duration of the call
     * (the batch is small); the corpus is scanned twice but NEVER persisted
@@ -524,8 +522,7 @@ object Dedup {
   /** Full incremental dedup: `batch` rows that survive BOTH the exact
     * content check and the minhash near-dup check against `corpus`. The
     * exact stage runs first so verbatim re-crawls never reach the
-    * signature stage (the common case for a daily delta), mirroring
-    * [[graft.operators.Pipeline.curate]]'s stage order within one corpus.
+    * signature stage (the common case for a daily delta).
     */
   def incrementalDedup(batch: DataFrame, corpus: DataFrame, idCol: String,
       textCol: String, threshold: Double): DataFrame = {
@@ -678,8 +675,7 @@ object Dedup {
     // (id, score, component) frame — the corpus (text included) must not
     // ride through a window exchange for the sake of its singletons, which
     // by definition win their own group. Losers (members minus one winner
-    // per cluster) are bounded by true duplicate volume, the same size
-    // contract as the component map in Pipeline.curate's stage 2.
+    // per cluster) are bounded by true duplicate volume.
     val members = df.select(col(idCol), score.as("__score"))
       .join(comps, Seq(idCol))
     val w = org.apache.spark.sql.expressions.Window
@@ -1137,10 +1133,9 @@ object Dedup {
       docs.withColumn("__toks", TextOps.tokens(lower(col(textCol)))),
       idCol, "__toks", k, w)
 
-  /** [[winnowFingerprints]] from a PRE-TOKENIZED frame — the
-    * stage-handoff variant ([[graft.operators.Classifier.scoreTokens]]'
-    * counterpart): a composed pipeline tokenizes once, persists the
-    * token column, and every stage reads the materialized arrays.
+  /** [[winnowFingerprints]] from a PRE-TOKENIZED frame: a composed
+    * pipeline tokenizes once, persists the token column, and every stage
+    * reads the materialized arrays.
     */
   def winnowFingerprintsTokens(docs: DataFrame, idCol: String, toksCol: String,
       k: Int = 3, w: Int = 4): DataFrame = {
@@ -1203,19 +1198,6 @@ object Dedup {
       maxDocsPerFp: Int = 64): DataFrame = {
     require(minShared >= 1 && maxDocsPerFp >= 2)
     val fps = winnowFingerprints(docs, idCol, textCol, k, w)
-      .select(col(idCol), col("fp")).distinct()
-    cappedPairJoin(fps, "fp", idCol, maxDocsPerFp)
-      .where(col("shared") >= minShared)
-  }
-
-  /** [[winnowClonePairs]] from a PRE-TOKENIZED frame (see
-    * [[winnowFingerprintsTokens]]).
-    */
-  def winnowClonePairsTokens(docs: DataFrame, idCol: String, toksCol: String,
-      k: Int = 3, w: Int = 4, minShared: Int = 2,
-      maxDocsPerFp: Int = 64): DataFrame = {
-    require(minShared >= 1 && maxDocsPerFp >= 2)
-    val fps = winnowFingerprintsTokens(docs, idCol, toksCol, k, w)
       .select(col(idCol), col("fp")).distinct()
     cappedPairJoin(fps, "fp", idCol, maxDocsPerFp)
       .where(col("shared") >= minShared)
@@ -1291,8 +1273,8 @@ object Dedup {
     * endpoints landed in. The `(train, test)` rows are the eval-
     * contamination number every training-data pipeline must watch — a
     * near-dup of a test document inside train silently inflates eval.
-    * `splitCol` is any label column (e.g. [[Sampling.groupSplit]]'s
-    * output). Output: (split_a ≤ split_b lexicographically, n_pairs).
+    * `splitCol` is any label column (a train/val/test assignment).
+    * Output: (split_a ≤ split_b lexicographically, n_pairs).
     *
     * Scale: the pair table carries only ids; the two label joins are
     * id-keyed; winnow's cap bounds the pair count.

@@ -1,23 +1,19 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Curation, Lm, Sampling}
+import graft.operators.Curation
 import org.apache.spark.sql.functions._
 
 /** Gate queries for the round-9 corpus-modeling additions: line-level
   * boilerplate removal ([[graft.operators.Curation.removeBoilerplate]]),
-  * the corpus-trained bigram-LM quality score and DSIR importance
-  * weights ([[graft.operators.Lm]]), and length-curriculum binning
-  * ([[graft.operators.Sampling.curriculumBins]]).
+  * graph and keyword ranking, and corpus text statistics.
   *
   * Oracle strategy: the synthetic documents are single-line, so the
   * boilerplate gate plants its own chrome lines from SQL-expressible
   * per-row arithmetic (the multimodal planted-contract pattern) and both
-  * engines replay the identical injection; LM/DSIR scores follow the
-  * `q_text_bm25` float protocol (exact integer counts, `ln` terms,
-  * ROUND(,4) on both sides); curriculum boundaries interpolate integer
-  * scores at quarter fractions, which is exact in binary on both
-  * engines, so bin assignment is deterministic.
+  * engines replay the identical injection; float scores follow the
+  * `q_text_bm25` protocol (exact integer counts, `ln` terms, ROUND(,4)
+  * on both sides).
   */
 object CorpusQueries {
 
@@ -60,145 +56,6 @@ object CorpusQueries {
       Curation.removeBoilerplate(injected, "doc_id", "text", "source", 0.5)
         .select(col("doc_id"), col("n_removed"), md5(col("text")).as("clean_fp"))
         .orderBy("doc_id")
-    },
-
-    // --- quality: corpus-trained add-1 bigram LM score (the KenLM-style
-    // perplexity filter). Model trained on the FULL corpus; output
-    // bounded to doc_id < 50 per-doc rows.
-    QueryDef("q_text_lm_score",
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-        |    i -> array_to_string(tk[i:i+1], ' '))) AS gram
-        |  FROM toks WHERE len(tk) >= 2),
-        |uni AS (SELECT w1, COUNT(*) AS c1 FROM
-        |  (SELECT doc_id, unnest(tk) AS w1 FROM toks) GROUP BY 1),
-        |bi AS (SELECT gram, COUNT(*) AS c2 FROM grams GROUP BY 1),
-        |v AS (SELECT COUNT(*) AS v FROM uni),
-        |scored AS (
-        |  SELECT g.doc_id, ln((c2 + 1.0) / (c1 + 1.0 * v)) AS lp
-        |  FROM grams g
-        |  JOIN bi ON g.gram = bi.gram
-        |  JOIN uni u ON string_split(g.gram, ' ')[1] = u.w1
-        |  CROSS JOIN v),
-        |agg AS (SELECT doc_id, COUNT(*) AS n_bigrams,
-        |               ROUND(AVG(lp), 4) AS lm_score
-        |        FROM scored GROUP BY 1)
-        |SELECT d.doc_id, CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |       lm_score
-        |FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-        |WHERE d.doc_id < 50
-        |ORDER BY d.doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Lm.bigramScore(Tables.documents(s, d), "doc_id", "text")
-        .where(col("doc_id") < 50)
-        .orderBy("doc_id")
-    },
-
-    // --- interpolated Kneser-Ney bigram LM (r10): the smoothing KenLM
-    // actually ships — continuation probability from distinct-context
-    // counts, absolute discount D=0.75. Every model ingredient is an
-    // integer aggregate of the bigram table, replayed term-for-term.
-    QueryDef("q_text_lm_kn",
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-        |    i -> array_to_string(tk[i:i+1], ' '))) AS gram
-        |  FROM toks WHERE len(tk) >= 2),
-        |bi AS (SELECT gram, COUNT(*) AS c2 FROM grams GROUP BY 1),
-        |bw AS (SELECT gram, c2, string_split(gram, ' ')[1] AS w1,
-        |              string_split(gram, ' ')[2] AS w2 FROM bi),
-        |ctx AS (SELECT w1, SUM(c2) AS cctx, COUNT(*) AS n1fwd FROM bw GROUP BY 1),
-        |cont AS (SELECT w2, COUNT(*) AS n1back FROM bw GROUP BY 1),
-        |ty AS (SELECT COUNT(*) AS types FROM bi),
-        |scored AS (
-        |  SELECT g.doc_id,
-        |    ln(greatest(c2 - 0.75, 0) / cctx +
-        |       (0.75 * n1fwd / cctx) * (n1back * 1.0 / types)) AS lp
-        |  FROM grams g JOIN bw ON g.gram = bw.gram
-        |  JOIN ctx USING (w1) JOIN cont USING (w2) CROSS JOIN ty),
-        |agg AS (SELECT doc_id, COUNT(*) AS n_bigrams,
-        |               ROUND(AVG(lp), 4) AS kn_score
-        |        FROM scored GROUP BY 1)
-        |SELECT d.doc_id, CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |       kn_score
-        |FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-        |WHERE d.doc_id < 50
-        |ORDER BY d.doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Lm.knScore(Tables.documents(s, d), "doc_id", "text")
-        .where(col("doc_id") < 50)
-        .orderBy("doc_id")
-    },
-
-    // --- selection: DSIR importance weights, target = English docs, raw
-    // pool = the rest; top 20 raw docs most resembling the target
-    // (TakeOrderedAndProject, rounded-weight order with id tiebreak).
-    QueryDef("q_sample_dsir",
-      """WITH toks AS (
-        |  SELECT doc_id, lang = 'en' AS t,
-        |         string_split_regex(trim(lower(text)), '\s+') AS tk
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id, t, unnest(list_transform(range(1, len(tk)),
-        |    i -> array_to_string(tk[i:i+1], ' '))) AS gram
-        |  FROM toks WHERE len(tk) >= 2),
-        |model AS (
-        |  SELECT gram, SUM(CASE WHEN t THEN 1 ELSE 0 END) AS ct,
-        |               SUM(CASE WHEN t THEN 0 ELSE 1 END) AS cr
-        |  FROM grams GROUP BY 1),
-        |tot AS (SELECT SUM(ct) AS nt, SUM(cr) AS nr, COUNT(*) AS f FROM model),
-        |w AS (
-        |  SELECT g.doc_id,
-        |    ROUND(SUM(ln((ct + 1.0) / (nt + 1.0 * f))
-        |            - ln((cr + 1.0) / (nr + 1.0 * f))), 4) AS dsir_weight
-        |  FROM grams g JOIN model USING (gram) CROSS JOIN tot
-        |  WHERE NOT g.t GROUP BY 1)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, dsir_weight
-        |FROM w ORDER BY dsir_weight DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      Lm.importanceWeights(Tables.documents(s, d), "doc_id", "text",
-          col("lang") === "en")
-        .orderBy(col("dsir_weight").desc, col("doc_id").asc)
-        .limit(20)
-    },
-
-    // --- selection: hashed-feature DSIR (the paper's actual estimator —
-    // bigrams hashed into a FIXED 4096-bucket space before counting, so
-    // the model is bounded by construction and broadcast-safe at any
-    // corpus size). Bucket hash is the established md5-hex arithmetic
-    // (q_shuffle_shards precedent), identical in both engines.
-    QueryDef("q_sample_dsir_hashed",
-      """WITH toks AS (
-        |  SELECT doc_id, lang = 'en' AS t,
-        |         string_split_regex(trim(lower(text)), '\s+') AS tk
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id, t, unnest(list_transform(range(1, len(tk)),
-        |    i -> array_to_string(tk[i:i+1], ' '))) AS g0
-        |  FROM toks WHERE len(tk) >= 2),
-        |hashed AS (
-        |  SELECT doc_id, t,
-        |    CAST(('0x' || substring(md5(g0), 1, 8)) AS BIGINT) % 4096 AS gram
-        |  FROM grams),
-        |model AS (
-        |  SELECT gram, SUM(CASE WHEN t THEN 1 ELSE 0 END) AS ct,
-        |               SUM(CASE WHEN t THEN 0 ELSE 1 END) AS cr
-        |  FROM hashed GROUP BY 1),
-        |tot AS (SELECT SUM(ct) AS nt, SUM(cr) AS nr, COUNT(*) AS f FROM model),
-        |w AS (
-        |  SELECT h.doc_id,
-        |    ROUND(SUM(ln((ct + 1.0) / (nt + 1.0 * f))
-        |            - ln((cr + 1.0) / (nr + 1.0 * f))), 4) AS dsir_weight
-        |  FROM hashed h JOIN model USING (gram) CROSS JOIN tot
-        |  WHERE NOT h.t GROUP BY 1)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, dsir_weight
-        |FROM w ORDER BY dsir_weight DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      Lm.importanceWeights(Tables.documents(s, d), "doc_id", "text",
-          col("lang") === "en", featureBuckets = 4096)
-        .orderBy(col("dsir_weight").desc, col("doc_id").asc)
-        .limit(20)
     },
 
     // --- graph analytics: PageRank over the symmetric cosine-similarity
@@ -331,25 +188,6 @@ object CorpusQueries {
         |FROM freq GROUP BY 1 ORDER BY bucket NULLS FIRST""".stripMargin) { (s, d) =>
       graft.operators.TextRank.freqSpectrum(Tables.documents(s, d), "text")
         .orderBy("bucket")
-    },
-
-    // --- curriculum: equal-mass length tiers from broadcast exact
-    // quantile boundaries (no ntile global sort).
-    QueryDef("q_curriculum_bins",
-      """WITH b AS (SELECT quantile_cont(n_chars, [0.25, 0.5, 0.75]) AS qs
-        |           FROM documents),
-        |binned AS (
-        |  SELECT n_chars,
-        |    1 + CAST(n_chars > qs[1] AS INT) + CAST(n_chars > qs[2] AS INT)
-        |      + CAST(n_chars > qs[3] AS INT) AS bin
-        |  FROM documents CROSS JOIN b)
-        |SELECT CAST(bin AS INT) AS bin, COUNT(*) AS n_docs,
-        |       CAST(SUM(n_chars) AS BIGINT) AS score_mass,
-        |       CAST(MIN(n_chars) AS BIGINT) AS min_score,
-        |       CAST(MAX(n_chars) AS BIGINT) AS max_score
-        |FROM binned GROUP BY 1 ORDER BY bin NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.curriculumBins(Tables.documents(s, d), col("n_chars"), 4)
-        .orderBy("bin")
     },
 
     // --- TextRank keyword extraction: PageRank over the adjacent-token

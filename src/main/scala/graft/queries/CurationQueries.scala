@@ -2,20 +2,18 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.functions.VectorOps
-import graft.operators.{Curation, Sampling, Similarity, TextOps}
+import graft.operators.{Curation, Similarity, TextOps}
 import org.apache.spark.sql.functions._
 
 /** Gate queries for the corpus-curation operator suite added in round 4:
   * repetition metrics, token chunking, PII redaction, eval-set
-  * decontamination ([[graft.operators.Curation]]), deterministic sampling
-  * ([[graft.operators.Sampling]]), the codegen'd cosine expression
+  * decontamination ([[graft.operators.Curation]]), the codegen'd cosine expression
   * ([[graft.functions.VectorOps]]) and IVF cell assignment
   * ([[graft.operators.Similarity.assignCells]]).
   *
   * Every operator here is fully SQL-expressible, so each gate gets a real
   * DuckDB value compare (no rows-only entries): n-grams are rebuilt in SQL
-  * via zipped `unnest(ts)`/`unnest(range(...))` position joins, sampling
-  * thresholds are the same md5-prefix strings in both engines, and cell
+  * via zipped `unnest(ts)`/`unnest(range(...))` position joins, and cell
   * assignment uses one-hot centroids so argmin-L2 reduces to an exact
   * argmax over the first four float components.
   */
@@ -823,44 +821,6 @@ object CurationQueries {
         .orderBy("doc_id")
     },
 
-    // --- deterministic Bernoulli sample (content-hash threshold) ------------
-    // fraction 0.25 → 16384/65536 → md5 prefix < '4000'; the sample is a
-    // pure function of doc_id, so both engines select the identical rows
-    QueryDef("q_sample_hash",
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(doc_id) AS BIGINT) AS id_sum
-        |FROM documents
-        |WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'""".stripMargin) { (s, d) =>
-      Sampling.hashSample(Tables.documents(s, d), col("doc_id"), 0.25)
-        .agg(count(lit(1)).as("n"), sum("doc_id").as("id_sum"))
-    },
-
-    // --- stratified sampling (per-language rebalancing rates) ---------------
-    QueryDef("q_sample_stratified",
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS cnt FROM documents
-        |WHERE CASE
-        |  WHEN lang = 'en' THEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '199a'
-        |  WHEN lang = 'de' THEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '8000'
-        |  ELSE TRUE END
-        |GROUP BY lang ORDER BY lang NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.stratifiedSample(Tables.documents(s, d), col("lang"), col("doc_id"),
-          Map("en" -> 0.1, "de" -> 0.5))
-        .groupBy("lang").agg(count(lit(1)).as("cnt"))
-        .orderBy("lang")
-    },
-
-    // --- exact deterministic per-key cap (reservoir shape) ------------------
-    QueryDef("q_sample_cap",
-      """SELECT lang, CAST(doc_id AS BIGINT) AS doc_id FROM (
-        |  SELECT lang, doc_id, row_number() OVER (PARTITION BY lang
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)) ASC, doc_id ASC) AS rn
-        |  FROM documents) t
-        |WHERE rn <= 5
-        |ORDER BY lang NULLS FIRST, doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.capPerKey(Tables.documents(s, d), "lang", "doc_id", 5)
-        .select("lang", "doc_id")
-        .orderBy("lang", "doc_id")
-    },
-
     // --- codegen'd cosine expression ----------------------------------------
     // the exactness contract (CosineSim ≡ the interpreted HOF fold,
     // bit-identical) asserted in-query over every adjacent-id pair; the
@@ -940,268 +900,5 @@ object CurationQueries {
         .select(col("cell").cast("int").as("cell"), col("n"), col("mean_sil"))
         .orderBy("cell")
     },
-
-    // --- fastText-style hashed linear quality classifier (r10): unigram +
-    // bigram features hashed into 2^18 buckets, Knuth-mix integer weights
-    // summed exactly per doc (order-free), one sigmoid + round at the
-    // end. The oracle replays every bucket and weight; the Spark side is
-    // a pure map-side fold (zero shuffles — ClassifierSpec asserts).
-    QueryDef("q_quality_classifier",
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-        |  FROM documents),
-        |feats AS (
-        |  SELECT doc_id, unnest(list_concat(tk,
-        |    list_transform(range(1, len(tk)),
-        |      i -> array_to_string(tk[i:i+1], ' ')))) AS f
-        |  FROM toks),
-        |w AS (
-        |  SELECT doc_id,
-        |    ((CAST(('0x' || substring(md5(f), 1, 15)) AS BIGINT) % 262144) + 7)
-        |      * 2654435761 % 2001 - 1000 AS wm
-        |  FROM feats),
-        |agg AS (SELECT doc_id, COUNT(*) AS n, SUM(wm) AS s FROM w GROUP BY 1),
-        |q AS (SELECT doc_id, n,
-        |        ROUND(1.0 / (1.0 + exp(-(s / (n * 1000.0)))), 4) AS quality
-        |      FROM agg)
-        |SELECT d.doc_id, CAST(coalesce(q.n, 0) AS BIGINT) AS n_feats,
-        |  q.quality, coalesce(q.quality >= 0.5, false) AS keep
-        |FROM documents d LEFT JOIN q ON d.doc_id = q.doc_id
-        |ORDER BY d.doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      // sort the CHEAP INPUT, not the scored output: a global orderBy
-      // over score's no-exchange output re-executes the whole md5 fold
-      // for the range-partitioner's sampling pass (~3x the gate,
-      // measured 221 s vs 7 s at sf10), and the single-row-group corpus
-      // file otherwise scans as ONE task — the input range exchange
-      // restores both order and parallelism, and score is a projection,
-      // so the order survives
-      graft.operators.Classifier.score(
-          Tables.documents(s, d).orderBy("doc_id"), "text")
-        .select("doc_id", "n_feats", "quality", "keep")
-    },
-
-    // --- IN-ENGINE classifier training (session 4): two full-batch
-    // logistic GD epochs over the same hashed features, weights
-    // quantized to integer milli-units per epoch — margins are exact
-    // integer sums, the one floating gradient sum is crushed by the
-    // round-to-milli, so the SQL oracle replays training term for term.
-    // Label + signal: the planted-contract pattern — docs with
-    // doc_id % 3 == 0 carry an appended marker run (10 tokens, a meaningful fraction of the mean-normalized logit) and the label
-    // follows the same rule, so the learnable signal is SQL-derivable
-    // on both sides and training must place its weight on the marker's
-    // bucket (held-out separation proves it does, q_classifier_eval).
-    QueryDef("q_classifier_train",
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text ||
-        |      CASE WHEN doc_id % 3 = 0 THEN repeat(' qualitymarker', 10) ELSE '' END)),
-        |    '\s+') AS tk
-        |  FROM documents WHERE doc_id < 300),
-        |feats AS (
-        |  SELECT doc_id, unnest(list_concat(tk,
-        |    list_transform(range(1, len(tk)),
-        |      i -> array_to_string(tk[i:i+1], ' ')))) AS f
-        |  FROM toks),
-        |x AS (SELECT doc_id,
-        |        CAST(('0x' || substring(md5(f), 1, 15)) AS BIGINT) % 4096 AS bucket,
-        |        CAST(COUNT(*) AS BIGINT) AS x
-        |      FROM feats GROUP BY 1, 2),
-        |nf AS (SELECT doc_id, SUM(x) AS nf FROM x GROUP BY 1),
-        |lab AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN 1.0 ELSE 0.0 END AS y
-        |        FROM documents WHERE doc_id < 300),
-        |nd AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n FROM x),
-        |r1 AS (SELECT lab.doc_id, 0.5 - y AS r FROM lab JOIN nf USING (doc_id)),
-        |g1 AS (SELECT bucket, CAST(round(10000.0 * SUM(r * x) / n) AS BIGINT) AS g
-        |       FROM x JOIN r1 USING (doc_id) CROSS JOIN nd GROUP BY bucket, n),
-        |w1 AS (SELECT bucket, -g AS w FROM g1),
-        |m2 AS (SELECT doc_id, SUM(x * w) AS mm FROM x JOIN w1 USING (bucket)
-        |       GROUP BY 1),
-        |r2 AS (SELECT lab.doc_id,
-        |         1.0 / (1.0 + exp(-(mm / (1000.0 * nf)))) - y AS r
-        |       FROM lab JOIN m2 USING (doc_id) JOIN nf USING (doc_id)),
-        |g2 AS (SELECT bucket, CAST(round(10000.0 * SUM(r * x) / n) AS BIGINT) AS g
-        |       FROM x JOIN r2 USING (doc_id) CROSS JOIN nd GROUP BY bucket, n),
-        |w2 AS (SELECT w1.bucket, w1.w - g2.g AS w FROM w1 JOIN g2 USING (bucket))
-        |SELECT CAST(bucket AS BIGINT) AS bucket, CAST(w AS BIGINT) AS w_milli
-        |FROM w2 WHERE w != 0 ORDER BY bucket NULLS FIRST""".stripMargin) { (s, d) =>
-      val marked = Tables.documents(s, d).where(col("doc_id") < 300)
-        .withColumn("text", concat(col("text"),
-          when(col("doc_id") % 3 === 0, repeat(lit(" qualitymarker"), 10)).otherwise(lit(""))))
-      graft.operators.Classifier.trainLogistic(marked, "doc_id", "text",
-          col("doc_id") % 3 === 0, bucketBits = 12, epochs = 2, lr = 10.0)
-        .orderBy("bucket")
-    },
-
-    // --- held-out evaluation (session 4): train on docs < 300, score the
-    // 300-499 slice with the fitted table, confusion-matrix scorecard —
-    // the complete train → eval workflow with the model, the scoring,
-    // and the metrics all replayed in one oracle.
-    QueryDef("q_classifier_eval",
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text ||
-        |      CASE WHEN doc_id % 3 = 0 THEN repeat(' qualitymarker', 10) ELSE '' END)),
-        |    '\s+') AS tk
-        |  FROM documents WHERE doc_id < 300),
-        |feats AS (
-        |  SELECT doc_id, unnest(list_concat(tk,
-        |    list_transform(range(1, len(tk)),
-        |      i -> array_to_string(tk[i:i+1], ' ')))) AS f
-        |  FROM toks),
-        |x AS (SELECT doc_id,
-        |        CAST(('0x' || substring(md5(f), 1, 15)) AS BIGINT) % 4096 AS bucket,
-        |        CAST(COUNT(*) AS BIGINT) AS x
-        |      FROM feats GROUP BY 1, 2),
-        |nf AS (SELECT doc_id, SUM(x) AS nf FROM x GROUP BY 1),
-        |lab AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN 1.0 ELSE 0.0 END AS y
-        |        FROM documents WHERE doc_id < 300),
-        |nd AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n FROM x),
-        |r1 AS (SELECT lab.doc_id, 0.5 - y AS r FROM lab JOIN nf USING (doc_id)),
-        |g1 AS (SELECT bucket, CAST(round(10000.0 * SUM(r * x) / n) AS BIGINT) AS g
-        |       FROM x JOIN r1 USING (doc_id) CROSS JOIN nd GROUP BY bucket, n),
-        |w1 AS (SELECT bucket, -g AS w FROM g1),
-        |m2 AS (SELECT doc_id, SUM(x * w) AS mm FROM x JOIN w1 USING (bucket)
-        |       GROUP BY 1),
-        |r2 AS (SELECT lab.doc_id,
-        |         1.0 / (1.0 + exp(-(mm / (1000.0 * nf)))) - y AS r
-        |       FROM lab JOIN m2 USING (doc_id) JOIN nf USING (doc_id)),
-        |g2 AS (SELECT bucket, CAST(round(10000.0 * SUM(r * x) / n) AS BIGINT) AS g
-        |       FROM x JOIN r2 USING (doc_id) CROSS JOIN nd GROUP BY bucket, n),
-        |w2 AS (SELECT w1.bucket, w1.w - g2.g AS w FROM w1 JOIN g2 USING (bucket)
-        |       WHERE w1.w - g2.g != 0),
-        |ttoks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text ||
-        |      CASE WHEN doc_id % 3 = 0 THEN repeat(' qualitymarker', 10) ELSE '' END)),
-        |    '\s+') AS tk
-        |  FROM documents WHERE doc_id >= 300 AND doc_id < 500),
-        |tfeats AS (
-        |  SELECT doc_id, unnest(list_concat(tk,
-        |    list_transform(range(1, len(tk)),
-        |      i -> array_to_string(tk[i:i+1], ' ')))) AS f
-        |  FROM ttoks),
-        |tb AS (SELECT doc_id,
-        |         CAST(('0x' || substring(md5(f), 1, 15)) AS BIGINT) % 4096 AS bucket
-        |       FROM tfeats),
-        |ts AS (SELECT tb.doc_id, COUNT(*) AS n,
-        |         SUM(COALESCE(w2.w, 0)) AS s
-        |       FROM tb LEFT JOIN w2 USING (bucket) GROUP BY 1),
-        |sc AS (SELECT t.doc_id,
-        |         COALESCE(ROUND(1.0 / (1.0 + exp(-(s / (n * 1000.0)))), 4) >= 0.5,
-        |                  false) AS keep,
-        |         t.doc_id % 3 = 0 AS actual
-        |       FROM ttoks t LEFT JOIN ts USING (doc_id)),
-        |cm AS (SELECT
-        |    CAST(SUM(CASE WHEN keep AND actual THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |    CAST(SUM(CASE WHEN keep AND NOT actual THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |    CAST(SUM(CASE WHEN NOT keep AND NOT actual THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-        |    CAST(SUM(CASE WHEN NOT keep AND actual THEN 1 ELSE 0 END) AS BIGINT) AS fn
-        |  FROM sc)
-        |SELECT tp, fp, tn, fn,
-        |  ROUND(CAST(tp + tn AS DOUBLE) / (tp + fp + tn + fn), 4) AS accuracy,
-        |  CASE WHEN tp + fp > 0
-        |       THEN ROUND(CAST(tp AS DOUBLE) / (tp + fp), 4) END AS precision,
-        |  CASE WHEN tp + fn > 0
-        |       THEN ROUND(CAST(tp AS DOUBLE) / (tp + fn), 4) END AS recall,
-        |  CASE WHEN tp + fp + fn > 0
-        |       THEN ROUND(2.0 * tp / (2.0 * tp + fp + fn), 4) END AS f1
-        |FROM cm""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d)
-        .withColumn("text", concat(col("text"),
-          when(col("doc_id") % 3 === 0, repeat(lit(" qualitymarker"), 10)).otherwise(lit(""))))
-      val w = graft.operators.Classifier.trainLogistic(
-        docs.where(col("doc_id") < 300), "doc_id", "text",
-        col("doc_id") % 3 === 0, bucketBits = 12, epochs = 2, lr = 10.0)
-      val scored = graft.operators.Classifier.scoreWith(
-        docs.where(col("doc_id") >= 300 && col("doc_id") < 500),
-        "doc_id", "text", w, bucketBits = 12)
-      graft.operators.Classifier.confusion(scored, col("keep"),
-        col("doc_id") % 3 === 0)
-    },
-
-    // --- threshold calibration (session 4): the F1-max cut over the
-    // hash-model qualities against an id-derivable label — candidate
-    // thresholds are the DISTINCT rounded qualities (≤ 10^4+1 at any
-    // corpus size), so the cumulative sweep window is bounded by
-    // construction. Ties break toward the higher threshold.
-    QueryDef("q_classifier_calibrate",
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-        |  FROM documents),
-        |feats AS (
-        |  SELECT doc_id, unnest(list_concat(tk,
-        |    list_transform(range(1, len(tk)),
-        |      i -> array_to_string(tk[i:i+1], ' ')))) AS f
-        |  FROM toks),
-        |wm AS (
-        |  SELECT doc_id,
-        |    ((CAST(('0x' || substring(md5(f), 1, 15)) AS BIGINT) % 262144) + 7)
-        |      * 2654435761 % 2001 - 1000 AS wm
-        |  FROM feats),
-        |agg AS (SELECT doc_id, COUNT(*) AS n, SUM(wm) AS s FROM wm GROUP BY 1),
-        |perdoc AS (SELECT d.doc_id, d.n_chars,
-        |    ROUND(1.0 / (1.0 + exp(-(s / (n * 1000.0)))), 4) AS q
-        |  FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id),
-        |byq AS (SELECT q,
-        |    CAST(SUM(CASE WHEN n_chars > 300 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-        |    CAST(SUM(CASE WHEN n_chars > 300 THEN 0 ELSE 1 END) AS BIGINT) AS neg
-        |  FROM perdoc WHERE q IS NOT NULL GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(CASE WHEN n_chars > 300 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS allpos FROM perdoc),
-        |swept AS (SELECT q,
-        |    SUM(pos) OVER (ORDER BY q DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp,
-        |    SUM(neg) OVER (ORDER BY q DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fp
-        |  FROM byq),
-        |f AS (SELECT q, tp, fp, allpos - tp AS fn,
-        |    ROUND(2.0 * tp / (2.0 * tp + fp + (allpos - tp)), 4) AS f1
-        |  FROM swept CROSS JOIN tot)
-        |SELECT q AS threshold, CAST(tp AS BIGINT) AS tp,
-        |  CAST(fp AS BIGINT) AS fp, CAST(fn AS BIGINT) AS fn, f1
-        |FROM f ORDER BY f1 DESC, q DESC LIMIT 1""".stripMargin) { (s, d) =>
-      val scored = graft.operators.Classifier.score(
-        Tables.documents(s, d), "text")
-      graft.operators.Classifier.calibrateThreshold(scored,
-        col("quality"), col("n_chars") > 300)
-    },
-
-    // --- ranking AUC (session 4): tie-corrected Mann-Whitney over the
-    // same bounded per-quality count table as the calibration sweep;
-    // 2xU stays an exact integer, one division at the end. NULLs rank
-    // below every real quality.
-    QueryDef("q_classifier_auc",
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-        |  FROM documents),
-        |feats AS (
-        |  SELECT doc_id, unnest(list_concat(tk,
-        |    list_transform(range(1, len(tk)),
-        |      i -> array_to_string(tk[i:i+1], ' ')))) AS f
-        |  FROM toks),
-        |wm AS (
-        |  SELECT doc_id,
-        |    ((CAST(('0x' || substring(md5(f), 1, 15)) AS BIGINT) % 262144) + 7)
-        |      * 2654435761 % 2001 - 1000 AS wm
-        |  FROM feats),
-        |agg AS (SELECT doc_id, COUNT(*) AS n, SUM(wm) AS s FROM wm GROUP BY 1),
-        |perdoc AS (SELECT d.doc_id, d.n_chars,
-        |    COALESCE(ROUND(1.0 / (1.0 + exp(-(s / (n * 1000.0)))), 4),
-        |             CAST('-infinity' AS DOUBLE)) AS q
-        |  FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id),
-        |byq AS (SELECT q,
-        |    CAST(SUM(CASE WHEN n_chars > 300 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-        |    CAST(SUM(CASE WHEN n_chars > 300 THEN 0 ELSE 1 END) AS BIGINT) AS neg
-        |  FROM perdoc GROUP BY 1),
-        |cum AS (SELECT q, pos, neg,
-        |    COALESCE(SUM(neg) OVER (ORDER BY q ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS negBelow
-        |  FROM byq)
-        |SELECT ROUND(CAST(SUM(pos * negBelow * 2 + pos * neg) AS DOUBLE)
-        |    / (2.0 * SUM(pos) * SUM(neg)), 4) AS auc,
-        |  CAST(SUM(pos) AS BIGINT) AS n_pos, CAST(SUM(neg) AS BIGINT) AS n_neg
-        |FROM cum""".stripMargin) { (s, d) =>
-      val scored = graft.operators.Classifier.score(
-        Tables.documents(s, d), "text")
-      graft.operators.Classifier.auc(scored, col("quality"),
-        col("n_chars") > 300)
-    }
   )
 }

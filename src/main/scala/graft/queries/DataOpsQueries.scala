@@ -1,22 +1,19 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Curation, Dedup, Sampling, Similarity}
+import graft.operators.{Curation, Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Gate queries for the round-8 data-pipeline additions: exact cosine
   * radius search, cluster-balanced sampling and hard-negative mining
   * ([[graft.operators.Similarity]]), the Gopher-style quality-rule filter
-  * ([[graft.operators.Curation]]), the deterministic training-shard
-  * shuffle ([[graft.operators.Sampling]]), hybrid BM25→cosine retrieval
-  * ([[graft.operators.TextRank]]) and the quality-gated packing
-  * composition ([[graft.operators.Pipeline.qualityPack]]).
+  * ([[graft.operators.Curation]]) and hybrid BM25→cosine retrieval
+  * ([[graft.operators.TextRank]]).
   *
   * Oracle strategy per gate: searches emit ids only, so DuckDB recomputes
   * the same double-precision cosine / argmin-L2 exactly (the
   * q_emb_near_dup precedent); quality rules are integer
-  * cross-multiplications (float-free); the shard shuffle and pack shards
-  * are the same md5 hex arithmetic in both engines; hybrid retrieval
+  * cross-multiplications (float-free); hybrid retrieval
   * composes the rounded BM25 oracle with an exact cosine rerank.
   */
 object DataOpsQueries {
@@ -580,89 +577,6 @@ object DataOpsQueries {
         .orderBy("query_id")
     },
 
-    // --- composition: quality-gated no-split packing as ONE job (the
-    // round's new operators chained — rule filter, map-side, feeds the
-    // deterministic hash-shard next-fit pack). Oracle composes the two
-    // exact replays: the quality CTE gates the recursive pack CTE.
-    QueryDef("q_pipeline_quality_pack",
-      """WITH RECURSIVE toks AS (SELECT doc_id AS id, unnest(string_split_regex(trim(text), '\s+')) AS tok
-        |              FROM documents),
-        |perdoc AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n_words,
-        |  CAST(SUM(len(tok)) AS BIGINT) AS n_wchars,
-        |  CAST(COUNT(DISTINCT tok) AS BIGINT) AS n_types,
-        |  CAST(SUM(CASE WHEN tok IN ('the','a','of','and','to','in','is')
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
-        |  FROM toks GROUP BY 1),
-        |maxf AS (SELECT id, CAST(MAX(c) AS BIGINT) AS max_freq
-        |         FROM (SELECT id, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2)
-        |         GROUP BY 1),
-        |kept AS (SELECT id AS doc_id, n_words AS n FROM perdoc JOIN maxf USING (id)
-        |  WHERE n_words >= 30 AND n_wchars >= 4*n_words AND n_wchars <= 10*n_words
-        |    AND n_stop >= 2 AND 2*n_types >= n_words AND 10*max_freq <= n_words),
-        |t AS (SELECT doc_id, n,
-        |    CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 8 AS shard
-        |  FROM kept),
-        |o AS (SELECT doc_id, shard, n,
-        |        row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn FROM t),
-        |pack AS (
-        |  SELECT shard, rn, doc_id, n, CAST(0 AS BIGINT) AS bin, n AS fill
-        |  FROM o WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.shard, o.rn, o.doc_id, o.n,
-        |    CASE WHEN p.fill + o.n <= 128 THEN p.bin ELSE p.bin + 1 END,
-        |    CASE WHEN p.fill + o.n <= 128 THEN p.fill + o.n ELSE o.n END
-        |  FROM pack p JOIN o ON o.shard = p.shard AND o.rn = p.rn + 1)
-        |SELECT CAST(shard AS INT) AS shard, bin, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n) AS BIGINT) AS n_tokens
-        |FROM pack GROUP BY 1, 2
-        |ORDER BY shard NULLS FIRST, bin NULLS FIRST""".stripMargin) { (s, d) =>
-      graft.operators.Pipeline.qualityPack(Tables.documents(s, d),
-          "doc_id", "text", packBudget = 128, nShards = 8)
-        .groupBy("shard", "bin")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
-        .orderBy("shard", "bin")
-    },
-
-    // --- deterministic training-shard shuffle: content-hash shard + within-
-    // shard order, a pure function of the data (identical md5 hex
-    // arithmetic in both engines).
-    // --- leakage-safe split: train/val/test assigned by md5 of the SOURCE
-    // group, so near-duplicate docs sharing provenance can never straddle
-    // train and eval. Pure map-side when-chain — identical hex-prefix
-    // thresholds in both engines (0.8/0.1/0.1 → 'cccd'/'e666').
-    QueryDef("q_group_split",
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-        |  CASE WHEN substring(md5(source),1,4) < 'cccd' THEN 'train'
-        |       WHEN substring(md5(source),1,4) < 'e666' THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.groupSplit(Tables.documents(s, d), col("source"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "source", "split")
-        .orderBy("doc_id")
-    },
-
-    // --- temperature mixture sampling: per-language keep rates from
-    // sqrt-count weights (alpha = 0.5), derived in integer arithmetic so
-    // both engines select the identical rows. en (218 docs) is tamed to
-    // its temperature share while tail languages keep ~45%.
-    QueryDef("q_mixture_sample",
-      """WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY 1),
-        |w AS (SELECT lang, n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS w FROM c),
-        |tot AS (SELECT SUM(w) AS tw FROM w),
-        |r AS (SELECT lang, LEAST(CAST(65536 AS BIGINT), (65536 * 200 * w) // (tw * n)) AS rate16
-        |      FROM w CROSS JOIN tot)
-        |SELECT CAST(d.doc_id AS BIGINT) AS doc_id, d.lang
-        |FROM documents d JOIN r USING (lang)
-        |WHERE r.rate16 >= 65536
-        |   OR CAST(('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)),1,4)) AS BIGINT) < r.rate16
-        |ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.mixtureSample(Tables.documents(s, d), "lang", col("doc_id"),
-          budgetRows = 200)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    },
-
     // --- keyword extraction: top-3 TF-IDF terms per document (smoothed
     // ln((N+1)/(df+1))+1 idf; scores rounded to 4dp, ties by term).
     QueryDef("q_tfidf_topk",
@@ -701,30 +615,6 @@ object DataOpsQueries {
         .orderBy("doc_id")
     },
 
-    // --- epoch-aware mixture: upsampling counterpart of q_mixture_sample.
-    // Tail sources repeat (epoch column) up to the 4-epoch cap; the repeat
-    // count per row is integer-exact ((rate16 DIV 2^16) + hash-fraction),
-    // so both engines emit the identical multiset.
-    QueryDef("q_mixture_epochs",
-      """WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY 1),
-        |w AS (SELECT lang, n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS w FROM c),
-        |tot AS (SELECT SUM(w) AS tw FROM w),
-        |r AS (SELECT lang, LEAST(CAST(262144 AS BIGINT), (65536 * 1000 * w) // (tw * n)) AS rate16
-        |      FROM w CROSS JOIN tot),
-        |d2 AS (SELECT d.doc_id, d.lang, r.rate16,
-        |       CAST(('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)),1,4)) AS BIGINT) AS h
-        |       FROM documents d JOIN r USING (lang)),
-        |cp AS (SELECT doc_id, lang,
-        |       CAST((rate16 // 65536) + CASE WHEN h < rate16 % 65536 THEN 1 ELSE 0 END AS BIGINT) AS copies
-        |       FROM d2)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, CAST(unnest(range(copies)) AS BIGINT) AS epoch
-        |FROM cp WHERE copies > 0 ORDER BY doc_id NULLS FIRST, epoch NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.mixtureEpochs(Tables.documents(s, d), "lang", col("doc_id"),
-          budgetRows = 1000, maxEpochs = 4)
-        .select("doc_id", "lang", "epoch")
-        .orderBy("doc_id", "epoch")
-    },
-
     // --- normalized-key dedup: exact dedup one rung below minhash — the
     // planted copies differ only by case and punctuation, and collapse
     // onto their originals under the canonical form. Pure character-class
@@ -755,45 +645,6 @@ object DataOpsQueries {
         .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_members"))
         .select("doc_id", "n_members")
         .orderBy("doc_id")
-    },
-
-    // --- exact-size deterministic sample: the 100 hash-smallest ids.
-    // TakeOrderedAndProject in the engine; identical (md5, id) order in
-    // DuckDB, so the picked set matches exactly.
-    QueryDef("q_sample_exact_n",
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id FROM
-        | (SELECT doc_id FROM documents ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 100)
-        |ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.exactSample(Tables.documents(s, d), col("doc_id"), 100)
-        .select("doc_id")
-        .orderBy("doc_id")
-    },
-
-    // --- fixed-size-sample quantile estimation: exact interpolated
-    // percentiles over the deterministic 2000-row hash-smallest sample —
-    // the 100 TB quantile pattern (a full-table exact percentile sorts
-    // per-group value SETS; the sample is TakeOrderedAndProject + a
-    // 2000-row agg at ANY corpus size, and the estimate's error is the
-    // standard sampling bound, not engine-dependent sketch error). The
-    // pick is a pure function of the data, so the oracle replays the
-    // identical sample and lands on the identical percentiles — no
-    // tolerance flag needed, unlike q_percentile_approx's sketch.
-    QueryDef("q_quantile_sample",
-      """WITH smp AS (
-        |  SELECT event_type, value FROM events
-        |  ORDER BY md5(CAST(event_id AS VARCHAR)), event_id LIMIT 2000)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |  ROUND(quantile_cont(value, 0.50), 4) AS p50,
-        |  ROUND(quantile_cont(value, 0.95), 4) AS p95
-        |FROM smp GROUP BY 1 ORDER BY event_type NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.exactSample(
-          Tables.events(s, d).select("event_id", "event_type", "value"),
-          col("event_id"), 2000)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          round(expr("percentile(value, 0.5)"), 4).as("p50"),
-          round(expr("percentile(value, 0.95)"), 4).as("p95"))
-        .orderBy(asc_nulls_first("event_type"))
     },
 
     // --- token-length histogram per source (mix/packing planning):
@@ -878,17 +729,5 @@ object DataOpsQueries {
           md5(col("text")).as("fp"))
         .orderBy("doc_id")
     },
-
-    QueryDef("q_shuffle_shards",
-      """WITH h AS (SELECT doc_id, md5(text) AS hx FROM documents),
-        |s AS (SELECT doc_id, hx,
-        |        CAST(('0x' || substring(hx, 1, 8)) AS BIGINT) % 16 AS shard
-        |      FROM h)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(shard AS INT) AS shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY hx, doc_id) AS BIGINT) AS pos
-        |FROM s ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.shardShuffle(Tables.documents(s, d), "doc_id", "text", nShards = 16)
-        .orderBy("doc_id")
-    }
   )
 }

@@ -1,14 +1,13 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Dedup, Sampling, TextRank}
+import graft.operators.{Dedup, TextRank}
 import org.apache.spark.sql.functions._
 
 /** Gate queries for the round-9 matching/profiling additions: corpus-wide
-  * paragraph dedup ([[graft.operators.Dedup.paragraphDedup]]), the
+  * paragraph dedup ([[graft.operators.Dedup.paragraphDedup]]) and the
   * n-gram uniqueness profile
-  * ([[graft.operators.TextRank.ngramUniqueness]]) and per-group score
-  * calibration ([[graft.operators.Sampling.calibrateScores]]).
+  * ([[graft.operators.TextRank.ngramUniqueness]]).
   *
   * Oracle strategy: paragraph dedup injects shared HEAD/TAIL paragraphs
   * around each single-line document (the boilerplate-gate injection
@@ -36,22 +35,6 @@ object MatchQueries {
         |ORDER BY source NULLS FIRST""".stripMargin) { (s, d) =>
       Dedup.sourceProfile(Tables.documents(s, d), "text", "source")
         .orderBy("source")
-    },
-
-    // --- systematic weighted sampling: k=50 thresholds over the exact
-    // cumulative n_chars axis; integer div on both sides, zero floats.
-    QueryDef("q_sample_weighted",
-      """WITH c AS (SELECT doc_id, n_chars AS w,
-        |                  SUM(n_chars) OVER (ORDER BY doc_id) AS cum
-        |           FROM documents),
-        |t AS (SELECT SUM(n_chars) AS tot FROM documents)
-        |SELECT doc_id, CAST(w AS BIGINT) AS weight
-        |FROM c CROSS JOIN t
-        |WHERE (cum * 50) // tot > ((cum - w) * 50) // tot
-        |ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.systematicWeightedSample(Tables.documents(s, d), "doc_id",
-          col("n_chars"), k = 50)
-        .orderBy("doc_id")
     },
 
     // --- paragraph dedup: HEAD paragraphs repeat every 40 docs, TAIL
@@ -154,29 +137,6 @@ object MatchQueries {
         |FROM documents d LEFT JOIN per USING (doc_id)
         |ORDER BY d.doc_id NULLS FIRST""".stripMargin) { (s, d) =>
       TextRank.ngramUniqueness(Tables.documents(s, d), "doc_id", "text", n = 3)
-        .orderBy("doc_id")
-    },
-
-    // --- score calibration: n_chars percentile-ranked and z-scored
-    // WITHIN language (the cross-language threshold-comparability fix).
-    // Exact integer moments; ties total-ordered by (score, id).
-    QueryDef("q_score_calibration",
-      """WITH m AS (SELECT lang, COUNT(*) AS n, SUM(n_chars) AS s,
-        |                  SUM(n_chars * n_chars) AS ss
-        |           FROM documents GROUP BY 1),
-        |r AS (SELECT doc_id, lang, n_chars AS raw,
-        |  ROUND(percent_rank() OVER (PARTITION BY lang ORDER BY n_chars, doc_id), 4)
-        |    AS pct
-        |  FROM documents)
-        |SELECT r.doc_id, r.lang, CAST(raw AS BIGINT) AS raw, pct,
-        |  CASE WHEN n > 1 AND (ss * 1.0 - s * 1.0 * s / n) / (n - 1) > 0
-        |       THEN ROUND((raw - s * 1.0 / n) /
-        |                  sqrt((ss * 1.0 - s * 1.0 * s / n) / (n - 1)), 4)
-        |       ELSE 0.0 END AS z
-        |FROM r JOIN m USING (lang)
-        |ORDER BY r.doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Sampling.calibrateScores(Tables.documents(s, d), "doc_id", "lang",
-          col("n_chars"))
         .orderBy("doc_id")
     },
   )

@@ -1,16 +1,14 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Packing, Similarity, TextOps}
+import graft.operators.{Similarity, TextOps}
 import org.apache.spark.sql.functions._
 
-/** Gate queries for the round-6 training-data operators: GPT-style
-  * sequence packing ([[graft.operators.Packing]]) and SemDeDup-style
-  * cluster-then-dedup ([[graft.operators.Similarity.semanticNearDups]]).
+/** Gate queries for the round-6 training-data operators: connected
+  * components over dedup pairs and SemDeDup-style cluster-then-dedup
+  * ([[graft.operators.Similarity.semanticNearDups]]).
   *
-  * Packing is fully SQL-expressible (the oracle rebuilds the exclusive
-  * prefix sum with a window); semantic dedup follows the planted-recall
-  * contract of the LSH gates — the planted copy is each vector SCALED by
+  * Semantic dedup follows the planted-recall contract of the LSH gates — the planted copy is each vector SCALED by
   * 2 (cosine exactly-ish 1, same argmin-L2 cell for any positive scale),
   * so per-cell planted counts are pinned exactly by the oracle's one-hot
   * cell CASE (the q_ivf_cells pattern).
@@ -18,102 +16,6 @@ import org.apache.spark.sql.functions._
 object PackQueries {
 
   val defs: Seq[QueryDef] = Seq(
-    // --- sequence packing: concat-and-chunk offsets -------------------------
-    QueryDef("q_pack_sequences",
-      """WITH t AS (
-        |  SELECT doc_id, CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, n,
-        |    CAST(COALESCE(SUM(n) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start
-        |  FROM t)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, n AS n_tokens, start AS start_tok,
-        |  start // 128 AS first_seq,
-        |  CASE WHEN n > 0 THEN (start + n - 1) // 128 ELSE start // 128 END AS last_seq
-        |FROM p ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), size(TextOps.tokens(col("text"))).as("n"))
-      Packing.packOffsets(docs, "doc_id", "n", 128).orderBy("doc_id")
-    },
-
-    // --- no-split packing: doc never straddles a sequence (padded-pack
-    // form). Deterministic hash shards (same md5 arithmetic in DuckDB) +
-    // within-shard next-fit replayed exactly by a recursive CTE.
-    QueryDef("q_pack_bins",
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id,
-        |    CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 16 AS shard,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n
-        |  FROM documents),
-        |o AS (SELECT doc_id, shard, n,
-        |        row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn FROM t),
-        |pack AS (
-        |  SELECT shard, rn, doc_id, n, CAST(0 AS BIGINT) AS bin, n AS fill
-        |  FROM o WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.shard, o.rn, o.doc_id, o.n,
-        |    CASE WHEN p.fill + o.n <= 128 THEN p.bin ELSE p.bin + 1 END,
-        |    CASE WHEN p.fill + o.n <= 128 THEN p.fill + o.n ELSE o.n END
-        |  FROM pack p JOIN o ON o.shard = p.shard AND o.rn = p.rn + 1)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(shard AS INT) AS shard,
-        |  bin, n AS n_tokens
-        |FROM pack ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), size(TextOps.tokens(col("text"))).as("n"))
-      Packing.packBinsNoSplit(docs, "doc_id", "n", budget = 128, nShards = 16)
-        .orderBy("doc_id")
-    },
-
-    // --- packing-efficiency sweep (session 4): packed vs padded sequence
-    // counts and the padding-waste fraction at candidate sequence
-    // lengths — the pre-training report that picks L. Pure integer
-    // arithmetic until the one output ratio; one corpus pass, every
-    // per-L count a conditional sum in a single aggregate.
-    QueryDef("q_pack_efficiency",
-      """WITH lens AS (SELECT len(string_split_regex(trim(text), '\s+')) AS n
-        |              FROM documents),
-        |t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |        CAST(SUM(n) AS BIGINT) AS total_tokens FROM lens),
-        |l(seq_len) AS (VALUES (64), (256), (1024)),
-        |p AS (SELECT seq_len,
-        |        CAST(SUM((n + seq_len - 1) // seq_len) AS BIGINT) AS padded_seqs
-        |      FROM lens CROSS JOIN l GROUP BY 1)
-        |SELECT CAST(seq_len AS INT) AS seq_len, n_docs, total_tokens,
-        |  CAST((total_tokens + seq_len - 1) // seq_len AS BIGINT) AS packed_seqs,
-        |  padded_seqs,
-        |  ROUND(CAST(padded_seqs * seq_len - total_tokens AS DOUBLE)
-        |    / (padded_seqs * seq_len), 4) AS pad_waste
-        |FROM p CROSS JOIN t ORDER BY seq_len NULLS FIRST""".stripMargin) { (s, d) =>
-      Packing.packingEfficiency(Tables.documents(s, d),
-          size(TextOps.tokens(col("text"))), Seq(64, 256, 1024))
-        .orderBy("seq_len")
-    },
-
-    // --- token-budget data mixing (integer-exact per-source rates) ----------
-    QueryDef("q_sample_token_budget",
-      """WITH t AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n
-        |  FROM documents),
-        |tot AS (SELECT source, CAST(SUM(n) AS BIGINT) AS actual FROM t GROUP BY source),
-        |r AS (SELECT source, CASE WHEN actual <= 600 THEN CAST(65536 AS BIGINT)
-        |        ELSE CAST(39321600 // actual AS BIGINT) END AS rate16 FROM tot)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS kept_docs,
-        |  CAST(SUM(n) AS BIGINT) AS kept_tokens
-        |FROM t JOIN r USING (source)
-        |WHERE rate16 >= 65536
-        |   OR substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < lpad(lower(to_hex(rate16)), 4, '0')
-        |GROUP BY source ORDER BY source NULLS FIRST""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d)
-        .select(col("source"), col("doc_id"),
-          size(TextOps.tokens(col("text"))).as("n"))
-      graft.operators.Sampling.tokenBudgetMix(docs, "source", col("doc_id"), "n", 600L)
-        .groupBy("source")
-        .agg(count(lit(1)).as("kept_docs"), sum("n").cast("long").as("kept_tokens"))
-        .orderBy("source")
-    },
-
     // --- connected components over dedup pairs ------------------------------
     // Planted contract: each doc with doc_id%4 = r > 0 contributes a CHAIN
     // of r edges over synthetic node ids doc_id + k*10^7 (k = 0..r), so the

@@ -49,97 +49,6 @@ object PipelineQueries {
         .agg(count(lit(1)).as("n"), sum("doc_id").as("id_sum"))
     },
 
-    // --- pipeline attrition: per-document FIRST-DROP attribution across a
-    // four-stage deterministic funnel (exact keep-min → Gopher quality →
-    // 3-gram decontam vs the doc_id<10 benchmark → 200-token source
-    // budget; every stage computed on the previous stage's survivors).
-    // Input is the DOUBLED corpus (verbatim clones at +100000) so the
-    // exact-dup stage provably attributes every clone at any scale. The
-    // oracle replays all four predicates sequentially — each fragment is
-    // the corresponding single-stage gate's oracle, composed.
-    QueryDef("q_pipeline_attrition",
-      """WITH input AS (
-        |  SELECT doc_id, text, source FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text, source FROM documents),
-        |s1 AS (SELECT MIN(doc_id) AS doc_id FROM input GROUP BY text),
-        |toks AS (SELECT d.doc_id AS id,
-        |           unnest(string_split_regex(trim(d.text), '\s+')) AS tok
-        |         FROM input d JOIN s1 USING (doc_id)),
-        |perdoc AS (SELECT id, COUNT(*) AS n_words, SUM(len(tok)) AS n_wchars,
-        |    COUNT(DISTINCT tok) AS n_types,
-        |    SUM(CASE WHEN tok IN ('the','a','of','and','to','in','is')
-        |        THEN 1 ELSE 0 END) AS n_stop
-        |  FROM toks GROUP BY 1),
-        |maxf AS (SELECT id, MAX(c) AS max_freq
-        |         FROM (SELECT id, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2)
-        |         GROUP BY 1),
-        |s2 AS (SELECT id AS doc_id FROM perdoc JOIN maxf USING (id)
-        |       WHERE n_words >= 30 AND n_wchars >= 4*n_words
-        |         AND n_wchars <= 10*n_words AND n_stop >= 2
-        |         AND 2*n_types >= n_words AND 10*max_freq <= n_words),
-        |tok2 AS (SELECT doc_id, unnest(ts) AS t, unnest(range(1, len(ts)+1)) AS i
-        |         FROM (SELECT d.doc_id, string_split_regex(trim(d.text), '\s+') AS ts
-        |               FROM input d JOIN s2 USING (doc_id))),
-        |g2 AS (SELECT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS gram
-        |       FROM tok2 a JOIN tok2 b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-        |                   JOIN tok2 c ON c.doc_id = a.doc_id AND c.i = a.i + 2),
-        |btok AS (SELECT doc_id, unnest(ts) AS t, unnest(range(1, len(ts)+1)) AS i
-        |         FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ts
-        |               FROM input WHERE doc_id < 10)),
-        |bg AS (SELECT DISTINCT a.t || ' ' || b.t || ' ' || c.t AS gram
-        |       FROM btok a JOIN btok b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-        |                   JOIN btok c ON c.doc_id = a.doc_id AND c.i = a.i + 2),
-        |contam AS (SELECT DISTINCT g2.doc_id FROM g2 JOIN bg USING (gram)),
-        |s3 AS (SELECT doc_id FROM s2
-        |       WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-        |t AS (SELECT d.source, d.doc_id,
-        |        len(string_split_regex(trim(d.text), '\s+')) AS n
-        |      FROM input d JOIN s3 USING (doc_id)),
-        |tot AS (SELECT source, CAST(SUM(n) AS BIGINT) AS actual FROM t GROUP BY source),
-        |r AS (SELECT source, CASE WHEN actual <= 200 THEN CAST(65536 AS BIGINT)
-        |        ELSE CAST(13107200 // actual AS BIGINT) END AS rate16 FROM tot),
-        |s4 AS (SELECT doc_id FROM t JOIN r USING (source)
-        |       WHERE rate16 >= 65536
-        |          OR substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-        |             < lpad(lower(to_hex(rate16)), 4, '0'))
-        |SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-        |  CASE WHEN s1.doc_id IS NULL THEN 'exact_dup'
-        |       WHEN s2.doc_id IS NULL THEN 'quality'
-        |       WHEN s3.doc_id IS NULL THEN 'decontam'
-        |       WHEN s4.doc_id IS NULL THEN 'budget'
-        |       ELSE 'kept' END AS dropped_by
-        |FROM input d
-        |LEFT JOIN s1 USING (doc_id) LEFT JOIN s2 USING (doc_id)
-        |LEFT JOIN s3 USING (doc_id) LEFT JOIN s4 USING (doc_id)
-        |ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      import graft.operators.{Curation, Pipeline, Sampling, Staged}
-      val docs = doubledDocs(s, d, mutate = false)
-      val s1 = Staged.materialize(
-        Dedup.exactKeepMin(docs, "text", "doc_id").select("doc_id"))
-      val d1 = docs.join(s1, Seq("doc_id"), "left_semi")
-      // the quality stage's stats pass already counts words with the mix
-      // tokenizer — stage the count alongside the survivor ids so the mix
-      // manifest never re-tokenizes the corpus (one full text pass saved;
-      // attrition itself only reads the id column of each stage frame)
-      val s2 = Staged.materialize(
-        Curation.qualityRulesWithCount(d1, "doc_id", "text")
-          .where(col("keep").cast("int") === 1)
-          .select(col("doc_id"), col("n_words").cast("long").as("n")))
-      val d2 = docs.join(s2.select("doc_id"), Seq("doc_id"), "left_semi")
-      val s3 = Staged.materialize(
-        s2.join(
-          Curation.contaminatedIds(d2, docs.where(col("doc_id") < 10),
-            "doc_id", "text", 3),
-          Seq("doc_id"), "left_anti"))
-      val s4 = Sampling.tokenBudgetMix(
-        docs.select(col("source"), col("doc_id")).join(s3, Seq("doc_id")),
-        "source", col("doc_id"), "n", 200L).select("doc_id")
-      Pipeline.attrition(docs, "doc_id", Seq(
-        "exact_dup" -> s1, "quality" -> s2, "decontam" -> s3, "budget" -> s4))
-        .orderBy("doc_id")
-    },
-
     // --- dedup: MinHash LSH. The hash values are engine-specific, but the
     // RECALL CONTRACT is checkable: every planted near-dup pair (mutated
     // copy at id+100000) must be found. The oracle pins the planted-pair
@@ -674,201 +583,6 @@ object PipelineQueries {
         .orderBy("a_id", "b_id")
     },
 
-    // --- cross-split near-dup leakage (session 4): the eval-
-    // contamination report — exact copies planted at doc_id+100000 split
-    // INDEPENDENTLY of their originals (md5 of the id), so ~2·0.8·0.2 of
-    // clone pairs must straddle train/test. Chains the two verified
-    // replays (winnow selections + cap, md5-bucket split) end to end.
-    QueryDef("q_split_leakage",
-      """WITH input AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 200
-        |  UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id < 200),
-        |toks AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-        |         FROM input),
-        |g AS (SELECT doc_id, list_transform(range(1, len(tk) - 1),
-        |        i -> array_to_string(tk[i:i+2], ' ')) AS grams
-        |      FROM toks WHERE len(tk) >= 3),
-        |h AS (SELECT doc_id, list_transform(grams,
-        |        g2 -> CAST(('0x' || substring(md5(g2), 1, 15)) AS BIGINT)) AS hs
-        |      FROM g),
-        |winpos AS (SELECT doc_id, hs, unnest(range(1, len(hs) - 2)) AS j
-        |           FROM h WHERE len(hs) >= 4),
-        |sel AS (SELECT DISTINCT doc_id, list_min(hs[j:j+3]) AS fp FROM winpos),
-        |capped AS (SELECT doc_id, fp FROM (
-        |    SELECT doc_id, fp, COUNT(*) OVER (PARTITION BY fp) AS n FROM sel)
-        |  WHERE n <= 64),
-        |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS shared
-        |      FROM capped a JOIN capped b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |lab AS (SELECT doc_id,
-        |    CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccd'
-        |         THEN 'train' ELSE 'test' END AS sp FROM input)
-        |SELECT least(la.sp, lb.sp) AS split_a, greatest(la.sp, lb.sp) AS split_b,
-        |  CAST(COUNT(*) AS BIGINT) AS n_pairs
-        |FROM p JOIN lab la ON la.doc_id = p.a_id JOIN lab lb ON lb.doc_id = p.b_id
-        |WHERE shared >= 3
-        |GROUP BY 1, 2 ORDER BY split_a NULLS FIRST, split_b NULLS FIRST"""
-        .stripMargin) { (s, d) =>
-      val base = Tables.documents(s, d).where(col("doc_id") < 200)
-        .select("doc_id", "text")
-      val input = base.unionByName(
-        base.withColumn("doc_id", col("doc_id") + 100000))
-      val labeled = graft.operators.Sampling.groupSplit(input, col("doc_id"),
-        Seq("train" -> 0.8, "test" -> 0.2))
-      graft.operators.Dedup.splitLeakage(labeled, "doc_id", "text", "split",
-          k = 3, w = 4, minShared = 3, maxDocsPerFp = 64)
-        .orderBy("split_a", "split_b")
-    },
-
-    // --- session-3 composition (r10): classifier gate -> winnow clone-pair
-    // dedup (drop b-sides) -> per-source token-budget mix, ONE job. The
-    // oracle chains the three verified replays (classifier weights, winnow
-    // selections + cap, budget rates) end to end.
-    QueryDef("q_pipeline_classify_dedup_mix",
-      """WITH toksq AS (SELECT doc_id, source,
-        |    string_split_regex(trim(lower(text)), '\s+') AS tk FROM documents),
-        |feats AS (SELECT doc_id, unnest(list_concat(tk,
-        |    list_transform(range(1, len(tk)),
-        |      i -> array_to_string(tk[i:i+1], ' ')))) AS f FROM toksq),
-        |wt AS (SELECT doc_id,
-        |    ((CAST(('0x' || substring(md5(f), 1, 15)) AS BIGINT) % 262144) + 7)
-        |      * 2654435761 % 2001 - 1000 AS wm FROM feats),
-        |agg AS (SELECT doc_id, COUNT(*) AS n, SUM(wm) AS s FROM wt GROUP BY 1),
-        |kept AS (SELECT t.doc_id, t.source, t.tk FROM toksq t
-        |         JOIN agg ON t.doc_id = agg.doc_id
-        |         WHERE ROUND(1.0 / (1.0 + exp(-(s / (n * 1000.0)))), 4) >= 0.5),
-        |g AS (SELECT doc_id, list_transform(range(1, len(tk) - 1),
-        |        i -> array_to_string(tk[i:i+2], ' ')) AS grams
-        |      FROM kept WHERE len(tk) >= 3),
-        |h AS (SELECT doc_id, list_transform(grams,
-        |        g2 -> CAST(('0x' || substring(md5(g2), 1, 15)) AS BIGINT)) AS hs
-        |      FROM g),
-        |winpos AS (SELECT doc_id, hs, unnest(range(1, len(hs) - 2)) AS j
-        |           FROM h WHERE len(hs) >= 4),
-        |sel AS (SELECT DISTINCT doc_id, list_min(hs[j:j+3]) AS fp FROM winpos),
-        |capped AS (SELECT doc_id, fp FROM (
-        |    SELECT doc_id, fp, COUNT(*) OVER (PARTITION BY fp) AS cnum FROM sel)
-        |  WHERE cnum <= 64),
-        |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS shared
-        |      FROM capped a JOIN capped b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |losers AS (SELECT DISTINCT b_id AS doc_id FROM p WHERE shared >= 3),
-        |ded AS (SELECT k.doc_id, k.source, CAST(len(k.tk) AS BIGINT) AS n
-        |        FROM kept k
-        |        WHERE k.doc_id NOT IN (SELECT doc_id FROM losers)),
-        |tot AS (SELECT source, CAST(SUM(n) AS BIGINT) AS actual
-        |        FROM ded GROUP BY source),
-        |r AS (SELECT source, CASE WHEN actual <= 400 THEN CAST(65536 AS BIGINT)
-        |        ELSE CAST(26214400 // actual AS BIGINT) END AS rate16 FROM tot)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS kept_docs,
-        |  CAST(SUM(n) AS BIGINT) AS kept_tokens
-        |FROM ded JOIN r USING (source)
-        |WHERE rate16 >= 65536
-        |   OR substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-        |      < lpad(lower(to_hex(rate16)), 4, '0')
-        |GROUP BY source ORDER BY source NULLS FIRST""".stripMargin) { (s, d) =>
-      // one staged job (see Pipeline.classifyDedupMix for the measured
-      // perf shape: single tokenization, scored frame persisted
-      // UNFILTERED so the md5 fold stays above the exchange); the
-      // operator returns the per-doc mix manifest, the gate aggregates
-      graft.operators.Pipeline.classifyDedupMix(
-          Tables.documents(s, d), "doc_id", "text", "source",
-          budgetTokens = 400L, minShared = 3)
-        .groupBy("source")
-        .agg(count(lit(1)).as("kept_docs"),
-          sum("n_tokens").cast("long").as("kept_tokens"))
-        .orderBy("source")
-    },
-
-    // --- end-to-end curation pipeline: exact dedup → minhash near-dup →
-    // CC keep-min → decontam → token-budget mix → sequence packing, as ONE
-    // job. The oracle recomputes EVERY stage exactly — including the
-    // near-dup components, via exact 3-shingle jaccard + a recursive-CTE
-    // transitive closure. That is sound on this corpus because the
-    // engine's minhash+banding pair set at the 0.35 threshold EQUALS the
-    // exact-jaccard pair set — a fixture property (the corpus keeps clear
-    // of the estimate boundary; measured at sf0.01: organic pairs <= 0.103
-    // or >= 0.666) that q_pipeline_oracle_guard CHECKS cross-engine every
-    // round instead of assuming: a regenerated fixture that breaks the
-    // equality fails the guard gate loudly by name. Planted signal: exact
-    // copies (+100000) must die in stage 1, mutated copies (+200000) in
-    // stage 2 — the output's doc_id range pins both.
-    QueryDef("q_pipeline_e2e",
-      """WITH RECURSIVE input AS (
-        |  SELECT doc_id, text, source FROM documents
-        |  UNION ALL SELECT doc_id + 100000, text, source FROM documents
-        |  UNION ALL SELECT doc_id + 200000, text || ' zz yy xx', source FROM documents),
-        |s1 AS (
-        |  SELECT i.* FROM input i
-        |  JOIN (SELECT text, MIN(doc_id) AS doc_id FROM input GROUP BY text) k
-        |    ON i.doc_id = k.doc_id),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ts)-1),
-        |    i -> array_to_string(ts[i:i+2], ' ')))) AS g
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ts FROM s1)
-        |  WHERE len(ts) >= 3),
-        |szs AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |e0 AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b, COUNT(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |edges AS (
-        |  SELECT a, b FROM e0
-        |  JOIN szs sa ON sa.doc_id = e0.a JOIN szs sb ON sb.doc_id = e0.b
-        |  WHERE 100 * e0.i >= 35 * (sa.n + sb.n - e0.i)),
-        |bidir AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM bidir
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN bidir e ON r.b = e.a),
-        |reps AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS rep FROM reach GROUP BY a),
-        |s2 AS (
-        |  SELECT s1.* FROM s1 LEFT JOIN reps USING (doc_id)
-        |  WHERE rep IS NULL OR rep = doc_id),
-        |bg AS (
-        |  SELECT DISTINCT unnest(list_transform(range(1, len(ts)-7),
-        |    i -> array_to_string(ts[i:i+7], ' '))) AS g
-        |  FROM (SELECT string_split_regex(trim(text), '\s+') AS ts
-        |        FROM documents WHERE doc_id < 5)
-        |  WHERE len(ts) >= 8),
-        |g8 AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ts)-7),
-        |    i -> array_to_string(ts[i:i+7], ' ')))) AS g
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ts FROM s2)
-        |  WHERE len(ts) >= 8),
-        |contam AS (SELECT DISTINCT g8.doc_id FROM g8 JOIN bg USING (g)),
-        |s3 AS (
-        |  SELECT s2.*, CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n
-        |  FROM s2 WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-        |tot AS (SELECT source, CAST(SUM(n) AS BIGINT) AS actual FROM s3 GROUP BY source),
-        |r16 AS (SELECT source, CASE WHEN actual <= 1000 THEN CAST(65536 AS BIGINT)
-        |         ELSE CAST(65536000 // actual AS BIGINT) END AS rate16 FROM tot),
-        |s4 AS (
-        |  SELECT s3.* FROM s3 JOIN r16 USING (source)
-        |  WHERE rate16 >= 65536
-        |     OR substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < lpad(lower(to_hex(rate16)), 4, '0')),
-        |p AS (
-        |  SELECT doc_id, source, n,
-        |    CAST(COALESCE(SUM(n) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start
-        |  FROM s4)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, source, n AS n_tokens,
-        |  start AS start_tok, start // 128 AS first_seq,
-        |  CASE WHEN n > 0 THEN (start + n - 1) // 128 ELSE start // 128 END AS last_seq
-        |FROM p ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d).select("doc_id", "text", "source")
-      val input = docs
-        .unionByName(docs.withColumn("doc_id", col("doc_id") + 100000))
-        .unionByName(docs.withColumn("doc_id", col("doc_id") + 200000)
-          .withColumn("text", concat(col("text"), lit(" zz yy xx"))))
-      graft.operators.Pipeline.curate(input, "doc_id", "text", "source",
-          minhashThreshold = 0.35,
-          decontamBenchmark = docs.where(col("doc_id") < 5),
-          decontamN = 8, budgetTokens = 1000L, packBudget = 128)
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          col("start_tok"), col("first_seq"), col("last_seq"))
-        .orderBy("doc_id")
-    },
-
     // --- incremental dedup: the last 50 documents play a "daily delta"
     // against the rest of the corpus, plus planted exact copies (+100000,
     // must die in the exact stage) and mutated copies (+200000, must die
@@ -1030,53 +744,6 @@ object PipelineQueries {
       Dedup.minhashNearDups(input, "doc_id", "text", 0.35, rowsPerBand = 2)
         .select("a_id", "b_id")
         .orderBy("a_id", "b_id")
-    },
-
-    // --- dataset-card report: per-source release-note statistics from
-    // ONE corpus scan (the two exact count-distincts ride Catalyst's
-    // expand rewrite inside the same aggregation).
-    QueryDef("q_corpus_report",
-      """SELECT source,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens,
-        |  CAST(COUNT(DISTINCT text) AS BIGINT) AS n_distinct_texts,
-        |  CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-        |  CAST(SUM(CASE WHEN len(string_split_regex(trim(text), '\s+')) >= 20
-        |                 AND length(text) >= 100
-        |                 AND length(text) <= len(string_split_regex(trim(text), '\s+')) * 10
-        |            THEN 1 ELSE 0 END) AS BIGINT) AS quality_docs,
-        |  CAST(SUM(CASE WHEN
-        |      len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |    + len(regexp_extract_all(text, '\+?[0-9]+-[0-9]{3}-[0-9]{3}-[0-9]{4}')) > 0
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS pii_docs
-        |FROM documents GROUP BY source ORDER BY source NULLS FIRST""".stripMargin) { (s, d) =>
-      graft.operators.Pipeline.corpusReport(
-          Tables.documents(s, d), "text", "source", "lang")
-        .orderBy("source")
-    },
-
-    // --- per-source token-distribution KL divergence from the corpus
-    // (r10): the mixture-drift monitor. Counts are exact integers; the
-    // probability ratios divide identically in both engines; round(4)
-    // absorbs summation order.
-    QueryDef("q_source_kl",
-      """WITH t AS (SELECT source,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |  FROM documents),
-        |sw AS (SELECT source, w, COUNT(*) AS csw FROM t GROUP BY 1, 2),
-        |st AS (SELECT source, SUM(csw) AS ns, COUNT(*) AS nv FROM sw GROUP BY 1),
-        |ct AS (SELECT w, SUM(csw) AS cw FROM sw GROUP BY 1),
-        |tot AS (SELECT SUM(csw) AS n FROM sw)
-        |SELECT source, CAST(ns AS BIGINT) AS n_tokens,
-        |  CAST(nv AS BIGINT) AS n_vocab,
-        |  ROUND(SUM((csw * 1.0 / ns) * ln((csw * 1.0 / ns) / (cw * 1.0 / n))), 4)
-        |    AS kl
-        |FROM sw JOIN st USING (source) JOIN ct USING (w) CROSS JOIN tot
-        |GROUP BY 1, 2, 3
-        |ORDER BY source NULLS FIRST""".stripMargin) { (s, d) =>
-      graft.operators.Pipeline.sourceDivergence(
-          Tables.documents(s, d), "source", "text")
-        .orderBy("source")
     },
 
     // --- minhash precision audit: flagged pairs re-scored with exact

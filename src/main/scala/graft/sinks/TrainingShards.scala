@@ -68,8 +68,7 @@ object TrainingShards {
     val rootFs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     rootFs.mkdirs(root)
     // deterministic shard assignment + order: range-partition by id,
-    // sort within — same discipline as Packing.packOffsets, so a packed
-    // corpus shards identically across runs
+    // sort within, so a corpus shards identically across runs
     val ordered = df
       .select(col(idCol).cast("long").as("__id"),
         col(tokensCol).cast(ArrayType(IntegerType)).as("__toks"))

@@ -49,7 +49,7 @@ object FloorProbe {
       println(f"[floor] range1 noop write rep$i ${(System.nanoTime() - t0) / 1e6}%.1f ms")
     }
 
-    val gates = Seq("q_warc_documents", "q_sample_exact_n", "q_time_filter",
+    val gates = Seq("q_warc_documents", "q_time_filter",
       "q_wildcard_projection", "q_agg_count_star", "q_bucket_day",
       "q_expr_case_when", "q_window_rank")
     val byName = SparkEntry.queries

@@ -4,8 +4,7 @@ import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** Round-8 data-pipeline additions: radius search, cluster-balanced
-  * sampling, the quality-rule filter, and the
-  * deterministic shard shuffle.
+  * sampling and the quality-rule filter.
   */
 class DataOpsSpec extends SparkSpec {
 
@@ -153,40 +152,6 @@ class DataOpsSpec extends SparkSpec {
       .orderBy(col("cos").desc, col("vec_id").asc)
       .select("vec_id").as[Long].take(3).toSeq
     assert(got == byCos)
-  }
-
-  // --- qualityPack composition ---------------------------------------------
-
-  test("qualityPack packs exactly the quality-kept docs, bins within budget") {
-    val docs = Tables.documents(spark, sfDir)
-    val packed = Pipeline.qualityPack(docs, "doc_id", "text",
-      packBudget = 128, nShards = 8)
-    val keptIds = Curation.qualityRules(docs, "doc_id", "text")
-      .where(col("keep") === 1).select("doc_id").as[Long].collect().toSet
-    val rows = packed.select("doc_id", "shard", "bin", "n_tokens")
-      .as[(Long, Int, Long, Long)].collect()
-    assert(rows.map(_._1).toSet == keptIds)
-    rows.groupBy(r => (r._2, r._3)).foreach { case (_, bin) =>
-      assert(bin.map(_._4).sum <= 128 || bin.length == 1)
-    }
-  }
-
-  // --- shardShuffle --------------------------------------------------------
-
-  test("shardShuffle is deterministic, bounded, and position-contiguous") {
-    val docs = Tables.documents(spark, sfDir)
-    val a = Sampling.shardShuffle(docs, "doc_id", "text", 16)
-      .as[(Long, Int, Long)].collect().sortBy(_._1)
-    // stable under a different partitioning of the same data
-    val b = Sampling.shardShuffle(docs.repartition(13), "doc_id", "text", 16)
-      .as[(Long, Int, Long)].collect().sortBy(_._1)
-    assert(a.toSeq == b.toSeq)
-    assert(a.length == docs.count())
-    assert(a.forall { case (_, s, _) => s >= 0 && s < 16 })
-    // positions within each shard are 1..n with no gaps
-    a.groupBy(_._2).foreach { case (_, rows) =>
-      assert(rows.map(_._3).sorted.toSeq == (1L to rows.length).toSeq)
-    }
   }
 
   test("groupCentroids averages per dimension; cosineDouble scores exactly") {

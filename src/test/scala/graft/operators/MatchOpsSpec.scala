@@ -3,8 +3,8 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Round-9 matching/profiling additions: corpus-wide paragraph dedup,
-  * the n-gram uniqueness profile, and per-group score calibration.
+/** Round-9 matching/profiling additions: corpus-wide paragraph dedup
+  * and the n-gram uniqueness profile.
   */
 class MatchOpsSpec extends SparkSpec {
 
@@ -93,50 +93,5 @@ class MatchOpsSpec extends SparkSpec {
       .orderBy("source").as[(String, Long, Long, Long)].collect()
     assert(out(0) == (("a", 3L, 2L, 1L)))
     assert(out(1) == (("b", 3L, 3L, 1L)))
-  }
-
-  // --- Sampling.systematicWeightedSample -----------------------------------
-
-  test("systematicWeightedSample crosses k thresholds exactly") {
-    // weights 1,1,1,1,6 over total 10 with k=5 → thresholds every 2:
-    // cum = 1,2,3,4,10; crossings at cum 2 (doc 2), 4 (doc 4), 10 (doc 5:
-    // spans 3 thresholds but emits once)
-    val docs = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 6L))
-      .toDF("doc_id", "w")
-    val out = Sampling.systematicWeightedSample(docs, "doc_id", col("w"), k = 5)
-      .orderBy("doc_id").as[(Long, Long)].collect()
-    assert(out.toSeq == Seq((2L, 1L), (4L, 1L), (5L, 6L)))
-  }
-
-  test("systematicWeightedSample is weight-proportional in expectation") {
-    val docs = (1L to 100L).map(i => (i, if (i <= 10) 91L else 1L))
-      .toDF("doc_id", "w")  // 10 heavy docs carry 910/1000 of the mass
-    val kept = Sampling.systematicWeightedSample(docs, "doc_id", col("w"), k = 20)
-      .as[(Long, Long)].collect()
-    // every heavy doc (weight 91 > step 50) must cross a threshold and be
-    // kept exactly once; the light tail (90 weight over step 50) yields 1-2
-    val heavy = kept.count(_._1 <= 10)
-    assert(heavy == 10, s"every heavy doc must be kept, got $heavy")
-    assert(kept.length >= 11 && kept.length <= 12, s"got ${kept.length}")
-  }
-
-  // --- Sampling.calibrateScores --------------------------------------------
-
-  test("calibrateScores computes in-group percentile and z-score") {
-    val docs = Seq(
-      (1L, "en", 10L), (2L, "en", 20L), (3L, "en", 30L),
-      (4L, "de", 5L),                      // singleton group
-      (5L, "fr", 7L), (6L, "fr", 7L)       // tied scores, zero variance
-    ).toDF("doc_id", "lang", "n_chars")
-    val out = Sampling.calibrateScores(docs, "doc_id", "lang", col("n_chars"))
-      .orderBy("doc_id")
-      .as[(Long, String, Long, Double, Double)].collect()
-    assert(out(0) == ((1L, "en", 10L, 0.0, -1.0)))
-    assert(out(1) == ((2L, "en", 20L, 0.5, 0.0)))
-    assert(out(2) == ((3L, "en", 30L, 1.0, 1.0)))
-    assert(out(3) == ((4L, "de", 5L, 0.0, 0.0)))   // singleton: pct 0, z 0
-    // ties: percent_rank breaks by id; zero variance → z = 0
-    assert(out(4) == ((5L, "fr", 7L, 0.0, 0.0)))
-    assert(out(5) == ((6L, "fr", 7L, 1.0, 0.0)))
   }
 }

@@ -57,16 +57,6 @@ class OperatorPlanSpec extends SparkSpec {
       s"corpus-side shuffle join crept into bloomDedupAgainst:\n${plan.take(2000)}")
   }
 
-  test("corpusReport reads the corpus once (expand rewrite, single scan)") {
-    val plan = planString(Pipeline.corpusReport(
-      Tables.documents(spark, sfDir), "text", "source", "lang"))
-    // the two exact count-distincts must fold into ONE aggregation via
-    // Expand, not re-scan the table per distinct
-    assert(plan.contains("Expand"), s"expected Expand rewrite:\n${plan.take(2000)}")
-    val scans = "Scan parquet".r.findAllIn(plan).length
-    assert(scans == 1, s"corpus scanned $scans times:\n${plan.take(2000)}")
-  }
-
   test("brute-force ANN broadcasts the query set") {
     val emb = Tables.embeddings(spark, sfDir)
     val plan = planString(Similarity.topKCosine(emb, "vec_id", "embedding",
@@ -103,43 +93,6 @@ class OperatorPlanSpec extends SparkSpec {
       s"per-cell cap must push a partial group limit below the shuffle:\n${plan.take(2000)}")
   }
 
-  test("qualityPack composition is exactly one shuffle (filter rides the scan)") {
-    // the pack returns an RDD-backed frame, so the exchange lives in the
-    // RDD lineage, not the frame's plan — count ShuffleDependency edges
-    val df = Pipeline.qualityPack(Tables.documents(spark, sfDir),
-      "doc_id", "text", packBudget = 128, nShards = 8)
-    val rdd = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.get
-    val seen = scala.collection.mutable.Set[Int]()
-    def shuffles(r: org.apache.spark.rdd.RDD[_]): Int =
-      if (!seen.add(r.id)) 0
-      else r.dependencies.map {
-        case s: org.apache.spark.ShuffleDependency[_, _, _] => 1 + shuffles(s.rdd)
-        case d => shuffles(d.rdd)
-      }.sum
-    val n = shuffles(rdd)
-    assert(n == 1, s"expected exactly the pack's shard shuffle, got $n")
-  }
-
-  test("groupSplit is a pure map-side pass — no exchange at all") {
-    val plan = planString(Sampling.groupSplit(Tables.documents(spark, sfDir),
-      org.apache.spark.sql.functions.col("source"),
-      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)))
-    assert(!plan.contains("Exchange"),
-      s"groupSplit must not shuffle:\n${plan.take(2000)}")
-  }
-
-  test("curriculumBins has no window and no global sort — boundaries broadcast") {
-    val plan = planString(Sampling.curriculumBins(
-      Tables.documents(spark, sfDir),
-      org.apache.spark.sql.functions.col("n_chars"), 4))
-    assert(!plan.contains("Window"),
-      s"curriculum tiers must not use ntile:\n${plan.take(2000)}")
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
-      s"quantile boundaries must broadcast:\n${plan.take(2000)}")
-  }
-
   test("removeBoilerplate joins the boilerplate set by broadcast — corpus never shuffles") {
     import org.apache.spark.sql.functions.{col, concat, lit}
     // plant a universal header so the boilerplate set is non-empty —
@@ -152,23 +105,6 @@ class OperatorPlanSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     assert(!plan.contains("SortMergeJoin"),
       s"boilerplate-set join must broadcast, not sort-merge:\n${plan.take(2000)}")
-  }
-
-  test("bigramScore probes the LM by broadcast — the gram stream never sort-merges") {
-    val plan = planString(Lm.bigramScore(
-      Tables.documents(spark, sfDir).where(
-        org.apache.spark.sql.functions.col("doc_id") < 100), "doc_id", "text"))
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
-    assert(!plan.contains("SortMergeJoin"),
-      s"LM probe must broadcast, not sort-merge:\n${plan.take(2000)}")
-  }
-
-  test("mixtureSample joins the per-source rates by broadcast — corpus never shuffles") {
-    val plan = planString(Sampling.mixtureSample(Tables.documents(spark, sfDir),
-      "lang", org.apache.spark.sql.functions.col("doc_id"), budgetRows = 200))
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
-    assert(!plan.contains("SortMergeJoin"),
-      s"rate join must broadcast, not sort-merge:\n${plan.take(2000)}")
   }
 
   test("tfidfTopK pushes a partial group limit below the per-doc window") {
@@ -201,21 +137,6 @@ class OperatorPlanSpec extends SparkSpec {
       s"corpus-side shuffle join crept into dedupAgainst:\n${plan.take(2000)}")
   }
 
-  test("mixtureEpochs fans out map-side off a broadcast rate table") {
-    val plan = planString(Sampling.mixtureEpochs(Tables.documents(spark, sfDir),
-      "lang", org.apache.spark.sql.functions.col("doc_id"), budgetRows = 1000))
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
-    assert(!plan.contains("SortMergeJoin"),
-      s"rate join must broadcast:\n${plan.take(2000)}")
-    assert(plan.contains("Generate"), "the epoch fan-out must be an explode")
-  }
-
-  test("exactSample executes as TakeOrderedAndProject — no global sort") {
-    val plan = planString(Sampling.exactSample(Tables.documents(spark, sfDir),
-      org.apache.spark.sql.functions.col("doc_id"), 100))
-    assert(plan.contains("TakeOrderedAndProject"), plan.take(2000))
-  }
-
   test("trimContaminated broadcasts the benchmark gram set") {
     val docs = Tables.documents(spark, sfDir)
     val plan = planString(Curation.trimContaminated(docs,
@@ -228,13 +149,6 @@ class OperatorPlanSpec extends SparkSpec {
     assert(plan.linesIterator.exists(l =>
       l.contains("BroadcastHashJoin") && l.contains("LeftSemi")),
       s"benchmark gram probe must be a broadcast semi-join:\n${plan.take(2000)}")
-  }
-
-  test("shardShuffle is exactly one hash exchange") {
-    val plan = planString(Sampling.shardShuffle(
-      Tables.documents(spark, sfDir), "doc_id", "text", 16))
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1, s"expected 1 exchange, got $exchanges:\n${plan.take(2000)}")
   }
 
   test("collocations joins the staged count tables — no cartesian, no third corpus scan") {

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{SparkEntry, SparkSpec}
 
 /** Persist lifecycle: the pipeline operators (minhash dedup, vector LSH,
-  * the end-to-end curation pipeline, connected components) stage their
+  * connected components) stage their
   * bounded results and release every internal cache/checkpoint before
   * returning — a long-lived server invoking them repeatedly must not
   * accumulate resident blocks. Pinned here by running the actual GATES and
@@ -26,7 +26,6 @@ class PersistLifecycleSpec extends SparkSpec {
 
   test("q_dedup_minhash leaves no persisted RDDs")(assertClean("q_dedup_minhash"))
   test("q_ann_lsh leaves no persisted RDDs")(assertClean("q_ann_lsh"))
-  test("q_pipeline_e2e leaves no persisted RDDs")(assertClean("q_pipeline_e2e"))
   test("q_dedup_groups leaves no persisted RDDs")(assertClean("q_dedup_groups"))
   test("q_dedup_incremental leaves no persisted RDDs")(assertClean("q_dedup_incremental"))
   test("q_dedup_keep_best leaves no persisted RDDs")(assertClean("q_dedup_keep_best"))
