@@ -240,15 +240,6 @@ object Similarity {
     * higher-order-function aggregates per row — HOF lambdas run
     * interpreted per element, which made bucketing the dominant cost.
     */
-  /** The multi-table bucket UDF, exposed for callers that must hash with
-    * the SAME plane family as [[lshNearPairs]] (the streaming semantic
-    * dedup store: batch-side and store-side bucket ids have to agree
-    * across JVM restarts, which the fixed seeds guarantee).
-    */
-  def allBucketsUdf(dim: Int, bits: Int, tables: Int):
-      org.apache.spark.sql.expressions.UserDefinedFunction =
-    allBuckets(dim, bits, tables)
-
   private def allBuckets(dim: Int, bits: Int, tables: Int) = {
     val planes: Array[Array[Array[Double]]] =
       Array.tabulate(tables)(t => hyperplanes(dim, bits, seed = 7L + t))
@@ -279,8 +270,7 @@ object Similarity {
     * price is threshold-recall per the formula above (each added bit
     * multiplies a table's recall by p = 1 − acos(s)/π), so recall-critical
     * deployments at a FIXED corpus size should pin `bits`/`tables`
-    * explicitly — and stores that persist bucket ids across runs MUST
-    * (StreamingSemanticDedup stays at fixed bits for exactly that reason).
+    * explicitly — and stores that persist bucket ids across runs MUST.
     */
   def lshNearPairs(corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
       threshold: Double, bits: Int = 0, tables: Int = 4,

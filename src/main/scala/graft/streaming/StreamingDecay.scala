@@ -25,8 +25,7 @@ import org.apache.spark.sql.functions._
   * wall time). Dropping a key forgets at most `minMass` of score, the
   * documented approximation.
   *
-  * Exactly-once replay: the [[StreamingSketches]] store discipline —
-  * state for batch b derives from the newest state with id < b and is
+  * Exactly-once replay: state for batch b derives from the newest state with id < b and is
   * atomically renamed to `state=<b>`, so a replayed batch rewrites the
   * same directory from the same predecessor and cannot double-count.
   *
