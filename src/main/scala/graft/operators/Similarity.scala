@@ -222,23 +222,11 @@ object Similarity {
     Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** 16-bit random-hyperplane bucket id per vector. */
-  def lshBucket(vec: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(dot(vec, typedlit(p.toSeq)) > 0, lit(1L << i)).otherwise(lit(0L)): Column
-    }.reduce((a, b) => a.bitwiseOR(b))
-
-  /** Approximate near-neighbor pairs: candidates share a sign-bit bucket in
-    * at least one of `tables` independent hashings (multi-table LSH — a
-    * single table's recall at moderate similarity is near zero), then exact
-    * cosine verification against the threshold. Recall for similarity s:
-    * 1 - (1 - (1 - acos(s)/pi)^bits)^tables.
-    */
   /** All `tables` bucket ids in one pass: a single UDF evaluation per row
-    * with tight primitive loops over the broadcast plane matrix. The
-    * Column-expression form ([[lshBucket]]) evaluates bits×tables
-    * higher-order-function aggregates per row — HOF lambdas run
-    * interpreted per element, which made bucketing the dominant cost.
+    * with tight primitive loops over the broadcast plane matrix. A
+    * Column-expression form (one `dot` sign bit per plane) evaluates
+    * bits×tables higher-order-function aggregates per row — HOF lambdas
+    * run interpreted per element, which made bucketing the dominant cost.
     */
   private def allBuckets(dim: Int, bits: Int, tables: Int) = {
     val planes: Array[Array[Array[Double]]] =
@@ -261,7 +249,13 @@ object Similarity {
     }
   }
 
-  /** `bits = 0` (the default) auto-sizes the bucket width to the corpus:
+  /** Approximate near-neighbor pairs: candidates share a sign-bit bucket in
+    * at least one of `tables` independent hashings (multi-table LSH — a
+    * single table's recall at moderate similarity is near zero), then exact
+    * cosine verification against the threshold. Recall for similarity s:
+    * 1 - (1 - (1 - acos(s)/pi)^bits)^tables.
+    *
+    * `bits = 0` (the default) auto-sizes the bucket width to the corpus:
     * 2^bits ≈ n / targetPerBucket, floor 12, cap 48. Fixed-width LSH has a
     * quadratic scale cliff — bucket DENSITY grows linearly with n, so
     * candidate pairs grow as n² (measured: the q_ann_lsh gate at 12 bits
