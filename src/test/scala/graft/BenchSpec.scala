@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench harness's measurement-hygiene logic, pinned with synthetic
@@ -45,8 +46,8 @@ class BenchSpec extends AnyFunSuite {
   test("derivedInitialReducers: cpus at the local rungs, input-proportional past ~1.5 GB") {
     // the official sf0.1 fixture (~18 MB) must stay at the core count so
     // BENCH_REF comparability is preserved by construction
-    assert(BenchSession.derivedInitialReducers("/root/testdata/sf0.1", 32) == 32)
-    assert(BenchSession.derivedInitialReducers("/nonexistent", 32) == 32,
+    assert(BenchSession.derivedInitialReducers("/root/testdata/sf0.1", 32, new Configuration()) == 32)
+    assert(BenchSession.derivedInitialReducers("/nonexistent", 32, new Configuration()) == 32,
       "unreadable input → cpus (never crash the bench over a du)")
     // the derivation itself: bytes / 48 MB, floored at cpus, capped 4096
     // (pinned via a synthetic dir)
@@ -57,7 +58,27 @@ class BenchSpec extends AnyFunSuite {
     try { ch.write(java.nio.ByteBuffer.wrap(Array[Byte](1)), 12L * 1024 * 1024 * 1024 - 1) }
     finally ch.close()
     // a sparse 12 GB file reads as 12 GB of length: 12 GB / 48 MB = 256
-    assert(BenchSession.derivedInitialReducers(dir.toString, 32) == 256)
+    assert(BenchSession.derivedInitialReducers(dir.toString, 32, new Configuration()) == 256)
     java.nio.file.Files.delete(f); java.nio.file.Files.delete(dir)
+  }
+
+  test("derivedInitialReducers sizes the sf dir through the passed conf") {
+    // `sessfs:` is mapped only in this conf, the way s3a credentials or
+    // hdfs HA names live only in the session's `spark.hadoop.*` settings:
+    // a fresh Configuration cannot open the store and sizes it as empty
+    val conf = new Configuration()
+    conf.set("fs.sessfs.impl", classOf[graft.exec.SessionSchemeFs].getName)
+    conf.setBoolean("fs.sessfs.impl.disable.cache", true)
+    val dir = java.nio.file.Files.createTempDirectory("bench-reducers-sessfs")
+    val f = dir.resolve("blob")
+    val ch = java.nio.channels.FileChannel.open(f,
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
+    try { ch.write(java.nio.ByteBuffer.wrap(Array[Byte](1)), 12L * 1024 * 1024 * 1024 - 1) }
+    finally ch.close()
+    try {
+      assert(BenchSession.derivedInitialReducers(s"sessfs://$dir", 32, conf) == 256)
+      assert(BenchSession.derivedInitialReducers(s"sessfs://$dir/missing", 32, conf) == 32,
+        "a missing dir gives cpus")
+    } finally { java.nio.file.Files.delete(f); java.nio.file.Files.delete(dir) }
   }
 }
