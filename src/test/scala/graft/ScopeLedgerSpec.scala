@@ -6,9 +6,10 @@ import java.nio.file.{Files, Paths}
 
 /** SCOPE.md, the scope ledger, stays in step with the code: the gates it
   * names above "Retired" are exactly the registered gates, every unit file
-  * under the five ledger directories has exactly one ledger row, and a
-  * retired row names a file that is gone. Adding, removing or retiring a
-  * gate or a unit without a ledger edit fails here.
+  * under the ledger directories has exactly one ledger row whose Lines
+  * column is the file's line count, and a retired row names a file that
+  * is gone. Adding, removing, resizing or retiring a gate or a unit
+  * without a ledger edit fails here.
   */
 class ScopeLedgerSpec extends AnyFunSuite {
 
@@ -17,9 +18,9 @@ class ScopeLedgerSpec extends AnyFunSuite {
     case -1 => (ledger, "")
     case i => ledger.splitAt(i)
   }
-  private val unitDirs = Seq("operators", "streaming", "sources", "sinks", "functions")
+  private val unitDirs = Seq("operators", "streaming", "sources", "sinks", "functions", "plans")
   private val unitRow =
-    """(?m)^\| `((?:operators|streaming|sources|sinks|functions|queries)/\w+\.scala)` \|""".r
+    """(?m)^\| `((?:operators|streaming|sources|sinks|functions|plans|queries)/\w+\.scala)` \|(.*)$""".r
   private val main = "src/main/scala/graft"
 
   test("the ledger names exactly the registered gates") {
@@ -41,6 +42,18 @@ class ScopeLedgerSpec extends AnyFunSuite {
     assert(rows.diff(rows.distinct).isEmpty, s"duplicate rows: ${rows.diff(rows.distinct)}")
     assert(files.toSet -- rows == Set.empty, s"files with no row: ${(files.toSet -- rows).toSeq.sorted}")
     assert(rows.toSet -- files == Set.empty, s"rows with no file: ${(rows.toSet -- files).toSeq.sorted}")
+  }
+
+  test("every live row's Lines column is the file's line count") {
+    // a row's cells after the unit: anchor | gates | lines | specs | status
+    val wrong = unitRow.findAllMatchIn(live)
+      .filterNot(_.group(1).startsWith("queries/"))
+      .flatMap { m =>
+        val lines = m.group(2).split('|').map(_.trim).lift(2).getOrElse("")
+        val actual = Files.readAllLines(Paths.get(s"$main/${m.group(1)}")).size
+        if (lines == actual.toString) None else Some(s"${m.group(1)}: $lines, file has $actual")
+      }.toSeq
+    assert(wrong.isEmpty, s"Lines column out of date: ${wrong.mkString("; ")}")
   }
 
   test("a retired unit's file is gone") {
