@@ -43,6 +43,18 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.isSuspect(-1.0, Some(0.1), 1.0, 0.4), "failed gates never retime")
   }
 
+  /** A temp dir holding one sparse file that reads as 12 GB of length:
+    * 12 GB / 48 MB = 256 reducers. */
+  private def withSparse12Gb(body: java.nio.file.Path => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("bench-reducers")
+    val f = dir.resolve("blob")
+    val ch = java.nio.channels.FileChannel.open(f,
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
+    try { ch.write(java.nio.ByteBuffer.wrap(Array[Byte](1)), 12L * 1024 * 1024 * 1024 - 1) }
+    finally ch.close()
+    try body(dir) finally { java.nio.file.Files.delete(f); java.nio.file.Files.delete(dir) }
+  }
+
   test("derivedInitialReducers: cpus at the local rungs, input-proportional past ~1.5 GB") {
     // the official sf0.1 fixture (~18 MB) must stay at the core count so
     // BENCH_REF comparability is preserved by construction
@@ -51,15 +63,9 @@ class BenchSpec extends AnyFunSuite {
       "unreadable input → cpus (never crash the bench over a du)")
     // the derivation itself: bytes / 48 MB, floored at cpus, capped 4096
     // (pinned via a synthetic dir)
-    val dir = java.nio.file.Files.createTempDirectory("bench-reducers")
-    val f = dir.resolve("blob")
-    val ch = java.nio.channels.FileChannel.open(f,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-    try { ch.write(java.nio.ByteBuffer.wrap(Array[Byte](1)), 12L * 1024 * 1024 * 1024 - 1) }
-    finally ch.close()
-    // a sparse 12 GB file reads as 12 GB of length: 12 GB / 48 MB = 256
-    assert(BenchSession.derivedInitialReducers(dir.toString, 32, new Configuration()) == 256)
-    java.nio.file.Files.delete(f); java.nio.file.Files.delete(dir)
+    withSparse12Gb { dir =>
+      assert(BenchSession.derivedInitialReducers(dir.toString, 32, new Configuration()) == 256)
+    }
   }
 
   test("derivedInitialReducers sizes the sf dir through the passed conf") {
@@ -69,16 +75,10 @@ class BenchSpec extends AnyFunSuite {
     val conf = new Configuration()
     conf.set("fs.sessfs.impl", classOf[graft.exec.SessionSchemeFs].getName)
     conf.setBoolean("fs.sessfs.impl.disable.cache", true)
-    val dir = java.nio.file.Files.createTempDirectory("bench-reducers-sessfs")
-    val f = dir.resolve("blob")
-    val ch = java.nio.channels.FileChannel.open(f,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-    try { ch.write(java.nio.ByteBuffer.wrap(Array[Byte](1)), 12L * 1024 * 1024 * 1024 - 1) }
-    finally ch.close()
-    try {
+    withSparse12Gb { dir =>
       assert(BenchSession.derivedInitialReducers(s"sessfs://$dir", 32, conf) == 256)
       assert(BenchSession.derivedInitialReducers(s"sessfs://$dir/missing", 32, conf) == 32,
         "a missing dir gives cpus")
-    } finally { java.nio.file.Files.delete(f); java.nio.file.Files.delete(dir) }
+    }
   }
 }
