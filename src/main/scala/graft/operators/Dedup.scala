@@ -240,11 +240,12 @@ object Dedup {
   }
 
   /** Near-dup connected components straight from the corpus — the
-    * signature cache is managed HERE: [[connectedComponents]]' first step already materializes the
-    * candidate pairs into its edge-list checkpoint, so routing through
-    * the staged [[minhashNearDups]] would pay a second, redundant
-    * materialization of the same pair set (r15 — one parquet round trip
-    * per caller). Output: (idCol, component) as [[connectedComponents]].
+    * signature cache is managed HERE: [[connectedComponents]]' first
+    * step already materializes the candidate pairs into its edge-list
+    * checkpoint, so routing through the staged [[minhashNearDups]] would
+    * pay a second, redundant materialization of the same pair set (r15 —
+    * one parquet round trip per caller). Output: (idCol, component) as
+    * [[connectedComponents]].
     */
   def nearDupComponents(df: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {

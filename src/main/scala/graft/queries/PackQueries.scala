@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
   * components over dedup pairs and SemDeDup-style cluster-then-dedup
   * ([[graft.operators.Similarity.semanticNearDups]]).
   *
-  * Semantic dedup follows the planted-recall contract of the LSH gates — the planted copy is each vector SCALED by
-  * 2 (cosine exactly-ish 1, same argmin-L2 cell for any positive scale),
-  * so per-cell planted counts are pinned exactly by the oracle's one-hot
-  * cell CASE (the q_ivf_cells pattern).
+  * Semantic dedup follows the planted-recall contract of the LSH gates —
+  * the planted copy is each vector SCALED by 2 (cosine exactly-ish 1,
+  * same argmin-L2 cell for any positive scale), so per-cell planted
+  * counts are pinned exactly by the oracle's one-hot cell CASE (the
+  * q_ivf_cells pattern).
   */
 object PackQueries {
 
