@@ -15,7 +15,7 @@ import java.nio.file.{Files, Paths}
   * Per-query time = min of two back-to-back runs, PLUS a stall-aware retime
   * pass (see BENCH_NOTES.md: the host exhibits roving multi-second
   * hypervisor stalls that can span both back-to-back runs — the r8
-  * round-boundary file recorded one gate at 14.5 s where five committed
+  * round-boundary file recorded q_asof_join at 14.5 s where five committed
   * same-code runs measured 0.6-0.8 s). After the suite, any query whose
   * min-of-2 exceeds 2.0x its best committed value (BENCH_REF.json) is re-run
   * in isolation (min-of-2 again, stalls having roved elsewhere by then) and

@@ -38,8 +38,9 @@ object StreamArchiver {
     * to three times per trigger — at high trigger rates the probes would
     * dominate); the filtered writes then read from the cached blocks.
     *
-    * Idempotent per `batchId`: fresh rows OVERWRITE `liveDir/batch=<id>`,
-    * so a micro-batch replayed after a mid-batch crash (live write committed,
+    * Idempotent per `batchId`: fresh rows OVERWRITE `liveDir/batch=<id>`
+    * (the repo's sink discipline — StreamingShards, BucketStore), so a
+    * micro-batch replayed after a mid-batch crash (live write committed,
     * backfill or checkpoint commit didn't) rewrites its own directory
     * instead of appending every fresh row a second time. The backfill leg
     * is idempotent by construction (PK-keyed overwrite merge). Read the

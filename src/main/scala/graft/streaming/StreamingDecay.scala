@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
   * wall time). Dropping a key forgets at most `minMass` of score, the
   * documented approximation.
   *
-  * Exactly-once replay: state for batch b derives from the newest state
-  * with id < b and is atomically renamed to `state=<b>`, so a replayed
-  * batch rewrites the same directory from the same predecessor and
-  * cannot double-count.
+  * Exactly-once replay: the [[StreamingSketches]] store discipline —
+  * state for batch b derives from the newest state with id < b and is
+  * atomically renamed to `state=<b>`, so a replayed batch rewrites the
+  * same directory from the same predecessor and cannot double-count.
   *
   * Scale shape: per batch one partial/final aggregate over the batch
   * plus one key-cardinality outer join; state size bounded by active

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
-/** The user-keyed gates (sessionize / funnel / cohort) read the
+/** The user-keyed gates (sessionize / funnel / cohort / as-of) read the
   * user_id-bucketed events layout (Tables.eventsByUser) as their DEFAULT
   * input. These tests pin the point of that layout: the fact table is
   * never re-shuffled at query time — the only exchanges left in any gate
@@ -113,6 +113,23 @@ class BucketedGatesSpec extends SparkSpec {
     assert(planStr.contains("HashAggregate"), planStr)
     assert(!planStr.contains("SerializeFromObject"),
       s"opaque RDD stage in cohort plan:\n$planStr")
+  }
+
+  test("as-of join from the bucketed table runs with zero shuffles") {
+    // ref derivation (groupBy user_id, ts) rides the bucket partitioning,
+    // and the merge union PRESERVES it (CoPartitionedUnion), so the
+    // window re-sorts within partitions but never exchanges
+    val evSel = ev.select(col("user_id"),
+      unix_timestamp(col("ts")).as("ts"), col("event_id"), col("value"))
+    val ref = evSel.where(col("event_id") % 3 === 0)
+      .groupBy("user_id", "ts")
+      .agg(max("event_id").as("seq"),
+        max_by(col("value"), col("event_id")).as("ref_value"))
+    val df = graft.operators.TemporalJoin.asof(
+      evSel.select("user_id", "ts", "event_id"), ref,
+      "user_id", "ts", Seq("seq", "ref_value"), "seq")
+    val plan = executed(df)
+    assert(countShuffles(plan) == 0, plan.toString)
   }
 
   test("bucketed-path sessionize result equals raw-path result") {
