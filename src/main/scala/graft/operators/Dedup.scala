@@ -418,8 +418,7 @@ object Dedup {
     * (b_id, c_id, est_jaccard) for every batch document whose minhash
     * signature agrees with a corpus document's at >= `threshold` and
     * shares at least one LSH band — the near-dup half of incremental
-    * ingestion (the batch analogue of StreamingNearDedup's cross-batch
-    * probe, without the persistent store).
+    * ingestion.
     *
     * Scale shape: batch signatures persist for the duration of the call
     * (the batch is small); the corpus is scanned twice but NEVER persisted

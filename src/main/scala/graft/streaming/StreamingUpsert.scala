@@ -20,8 +20,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * live/archive split: rows past the archiving cutoff live in the
   * day-partitioned archive, [[graft.ingest.Archiver]]) should pass
   * `ttlMs` ≈ the archiving delay so idle keys age out of state once the
-  * archive owns them — the [[StreamingDedup]] TTL discipline; without a
-  * TTL, churning key spaces grow state without bound.
+  * archive owns them (`GroupStateTimeout.ProcessingTimeTimeout`); without
+  * a TTL, churning key spaces grow state without bound.
   */
 object StreamingUpsert {
 
