@@ -209,9 +209,7 @@ object TextRank {
     * document-frequency 1). A near-zero fraction flags templated /
     * boilerplate-heavy documents that exact and minhash dedup both miss
     * (each copy differs, but every phrase is borrowed); a high fraction
-    * marks genuinely novel text. Complements [[graft.operators.Curation]]
-    * contamination scoring, which compares against an EXTERNAL benchmark —
-    * this is the corpus measured against itself.
+    * marks genuinely novel text: the corpus measured against itself.
     *
     * Shape: the gram multiset via the count-only-generator index explode
     * ([[TextOps.explodeShingles]] — exploding an `array_distinct(...)`

@@ -1,63 +1,17 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.Curation
 import org.apache.spark.sql.functions._
 
-/** Gate queries for the round-9 corpus-modeling additions: line-level
-  * boilerplate removal ([[graft.operators.Curation.removeBoilerplate]]),
-  * graph and keyword ranking, and corpus text statistics.
+/** Gate queries for the round-9 corpus-modeling additions: graph and
+  * keyword ranking and corpus text statistics.
   *
-  * Oracle strategy: the synthetic documents are single-line, so the
-  * boilerplate gate plants its own chrome lines from SQL-expressible
-  * per-row arithmetic (the multimodal planted-contract pattern) and both
-  * engines replay the identical injection; float scores follow the
-  * `q_text_bm25` protocol (exact integer counts, `ln` terms, ROUND(,4)
-  * on both sides).
+  * Oracle strategy: float scores follow the `q_text_bm25` protocol
+  * (exact integer counts, `ln` terms, ROUND(,4) on both sides).
   */
 object CorpusQueries {
 
   val defs: Seq[QueryDef] = Seq(
-
-    // --- curation: line-level boilerplate removal (CCNet-style). Every
-    // doc gets a per-source NAV header and (c) footer (100% document
-    // frequency within the source → removed); docs with doc_id % 7 == 0
-    // also get a SUBSCRIBE line (~14%, spread across sources since
-    // source = doc_id mod 20 and gcd(7,20)=1 → below the 50% threshold,
-    // kept). The md5 fingerprint pins the full rebuilt text.
-    QueryDef("q_curation_boilerplate",
-      """WITH injected AS (
-        |  SELECT doc_id, source,
-        |    'NAV ' || source || chr(10) || text || chr(10) || '(c) ' || source ||
-        |    CASE WHEN doc_id % 7 = 0 THEN chr(10) || 'SUBSCRIBE NOW' ELSE '' END AS t
-        |  FROM documents),
-        |df AS (
-        |  SELECT source, line, COUNT(*) AS dw FROM (
-        |    SELECT DISTINCT doc_id, source, unnest(string_split(t, chr(10))) AS line
-        |    FROM injected)
-        |  GROUP BY 1, 2),
-        |nd AS (SELECT source, COUNT(*) AS n FROM injected GROUP BY 1),
-        |bp AS (SELECT source, list(line) AS bl FROM df JOIN nd USING (source)
-        |       WHERE dw >= n * 0.5 GROUP BY 1),
-        |clean AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(t, chr(10)),
-        |      l -> NOT list_contains(coalesce(bl, []), l)) AS keep,
-        |    len(string_split(t, chr(10))) AS n_lines
-        |  FROM injected LEFT JOIN bp USING (source))
-        |SELECT doc_id, CAST(n_lines - len(keep) AS BIGINT) AS n_removed,
-        |       md5(array_to_string(keep, chr(10))) AS clean_fp
-        |FROM clean ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val injected = Tables.documents(s, d).select(col("doc_id"), col("source"),
-        concat(lit("NAV "), col("source"), lit("\n"), col("text"),
-          lit("\n(c) "), col("source"),
-          when(col("doc_id") % 7 === 0, lit("\nSUBSCRIBE NOW"))
-            .otherwise(lit(""))).as("text"))
-      Curation.removeBoilerplate(injected, "doc_id", "text", "source", 0.5)
-        .select(col("doc_id"), col("n_removed"), md5(col("text")).as("clean_fp"))
-        .orderBy("doc_id")
-    },
-
     // --- graph analytics: PageRank over the symmetric cosine-similarity
     // graph (canonical-document centrality). Exact edge set cross-engine
     // (the q_emb_near_dup bit-identical-cosine precedent); 3 power

@@ -1,20 +1,18 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Curation, Dedup, Similarity}
+import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Gate queries for the round-8 data-pipeline additions: exact cosine
   * radius search, cluster-balanced sampling and hard-negative mining
-  * ([[graft.operators.Similarity]]), the Gopher-style quality-rule filter
-  * ([[graft.operators.Curation]]) and hybrid BM25→cosine retrieval
+  * ([[graft.operators.Similarity]]) and hybrid BM25→cosine retrieval
   * ([[graft.operators.TextRank]]).
   *
   * Oracle strategy per gate: searches emit ids only, so DuckDB recomputes
   * the same double-precision cosine / argmin-L2 exactly (the
-  * q_emb_near_dup precedent); quality rules are integer
-  * cross-multiplications (float-free); hybrid retrieval
-  * composes the rounded BM25 oracle with an exact cosine rerank.
+  * q_emb_near_dup precedent); hybrid retrieval composes the rounded BM25
+  * oracle with an exact cosine rerank.
   */
 object DataOpsQueries {
 
@@ -229,38 +227,6 @@ object DataOpsQueries {
         .orderBy("vec_id")
     },
 
-    // --- quality-rule filter (Gopher §A.1.1 shape): five integer rule
-    // flags + their conjunction. All thresholds cross-multiplied so the
-    // oracle compare is float-free.
-    QueryDef("q_quality_rules",
-      """WITH toks AS (SELECT doc_id AS id, unnest(string_split_regex(trim(text), '\s+')) AS tok
-        |              FROM documents),
-        |perdoc AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n_words,
-        |  CAST(SUM(len(tok)) AS BIGINT) AS n_wchars,
-        |  CAST(COUNT(DISTINCT tok) AS BIGINT) AS n_types,
-        |  CAST(SUM(CASE WHEN tok IN ('the','a','of','and','to','in','is')
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
-        |  FROM toks GROUP BY 1),
-        |maxf AS (SELECT id, CAST(MAX(c) AS BIGINT) AS max_freq
-        |         FROM (SELECT id, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2)
-        |         GROUP BY 1),
-        |flags AS (SELECT id,
-        |  CAST(CASE WHEN n_words >= 30 THEN 1 ELSE 0 END AS INT) AS r_nwords,
-        |  CAST(CASE WHEN n_wchars >= 4*n_words AND n_wchars <= 10*n_words
-        |       THEN 1 ELSE 0 END AS INT) AS r_wordlen,
-        |  CAST(CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END AS INT) AS r_stop,
-        |  CAST(CASE WHEN 2*n_types >= n_words THEN 1 ELSE 0 END AS INT) AS r_ttr,
-        |  CAST(CASE WHEN 10*max_freq <= n_words THEN 1 ELSE 0 END AS INT) AS r_maxfreq
-        |  FROM perdoc JOIN maxf USING (id))
-        |SELECT CAST(id AS BIGINT) AS doc_id, r_nwords, r_wordlen, r_stop,
-        |  r_ttr, r_maxfreq,
-        |  CAST(r_nwords*r_wordlen*r_stop*r_ttr*r_maxfreq AS INT) AS keep
-        |FROM flags ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Curation.qualityRules(Tables.documents(s, d), "doc_id", "text")
-        .withColumn("keep", col("keep").cast("int"))
-        .orderBy("doc_id")
-    },
-
     // --- hard-negative mining: each query's top-3 most-similar vectors
     // with a DIFFERENT label (the informative negatives for contrastive
     // training). Exact oracle mirrors q_ann_topk with the label predicate.
@@ -328,7 +294,7 @@ object DataOpsQueries {
     // 0.7·rel − (1−0.7)·max-cos-to-picked; first pick is pure relevance.
     // Selection compares scores ROUNDED to 6 with the smaller-id tiebreak
     // (the q_emb_outliers engine-independence rule). The oracle unrolls
-    // the 5 greedy steps as chained CTEs (the q_link_rank iteration
+    // the 5 greedy steps as chained CTEs (the q_graph_pagerank iteration
     // precedent); (1 - 0.7) is spelled identically in both engines so the
     // IEEE value of the diversity weight matches bit-for-bit.
     QueryDef("q_retrieval_mmr",
@@ -593,28 +559,6 @@ object DataOpsQueries {
         .orderBy("doc_id", "rank")
     },
 
-    // --- graded decontamination: per-doc 3-gram overlap counts against
-    // the doc_id<10 benchmark (the q_curation_decontam fixture), flagged
-    // at >= 1/20 overlap via cross-multiplication — integer-exact.
-    QueryDef("q_contamination_score",
-      """WITH tok AS (SELECT doc_id, unnest(ts) AS t, unnest(range(1, len(ts)+1)) AS i
-        |             FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ts FROM documents)),
-        |g AS (SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS gram
-        |      FROM tok a JOIN tok b ON b.doc_id=a.doc_id AND b.i=a.i+1
-        |                 JOIN tok c ON c.doc_id=a.doc_id AND c.i=a.i+2),
-        |bg AS (SELECT DISTINCT gram FROM g WHERE doc_id < 10),
-        |per AS (SELECT g.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-        |        CAST(SUM(CASE WHEN bg.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_shared
-        |        FROM g LEFT JOIN bg ON bg.gram = g.gram GROUP BY 1)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, n_grams, n_shared,
-        |  CAST(CASE WHEN 20*n_shared >= n_grams THEN 1 ELSE 0 END AS INT) AS flagged
-        |FROM per ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d)
-      Curation.contaminationScore(docs, docs.where(col("doc_id") < 10),
-          "doc_id", "text", n = 3, flagDenom = 20)
-        .orderBy("doc_id")
-    },
-
     // --- normalized-key dedup: exact dedup one rung below minhash — the
     // planted copies differ only by case and punctuation, and collapse
     // onto their originals under the canonical form. Pure character-class
@@ -647,17 +591,6 @@ object DataOpsQueries {
         .orderBy("doc_id")
     },
 
-    // --- token-length histogram per source (mix/packing planning):
-    // integer bucket = n_tokens DIV 50, counts and token mass per cell.
-    QueryDef("q_token_histogram",
-      """SELECT source, CAST(len(string_split_regex(trim(text), '\s+')) // 50 AS BIGINT) AS bucket,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens
-        |FROM documents GROUP BY 1, 2 ORDER BY source NULLS FIRST, bucket NULLS FIRST""".stripMargin) { (s, d) =>
-      Curation.tokenHistogram(Tables.documents(s, d), "source", "text", 50)
-        .orderBy("source", "bucket")
-    },
-
     // --- snapshot diff: crawl N (doc_id < 480) vs crawl N+1 (doc_id >=
     // 20, every 7th text mutated) — added/removed/changed/unchanged per
     // id. Statuses depend only on content-hash equality; the oracle
@@ -683,50 +616,6 @@ object DataOpsQueries {
           concat(col("text"), lit(" mutated"))).otherwise(col("text")))
       Dedup.snapshotDiff(oldv, newv, "doc_id", Seq("text"))
         .select(col("doc_id").cast("long").as("doc_id"), col("status"))
-        .orderBy("doc_id")
-    },
-
-    // --- surgical decontamination: cut only the token windows overlapping
-    // a benchmark 3-gram (benchmark = doc_id < 10) and rebuild; benchmark
-    // member docs empty out entirely, everything else keeps its clean
-    // tokens. Compared by rebuilt-text md5, the q_dedup_span_trim
-    // precedent.
-    QueryDef("q_curation_trim",
-      """WITH bench AS (SELECT text FROM documents WHERE doc_id < 10),
-        |bg AS (SELECT DISTINCT unnest(list_distinct(list_transform(range(1, len(ts)-1),
-        |        i -> array_to_string(ts[i:i+2], ' ')))) AS g
-        |       FROM (SELECT string_split_regex(trim(text), '\s+') AS ts FROM bench)
-        |       WHERE len(ts) >= 3),
-        |tk AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS ts FROM documents),
-        |pos AS (SELECT tk.doc_id, i - 1 AS start
-        |        FROM tk, unnest(range(1, len(ts) - 1)) AS u(i)
-        |        WHERE len(ts) >= 3 AND array_to_string(ts[i:i+2], ' ') IN (SELECT g FROM bg)),
-        |removed AS (SELECT DISTINCT doc_id, CAST(unnest(range(start, start + 3)) AS BIGINT) AS ti FROM pos),
-        |toks AS (SELECT tk.doc_id, i - 1 AS ti, ts[i] AS tok
-        |         FROM tk, unnest(range(1, len(ts) + 1)) AS u(i)),
-        |kept AS (SELECT t.doc_id, t.ti, t.tok FROM toks t
-        |         LEFT JOIN removed r ON r.doc_id = t.doc_id AND r.ti = t.ti
-        |         WHERE r.ti IS NULL),
-        |rebuilt AS (
-        |  SELECT tk.doc_id,
-        |    CASE WHEN tk.doc_id IN (SELECT doc_id FROM removed)
-        |      THEN COALESCE((SELECT string_agg(k.tok, ' ' ORDER BY k.ti)
-        |                     FROM kept k WHERE k.doc_id = tk.doc_id), '')
-        |      ELSE tk.text END AS txt
-        |  FROM tk)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(CASE WHEN txt = '' THEN 0
-        |       ELSE len(string_split_regex(trim(txt), '\s+')) END AS BIGINT) AS n_tokens,
-        |  md5(txt) AS fp
-        |FROM rebuilt ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      Curation.trimContaminated(docs, docs.where(col("doc_id") < 10),
-          "doc_id", "text", n = 3)
-        .select(col("doc_id").cast("long").as("doc_id"),
-          when(col("text") === "", 0L)
-            .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
-            .as("n_tokens"),
-          md5(col("text")).as("fp"))
         .orderBy("doc_id")
     },
   )

@@ -1,28 +1,24 @@
 package graft.queries
 
-import java.io.FileOutputStream
-import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import graft.{QueryDef, Tables}
 import graft.operators.TextOps
 import graft.sinks.TrainingShards
-import graft.sources.WarcSource
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Gate queries for the corpus I/O boundary: the WARC/WET crawl source
-  * ([[graft.sources.WarcSource]]) and the binary token-shard sink
+/** Gate queries for the corpus export sinks: gzip JSONL shards
+  * ([[graft.sinks.JsonlShards]]) and binary token shards
   * ([[graft.sinks.TrainingShards]]).
   *
-  * Both gates round-trip REAL bytes — the WARC gate parses a fixture
-  * written in the public WARC framing and checks the extracted documents
-  * against a VALUES oracle; the shard gate writes the corpus's token ids
-  * through the .bin/.idx writer, reads them back, and checks per-sequence
-  * count and sum against a DuckDB replay of the same tokenization. The
-  * shard gate leans on the sink's global-order contract: range partitions
-  * ascend with shard file names, so the read-back (shard, seq_idx) order
-  * IS doc_id order.
+  * Both gates round-trip REAL bytes: the JSONL gate aggregates the
+  * `spark.read.json` read-back; the shard gate writes the corpus's token
+  * ids through the .bin/.idx writer, reads them back, and checks
+  * per-sequence count and sum against a DuckDB replay of the same
+  * tokenization. The shard gate leans on the sink's global-order
+  * contract: range partitions ascend with shard file names, so the
+  * read-back (shard, seq_idx) order IS doc_id order.
   */
 object ExportQueries {
 
@@ -32,29 +28,6 @@ object ExportQueries {
     * is the point.
     */
   private val ShardVocab = 256
-
-  private def warcFixture(): String = {
-    val dir = Files.createTempDirectory("graft_warc_gate").toString
-    def rec(recType: String, id: String, uri: String, ct: String,
-        payload: String): Array[Byte] = {
-      val p = payload.getBytes(UTF_8)
-      (s"WARC/1.0\r\nWARC-Type: $recType\r\nWARC-Record-ID: <urn:uuid:$id>\r\n" +
-        (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
-        s"WARC-Date: 2024-03-01T12:00:00Z\r\nContent-Type: $ct\r\n" +
-        s"Content-Length: ${p.length}\r\n\r\n").getBytes(UTF_8) ++
-        p ++ "\r\n\r\n".getBytes(UTF_8)
-    }
-    val out = new FileOutputStream(s"$dir/gate.warc")
-    Seq(
-      rec("warcinfo", "info", null, "application/warc-fields", "software: graft\r\n"),
-      rec("response", "a", "https://crawl.test/a", "text/html", "alpha page body"),
-      rec("response", "bin", "https://crawl.test/bin", "application/pdf", "%PDF-fake"),
-      rec("conversion", "b", "https://crawl.test/b", "text/plain", "beta extracted text"),
-      rec("response", "c", "https://crawl.test/c", "text/plain; charset=utf-8", "gamma plain"))
-      .foreach(out.write)
-    out.close()
-    dir
-  }
 
   val defs: Seq[QueryDef] = Seq(
     // --- gzip JSONL shard export → read-back round trip: write the
@@ -78,24 +51,6 @@ object ExportQueries {
           sum(length(col("text"))).as("sum_chars"))
         .select(lit(nShards).as("shards"), col("n"), col("sum_id"),
           col("sum_chars"))
-    },
-
-    // --- WARC/WET crawl ingestion → documents projection ------------------
-    // The fixture is fixed bytes in the public WARC framing (version line,
-    // CRLF headers, Content-Length payload, double-CRLF terminator), so the
-    // oracle is the literal expected relation: text-bearing records survive
-    // (response+text/*, conversion), binary responses and warcinfo drop.
-    QueryDef("q_warc_documents",
-      """SELECT * FROM (VALUES
-        |  ('https://crawl.test/a', TIMESTAMP '2024-03-01 12:00:00', 'alpha page body'),
-        |  ('https://crawl.test/b', TIMESTAMP '2024-03-01 12:00:00', 'beta extracted text'),
-        |  ('https://crawl.test/c', TIMESTAMP '2024-03-01 12:00:00', 'gamma plain'))
-        |  t(url, ts, text)
-        |ORDER BY url""".stripMargin) { (s, _) =>
-      val dir = warcFixture()
-      WarcSource.warcToDocuments(WarcSource.readWarc(s, dir))
-        .select("url", "ts", "text")
-        .orderBy("url")
     },
 
     // --- token-shard export round trip ------------------------------------
@@ -128,95 +83,5 @@ object ExportQueries {
           size(col("tokens")).cast("long").as("n_tokens"),
           aggregate(col("tokens"), lit(0L), (a, x) => a + x).as("sum_ids"))
         .orderBy("seq")
-    },
-
-    // --- crawl → curate → shards, end to end ------------------------------
-    // The full boundary-to-boundary path in ONE job: WARC bytes parsed →
-    // documents → exact keep-min dedup (min url per text) → minimum
-    // token-count quality floor → replayable ids → shard pairs on disk →
-    // read back. The oracle starts from the fixture's expected surviving
-    // TEXTS (the parse semantics are pinned separately by
-    // q_warc_documents) and replays dedup, the quality floor, the
-    // tokenization and the id sums; the shard sink's global-order
-    // contract makes read-back order == url order.
-    QueryDef("q_pipeline_crawl_shards",
-      """WITH input AS (SELECT * FROM (VALUES
-        |  ('https://crawl.test/a', 'alpha page body words here'),
-        |  ('https://crawl.test/b', 'beta extracted text body words'),
-        |  ('https://crawl.test/c', 'gamma plain page body here'),
-        |  ('https://crawl.test/d', 'alpha page body words here'),
-        |  ('https://crawl.test/e', 'tiny text only')) t(url, text)),
-        |s1 AS (SELECT MIN(url) AS url FROM input GROUP BY text),
-        |docs AS (SELECT i.url, i.text FROM input i JOIN s1 USING (url)),
-        |surv AS (
-        |  SELECT url, toks FROM (
-        |    SELECT url, string_split_regex(trim(lower(text)), '\s+') AS toks
-        |    FROM docs)
-        |  WHERE len(toks) >= 4)
-        |SELECT ROW_NUMBER() OVER (ORDER BY url) AS seq,
-        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(list_sum(list_transform(toks, x -> least(length(x), 255)))
-        |    AS BIGINT) AS sum_ids
-        |FROM surv ORDER BY seq""".stripMargin) { (s, _) =>
-      val dir = crawlFixture()
-      val docs = WarcSource
-        .warcToDocuments(WarcSource.readWarc(s, dir))
-        .select(col("url"), col("text"))
-      val keepUrls = graft.operators.Dedup.exactKeepMin(docs, "text", "url")
-        .select("url")
-      val kept = docs.join(keepUrls, Seq("url"), "left_semi")
-        .withColumn("toks", TextOps.tokens(lower(col("text"))))
-        .where(size(col("toks")) >= 4)
-      val ids = kept.select(
-        row_number().over(Window.orderBy("url")).cast("long").as("doc_id"),
-        transform(col("toks"),
-          t => least(length(t), lit(255)).cast("int")).as("ids"))
-      val out = Files.createTempDirectory("graft_crawl_shards")
-        .resolve("out").toString
-      TrainingShards.write(ids, "doc_id", "ids", out, vocabSize = ShardVocab,
-        shards = 2)
-      TrainingShards.read(s, out)
-        .select(
-          row_number().over(Window.orderBy("shard", "seq_idx"))
-            .cast("long").as("seq"),
-          size(col("tokens")).cast("long").as("n_tokens"),
-          aggregate(col("tokens"), lit(0L), (a, x) => a + x).as("sum_ids"))
-        .orderBy("seq")
     })
-
-  /** Richer crawl fixture for the e2e gate: three unique text documents,
-    * one exact duplicate (drops at dedup, min-url kept), one too-short
-    * page (drops at the quality floor), one binary response and a
-    * warcinfo (drop at parse).
-    */
-  private def crawlFixture(): String = {
-    val dir = Files.createTempDirectory("graft_crawl_gate").toString
-    def rec(recType: String, id: String, uri: String, ct: String,
-        payload: String): Array[Byte] = {
-      val p = payload.getBytes(UTF_8)
-      (s"WARC/1.0\r\nWARC-Type: $recType\r\nWARC-Record-ID: <urn:uuid:$id>\r\n" +
-        (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
-        s"WARC-Date: 2024-03-01T12:00:00Z\r\nContent-Type: $ct\r\n" +
-        s"Content-Length: ${p.length}\r\n\r\n").getBytes(UTF_8) ++
-        p ++ "\r\n\r\n".getBytes(UTF_8)
-    }
-    val out = new FileOutputStream(s"$dir/crawl.warc")
-    Seq(
-      rec("warcinfo", "info", null, "application/warc-fields", "software: graft\r\n"),
-      rec("response", "a", "https://crawl.test/a", "text/html",
-        "alpha page body words here"),
-      rec("conversion", "b", "https://crawl.test/b", "text/plain",
-        "beta extracted text body words"),
-      rec("response", "c", "https://crawl.test/c", "text/plain; charset=utf-8",
-        "gamma plain page body here"),
-      rec("response", "d", "https://crawl.test/d", "text/html",
-        "alpha page body words here"),
-      rec("response", "e", "https://crawl.test/e", "text/plain",
-        "tiny text only"),
-      rec("response", "bin", "https://crawl.test/bin", "application/pdf",
-        "%PDF-fake"))
-      .foreach(out.write)
-    out.close()
-    dir
-  }
 }

@@ -83,53 +83,6 @@ class DataOpsSpec extends SparkSpec {
     assert(neg.filter(_._1 == q0).map(_._2).toSeq == brute)
   }
 
-  // --- qualityRules --------------------------------------------------------
-
-  test("qualityRules flags each rule independently") {
-    // 30 distinct 6-char words + 7 stopwords: 37 words, mean length ≈ 5.2,
-    // TTR = 1, max frequency 1/37 — passes every rule
-    val good = (0 until 30).map(i => f"word$i%02d").mkString(" ") +
-      " the a of and to in is"
-    val docs = Seq(
-      (1L, good), // passes everything
-      (2L, "short text only here"), // fails r_nwords (<30 words)
-      (3L, ("spark " * 40).trim), // fails r_ttr + r_maxfreq (one token repeated)
-      (4L, (("internationalization " * 3) + ("the a of and to in is " * 5)).trim)
-    ).toDF("doc_id", "text")
-    val flags = Curation.qualityRules(docs, "doc_id", "text")
-      .orderBy("doc_id")
-      .select("r_nwords", "r_wordlen", "r_stop", "r_ttr", "r_maxfreq", "keep")
-      .as[(Int, Int, Int, Int, Int, Int)].collect()
-
-    assert(flags(0) == ((1, 1, 1, 1, 1, 1)), s"good doc: ${flags(0)}")
-    assert(flags(1)._1 == 0, "doc 2 fails word count")
-    assert(flags(1)._6 == 0)
-    assert(flags(2)._4 == 0, "doc 3 fails type-token ratio")
-    assert(flags(2)._5 == 0, "doc 3 fails max token frequency")
-    // doc 4: 38 words, mean length fine? 'internationalization' ×3 (20
-    // chars) + 35 short stopwords — mean < 4 → r_wordlen fails
-    assert(flags(3)._2 == 0, s"doc 4 fails mean word length: ${flags(3)}")
-  }
-
-  test("qualityRules agrees with a DataFrame recomputation on real docs") {
-    val docs = Tables.documents(spark, sfDir)
-    val got = Curation.qualityRules(docs, "doc_id", "text")
-    // recompute n_words / n_types / stopword count with spark built-ins
-    val toks = TextOps.tokens(col("text"))
-    val want = docs.select(col("doc_id"),
-      size(toks).cast("long").as("n_words"),
-      size(array_distinct(toks)).cast("long").as("n_types"),
-      size(filter(toks, t => t.isInCollection(Curation.StopwordsEn.toSeq)))
-        .cast("long").as("n_stop"))
-    val joined = got.join(want, "doc_id")
-      .where(
-        (col("r_nwords") === 1) =!= (col("n_words") >= 30) ||
-        (col("r_stop") === 1) =!= (col("n_stop") >= 2) ||
-        (col("r_ttr") === 1) =!= (col("n_types") * 2 >= col("n_words")))
-    assert(joined.count() == 0)
-    assert(got.where(col("keep") === 1).count() > 0)
-  }
-
   // --- hybrid retrieval ------------------------------------------------------
 
   test("hybridTopK reranks exactly the BM25 candidate set by cosine") {

@@ -76,13 +76,6 @@ class OperatorPlanSpec extends SparkSpec {
       s"rangeSearch must not shuffle the corpus:\n${plan.take(2000)}")
   }
 
-  test("qualityRules is a pure map-side pass — no exchange at all") {
-    val plan = planString(
-      Curation.qualityRules(Tables.documents(spark, sfDir), "doc_id", "text"))
-    assert(!plan.contains("Exchange"),
-      s"qualityRules must not shuffle:\n${plan.take(2000)}")
-  }
-
   test("clusterBalance caps hot cells below the exchange (WindowGroupLimit)") {
     val emb = Tables.embeddings(spark, sfDir)
     val centroids = Array.tabulate(4)(j => Array.tabulate(64)(i =>
@@ -93,35 +86,11 @@ class OperatorPlanSpec extends SparkSpec {
       s"per-cell cap must push a partial group limit below the shuffle:\n${plan.take(2000)}")
   }
 
-  test("removeBoilerplate joins the boilerplate set by broadcast — corpus never shuffles") {
-    import org.apache.spark.sql.functions.{col, concat, lit}
-    // plant a universal header so the boilerplate set is non-empty —
-    // on a boilerplate-free corpus AQE's empty-relation propagation
-    // correctly erases the join altogether (covered by the gate corpus)
-    val injected = Tables.documents(spark, sfDir).withColumn("text",
-      concat(lit("NAV "), col("source"), lit("\n"), col("text")))
-    val plan = planString(Curation.removeBoilerplate(
-      injected, "doc_id", "text", "source", 0.5))
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
-    assert(!plan.contains("SortMergeJoin"),
-      s"boilerplate-set join must broadcast, not sort-merge:\n${plan.take(2000)}")
-  }
-
   test("tfidfTopK pushes a partial group limit below the per-doc window") {
     val plan = planString(TextRank.tfidfTopK(
       Tables.documents(spark, sfDir), "doc_id", "text", k = 3))
     assert(plan.contains("WindowGroupLimit"),
       s"per-doc top-k must cap candidates below the exchange:\n${plan.take(2000)}")
-  }
-
-  test("contaminationScore broadcasts the benchmark gram set") {
-    val docs = Tables.documents(spark, sfDir)
-    val plan = planString(Curation.contaminationScore(docs,
-      docs.where(org.apache.spark.sql.functions.col("doc_id") < 10),
-      "doc_id", "text", n = 3))
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
-    assert(!plan.contains("SortMergeJoin"),
-      s"benchmark grams must broadcast:\n${plan.take(2000)}")
   }
 
   test("dedupAgainst probes the corpus with broadcasts only — corpus never shuffles") {
@@ -135,20 +104,6 @@ class OperatorPlanSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     assert(!plan.contains("SortMergeJoin"),
       s"corpus-side shuffle join crept into dedupAgainst:\n${plan.take(2000)}")
-  }
-
-  test("trimContaminated broadcasts the benchmark gram set") {
-    val docs = Tables.documents(spark, sfDir)
-    val plan = planString(Curation.trimContaminated(docs,
-      docs.where(org.apache.spark.sql.functions.col("doc_id") < 10),
-      "doc_id", "text", n = 3))
-    // scope the assertion to the GRAM probe (the semi-join against the
-    // broadcast benchmark set) — the outer corpus⟕hits join's build side
-    // is bounded by contamination volume, not benchmark size, and may
-    // legitimately stop broadcasting at scale
-    assert(plan.linesIterator.exists(l =>
-      l.contains("BroadcastHashJoin") && l.contains("LeftSemi")),
-      s"benchmark gram probe must be a broadcast semi-join:\n${plan.take(2000)}")
   }
 
   test("collocations joins the staged count tables — no cartesian, no third corpus scan") {
@@ -195,18 +150,6 @@ class OperatorPlanSpec extends SparkSpec {
       s"decay agg must shuffle once:\n${plan.take(2000)}")
     assert(plan.contains("partial_sum") || plan.contains("HashAggregate"),
       plan.take(2000))
-  }
-
-  test("anchorStats shuffles only the (domain, anchor) partial counts") {
-    import org.apache.spark.sql.functions._
-    val docs = Tables.documents(spark, sfDir).select(
-      concat(lit("https://s"), (col("doc_id") % 5).cast("string"),
-        lit(".com/p")).as("url"),
-      concat(lit("<a href=\"https://t"), (col("doc_id") % 3).cast("string"),
-        lit(".org/x\">read this</a>")).as("html"))
-    val plan = planString(Curation.anchorStats(docs, "url", "html"))
-    assert(plan.split("\n").count(_.contains("Exchange")) <= 1,
-      s"anchor aggregation must shuffle once:\n${plan.take(2000)}")
   }
 
   test("tpch q5 shape: every dim broadcasts, only the fact pair shuffle-joins") {
