@@ -99,10 +99,6 @@ object GraftExtensions {
         "shingle_hash60"),
       (es: Seq[Expression]) => graft.functions.ShingleHash60Expr(es.head,
         intArg(es(1), "shingle_hash60 n"))),
-    ("feature_hash60",
-      new ExpressionInfo(classOf[graft.functions.FeatureHash60Expr].getName,
-        "feature_hash60"),
-      (es: Seq[Expression]) => graft.functions.FeatureHash60Expr(es.head)),
     ("jl_project",
       new ExpressionInfo(classOf[graft.operators.JlProject].getName,
         "jl_project"),

@@ -92,63 +92,6 @@ object GramHash {
     */
   def shingleHash60Col(toks: Column, n: Int): Column =
     Bridge.column(ShingleHash60Expr(Bridge.expression(toks), n))
-
-  /** Kernel for the classifier's fastText-style feature family: hash60
-    * of every unigram followed by hash60 of every space-joined bigram —
-    * exactly `concat(toks, shingles(toks, 2))` mapped through
-    * [[Sketches.hash60]], with token bytes extracted once and shared by
-    * both families. Null-element handling follows the chain it
-    * replaces: a null unigram hashes as the empty string (`md5(NULL)`
-    * is null, but the classifier's tokenizers never emit null tokens —
-    * this branch exists so a hand-built array cannot NPE), and bigram
-    * joining skips nulls like `array_join`/`concat_ws`.
-    */
-  def featureHash60(toks: ArrayData): ArrayData = {
-    val count = toks.numElements()
-    if (count == 0) return Empty
-    val tb = new Array[Array[Byte]](count)
-    var j = 0
-    while (j < count) {
-      if (!toks.isNullAt(j)) tb(j) = toks.getUTF8String(j).getBytes
-      j += 1
-    }
-    val md = localMd5.get()
-    val out = new Array[Long](count + count - 1)
-    @inline def read60(d: Array[Byte]): Long = {
-      var v = 0L
-      var p = 0
-      while (p < 7) { v = (v << 8) | (d(p) & 0xffL); p += 1 }
-      (v << 4) | ((d(7) & 0xf0L) >> 4)
-    }
-    var i = 0
-    while (i < count) {
-      if (tb(i) != null) md.update(tb(i))
-      out(i) = read60(md.digest())
-      i += 1
-    }
-    i = 0
-    while (i < count - 1) {
-      var emitted = 0
-      var k = i
-      while (k < i + 2) {
-        if (tb(k) != null) {
-          if (emitted > 0) md.update(Space)
-          md.update(tb(k))
-          emitted += 1
-        }
-        k += 1
-      }
-      out(count + i) = read60(md.digest())
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Column form of [[featureHash60]]; null in → null out (matching
-    * `concat(toks, shingles(toks, 2))`, which is null when `toks` is).
-    */
-  def featureHash60Col(toks: Column): Column =
-    Bridge.column(FeatureHash60Expr(Bridge.expression(toks)))
 }
 
 /** Codegen'd fused shingle-hash (see [[GramHash]]). Never null: the
@@ -190,30 +133,4 @@ case class ShingleHash60Expr(child: Expression, n: Int)
   override protected def withNewChildInternal(newChild: Expression): ShingleHash60Expr =
     copy(child = newChild)
   override def prettyName: String = "shingle_hash60"
-}
-
-/** Codegen'd fused unigram+bigram feature hashing (see
-  * [[GramHash.featureHash60]]). Null in → null out, matching the
-  * `concat(toks, shingles(toks, 2))` chain (concat of a null array is
-  * null).
-  */
-case class FeatureHash60Expr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    GramHash.featureHash60(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GramHash.featureHash60($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): FeatureHash60Expr =
-    copy(child = newChild)
-  override def prettyName: String = "feature_hash60"
 }

@@ -1268,31 +1268,4 @@ object Dedup {
         round(col("shared") / col("__sa"), roundTo).as("c_ab"),
         round(col("shared") / col("__sb"), roundTo).as("c_ba"))
   }
-
-  /** Cross-split near-dup leakage report: counts clone pairs (per
-    * [[winnowClonePairs]]) by the UNORDERED pair of split labels their
-    * endpoints landed in. The `(train, test)` rows are the eval-
-    * contamination number every training-data pipeline must watch — a
-    * near-dup of a test document inside train silently inflates eval.
-    * `splitCol` is any label column (a train/val/test assignment).
-    * Output: (split_a ≤ split_b lexicographically, n_pairs).
-    *
-    * Scale: the pair table carries only ids; the two label joins are
-    * id-keyed; winnow's cap bounds the pair count.
-    */
-  def splitLeakage(docs: DataFrame, idCol: String, textCol: String,
-      splitCol: String, k: Int = 3, w: Int = 4, minShared: Int = 2,
-      maxDocsPerFp: Int = 64): DataFrame = {
-    val labels = docs.select(col(idCol), col(splitCol))
-    val pairs = winnowClonePairs(docs, idCol, textCol, k, w, minShared,
-      maxDocsPerFp)
-    pairs
-      .join(labels.select(col(idCol).as("a_id"), col(splitCol).as("__la")),
-        Seq("a_id"))
-      .join(labels.select(col(idCol).as("b_id"), col(splitCol).as("__lb")),
-        Seq("b_id"))
-      .groupBy(least(col("__la"), col("__lb")).as("split_a"),
-        greatest(col("__la"), col("__lb")).as("split_b"))
-      .agg(count(lit(1)).as("n_pairs"))
-  }
 }

@@ -77,7 +77,6 @@ class GraftExtensionsSpec extends SparkSpec {
          |  tokenize_bpeish('$text') AS bp,
          |  normalize_text('$text') AS norm,
          |  shingle_hash60(tokenize_ws('$text'), 2) AS sh,
-         |  feature_hash60(tokenize_ws('$text')) AS fh,
          |  jl_project(CAST(array(1.0, 2.0, 3.0) AS array<float>), 3, 2) AS jl
          |""".stripMargin).head()
     assert(row.getSeq[String](0) == Seq("Hello", "World", "123!"))
@@ -86,8 +85,7 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(row.getSeq[Long](3) == Seq(
       graft.functions.Sketches.hash60("Hello World"),
       graft.functions.Sketches.hash60("World 123!")))
-    assert(row.getSeq[Long](4).length == 5) // 3 unigrams + 2 bigrams
-    assert(row.getSeq[Double](5).length == 2)
+    assert(row.getSeq[Double](4).length == 2)
   }
 
   test("the shared session does NOT see the isolated registration") {

@@ -74,28 +74,6 @@ class GramHashSpec extends SparkSpec {
     assert(withNulls.getSeq[Long](0) == withNulls.getSeq[Long](1))
   }
 
-  test("featureHash60 equals hashing concat(toks, shingles(toks, 2))") {
-    import spark.implicits._
-    val texts = Seq("", "one", "one two", "a b c d e",
-      "repeated repeated repeated", "ünïcödé 中文 😀 mix",
-      ("tok " * 50).trim)
-    val df = texts.toDF("text")
-      .select(TextOps.tokens(lower(col("text"))).as("toks"))
-    val sel = df.select(
-      GramHash.featureHash60Col(col("toks")).as("fast"),
-      transform(concat(col("toks"), TextOps.shingles(col("toks"), 2)),
-        f => Sketches.hash60Col(f)).as("slow"))
-    sel.collect().zip(texts).foreach { case (r, in) =>
-      assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"mismatch for '$in'")
-    }
-    // null token array -> null (concat-of-null semantics)
-    val nullRow = Seq(Option.empty[String]).toDF("text")
-      .select(GramHash.featureHash60Col(
-        TextOps.tokens(lower(col("text")))).as("fast"))
-      .head()
-    assert(nullRow.isNullAt(0))
-  }
-
   test("hash values match Sketches.hash60 of the joined gram") {
     import spark.implicits._
     val r = Seq("alpha beta gamma delta").toDF("text")

@@ -353,24 +353,6 @@ class DedupSpec extends SparkSpec {
     assert(expected.nonEmpty, "degenerate test corpus: no pairs at all")
   }
 
-  test("splitLeakage counts clone pairs by unordered split label") {
-    import spark.implicits._
-    val run = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val docs = Seq(
-      (1L, s"$run one two", "train"),
-      (2L, s"three four $run", "test"), // clone of 1, across the split
-      (3L, s"$run five six", "train"),  // clone of 1 and 2, inside train
-      (4L, "totally different content with no shared runs at all ok", "test"))
-      .toDF("doc_id", "text", "split")
-    val got = Dedup.splitLeakage(docs, "doc_id", "text", "split",
-        minShared = 1)
-      .as[(String, String, Long)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    // pairs: (1,2) cross, (1,3) train-train, (2,3) cross
-    assert(got == Map(("test", "train") -> 2L, ("train", "train") -> 1L),
-      got.toString)
-  }
-
   test("winnowFingerprints is shuffle-free") {
     val plan = Dedup.winnowFingerprints(
         Tables.documents(spark, sfDir), "doc_id", "text")
