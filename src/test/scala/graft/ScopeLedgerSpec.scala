@@ -7,9 +7,11 @@ import java.nio.file.{Files, Paths}
 /** SCOPE.md, the scope ledger, stays in step with the code: the gates it
   * names above "Retired" are exactly the registered gates, every unit file
   * under the ledger directories has exactly one ledger row whose Lines
-  * column is the file's line count, and a retired row names a file that
-  * is gone. Adding, removing, resizing or retiring a gate or a unit
-  * without a ledger edit fails here.
+  * column is the file's line count, every caller an anchor names is a
+  * live file, no "retire later" unit is called by a "keep" unit or the
+  * serving path, and a retired row names a file that is gone. Adding,
+  * removing, resizing or retiring a gate or a unit without a ledger edit
+  * fails here.
   */
 class ScopeLedgerSpec extends AnyFunSuite {
 
@@ -54,6 +56,32 @@ class ScopeLedgerSpec extends AnyFunSuite {
         if (lines == actual.toString) None else Some(s"${m.group(1)}: $lines, file has $actual")
       }.toSeq
     assert(wrong.isEmpty, s"Lines column out of date: ${wrong.mkString("; ")}")
+  }
+
+  test("every caller an anchor names is a live file, and no retire-later unit has a keep caller") {
+    // a row's cells after the unit: anchor | gates | lines | specs | status;
+    // callers are the backticked names in the anchor's "called by" clause
+    val calledBy = """called by ([^;]*)""".r
+    val rows = unitRow.findAllMatchIn(live)
+      .filterNot(_.group(1).startsWith("queries/"))
+      .map { m =>
+        val cells = m.group(2).split('|').map(_.trim)
+        val callers = calledBy.findFirstMatchIn(cells(0)).toSeq
+          .flatMap(c => """`([\w/]+)`""".r.findAllMatchIn(c.group(1)).map(_.group(1)))
+        (m.group(1).stripSuffix(".scala"), callers, cells.lift(4).getOrElse(""))
+      }.toSeq
+    val stale = rows.flatMap { case (unit, callers, _) =>
+      callers.filterNot(c => new File(s"$main/$c.scala").exists).map(c => s"$unit <- $c")
+    }
+    assert(stale.isEmpty, s"anchors name callers with no file: ${stale.mkString("; ")}")
+    val kept = rows.collect { case (unit, _, "keep") => unit }.toSet
+    val servingPath = Seq("api/", "exec/", "aql/", "ingest/")
+    val wrong = rows.flatMap {
+      case (unit, callers, "retire later") =>
+        callers.filter(c => kept(c) || servingPath.exists(c.startsWith)).map(c => s"$unit <- $c")
+      case _ => Nil
+    }
+    assert(wrong.isEmpty, s"retire-later units called by a keep unit: ${wrong.mkString("; ")}")
   }
 
   test("a retired unit's file is gone") {
