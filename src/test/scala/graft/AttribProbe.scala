@@ -1,24 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** q_event_attribution_diff attribution (OPTIMIZATION_r15.md). */
+/** q_event_attribution_diff attribution (OPTIMIZATION_r15.md), on
+  * [[BenchSession.build]]'s session. Run:
+  *   sbt "Test/runMain graft.AttribProbe <sfDir> <cpus>"
+  */
 object AttribProbe {
   def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_REDUCERS", cpus))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${2 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length >= 2, "usage: AttribProbe <sfDir> <cpus>")
+    val d = args(0)
+    val spark = BenchSession.build(d, args(1))
     spark.sparkContext.setLogLevel("ERROR")
     def time(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f

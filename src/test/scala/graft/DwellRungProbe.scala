@@ -1,23 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Exact-vs-approx transition-dwell scale probe (diagnostic main, test
-  * scope — run with `sbt "Test/runMain graft.DwellRungProbe <sfDir>"`):
-  * times `Sessions.transitionDwell` in both percentile modes over the
-  * bucketed events layout and prints the per-pair median drift, so the
-  * approxAccuracy trade documented in the operator scaladoc is a
-  * measured number. Findings recorded in BENCH_NOTES (r14-s2).
+  * scope — run with
+  * `sbt "Test/runMain graft.DwellRungProbe <sfDir> <cpus>"`): times
+  * `Sessions.transitionDwell` in both percentile modes over the bucketed
+  * events layout, on [[BenchSession.build]]'s session, and prints the
+  * per-pair median drift, so the approxAccuracy trade documented in the
+  * operator scaladoc is a measured number. Findings recorded in
+  * BENCH_NOTES (r14-s2).
   */
 object DwellRungProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length >= 2, "usage: DwellRungProbe <sfDir> <cpus>")
+    val dir = args(0)
+    val spark = BenchSession.build(dir, args(1))
     spark.sparkContext.setLogLevel("ERROR")
     def time(what: String)(f: => Long): Long = {
       // min-of-2 like the bench: the host exhibits roving stalls

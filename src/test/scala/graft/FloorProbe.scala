@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
 
 /** Attribution probe for the ~0.1–0.15 s per-gate session floor
@@ -10,25 +9,16 @@ import java.util.concurrent.atomic.AtomicLong
   * execution) vs execution (noop write: AQE stage jobs + task scheduling
   * + codegen), and measure the irreducible minimum (a pre-planned
   * one-row frame's noop write). Flips AQE coalesce `parallelismFirst`
-  * in-session to quantify the post-shuffle task-count contribution.
+  * in-session to quantify the post-shuffle task-count contribution. The
+  * session is [[BenchSession.build]]'s, so the floor is the bench's.
   *
-  * Run: sbt "Test/runMain graft.FloorProbe /root/testdata/sf0.1"
+  * Run: sbt "Test/runMain graft.FloorProbe <sfDir> <cpus>"
   */
 object FloorProbe {
   def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_REDUCERS", cpus))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${2 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length >= 2, "usage: FloorProbe <sfDir> <cpus>")
+    val d = args(0)
+    val spark = BenchSession.build(d, args(1))
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicLong; val tasks = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

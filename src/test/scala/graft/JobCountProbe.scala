@@ -1,29 +1,19 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
 
 /** Per-gate job/stage/task counts (OPTIMIZATION_r15.md): which gates are
-  * overhead-bound (many tiny jobs) vs compute-bound. Run:
-  *   sbt "Test/runMain graft.JobCountProbe /root/testdata/sf0.1 <regex>"
+  * overhead-bound (many tiny jobs) vs compute-bound, on
+  * [[BenchSession.build]]'s session. Run:
+  *   sbt "Test/runMain graft.JobCountProbe <sfDir> <cpus> [regex]"
   */
 object JobCountProbe {
   def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val pattern = args.lift(1).getOrElse("q_").r
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_REDUCERS", cpus))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${2 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length >= 2, "usage: JobCountProbe <sfDir> <cpus> [regex]")
+    val d = args(0)
+    val pattern = args.lift(2).getOrElse("q_").r
+    val spark = BenchSession.build(d, args(1))
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicLong; val stages = new AtomicLong; val tasks = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

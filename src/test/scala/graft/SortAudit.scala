@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Plan-shape audit (diagnostic main, test scope — run with
-  * `sbt "Test/runMain graft.SortAudit"`): lists gates whose physical
+  * `sbt "Test/runMain graft.SortAudit <sfDir> <cpus>"`): lists gates whose physical
   * plan has a global Sort whose range exchange sits over a child with
   * NO further exchange — the shape where the range partitioner's
   * sampling pass re-executes the whole child (nothing below it is
@@ -13,18 +12,15 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * pathological when it is an expensive full-corpus projection (the
   * q_quality_classifier finding, BENCH_NOTES r11: 221 s vs 7 s at sf10
   * — fixed by sorting the cheap input instead). Re-run after adding
-  * gates; flag any new full-corpus expensive-projection hit.
+  * gates; flag any new full-corpus expensive-projection hit. The plans
+  * are the ones [[BenchSession.build]]'s session gives the bench.
   */
 object SortAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length >= 2, "usage: SortAudit <sfDir> <cpus>")
+    val sfDir = args(0)
+    val spark = BenchSession.build(sfDir, args(1))
     spark.sparkContext.setLogLevel("ERROR")
-    val sfDir = "/root/testdata/sf0.001"
     def kids(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         Seq(a.initialPlan)

@@ -1,24 +1,19 @@
 package graft
 
 import graft.operators.Staged
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-probe: cost of one Staged.materialize (parquet round trip) vs one
   * eager localCheckpoint for the node-sized tables the iterative operators
-  * stage per round (OPTIMIZATION_r15.md §staging). Run:
-  *   sbt "Test/runMain graft.StagingProbe"
+  * stage per round (OPTIMIZATION_r15.md §staging), on
+  * [[BenchSession.build]]'s session (`sfDir` only sizes its initial
+  * reducer count). Run:
+  *   sbt "Test/runMain graft.StagingProbe <sfDir> <cpus>"
   */
 object StagingProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length >= 2, "usage: StagingProbe <sfDir> <cpus>")
+    val spark = BenchSession.build(args(0), args(1))
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     // a node-sized table post-shuffle, like a rank table per iteration
