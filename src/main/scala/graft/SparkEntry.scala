@@ -17,7 +17,7 @@ object SparkEntry {
     graft.queries.TimeQueries.defs ++
     graft.queries.FunctionQueries.defs ++
     graft.queries.PipelineQueries.defs ++
-    graft.queries.CurationQueries.defs ++
+    graft.queries.VectorQueries.defs ++
     graft.queries.DataOpsQueries.defs ++
     graft.queries.PackQueries.defs ++
     graft.queries.ExtensionQueries.defs ++

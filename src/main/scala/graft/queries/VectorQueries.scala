@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * one-hot centroids so argmin-L2 reduces to an exact argmax over the
   * first four float components.
   */
-object CurationQueries {
+object VectorQueries {
 
   val defs: Seq[QueryDef] = Seq(
     // --- codegen'd cosine expression ----------------------------------------
