@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * ([[graft.operators.TextRank.ngramUniqueness]]).
   *
   * Oracle strategy: paragraph dedup injects shared HEAD/TAIL paragraphs
-  * around each single-line document and pins the rebuilt text by md5. The float gates follow the
-  * established protocol: exact integer aggregates, a fixed handful of
-  * double ops, ROUND(,4) on both sides.
+  * around each single-line document and pins the rebuilt text by md5.
+  * The float gates follow the established protocol: exact integer
+  * aggregates, a fixed handful of double ops, ROUND(,4) on both sides.
   */
 object MatchQueries {
 
