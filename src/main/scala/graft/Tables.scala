@@ -195,7 +195,7 @@ object Tables {
   }
 
   /** The DEFAULT layout for user-keyed analytics (sessionize / funnel /
-    * cohort / as-of): `events` bucketed AND per-bucket-sorted on
+    * cohort): `events` bucketed AND per-bucket-sorted on
     * (user_id, ts, event_id), built once per (sfDir, source fingerprint)
     * and registered in the session catalog. Every window / aggregation /
     * join keyed on user_id then runs WITHOUT an exchange — the scan itself

@@ -439,38 +439,6 @@ object ExtensionQueries {
           asc_nulls_first("m"))
     },
 
-    // --- interval×interval overlap join: bucketized equi-join + exact
-    // overlap verify + canonical-bucket dedup (one emitted row per
-    // overlapping pair, no distinct) instead of the BroadcastNestedLoop a
-    // raw theta join would plan. Oracle is the plain theta join.
-    QueryDef("q_interval_join",
-      """WITH la AS (
-        |  SELECT event_id AS l_id, CAST(FLOOR(value * 100) AS BIGINT) AS ls
-        |  FROM events WHERE event_id % 97 = 0),
-        |rb AS (
-        |  SELECT event_id AS r_id, CAST(FLOOR(value * 50) AS BIGINT) AS rs
-        |  FROM events WHERE event_id % 89 = 3)
-        |SELECT CAST(l_id % 16 AS BIGINT) AS lb,
-        |  CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |  CAST(SUM(r_id) AS BIGINT) AS sum_r
-        |FROM la JOIN rb ON ls < rs + 12 AND rs < ls + 8
-        |GROUP BY 1 ORDER BY lb NULLS FIRST""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d)
-      val la = ev.where(col("event_id") % 97 === 0)
-        .select(col("event_id").as("l_id"),
-          floor(col("value") * 100).cast("long").as("ls"))
-        .withColumn("le", col("ls") + 8)
-      val rb = ev.where(col("event_id") % 89 === 3)
-        .select(col("event_id").as("r_id"),
-          floor(col("value") * 50).cast("long").as("rs"))
-        .withColumn("re", col("rs") + 12)
-      graft.operators.TemporalJoin.intervalOverlapJoin(
-          la, "ls", "le", rb, "rs", "re", bucketWidth = 16L)
-        .groupBy((col("l_id") % 16).as("lb"))
-        .agg(count(lit(1)).as("n_pairs"), sum("r_id").as("sum_r"))
-        .orderBy(asc_nulls_first("lb"))
-    },
-
     // --- DAU/WAU/MAU + stickiness: exact trailing-window distinct-user
     // counts for every observed day in one pass — distinct (day, user)
     // reduction, map-side fan-out to served as-of days, nearest-gap
@@ -667,60 +635,6 @@ object ExtensionQueries {
         .select(col("etype"), date_format(col("day"), "yyyy-MM-dd").as("day"),
           col("n"), col("z"), col("is_anomaly"))
         .orderBy(asc_nulls_first("etype"), asc_nulls_first("day"))
-    },
-
-    // --- AS-OF (point-in-time) join: each event attaches the latest
-    // reference row at or before its ts. Our operator is the union+window
-    // merge-as-of (one shuffle, no history fan-out); the oracle is
-    // DuckDB's native ASOF LEFT JOIN. Ref rows dedupe to one per
-    // (user, ts) so tie semantics are engine-independent.
-    QueryDef("q_asof_join",
-      """WITH ev AS (
-        |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS ts, event_id, value
-        |  FROM events),
-        |ref AS (
-        |  SELECT user_id, ts, MAX(event_id) AS seq, max_by(value, event_id) AS ref_value
-        |  FROM ev WHERE event_id % 3 = 0 GROUP BY 1, 2)
-        |SELECT e.event_id, CAST(r.seq AS BIGINT) AS ref_seq,
-        |  ROUND(r.ref_value, 4) AS ref_value
-        |FROM ev e ASOF LEFT JOIN ref r
-        |  ON e.user_id = r.user_id AND r.ts <= e.ts
-        |ORDER BY e.event_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val ev = Tables.eventsByUser(s, d).select(col("user_id"),
-        unix_timestamp(col("ts")).as("ts"), col("event_id"), col("value"))
-      val ref = ev.where(col("event_id") % 3 === 0)
-        .groupBy("user_id", "ts")
-        .agg(max("event_id").as("seq"),
-          max_by(col("value"), col("event_id")).as("ref_value"))
-      graft.operators.TemporalJoin.asof(
-          ev.select("user_id", "ts", "event_id"), ref,
-          "user_id", "ts", Seq("seq", "ref_value"), "seq")
-        .select(col("event_id"), col("seq").cast("long").as("ref_seq"),
-          round(col("ref_value"), 4).as("ref_value"))
-        .orderBy("event_id")
-    },
-
-    // --- range join (point-in-interval): bucketized equi-join + exact
-    // verify instead of the BroadcastNestedLoop Spark would pick for a
-    // raw theta join.
-    QueryDef("q_range_join",
-      """WITH pts AS (
-        |  SELECT event_id, CAST(FLOOR(value * 100) AS BIGINT) AS x FROM events),
-        |iv(iid, s, e) AS (VALUES (1, 0, 10), (2, 5, 40), (3, 35, 90), (4, 80, 200))
-        |SELECT CAST(iid AS BIGINT) AS iid, CAST(COUNT(*) AS BIGINT) AS pts_in,
-        |  CAST(SUM(x) AS BIGINT) AS sum_x
-        |FROM pts JOIN iv ON x >= s AND x < e
-        |GROUP BY 1 ORDER BY iid NULLS FIRST""".stripMargin) { (s, d) =>
-      import s.implicits._
-      val pts = Tables.events(s, d).select(col("event_id"),
-        floor(col("value") * 100).cast("long").as("x"))
-      val iv = Seq((1L, 0L, 10L), (2L, 5L, 40L), (3L, 35L, 90L), (4L, 80L, 200L))
-        .toDF("iid", "s", "e")
-      graft.operators.TemporalJoin.rangeJoinPointInInterval(
-          pts, "x", iv, "s", "e", bucketWidth = 16)
-        .groupBy("iid")
-        .agg(count(lit(1)).as("pts_in"), sum("x").as("sum_x"))
-        .orderBy("iid")
     },
 
     // --- set operations (reference TODO sql/readme:7) -----------------------

@@ -128,20 +128,6 @@ class OperatorPlanSpec extends SparkSpec {
       s"all-pairs join crept into containment:\n${plan.take(2000)}")
   }
 
-  test("intervalOverlapJoin plans an equi-join, never BroadcastNestedLoop") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val l = (0L until 500L).map(x => (x, x * 3, x * 3 + 10)).toDF("lid", "ls", "le")
-    val r = (0L until 500L).map(x => (x, x * 5, x * 5 + 7)).toDF("rid", "rs", "re")
-    val plan = planString(
-      TemporalJoin.intervalOverlapJoin(l, "ls", "le", r, "rs", "re", 16L)
-        .groupBy().agg(count(lit(1))))
-    assert(!plan.contains("BroadcastNestedLoopJoin") &&
-      !plan.contains("CartesianProduct"),
-      s"theta join crept into the interval join:\n${plan.take(2000)}")
-    assert(plan.contains("Join"), plan.take(2000))
-  }
-
   test("decayedCount is a plain partial/final aggregate — one exchange") {
     val plan = planString(Sessions.decayedCount(
       Tables.events(spark, sfDir), "ts", Seq("event_type"),
