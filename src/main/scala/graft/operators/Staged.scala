@@ -57,7 +57,7 @@ object Staged {
     * `Dataset.unpersist` only covers CacheManager entries, not checkpoint
     * blocks, which otherwise stay resident until driver GC.
     */
-  def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Dedup, Similarity}
+import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
 /** Gate queries for the round-8 data-pipeline additions: exact cosine
@@ -559,7 +559,7 @@ object DataOpsQueries {
         .orderBy("doc_id", "rank")
     },
 
-    // --- normalized-key dedup: exact dedup one rung below minhash — the
+    // --- normalized-key dedup: exact dedup on a canonical form — the
     // planted copies differ only by case and punctuation, and collapse
     // onto their originals under the canonical form. Pure character-class
     // regex chain, identical in Java regex and RE2.
@@ -577,10 +577,9 @@ object DataOpsQueries {
         docs.withColumn("doc_id", col("doc_id") + 100000)
           .withColumn("text", concat(upper(col("text")), lit(" !!"))))
       // group on the 16-byte CONTENT KEY of the normalized text, not the
-      // text itself (the Dedup.exactDedup shuffle rule): the dedup
-      // exchange moves md5 keys instead of a normalized copy of the
-      // corpus — at 100 TB that is the difference between a key shuffle
-      // and re-shuffling every byte of text
+      // text itself: the dedup exchange moves md5 keys instead of a
+      // normalized copy of the corpus — at 100 TB that is the difference
+      // between a key shuffle and re-shuffling every byte of text
       input.select(
           md5(graft.operators.TextOps.normalizeText(col("text")).cast("binary"))
             .as("__key"),
@@ -588,34 +587,6 @@ object DataOpsQueries {
         .groupBy("__key")
         .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_members"))
         .select("doc_id", "n_members")
-        .orderBy("doc_id")
-    },
-
-    // --- snapshot diff: crawl N (doc_id < 480) vs crawl N+1 (doc_id >=
-    // 20, every 7th text mutated) — added/removed/changed/unchanged per
-    // id. Statuses depend only on content-hash equality; the oracle
-    // replays them with NULL-SAFE text equality (IS NOT DISTINCT FROM —
-    // the engine hashes null columns to equal keys, so null==null must be
-    // 'unchanged' on the oracle side too, not SQL-NULL → 'changed').
-    QueryDef("q_snapshot_diff",
-      """WITH oldv AS (SELECT doc_id, text FROM documents WHERE doc_id < 480),
-        |newv AS (SELECT doc_id,
-        |         CASE WHEN doc_id % 7 = 0 THEN text || ' mutated' ELSE text END AS text
-        |         FROM documents WHERE doc_id >= 20)
-        |SELECT CAST(COALESCE(o.doc_id, n.doc_id) AS BIGINT) AS doc_id,
-        |  CASE WHEN o.doc_id IS NULL THEN 'added'
-        |       WHEN n.doc_id IS NULL THEN 'removed'
-        |       WHEN o.text IS NOT DISTINCT FROM n.text THEN 'unchanged'
-        |       ELSE 'changed' END AS status
-        |FROM oldv o FULL OUTER JOIN newv n USING (doc_id)
-        |ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val oldv = docs.where(col("doc_id") < 480)
-      val newv = docs.where(col("doc_id") >= 20)
-        .withColumn("text", when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" mutated"))).otherwise(col("text")))
-      Dedup.snapshotDiff(oldv, newv, "doc_id", Seq("text"))
-        .select(col("doc_id").cast("long").as("doc_id"), col("status"))
         .orderBy("doc_id")
     },
   )

@@ -1,11 +1,10 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Similarity, TextOps}
+import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
-/** Gate queries for the round-6 training-data operators: connected
-  * components over dedup pairs and SemDeDup-style cluster-then-dedup
+/** Gate query for SemDeDup-style cluster-then-dedup
   * ([[graft.operators.Similarity.semanticNearDups]]).
   *
   * Semantic dedup follows the planted-recall contract of the LSH gates —
@@ -17,66 +16,6 @@ import org.apache.spark.sql.functions._
 object PackQueries {
 
   val defs: Seq[QueryDef] = Seq(
-    // --- connected components over dedup pairs ------------------------------
-    // Planted contract: each doc with doc_id%4 = r > 0 contributes a CHAIN
-    // of r edges over synthetic node ids doc_id + k*10^7 (k = 0..r), so the
-    // component's node count is r+1 and its minimum is doc_id itself. Chains
-    // have diameter up to 3 — the result is only reachable by transitive
-    // propagation, which pins the CC algorithm (not just pair passthrough).
-    QueryDef("q_dedup_groups",
-      """SELECT CAST(doc_id AS BIGINT) AS component,
-        |  CAST(doc_id % 4 + 1 AS BIGINT) AS csize
-        |FROM documents WHERE doc_id % 4 <> 0
-        |ORDER BY component NULLS FIRST""".stripMargin) { (s, d) =>
-      val off = 10000000L
-      val ids = Tables.documents(s, d).select(col("doc_id").cast("long").as("id"))
-      val edges = ids.where(col("id") % 4 =!= 0)
-        .select(col("id"), explode(sequence(lit(0L), col("id") % 4 - 1)).as("k"))
-        .select((col("id") + col("k") * off).as("s"),
-          (col("id") + (col("k") + 1) * off).as("d"))
-      graft.operators.Dedup.connectedComponents(edges, "s", "d")
-        .groupBy("component").agg(count(lit(1)).as("csize"))
-        .orderBy("component")
-    },
-
-    // --- dup-cluster size histogram (corpus observability report) -----------
-    // The "how duplicated is my corpus" report a curation run starts from:
-    // REAL minhash near-dup pairs at 0.35 → connected components → cluster
-    // sizes → (size, n_clusters, n_docs). Oracle recomputes the exact
-    // 3-shingle-jaccard closure with the recursive CTE (sound on this
-    // corpus — banding == exact is the q_pipeline_oracle_guard invariant).
-    QueryDef("q_dedup_cluster_histogram",
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ts)-1),
-        |    i -> array_to_string(ts[i:i+2], ' ')))) AS g
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ts FROM documents)
-        |  WHERE len(ts) >= 3),
-        |szs AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |e0 AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b, COUNT(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |edges AS (
-        |  SELECT a, b FROM e0
-        |  JOIN szs sa ON sa.doc_id = e0.a JOIN szs sb ON sb.doc_id = e0.b
-        |  WHERE 100 * e0.i >= 35 * (sa.n + sb.n - e0.i)),
-        |bidir AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM bidir
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN bidir e ON r.b = e.a),
-        |reps AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS rep FROM reach GROUP BY a),
-        |cs AS (SELECT rep, CAST(COUNT(*) AS BIGINT) AS csize FROM reps GROUP BY rep)
-        |SELECT csize, CAST(COUNT(*) AS BIGINT) AS n_clusters,
-        |  CAST(SUM(csize) AS BIGINT) AS n_docs
-        |FROM cs GROUP BY csize ORDER BY csize NULLS FIRST""".stripMargin) { (s, d) =>
-      graft.operators.Dedup.nearDupComponents(
-          Tables.documents(s, d), "doc_id", "text", 0.35)
-        .groupBy("component").agg(count(lit(1)).as("csize"))
-        .groupBy("csize").agg(count(lit(1)).as("n_clusters"),
-          sum("csize").cast("long").as("n_docs"))
-        .orderBy("csize")
-    },
-
     // --- semantic dedup (cluster-then-cosine, planted-recall contract) ------
     QueryDef("q_semantic_dedup",
       """SELECT CAST(cell AS INT) AS cell, CAST(COUNT(*) AS BIGINT) AS planted,

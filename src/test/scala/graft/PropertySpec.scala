@@ -89,39 +89,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("winnowing guarantee: any shared run >= w+k-1 yields a shared fingerprint") {
-    // pure-Scala replay of the selection rule over random token docs with
-    // a planted shared run — the SIGMOD 2003 theorem, property-checked
-    val k = 3; val w = 4
-    def select(toks: Seq[String]): Set[(Int, Long)] = {
-      val hs = toks.sliding(k).filter(_.size == k)
-        .map(g => graft.functions.Sketches.hash60(g.mkString(" "))).toArray
-      (0 to hs.length - w).map { j =>
-        val sl = hs.slice(j, j + w)
-        val mn = sl.min
-        val pos = j + sl.lastIndexOf(mn)
-        (pos, mn)
-      }.toSet
-    }
-    val word = Gen.oneOf((0 until 50).map(i => s"t$i"))
-    val gen = for {
-      a <- Gen.listOfN(12, word)
-      b <- Gen.listOfN(12, word)
-      run <- Gen.listOfN(w + k - 1, word) // exactly the guarantee length
-    } yield (a, b, run)
-    var seed = Seed(42L)
-    (1 to 200).foreach { _ =>
-      val ((a, b, run), next) = gen.apply(Gen.Parameters.default, seed)
-        .map(v => (v, seed.next)).getOrElse(fail("gen"))
-      seed = next
-      val d1 = a ++ run
-      val d2 = run ++ b
-      val shared = select(d1).map(_._2).intersect(select(d2).map(_._2))
-      assert(shared.nonEmpty,
-        s"no shared fp despite shared run:\n$d1\n$d2")
-    }
-  }
-
   test("hopping windows: every instant is covered by exactly ceil(size/stride) windows") {
     val gen = for {
       stride <- Gen.choose(1L, 60L)

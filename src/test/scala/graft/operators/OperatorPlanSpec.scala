@@ -44,19 +44,6 @@ class OperatorPlanSpec extends SparkSpec {
     assert(plan.contains("TakeOrderedAndProject"), plan.take(2000))
   }
 
-  test("bloomDedupAgainst never shuffle-joins the corpus") {
-    import spark.implicits._
-    val corpus = (0 until 200).map(i => (i.toLong, s"corpus doc $i body"))
-      .toDF("doc_id", "text")
-    val batch = (0 until 50).map(i => (i + 1000L,
-      if (i % 3 == 0) s"corpus doc $i body" else s"fresh doc $i"))
-      .toDF("doc_id", "text")
-    val plan = planString(Dedup.bloomDedupAgainst(batch, corpus, Seq("text"),
-      mBits = 4096, seeds = 3))
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
-      s"corpus-side shuffle join crept into bloomDedupAgainst:\n${plan.take(2000)}")
-  }
-
   test("brute-force ANN broadcasts the query set") {
     val emb = Tables.embeddings(spark, sfDir)
     val plan = planString(Similarity.topKCosine(emb, "vec_id", "embedding",
@@ -93,19 +80,6 @@ class OperatorPlanSpec extends SparkSpec {
       s"per-doc top-k must cap candidates below the exchange:\n${plan.take(2000)}")
   }
 
-  test("dedupAgainst probes the corpus with broadcasts only — corpus never shuffles") {
-    val docs = Tables.documents(spark, sfDir)
-    // batch re-uses corpus texts so the staged hit set is NON-empty — an
-    // empty hit frame elides the anti-join and the assertion sees no join
-    val corpus = docs
-    val batch = docs.where(org.apache.spark.sql.functions.col("doc_id") < 100)
-      .withColumn("doc_id", org.apache.spark.sql.functions.col("doc_id") + 500000)
-    val plan = planString(Dedup.dedupAgainst(batch, corpus, Seq("text")))
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
-    assert(!plan.contains("SortMergeJoin"),
-      s"corpus-side shuffle join crept into dedupAgainst:\n${plan.take(2000)}")
-  }
-
   test("collocations joins the staged count tables — no cartesian, no third corpus scan") {
     val plan = planString(TextRank.collocations(
       Tables.documents(spark, sfDir), "text", minCount = 2))
@@ -115,17 +89,6 @@ class OperatorPlanSpec extends SparkSpec {
     assert(!plan.contains("Generate explode"),
       s"totals re-scanned the corpus:\n${plan.take(2000)}")
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
-  }
-
-  test("containmentPairs never builds an all-pairs space") {
-    val docs = Tables.documents(spark, sfDir)
-      .where(org.apache.spark.sql.functions.col("doc_id") < 150)
-      .select("doc_id", "text")
-    val plan = planString(Dedup.containmentPairs(docs, "doc_id", "text",
-      k = 3, threshold = 0.8))
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      s"all-pairs join crept into containment:\n${plan.take(2000)}")
   }
 
   test("decayedCount is a plain partial/final aggregate — one exchange") {

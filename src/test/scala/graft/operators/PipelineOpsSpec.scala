@@ -3,365 +3,6 @@ package graft.operators
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-class DedupSpec extends SparkSpec {
-
-  private def docs = Tables.documents(spark, sfDir)
-
-  private def planted = {
-    val mutated = docs
-      .withColumn("doc_id", col("doc_id") + 100000)
-      .withColumn("text", concat(col("text"), lit(" zz yy xx")))
-    docs.unionByName(mutated)
-  }
-
-  test("exact dedup removes exact copies only") {
-    val doubled = docs.unionByName(docs.withColumn("doc_id", col("doc_id") + 100000))
-    assert(Dedup.exact(doubled, Seq("text")).count() == docs.count())
-    assert(Dedup.exact(planted, Seq("text")).count() == 2 * docs.count())
-  }
-
-  test("minhash LSH recovers every planted near-dup pair") {
-    val n = docs.count()
-    val pairs = Dedup.minhashNearDups(planted, "doc_id", "text", 0.5)
-      .where(col("b_id") === col("a_id") + 100000)
-    assert(pairs.count() == n, s"expected $n planted pairs")
-    // planted pairs differ by 3 trailing tokens → est jaccard well above 0.5
-    val minEst = pairs.agg(min("est_jaccard")).head().getDouble(0)
-    assert(minEst > 0.5, s"min est $minEst")
-  }
-
-  test("simhash banding finds exactly the planted pairs within the radius") {
-    val n = docs.count()
-    // ground truth: per-pair hamming via direct id join (no LSH involved)
-    val sh = Dedup.simhash(planted, "doc_id", "text")
-    val truth = sh.select(col("doc_id").as("a_id"), col("simhash").as("a_sh"))
-      .join(sh.select((col("doc_id") - 100000).as("a_id"), col("simhash").as("b_sh")), "a_id")
-      .where(bit_count(col("a_sh").bitwiseXOR(col("b_sh"))) <= 8)
-      .count()
-    val found = Dedup.simhashNearDups(planted, "doc_id", "text", 8)
-      .where(col("b_id") === col("a_id") + 100000)
-      .count()
-    // pigeonhole guarantee: banded candidates cover EVERY pair within h=8
-    assert(found == truth, s"banding found $found, ground truth $truth")
-    // sanity: the 3-token mutation keeps most pairs within the radius
-    assert(truth >= (n * 0.85).toLong, s"only $truth of $n planted pairs within h=8")
-  }
-
-  test("incremental dedup: exact copies die in stage 1, mutated in stage 2, fresh docs survive") {
-    import spark.implicits._
-    val corpus = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "one two three four five six seven"),
-      (3L, "red green blue yellow purple orange")).toDF("doc_id", "text")
-    val batch = Seq(
-      (10L, "alpha beta gamma delta epsilon zeta"),          // exact copy of 1
-      (11L, "one two three four five six seven extra"),      // near-dup of 2
-      (12L, "completely different content about planets here"), // fresh
-      (13L, "moons orbit gas giants in the outer system")).toDF("doc_id", "text") // fresh
-    // stage 1 alone: only the exact copy dies
-    val ex = Dedup.dedupAgainst(batch, corpus, Seq("text"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ex == Set(11L, 12L, 13L), ex.toString)
-    // stage 2: the near-dup pair is found with its corpus partner
-    val near = Dedup.nearDupAgainst(batch.where(col("doc_id") =!= 10L), corpus,
-        "doc_id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(near.map(_._1).toSet == Set(11L), near.mkString(", "))
-    assert(near.map(_._2).toSet == Set(2L), near.mkString(", "))
-    // composed: fresh docs only
-    val out = Dedup.incrementalDedup(batch, corpus, "doc_id", "text", 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(out == Set(12L, 13L), out.toString)
-  }
-
-  test("minhashPrecisionAudit: exact copies land in bucket 10, mutations lower") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "alpha beta gamma delta epsilon zeta eta theta"),      // j = 1.0
-      (3L, "alpha beta gamma delta epsilon zeta eta theta iota"), // j = 6/7 vs 1/2
-      (4L, "totally unrelated content with other words here"))
-      .toDF("doc_id", "text")
-    val out = Dedup.minhashPrecisionAudit(docs, "doc_id", "text", 0.35)
-      .orderBy("bucket").collect().map(r => (r.getInt(0), r.getLong(1)))
-    assert(out.exists { case (b, _) => b == 10 }, s"exact pair missing: ${out.toSeq}")
-    assert(out.map(_._2).sum >= 2, s"expected >= 2 audited pairs: ${out.toSeq}")
-    assert(out.forall { case (b, _) => b >= 3 },
-      s"no audited pair can sit below the 0.35 threshold decile: ${out.toSeq}")
-  }
-
-  test("bloom pre-filtered incremental dedup equals the exact anti-join") {
-    import spark.implicits._
-    val corpus = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "one two three four five six seven"),
-      (3L, "red green blue yellow purple orange")).toDF("doc_id", "text")
-    val batch = Seq(
-      (10L, "alpha beta gamma delta epsilon zeta"),  // exact copy of 1
-      (11L, "red green blue yellow purple orange"),  // exact copy of 3
-      (12L, "completely different content about planets here"),
-      (13L, "moons orbit gas giants in the outer system")).toDF("doc_id", "text")
-    val exact = Dedup.dedupAgainst(batch, corpus, Seq("text"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val viaBloom = Dedup.bloomDedupAgainst(batch, corpus, Seq("text"),
-        mBits = 4096, seeds = 3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(viaBloom == exact, s"$viaBloom vs $exact")
-    assert(viaBloom == Set(12L, 13L))
-    // a saturated filter (every probe a false positive) still verifies
-    // everything away exactly — output semantics never degrade
-    val saturated = Dedup.bloomDedupAgainst(batch, corpus, Seq("text"),
-        mBits = 64, seeds = 1)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(saturated == exact, s"saturated filter changed semantics: $saturated")
-  }
-
-  test("incremental dedup against the corpus fixture catches planted cross-dups") {
-    val n = docs.count()
-    val corpus = docs
-    val batch = docs.where(col("doc_id") < 20)
-      .withColumn("doc_id", col("doc_id") + 500000)
-      .withColumn("text", concat(col("text"), lit(" zz yy xx")))
-      .unionByName(docs.where(col("doc_id") < 5)
-        .withColumn("doc_id", col("doc_id") + 600000))
-    val out = Dedup.incrementalDedup(batch, corpus, "doc_id", "text", 0.35)
-    // every planted row (mutated or exact) has a corpus partner → all die
-    assert(out.count() == 0, s"expected all 25 planted rows dropped of $n corpus docs")
-  }
-
-  test("snapshotDiff classifies added/removed/changed/unchanged by content") {
-    import spark.implicits._
-    val oldv = Seq((1L, "same text"), (2L, "will change"), (3L, "goes away"))
-      .toDF("doc_id", "text")
-    val newv = Seq((1L, "same text"), (2L, "has changed"), (4L, "brand new"))
-      .toDF("doc_id", "text")
-    val out = Dedup.snapshotDiff(oldv, newv, "doc_id", Seq("text"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out == Map(1L -> "unchanged", 2L -> "changed",
-      3L -> "removed", 4L -> "added"), out.toString)
-  }
-
-  test("keepBestNearDups keeps the longest member per cluster, singletons always") {
-    import spark.implicits._
-    val input = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "alpha beta gamma delta epsilon zeta eta theta"), // longer near-dup of 1
-      (3L, "totally unrelated text about something else entirely"),
-      (4L, "one two three four five six"),
-      (5L, "one two three four five six")).toDF("doc_id", "text") // exact dup of 4, equal length
-    val out = Dedup.keepBestNearDups(input, "doc_id", "text",
-        length(col("text")), threshold = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // cluster {1,2} → 2 (longer); singleton 3 survives; {4,5} tie → min id 4
-    assert(out == Set(2L, 3L, 4L), out.toString)
-  }
-
-  test("word-set jaccard pairs are symmetric-free and exact") {
-    val pairs = Dedup.wordSetPairs(docs.where(col("doc_id") < 10), "doc_id", "text")
-      .collect()
-    assert(pairs.forall(r => r.getLong(1) > r.getLong(0))) // a_id < b_id once
-    assert(pairs.forall(r => r.getLong(2) <= r.getLong(3))) // inter <= union
-  }
-
-  test("duplicated spans: planted repeats found, unique and short docs clean") {
-    import spark.implicits._
-    val boiler = (1 to 25).map(i => s"tok$i").mkString(" ") // 25 shared tokens
-    val input = Seq(
-      (1L, s"alpha beta $boiler gamma delta"),     // carries the repeat
-      (2L, s"$boiler completely other trailing words here"), // carries it too
-      (3L, (1 to 40).map(i => s"unique${i}x").mkString(" ")), // long, unique
-      (4L, "way too short for any span")           // < spanTokens tokens
-    ).toDF("doc_id", "text")
-    val dup = Dedup.duplicateSpans(input, "doc_id", "text", spanTokens = 20)
-      .collect()
-    val byDoc = dup.groupBy(_.getLong(0)).view.mapValues(_.length).toMap
-    // docs 1 and 2 share >= one full 20-token window of the boilerplate
-    assert(byDoc.getOrElse(1L, 0) > 0, s"doc 1 clean: $byDoc")
-    assert(byDoc.getOrElse(2L, 0) > 0, s"doc 2 clean: $byDoc")
-    // the unique long doc and the short doc are untouched
-    assert(!byDoc.contains(3L), byDoc.toString)
-    assert(!byDoc.contains(4L), byDoc.toString)
-    // every reported occurrence names a hash seen >= 2 times over >= 2 docs here
-    assert(dup.forall(r => r.getLong(3) >= 2))
-    // within-doc repetition is also a duplicate: one doc repeating its own span
-    val selfRep = Seq((9L, (boiler + " ") * 2 + "tail words")).toDF("doc_id", "text")
-    val selfDup = Dedup.duplicateSpans(selfRep, "doc_id", "text", 20).collect()
-    assert(selfDup.nonEmpty, "within-doc repeat not flagged")
-    assert(selfDup.forall(_.getLong(4) == 1L)) // docs=1, occurrences>=2
-  }
-
-  test("span trimming keeps the canonical occurrence and empties exact copies") {
-    import spark.implicits._
-    val body = (1 to 30).map(i => s"w$i").mkString(" ")
-    val input = Seq(
-      (1L, body),                  // canonical (min id) — untouched
-      (2L, body),                  // exact copy — every token covered, empties
-      (3L, "short unique text")    // unaffected
-    ).toDF("doc_id", "text")
-    val out = Dedup.trimDuplicateSpans(input, "doc_id", "text", spanTokens = 20)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(1L) == body, "canonical doc was modified")
-    assert(out(2L) == "", s"copy not emptied: '${out(2L).take(60)}'")
-    assert(out(3L) == "short unique text")
-    // within-doc repeat: the FIRST occurrence survives, the second is cut
-    val rep = Seq((9L, (body + " ") * 2 + "tail")).toDF("doc_id", "text")
-    val trimmed = Dedup.trimDuplicateSpans(rep, "doc_id", "text", 20)
-      .collect().head.getString(1)
-    assert(trimmed.startsWith(body), s"first occurrence damaged: ${trimmed.take(60)}")
-    assert(trimmed.length < (body.length * 2), "second occurrence survived")
-    assert(trimmed.endsWith("tail"))
-  }
-
-  test("span trim indexes align when text leads with a control char") {
-    import spark.implicits._
-    // " " is stripped by Java trim but is NOT regex-\s whitespace:
-    // a trim-based tokenizer sees one fewer leading token than the isWs
-    // span scanner and cuts windows one token off. The control char must
-    // count as a token of its own in BOTH passes.
-    val body = (1 to 30).map(i => s"w$i").mkString(" ")
-    val input = Seq(
-      (1L, body),                    // canonical
-      (2L, "\u0001 " + body)       // copy behind a control-char token
-    ).toDF("doc_id", "text")
-    val out = Dedup.trimDuplicateSpans(input, "doc_id", "text", spanTokens = 20)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(1L) == body, "canonical doc was modified")
-    // doc 2's duplicated windows cover token indexes 1..30 (index 0 is the
-    // control-char token, which survives); a trim-side tokenizer that
-    // Java-trims the control char away shifts every index and leaves "w1"
-    assert(out(2L) == "\u0001", s"misaligned trim: '${out(2L).take(60)}'")
-  }
-
-  test("winnowFingerprints: shared runs guaranteed, short docs empty, selections consistent") {
-    import spark.implicits._
-    val k = 3; val w = 4
-    // docs 1 and 2 share an 8-token run (>= w+k-1 = 6): MUST share a fp.
-    val shared = "alpha beta gamma delta epsilon zeta eta theta"
-    val docs = Seq(
-      (1L, s"one two $shared"),
-      (2L, s"$shared nine ten"),
-      (3L, "tiny doc here"), // 3 tokens -> 1 shingle < w windows -> empty
-      (4L, "completely different words with nothing in common at all ok")
-    ).toDF("doc_id", "text")
-    val fps = Dedup.winnowFingerprints(docs, "doc_id", "text", k, w)
-      .as[(Long, Int, Long)].collect().toSeq
-    val byDoc = fps.groupBy(_._1)
-    assert(!byDoc.contains(3L), "sub-window doc must emit nothing")
-    val f1 = byDoc(1L).map(_._3).toSet
-    val f2 = byDoc(2L).map(_._3).toSet
-    assert(f1.intersect(f2).nonEmpty, s"shared 8-token run produced no shared fp: $f1 / $f2")
-    val f4 = byDoc(4L).map(_._3).toSet
-    assert(f1.intersect(f4).isEmpty, "unrelated docs should not collide here")
-    // each selected fp is the hash of the shingle at its position
-    val toks1 = s"one two $shared".toLowerCase.split("\\s+")
-    byDoc(1L).foreach { case (_, pos, fp) =>
-      val gram = toks1.slice(pos, pos + k).mkString(" ")
-      assert(fp == graft.functions.Sketches.hash60(gram),
-        s"fp at pos $pos is not the shingle hash")
-    }
-    // density: at most one selection per window
-    assert(byDoc(1L).size <= toks1.length - k + 1 - w + 1)
-  }
-
-  test("winnowClonePairs recovers planted copies; hot fingerprints dropped whole") {
-    import spark.implicits._
-    val shared = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val docs = Seq(
-      (1L, s"$shared one two"),
-      (2L, s"three four $shared"),   // shares the long run with 1
-      (3L, "unrelated content entirely about other matters and topics here"),
-      (4L, "more unrelated words that have no overlap with anything else")
-    ).toDF("doc_id", "text")
-    val pairs = Dedup.winnowClonePairs(docs, "doc_id", "text",
-        minShared = 2, maxDocsPerFp = 64)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(pairs.map(p => (p._1, p._2)) == Seq((1L, 2L)), pairs.toString)
-    // cap = 2 with a fingerprint in 3 docs: that fp's bucket dies whole
-    val tri = Seq(
-      (1L, s"$shared one"), (2L, s"$shared two"), (3L, s"$shared three"))
-      .toDF("doc_id", "text")
-    val capped = Dedup.winnowClonePairs(tri, "doc_id", "text",
-        minShared = 1, maxDocsPerFp = 2)
-      .as[(Long, Long, Long)].collect().toSeq
-    val uncapped = Dedup.winnowClonePairs(tri, "doc_id", "text",
-        minShared = 1, maxDocsPerFp = 64)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(uncapped.size == 3, uncapped.toString) // all three pairs share fps
-    assert(capped.map(_._3).sum < uncapped.map(_._3).sum,
-      s"cap did not drop 3-doc fingerprints: $capped vs $uncapped")
-  }
-
-  test("containmentPairs: a quoted fragment scores 1.0 where Jaccard stays low") {
-    import spark.implicits._
-    val long = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val frag = "alpha beta gamma delta epsilon" // first 5 tokens quoted
-    val docs = Seq((1L, long), (2L, frag),
-      (3L, "unrelated words about entirely different topics here"))
-      .toDF("doc_id", "text")
-    val got = Dedup.containmentPairs(docs, "doc_id", "text",
-        k = 3, threshold = 0.8)
-      .as[(Long, Long, Long, Double, Double)].collect().toSeq
-    // |S(frag)| = 3 shingles, all inside the long doc (|S| = 18):
-    // c_ba = 3/3 = 1.0, c_ab = 3/18 — Jaccard would be 3/18 = 0.167
-    assert(got == Seq((1L, 2L, 3L, 0.1667, 1.0)), got.toString)
-  }
-
-  test("containmentPairs: stopword-tier shingles are dropped whole by the cap") {
-    import spark.implicits._
-    val common = "the quick brown" // one shingle shared by all three docs
-    val docs = Seq((1L, s"$common one"), (2L, s"$common two"),
-      (3L, s"$common three")).toDF("doc_id", "text")
-    val uncapped = Dedup.containmentPairs(docs, "doc_id", "text",
-      k = 3, threshold = 0.4, maxDocsPerShingle = 64).count()
-    val capped = Dedup.containmentPairs(docs, "doc_id", "text",
-      k = 3, threshold = 0.4, maxDocsPerShingle = 2).count()
-    assert(uncapped == 3L, s"3-doc shingle should pair everyone: $uncapped")
-    assert(capped == 0L, s"capped bucket must die whole: $capped")
-  }
-
-  test("containmentPairs equals the brute-force definition on random docs") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val k = 3; val cap = 8; val thr = 0.5
-    val docs = (1L to 30L).map { i =>
-      val len = 3 + rnd.nextInt(20)
-      (i, Seq.fill(len)(s"w${rnd.nextInt(12)}").mkString(" "))
-    }
-    def r4(v: Double) =
-      BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    // brute reference: same hash, same cap rule, sizes over ALL shingles
-    val sets = docs.map { case (id, t) =>
-      id -> t.toLowerCase.split("\\s+").toSeq.sliding(k).filter(_.size == k)
-        .map(g => graft.functions.Sketches.hash60(g.mkString(" "))).toSet
-    }.toMap
-    val dfreq = sets.values.flatten.groupBy(identity).map { case (h, o) => h -> o.size }
-    val capped = sets.map { case (id, s) => id -> s.filter(dfreq(_) <= cap) }
-    val expected = (for {
-      a <- docs.map(_._1); b <- docs.map(_._1) if a < b
-      shared = capped(a).intersect(capped(b)).size
-      if shared >= 1
-      cab = shared.toDouble / sets(a).size
-      cba = shared.toDouble / sets(b).size
-      if math.max(cab, cba) >= thr
-    } yield (a, b, shared.toLong, r4(cab), r4(cba))).toSet
-    val got = Dedup.containmentPairs(docs.toDF("doc_id", "text"),
-        "doc_id", "text", k = k, threshold = thr, maxDocsPerShingle = cap)
-      .as[(Long, Long, Long, Double, Double)].collect().toSet
-    assert(got == expected,
-      s"missing=${expected -- got} extra=${got -- expected}")
-    assert(expected.nonEmpty, "degenerate test corpus: no pairs at all")
-  }
-
-  test("winnowFingerprints is shuffle-free") {
-    val plan = Dedup.winnowFingerprints(
-        Tables.documents(spark, sfDir), "doc_id", "text")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"winnowing must stay map-side:\n${plan.take(2000)}")
-  }
-}
-
 class SimilaritySpec extends SparkSpec {
 
   private def emb = Tables.embeddings(spark, sfDir)
