@@ -2,22 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One gate query: a Spark implementation and (when SQL-expressible) an
-  * equivalent ANSI SQL string the driver runs in DuckDB over the same
-  * parquet tables. Column names MUST match between the two (the driver
-  * sorts columns by name before hashing).
+/** One gate query: a Spark implementation and an equivalent ANSI SQL
+  * string that the DuckDB oracle runs over the same parquet tables.
+  * Column names MUST match between the two (the oracle compare sorts
+  * columns by name before hashing).
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QueryDef {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, Some(oracle))
-
-  /** Non-SQL-expressible op → driver records a weaker rows-only check. */
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
+    QueryDef(name, fn, oracle)
 }

@@ -64,7 +64,7 @@ object SparkEntry {
     all.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    all.map(q => q.name -> q.oracle).toMap
 }

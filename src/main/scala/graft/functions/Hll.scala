@@ -159,10 +159,6 @@ object Hll {
   def hllMergeEstimate(c: Column): Column =
     Bridge.column(HllMergeAggregate(expression(c), sketchOutput = false).toAggregateExpression())
 
-  /** Merge pre-computed sketches into a combined sketch. */
-  def hllMergeSketch(c: Column): Column =
-    Bridge.column(HllMergeAggregate(expression(c), sketchOutput = true).toAggregateExpression())
-
   /** Scalar get_hll_value(x): (rho << 16) | registerIndex, the reference's
     * precomputed HLL register column encoding.
     */
