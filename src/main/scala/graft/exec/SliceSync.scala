@@ -38,9 +38,29 @@ object SliceSync {
     * swap rolls back and the marker clears, so broker queries stop
     * reading a torn archive epoch without an operator. A live writer's
     * fresh lock makes the recovery skip.
+    *
+    * Syncs of one local dir run one at a time in this process: a
+    * post-drain hook and a scheduler tick can both call this, and a
+    * second copy of a day would delete the first one's staged bytes
+    * mid-copy. The later caller then finds the day current and copies
+    * nothing.
     */
   def sync(spark: SparkSession, sharedArchiveDir: String, localDir: String,
       topologyDir: String, slice: String): Seq[String] = {
+    val local = new Path(localDir)
+    val key = local.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(local).toString
+    localLanes.computeIfAbsent(key, _ => new Object).synchronized(
+      syncLocked(spark, sharedArchiveDir, localDir, topologyDir, slice))
+  }
+
+  /** One monitor per qualified local dir. Each member owns its local dir,
+    * so a lock inside the process is enough.
+    */
+  private val localLanes = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  private def syncLocked(spark: SparkSession, sharedArchiveDir: String,
+      localDir: String, topologyDir: String, slice: String): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val shared = new Path(sharedArchiveDir)
     val sharedFs = shared.getFileSystem(conf)

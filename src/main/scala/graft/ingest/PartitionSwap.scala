@@ -23,8 +23,10 @@ import graft.exec.GenerationLock
   * PK upsert is idempotent.
   *
   * Archive writers recover under the archive write lock
-  * ([[withArchiveLock]]); local copies take no lock and roll back only
-  * the partition they are about to copy ([[stage]]).
+  * ([[withArchiveLock]]); local copies roll back only the partition they
+  * are about to copy ([[stage]]). Local copies take no file lock: each
+  * member owns its local dir, and [[graft.exec.SliceSync.sync]] runs its
+  * copies into one dir one at a time inside the process.
   */
 object PartitionSwap {
 

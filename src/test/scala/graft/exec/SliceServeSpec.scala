@@ -444,4 +444,88 @@ class SliceServeSpec extends SparkSpec {
         "post-drain: the fresh day serves exactly once")
     } finally Seq(pa, pb).foreach(_.stop())
   }
+
+  test("two syncs of one local dir run one at a time: the day is copied once, whole") {
+    // the post-drain hook and the scheduler tick both call SliceSync.sync
+    // on the member's local dir; the first copy is held inside its staged
+    // write while the second sync starts
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val day = "2030-03-03"
+    val sharedDir = tmp("race-shared")
+    // two data files: a copy torn between them would leave one behind
+    spark.range(0, 200, 1, 2).selectExpr("id AS event_id")
+      .write.parquet(s"$sharedDir/${graft.ingest.Archiver.DayCol}=$day")
+    val localDir = s"latchfs://${tmp("race-local")}"
+    val topoDir = tmp("race-topo") // no assignment published: every day is ours
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.latchfs.impl", classOf[StagingLatchFs].getName)
+    conf.setBoolean("fs.latchfs.impl.disable.cache", true)
+    // the drain marker's overwrite-rename goes through FileContext
+    conf.set("fs.AbstractFileSystem.latchfs.impl", classOf[StagingLatchAfs].getName)
+    def start() = {
+      val out = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, Seq[String]]]()
+      val t = new Thread(() => out.set(
+        try Right(SliceSync.sync(spark, sharedDir, localDir, topoDir, "a"))
+        catch { case e: Throwable => Left(e) }))
+      t.start()
+      (t, out)
+    }
+    try {
+      val (t1, r1) = start()
+      assert(StagingLatchFs.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        s"the first sync never reached its staged copy: ${r1.get}")
+      val (t2, r2) = start()
+      // the second sync either runs to the end or waits for the first
+      def waitsForFirst = t2.getState == Thread.State.BLOCKED &&
+        t2.getStackTrace.headOption.exists(_.getClassName.startsWith("graft.exec.SliceSync"))
+      val deadline = System.nanoTime + 60000000000L
+      while (t2.isAlive && !waitsForFirst && System.nanoTime < deadline) Thread.sleep(5)
+      assert(!t2.isAlive || waitsForFirst, "the second sync neither finished nor waited")
+      StagingLatchFs.release.countDown()
+      Seq(t1, t2).foreach(_.join(60000))
+      assert(!t1.isAlive && !t2.isAlive, "a sync did not return")
+      val copied = Seq(r1.get, r2.get).flatMap {
+        case Left(e) => fail(s"a sync threw: $e", e)
+        case Right(days) => days
+      }
+      assert(SliceSync.fileSet(spark, localDir, day) == SliceSync.fileSet(spark, sharedDir, day),
+        "the local copy must hold exactly the shared day's files")
+      assert(copied == Seq(day), s"the day must be copied exactly once: $copied")
+    } finally {
+      StagingLatchFs.release.countDown()
+      conf.unset("fs.latchfs.impl")
+      conf.unset("fs.latchfs.impl.disable.cache")
+      conf.unset("fs.AbstractFileSystem.latchfs.impl")
+    }
+  }
+}
+
+/** The local filesystem under the `latchfs:` scheme. The first parquet
+  * file created under a partition's staging dir is held open, before any
+  * byte is written, until `release`.
+  */
+class StagingLatchFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  override def getUri: java.net.URI = java.net.URI.create("latchfs:///")
+  override def getScheme: String = "latchfs"
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (f.toString.contains(s"/${graft.ingest.PartitionSwap.Staging}/") &&
+        f.getName.endsWith(".parquet") && StagingLatchFs.armed.compareAndSet(true, false)) {
+      StagingLatchFs.entered.countDown()
+      StagingLatchFs.release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    out
+  }
+}
+
+class StagingLatchAfs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+  extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new StagingLatchFs, conf,
+    "latchfs", false)
+
+object StagingLatchFs {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
 }
