@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Stream–stream interval join — the continuous form of the batch
-  * [[graft.operators.TemporalJoin.rangeJoin]]: each left event pairs with
+/** Stream–stream interval join — the continuous form of a batch range
+  * join on key and time: each left event pairs with
   * the right-stream events for the same key whose timestamp lands in
   * `[left_ts, left_ts + withinSec]` (the impressions×clicks attribution
   * shape). Both sides carry watermarks and the join predicate bounds each
