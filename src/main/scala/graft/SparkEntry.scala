@@ -25,7 +25,6 @@ object SparkEntry {
     graft.queries.IngestQueries.defs ++
     graft.queries.ArrayQueries.defs ++
     graft.queries.CorpusQueries.defs ++
-    graft.queries.MatchQueries.defs ++
     graft.queries.SketchQueries.defs ++
     graft.queries.ExportQueries.defs
 

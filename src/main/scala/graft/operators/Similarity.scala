@@ -546,8 +546,7 @@ object Similarity {
     * ≤ queries×candK survivors with the exact cosine on the ORIGINAL
     * vectors — the standard reduce-index-rerank composition for wide
     * embeddings. Candidate ids broadcast; the full-width corpus is
-    * probed by broadcast join, never scanned for scoring
-    * ([[TextRank.hybridTopK]]'s rerank discipline).
+    * probed by broadcast join, never scanned for scoring.
     */
   def jlRerankTopK(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, k: Int, inDim: Int, outDim: Int, candK: Int,

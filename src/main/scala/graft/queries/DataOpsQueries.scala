@@ -6,13 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Gate queries for the round-8 data-pipeline additions: exact cosine
   * radius search, cluster-balanced sampling and hard-negative mining
-  * ([[graft.operators.Similarity]]) and hybrid BM25→cosine retrieval
-  * ([[graft.operators.TextRank]]).
+  * ([[graft.operators.Similarity]]).
   *
   * Oracle strategy per gate: searches emit ids only, so DuckDB recomputes
   * the same double-precision cosine / argmin-L2 exactly (the
-  * q_emb_near_dup precedent); hybrid retrieval composes the rounded BM25
-  * oracle with an exact cosine rerank.
+  * q_emb_near_dup precedent).
   */
 object DataOpsQueries {
 
@@ -294,8 +292,7 @@ object DataOpsQueries {
     // 0.7·rel − (1−0.7)·max-cos-to-picked; first pick is pure relevance.
     // Selection compares scores ROUNDED to 6 with the smaller-id tiebreak
     // (the q_emb_outliers engine-independence rule). The oracle unrolls
-    // the 5 greedy steps as chained CTEs (the q_graph_pagerank iteration
-    // precedent); (1 - 0.7) is spelled identically in both engines so the
+    // the 5 greedy steps as chained CTEs; (1 - 0.7) is spelled identically in both engines so the
     // IEEE value of the diversity weight matches bit-for-bit.
     QueryDef("q_retrieval_mmr",
       """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS v
@@ -378,185 +375,6 @@ object DataOpsQueries {
         .select(col("query_id"), col("sel_rank"), col("neighbor_id"),
           round(col("score"), 4).as("score"))
         .orderBy("query_id", "sel_rank")
-    },
-
-    // --- hybrid retrieval: BM25 lexical candidates → embedding cosine
-    // rerank (two-stage retrieval; the vector column is touched only for
-    // the ≤ queries×20 candidate ids). Query vectors are the embeddings of
-    // ids 0/1, so the oracle can recompute both stages exactly.
-    QueryDef("q_hybrid_search",
-      """WITH q(query_id, qtext) AS (VALUES (0, 'hash join batch'), (1, 'vector scan')),
-        |qt AS (SELECT query_id, unnest(list_distinct(string_split_regex(trim(lower(qtext)), '\s+'))) AS tok FROM q),
-        |dt AS (SELECT doc_id, len(string_split_regex(trim(lower(text)), '\s+')) AS len,
-        |              unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |       FROM documents),
-        |tf AS (SELECT doc_id, len, tok, CAST(COUNT(*) AS DOUBLE) AS tf FROM dt
-        |       WHERE tok IN (SELECT tok FROM qt) GROUP BY 1, 2, 3),
-        |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-        |                 AVG(len(string_split_regex(trim(lower(text)), '\s+'))) AS avg_len
-        |          FROM documents),
-        |dfreq AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS nt FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT qt.query_id, tf.doc_id,
-        |    ROUND(SUM(ln(1 + (n_docs - nt + 0.5) / (nt + 0.5)) *
-        |      tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.len / avg_len))), 4) AS score
-        |  FROM tf JOIN dfreq USING (tok) CROSS JOIN stats JOIN qt USING (tok)
-        |  GROUP BY 1, 2),
-        |cand AS (SELECT query_id, doc_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-        |    FROM scored) WHERE rank <= 20),
-        |rer AS (SELECT c.query_id, c.doc_id,
-        |    list_cosine_similarity(CAST(qe.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) AS cos
-        |  FROM cand c
-        |  JOIN embeddings e ON e.vec_id = c.doc_id
-        |  JOIN embeddings qe ON qe.vec_id = c.query_id)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS INT) AS rank,
-        |  CAST(doc_id AS BIGINT) AS doc_id
-        |FROM (SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY cos DESC, doc_id) AS rank FROM rer)
-        |WHERE rank <= 5
-        |ORDER BY query_id NULLS FIRST, rank NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val qv = emb.where(col("vec_id") < 2).orderBy("vec_id")
-        .select("embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
-      graft.operators.TextRank.hybridTopK(
-          Tables.documents(s, d), "doc_id", "text", emb, "vec_id", "embedding",
-          Seq((0L, "hash join batch", qv(0)), (1L, "vector scan", qv(1))),
-          kCandidates = 20, k = 5)
-        .orderBy("query_id", "rank")
-    },
-
-    // --- hybrid retrieval by reciprocal rank fusion (r10): BM25 top-20 and
-    // dense cosine top-20 run independently and fuse by Σ 1/(60+rank) —
-    // robust to score-scale mismatch, no calibration. Ranks are integers,
-    // so the fused score is exact; round(6) pins the final order.
-    QueryDef("q_hybrid_rrf",
-      """WITH q(query_id, qtext) AS (VALUES (0, 'hash join batch'), (1, 'vector scan')),
-        |qt AS (SELECT query_id, unnest(list_distinct(string_split_regex(trim(lower(qtext)), '\s+'))) AS tok FROM q),
-        |dt AS (SELECT doc_id, len(string_split_regex(trim(lower(text)), '\s+')) AS len,
-        |              unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |       FROM documents),
-        |tf AS (SELECT doc_id, len, tok, CAST(COUNT(*) AS DOUBLE) AS tf FROM dt
-        |       WHERE tok IN (SELECT tok FROM qt) GROUP BY 1, 2, 3),
-        |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-        |                 AVG(len(string_split_regex(trim(lower(text)), '\s+'))) AS avg_len
-        |          FROM documents),
-        |dfreq AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS nt FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT qt.query_id, tf.doc_id,
-        |    ROUND(SUM(ln(1 + (n_docs - nt + 0.5) / (nt + 0.5)) *
-        |      tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.len / avg_len))), 4) AS score
-        |  FROM tf JOIN dfreq USING (tok) CROSS JOIN stats JOIN qt USING (tok)
-        |  GROUP BY 1, 2),
-        |lex AS (SELECT query_id, doc_id, rank FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score DESC, doc_id) AS rank FROM scored) WHERE rank <= 20),
-        |den AS (SELECT query_id, doc_id, rank FROM (
-        |    SELECT q2.vec_id AS query_id, c.vec_id AS doc_id,
-        |      row_number() OVER (PARTITION BY q2.vec_id
-        |        ORDER BY list_cosine_similarity(CAST(q2.embedding AS DOUBLE[]),
-        |                                        CAST(c.embedding AS DOUBLE[])) DESC,
-        |                 c.vec_id) AS rank
-        |    FROM embeddings q2, embeddings c
-        |    WHERE q2.vec_id < 2 AND c.vec_id != q2.vec_id) WHERE rank <= 20),
-        |fused AS (SELECT coalesce(l.query_id, d2.query_id) AS query_id,
-        |    coalesce(l.doc_id, d2.doc_id) AS doc_id,
-        |    ROUND(coalesce(1.0 / (60 + l.rank), 0) +
-        |          coalesce(1.0 / (60 + d2.rank), 0), 6) AS rrf
-        |  FROM lex l FULL OUTER JOIN den d2
-        |    ON l.query_id = d2.query_id AND l.doc_id = d2.doc_id)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS INT) AS rank,
-        |  CAST(doc_id AS BIGINT) AS doc_id, rrf
-        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY rrf DESC, doc_id) AS rank FROM fused)
-        |WHERE rank <= 10
-        |ORDER BY query_id NULLS FIRST, rank NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val qv = emb.where(col("vec_id") < 2).orderBy("vec_id")
-        .select("embedding").collect()
-        .map(_.getSeq[Float](0).toArray)
-      graft.operators.TextRank.rrfTopK(
-          Tables.documents(s, d), "doc_id", "text", emb, "vec_id", "embedding",
-          Seq((0L, "hash join batch", qv(0)), (1L, "vector scan", qv(1))),
-          kEach = 20, k = 10)
-        .orderBy("query_id", "rank")
-    },
-
-    // --- retrieval metrics (r10): BM25 top-10 scored against the dense
-    // cosine top-10 as the relevance set — the lexical-vs-dense agreement
-    // scorecard. All metrics are integer ratios rounded to 6.
-    QueryDef("q_retrieval_metrics",
-      """WITH q(query_id, qtext) AS (VALUES (0, 'hash join batch'), (1, 'vector scan')),
-        |qt AS (SELECT query_id, unnest(list_distinct(string_split_regex(trim(lower(qtext)), '\s+'))) AS tok FROM q),
-        |dt AS (SELECT doc_id, len(string_split_regex(trim(lower(text)), '\s+')) AS len,
-        |              unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |       FROM documents),
-        |tf AS (SELECT doc_id, len, tok, CAST(COUNT(*) AS DOUBLE) AS tf FROM dt
-        |       WHERE tok IN (SELECT tok FROM qt) GROUP BY 1, 2, 3),
-        |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-        |                 AVG(len(string_split_regex(trim(lower(text)), '\s+'))) AS avg_len
-        |          FROM documents),
-        |dfreq AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS nt FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT qt.query_id, tf.doc_id,
-        |    ROUND(SUM(ln(1 + (n_docs - nt + 0.5) / (nt + 0.5)) *
-        |      tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.len / avg_len))), 4) AS score
-        |  FROM tf JOIN dfreq USING (tok) CROSS JOIN stats JOIN qt USING (tok)
-        |  GROUP BY 1, 2),
-        |lex AS (SELECT query_id, doc_id, rank FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score DESC, doc_id) AS rank FROM scored) WHERE rank <= 10),
-        |den AS (SELECT query_id, doc_id FROM (
-        |    SELECT q2.vec_id AS query_id, c.vec_id AS doc_id,
-        |      row_number() OVER (PARTITION BY q2.vec_id
-        |        ORDER BY list_cosine_similarity(CAST(q2.embedding AS DOUBLE[]),
-        |                                        CAST(c.embedding AS DOUBLE[])) DESC,
-        |                 c.vec_id) AS rank
-        |    FROM embeddings q2, embeddings c
-        |    WHERE q2.vec_id < 2 AND c.vec_id != q2.vec_id) WHERE rank <= 10),
-        |h AS (SELECT l.query_id, COUNT(*) AS hits, MIN(l.rank) AS fr,
-        |        list_sum(list_transform(list_sort(list(l.rank)),
-        |          r -> 1.0 / (ln(r + 1) / ln(2)))) AS dcg
-        |      FROM lex l JOIN den d2
-        |        ON l.query_id = d2.query_id AND l.doc_id = d2.doc_id
-        |      GROUP BY 1),
-        |ts AS (SELECT query_id, COUNT(*) AS n_truth FROM den GROUP BY 1)
-        |SELECT CAST(ts.query_id AS BIGINT) AS query_id,
-        |  CAST(n_truth AS BIGINT) AS n_truth,
-        |  CAST(coalesce(hits, 0) AS BIGINT) AS hits,
-        |  ROUND(coalesce(hits, 0) * 1.0 / n_truth, 6) AS recall,
-        |  ROUND(coalesce(hits, 0) / 10.0, 6) AS p_at_k,
-        |  ROUND(coalesce(1.0 / fr, 0), 6) AS mrr,
-        |  ROUND(coalesce(dcg, 0) / list_sum(list_transform(
-        |    range(1, least(n_truth, 10) + 1),
-        |    i -> 1.0 / (ln(i + 1) / ln(2)))), 6) AS ndcg
-        |FROM ts LEFT JOIN h ON ts.query_id = h.query_id
-        |ORDER BY query_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val lex = graft.operators.TextRank.bm25TopK(Tables.documents(s, d),
-        "doc_id", "text", Seq((0L, "hash join batch"), (1L, "vector scan")), 10)
-      val den = Similarity.topKCosine(emb, "vec_id", "embedding",
-          emb.where(col("vec_id") < 2), 10)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"))
-      graft.operators.TextRank.retrievalMetrics(lex, den, k = 10)
-        .orderBy("query_id")
-    },
-
-    // --- keyword extraction: top-3 TF-IDF terms per document (smoothed
-    // ln((N+1)/(df+1))+1 idf; scores rounded to 4dp, ties by term).
-    QueryDef("q_tfidf_topk",
-      """WITH dt AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok FROM documents),
-        |tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS DOUBLE) AS tf FROM dt GROUP BY 1,2),
-        |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),
-        |dfreq AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
-        |scored AS (SELECT doc_id, tok, ROUND(tf * (ln((n_docs + 1) / (df + 1)) + 1), 4) AS score
-        |           FROM tf JOIN dfreq USING (tok) CROSS JOIN n)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(rank AS INT) AS rank, tok AS term, score
-        |FROM (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, tok) AS rank FROM scored)
-        |WHERE rank <= 3 ORDER BY doc_id NULLS FIRST, rank NULLS FIRST""".stripMargin) { (s, d) =>
-      graft.operators.TextRank.tfidfTopK(Tables.documents(s, d), "doc_id", "text", k = 3)
-        .orderBy("doc_id", "rank")
     },
 
     // --- normalized-key dedup: exact dedup on a canonical form — the

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Similarity, TextOps, TextRank}
+import graft.operators.{Similarity, TextOps}
 import org.apache.spark.sql.functions._
 
 /** Gate queries for the training-data-pipeline operator suite: embedding
@@ -124,55 +124,6 @@ object PipelineQueries {
         .agg(max(col("neighbor_id") === col("query_id") - 100000).as("found_planted"))
         .select((col("query_id") - 100000).as("query_id"), col("found_planted"))
         .orderBy("query_id")
-    },
-
-    // --- text retrieval: BM25 top-k per query. Query vocabulary is
-    // broadcast to prune term-frequency rows before any shuffle; scores
-    // round to 4 decimals on both sides so cross-engine float compare is
-    // exact (RSJ idf, k1=1.2, b=0.75).
-    QueryDef("q_text_bm25",
-      """WITH q(query_id, qtext) AS (VALUES (0, 'hash join batch'), (1, 'vector scan')),
-        |qt AS (SELECT query_id, unnest(list_distinct(string_split_regex(trim(lower(qtext)), '\s+'))) AS tok FROM q),
-        |dt AS (SELECT doc_id, len(string_split_regex(trim(lower(text)), '\s+')) AS len,
-        |              unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-        |       FROM documents),
-        |tf AS (SELECT doc_id, len, tok, CAST(COUNT(*) AS DOUBLE) AS tf FROM dt
-        |       WHERE tok IN (SELECT tok FROM qt) GROUP BY 1, 2, 3),
-        |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-        |                 AVG(len(string_split_regex(trim(lower(text)), '\s+'))) AS avg_len
-        |          FROM documents),
-        |dfreq AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS nt FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT qt.query_id, tf.doc_id,
-        |    ROUND(SUM(ln(1 + (n_docs - nt + 0.5) / (nt + 0.5)) *
-        |      tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.len / avg_len))), 4) AS score
-        |  FROM tf JOIN dfreq USING (tok) CROSS JOIN stats JOIN qt USING (tok)
-        |  GROUP BY 1, 2)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS INT) AS rank,
-        |       CAST(doc_id AS BIGINT) AS doc_id, score
-        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY score DESC, doc_id) AS rank FROM scored)
-        |WHERE rank <= 5
-        |ORDER BY query_id NULLS FIRST, rank NULLS FIRST""".stripMargin) { (s, d) =>
-      TextRank.bm25TopK(Tables.documents(s, d), "doc_id", "text",
-          Seq((0L, "hash join batch"), (1L, "vector scan")), k = 5)
-        .orderBy("query_id", "rank")
-    },
-
-    // --- corpus statistics: top-k word bigrams above a frequency cutoff.
-    // orderBy.limit executes as TakeOrderedAndProject (per-partition heaps,
-    // no global sort).
-    QueryDef("q_text_ngrams",
-      """SELECT ngram, CAST(cnt AS BIGINT) AS cnt FROM (
-        |  SELECT ngram, COUNT(*) AS cnt FROM (
-        |    SELECT unnest(list_transform(range(1, len(toks)),
-        |             i -> array_to_string(toks[i:i+1], ' '))) AS ngram
-        |    FROM (SELECT string_split_regex(trim(lower(text)), '\s+') AS toks
-        |          FROM documents))
-        |  GROUP BY 1 HAVING COUNT(*) >= 20)
-        |ORDER BY cnt DESC, ngram NULLS FIRST LIMIT 20""".stripMargin) { (s, d) =>
-      TextRank.topNgrams(Tables.documents(s, d), "text", n = 2, k = 20,
-        minCount = 20)
     },
 
     // --- corpus statistics: Misra–Gries heavy hitters (mergeable top-k

@@ -83,28 +83,35 @@ class DataOpsSpec extends SparkSpec {
     assert(neg.filter(_._1 == q0).map(_._2).toSeq == brute)
   }
 
-  // --- hybrid retrieval ------------------------------------------------------
+  // --- diverse selection ----------------------------------------------------
 
-  test("hybridTopK reranks exactly the BM25 candidate set by cosine") {
-    val docs = Tables.documents(spark, sfDir)
-    val emb = Tables.embeddings(spark, sfDir)
-    val qv = emb.where(col("vec_id") === 0).select("embedding")
-      .collect().head.getSeq[Float](0).toArray
-    val queries = Seq((0L, "hash join batch", qv))
-    val got = TextRank.hybridTopK(docs, "doc_id", "text",
-        emb, "vec_id", "embedding", queries, kCandidates = 10, k = 3)
-      .orderBy("rank").select("doc_id").as[Long].collect().toSeq
-    // recompute: BM25 candidates then cosine-sort driver-side
-    val cands = TextRank.bm25TopK(docs, "doc_id", "text",
-        Seq((0L, "hash join batch")), k = 10)
-      .select("doc_id").as[Long].collect().toSet
-    val byCos = emb.where(col("vec_id").isInCollection(cands))
-      .select(col("vec_id"),
-        Similarity.cosineHof(
-          lit(qv).cast("array<float>"), col("embedding")).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .select("vec_id").as[Long].take(3).toSeq
-    assert(got == byCos)
+  test("kCenterSelect picks one point per planted orthogonal cluster first") {
+    import spark.implicits._
+    // 4 tight clusters along orthogonal axes; 3 points each. Greedy
+    // farthest-point must cover all 4 clusters within the first 4 picks
+    // (cosine distance between clusters = 1, within ≈ 0).
+    val pts = for {
+      c <- 0 until 4
+      j <- 0 until 3
+    } yield {
+      val v = Array.fill(8)(0.001f * (j + 1))
+      v(c * 2) = 1f
+      ((c * 10 + j).toLong, v.toSeq)
+    }
+    val df = pts.toDF("id", "vec")
+    val sel = Similarity.kCenterSelect(df, "id", "vec", k = 4)
+      .collect().map(r => (r.getInt(0), r.getLong(1), Option(r.get(2))))
+    assert(sel.map(_._1).toSeq == Seq(1, 2, 3, 4))
+    assert(sel.map(_._2 / 10).toSet == Set(0L, 1L, 2L, 3L),
+      s"first 4 picks must cover the 4 clusters: ${sel.toSeq}")
+    assert(sel.head._3.isEmpty, "seed has no radius")
+    val radii = sel.tail.map(_._3.get.asInstanceOf[Double]).toSeq
+    assert(radii == radii.sorted.reverse,
+      s"coverage radius must be non-increasing: ${radii.toSeq}")
+    // 5th pick falls inside a covered cluster → radius collapses near 0
+    val five = Similarity.kCenterSelect(df, "id", "vec", k = 5)
+      .collect().map(r => Option(r.get(2))).last.get.asInstanceOf[Double]
+    assert(five < 0.1, s"5th radius must be within-cluster: $five")
   }
 
   test("groupCentroids averages per dimension; cosineDouble scores exactly") {

@@ -30,20 +30,6 @@ class OperatorPlanSpec extends SparkSpec {
       .map(_.treeString).mkString("\n")
   }
 
-  test("bm25 joins all broadcast — no sort-merge join at any scale of the doc side") {
-    val plan = planString(TextRank.bm25TopK(Tables.documents(spark, sfDir),
-      "doc_id", "text", Seq((0L, "hash join"), (1L, "vector scan")), k = 5))
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
-    assert(!plan.contains("SortMergeJoin"),
-      s"doc-side shuffle join crept into bm25:\n${plan.take(2000)}")
-  }
-
-  test("topNgrams executes the global top-k as TakeOrderedAndProject") {
-    val plan = planString(
-      TextRank.topNgrams(Tables.documents(spark, sfDir), "text", 2, 20, 20))
-    assert(plan.contains("TakeOrderedAndProject"), plan.take(2000))
-  }
-
   test("brute-force ANN broadcasts the query set") {
     val emb = Tables.embeddings(spark, sfDir)
     val plan = planString(Similarity.topKCosine(emb, "vec_id", "embedding",
@@ -71,24 +57,6 @@ class OperatorPlanSpec extends SparkSpec {
       Similarity.clusterBalance(emb, "vec_id", "embedding", centroids, cap = 10))
     assert(plan.contains("WindowGroupLimit"),
       s"per-cell cap must push a partial group limit below the shuffle:\n${plan.take(2000)}")
-  }
-
-  test("tfidfTopK pushes a partial group limit below the per-doc window") {
-    val plan = planString(TextRank.tfidfTopK(
-      Tables.documents(spark, sfDir), "doc_id", "text", k = 3))
-    assert(plan.contains("WindowGroupLimit"),
-      s"per-doc top-k must cap candidates below the exchange:\n${plan.take(2000)}")
-  }
-
-  test("collocations joins the staged count tables — no cartesian, no third corpus scan") {
-    val plan = planString(TextRank.collocations(
-      Tables.documents(spark, sfDir), "text", minCount = 2))
-    assert(!plan.contains("CartesianProduct"), plan.take(2000))
-    // the U/B scalars aggregate off the STAGED count tables: the final
-    // plan must not re-tokenize the corpus (no Generate over a split)
-    assert(!plan.contains("Generate explode"),
-      s"totals re-scanned the corpus:\n${plan.take(2000)}")
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
   }
 
   test("decayedCount is a plain partial/final aggregate — one exchange") {

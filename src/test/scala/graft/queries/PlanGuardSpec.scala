@@ -32,8 +32,6 @@ class PlanGuardSpec extends SparkSpec {
     "q_ann_topk", "q_ann_range",
     "q_retrieval_mmr", "q_hard_negatives", "q_margin_mining",
     "q_emb_near_dup", "q_emb_centroid_sep",
-    // vec_id < 2 probe set broadcast into the corpus
-    "q_retrieval_metrics",
     // per-lang sketch frames theta-joined lang_a < lang_b: bounded by
     // language cardinality (~5 rows a side), pinned by the gate oracle
     "q_sketch_kmv")
