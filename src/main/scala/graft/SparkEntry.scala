@@ -25,8 +25,7 @@ object SparkEntry {
     graft.queries.IngestQueries.defs ++
     graft.queries.ArrayQueries.defs ++
     graft.queries.CorpusQueries.defs ++
-    graft.queries.SketchQueries.defs ++
-    graft.queries.ExportQueries.defs
+    graft.queries.SketchQueries.defs
 
   // the maps below would silently drop a gate on a name collision — with
   // 200+ defs across 14 files, fail loudly at first touch instead
