@@ -30,8 +30,6 @@ final class SliceRouter(topologyDir: String, membersDir: String,
     SliceRebalance.read(topologyDir)
       .flatMap(a => SliceRebalance.extendedOwner(a, day))
 
-  def selfOwns(day: String): Boolean = ownerOf(day).forall(_ == selfSlice)
-
   /** First fresh registered member of `slice` (sorted by member id for
     * determinism); None when the slice has no live member — the caller
     * fails the batch loudly rather than applying rows it doesn't own.

@@ -52,31 +52,6 @@ object Staged {
   }
   private val seq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The RDD a `localCheckpoint` persisted for `df` (its analyzed plan is
-    * a single `LogicalRDD` scan), for explicit release —
-    * `Dataset.unpersist` only covers CacheManager entries, not checkpoint
-    * blocks, which otherwise stay resident until driver GC.
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
-  def releaseCheckpoint(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(_.unpersist(false))
-
-  /** Eagerly materialize an INTRA-operator intermediate via
-    * `localCheckpoint` — about half the cost of the parquet round trip for
-    * the node-sized tables the iterative operators re-stage every round
-    * (no FS write, no commit protocol, no read-back listing; measured 2×
-    * by `graft.StagingProbe`, OPTIMIZATION_r15.md). The blocks stay
-    * resident until [[releaseCheckpoint]], so this is ONLY for
-    * intermediates the operator itself releases before returning; any
-    * frame the RETURNED plan still references must use [[materialize]]
-    * (PersistLifecycleSpec pins zero resident blocks after each gate).
-    */
-  def ephemeral(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
   /** Materialize `df` (a SMALL result frame) to staging and return a
     * self-contained scan of it. Parquet round-trips every Spark SQL type
     * the operators emit (long/double/string/bool) exactly.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -53,49 +53,6 @@ object TextOps {
       transform(sequence(lit(1), size(toks) - (n - 1)),
         i => array_join(slice(toks, i, lit(n)), " ")))
       .otherwise(array().cast(ArrayType(StringType)))
-
-  /** Explode the n-shingles of a BOUND token-array column, one gram row
-    * per window, WITHOUT tripping Catalyst's InferFiltersFromGenerate:
-    * exploding the shingle ARRAY makes the rule infer `size(shingles)>0`
-    * and push it below the binding projection, re-inlining the tokenizer
-    * inside the transform lambda — O(tokens²·regex) hidden in a filter
-    * (BENCH_NOTES round-10 session-3; ~2× on the gram passes here, 40×
-    * on winnowing where the lambda carries the md5 chain). A count-only
-    * generator infers a count-only filter; the gram is built per row by
-    * subscripting the bound attribute. `carry` columns ride along.
-    */
-  def explodeShingles(df: DataFrame, toksCol: String, n: Int,
-      gramCol: String, carry: Seq[String]): DataFrame = {
-    val c = carry.map(col)
-    df.select(c :+ col(toksCol) :+
-        explode(when(size(col(toksCol)) >= n,
-          sequence(lit(1), size(col(toksCol)) - (n - 1)))
-          .otherwise(typedLit(Seq.empty[Int]))).as("__shi"): _*)
-      .select(c :+ array_join(slice(col(toksCol), col("__shi"), lit(n)), " ")
-        .as(gramCol): _*)
-  }
-
-  /** [[explodeShingles]] emitting the md5-prefix HASH of each gram
-    * instead of the gram string — the shape for consumers that key
-    * shuffles/joins on gram identity (n-gram df, containment, the
-    * minhash audit): 8-byte keys move instead of text, and the whole
-    * gram family hashes in ONE fused pass per document
-    * ([[graft.functions.GramHash]]) rather than one
-    * array_join+md5-hex+conv chain per window. Same count-only-generator
-    * discipline; the hash array is BOUND below the Generate and
-    * subscripted per row, so the kernel runs once per document.
-    */
-  def explodeShingleHashes(df: DataFrame, toksCol: String, n: Int,
-      hashCol: String, carry: Seq[String]): DataFrame = {
-    val c = carry.map(col)
-    df.select(c :+ col(toksCol) :+
-        graft.functions.GramHash.shingleHash60Col(col(toksCol), n).as("__shs"): _*)
-      .select(c :+ col("__shs") :+
-        explode(when(size(col(toksCol)) >= n,
-          sequence(lit(1), size(col(toksCol)) - (n - 1)))
-          .otherwise(typedLit(Seq.empty[Int]))).as("__shi"): _*)
-      .select(c :+ element_at(col("__shs"), col("__shi")).as(hashCol): _*)
-  }
 
   /** Canonical text normalization for dedup keys: lowercase, strip
     * everything outside `[a-z0-9]` and whitespace, collapse whitespace
