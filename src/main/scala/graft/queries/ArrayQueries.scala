@@ -37,7 +37,7 @@ object ArrayQueries {
       """SELECT CAST(len(string_split_regex(trim(text), '\s+')) AS INT) AS n_toks,
         |  CAST(COUNT(*) AS BIGINT) AS cnt
         |FROM documents GROUP BY 1 ORDER BY n_toks NULLS FIRST""".stripMargin) { (s, d) =>
-      val toks = graft.operators.TextOps.tokens(col("text"))
+      val toks = split(trim(col("text")), "\\s+")
       Tables.documents(s, d)
         .groupBy(expr("length(toks)", Map("toks" -> toks)).as("n_toks"))
         .agg(count(lit(1)).as("cnt"))
@@ -49,7 +49,7 @@ object ArrayQueries {
       """SELECT list_contains(string_split_regex(trim(text), '\s+'), 'the') AS has_the,
         |  CAST(COUNT(*) AS BIGINT) AS cnt
         |FROM documents GROUP BY 1 ORDER BY has_the NULLS FIRST""".stripMargin) { (s, d) =>
-      val toks = graft.operators.TextOps.tokens(col("text"))
+      val toks = split(trim(col("text")), "\\s+")
       Tables.documents(s, d)
         .groupBy(expr("contains(toks, 'the')", Map("toks" -> toks)).as("has_the"))
         .agg(count(lit(1)).as("cnt"))
