@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.File
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** SCOPE.md, the scope ledger, stays in step with the code: the gates it
   * names above "Retired" are exactly the registered gates, every unit file
@@ -12,6 +13,11 @@ import java.nio.file.{Files, Paths}
   * serving path, and a retired row names a file that is gone. Adding,
   * removing, resizing or retiring a gate or a unit without a ledger edit
   * fails here.
+  *
+  * Two checks cover all of `src/main`: a file that no other `src/main`
+  * file names needs a ledger row that says why it stays (an entry point
+  * or a paper anchor), and a public `def` or `val` that `src/main` names
+  * only once (at its definition) needs an entry in [[definedOnce]].
   */
 class ScopeLedgerSpec extends AnyFunSuite {
 
@@ -24,6 +30,32 @@ class ScopeLedgerSpec extends AnyFunSuite {
   private val unitRow =
     """(?m)^\| `((?:operators|streaming|sources|sinks|functions|plans|queries)/\w+\.scala)` \|(.*)$""".r
   private val main = "src/main/scala/graft"
+
+  /** Every `src/main` Scala file with its text, keyed as SCOPE.md writes
+    * it: relative to `graft/`, or to `scala/` for the bridge package. */
+  private lazy val mainText: Map[String, String] = {
+    val walk = Files.walk(Paths.get("src/main"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    files.map { p: Path =>
+      p.toString.stripPrefix(s"$main/").stripPrefix("src/main/scala/") -> Files.readString(p)
+    }.toMap
+  }
+
+  /** Public names that `src/main` mentions only where it defines them,
+    * each with the reason it stays. A name missing here fails the scan,
+    * and so does an entry whose name is no longer defined once. */
+  private val definedOnce: Map[String, String] = Map(
+    "advanceGroupForTest" -> "test hook: FunnelEquivalenceSpec drives StreamingFunnel's per-user step directly",
+    "beatNow" -> "test hook: the topology specs heartbeat a registration on demand instead of waiting",
+    "enableJobType" -> "test hook: JobSchedulerSpec switches a job type off and on (the reference scheduler's job toggle)",
+    "kmvEstimate" -> "test hook: SketchesSpec checks the KMV estimate; the gates pin the sketch contents instead",
+    "normalizeTextRegex" -> "test hook: the regex baseline TextNormSpec holds TextNorm's kernel equal to",
+    "shingleHash60Col" -> "test hook: GramHashSpec's equality baseline; its last src/main caller left with TextRank, and it goes with GramHash",
+    "upsertStream" -> "test hook: KafkaShapedIngestSpec runs the Kafka-shaped upsert stream, which no server starts (ROADMAP item 8)",
+    "wrapCatalog" -> ("defect, not a test hook: ServerMain attaches a HostMemoryManager and a column-config PUT pins days, " +
+      "but no served catalog is wrapped, so no query reads the cached days; wrapping it as it stands would serve " +
+      "stale days, since no drain or compaction calls invalidate (ROADMAP Carried)"))
 
   test("the ledger names exactly the registered gates") {
     val named = """`(q_[a-z0-9_]+)`""".r.findAllMatchIn(live).map(_.group(1)).toSet
@@ -88,5 +120,47 @@ class ScopeLedgerSpec extends AnyFunSuite {
     val left = unitRow.findAllMatchIn(retired).map(_.group(1))
       .filter(u => new File(s"$main/$u").exists).toSeq
     assert(left.isEmpty, s"retired units still in the tree: $left")
+  }
+
+  test("every src/main file that no other src/main file names has a ledger row that says why") {
+    val unnamed = mainText.keySet.filterNot { f =>
+      val name = ("\\b" + f.split('/').last.stripSuffix(".scala") + "\\b").r
+      mainText.exists { case (g, text) => g != f && name.findFirstIn(text).isDefined }
+    }
+    val units = unitRow.findAllMatchIn(live).map(_.group(1)).toSet
+    val section = live.indexOf("\n## Files that no other") match {
+      case -1 => ""
+      case i => live.substring(i + 1).split("\n## ").head
+    }
+    val rows = """(?m)^\| `([\w/]+\.scala)` \| ([^|]*) \|$""".r.findAllMatchIn(section)
+      .map(m => m.group(1) -> m.group(2).trim).toMap
+    val missing = unnamed -- units -- rows.keySet
+    assert(missing.isEmpty, s"files no other src/main file names, with no ledger row: ${missing.toSeq.sorted}")
+    val stale = rows.keySet -- unnamed
+    assert(stale.isEmpty, s"rows for files another src/main file names: ${stale.toSeq.sorted}")
+    val noReason = rows.collect {
+      case (f, why) if !why.startsWith("entry point") && !why.contains("SURVEY §") => f
+    }
+    assert(noReason.isEmpty, s"rows that name neither an entry point nor a paper anchor: ${noReason.toSeq.sorted}")
+  }
+
+  test("a public def or val that src/main names only once is allowlisted with its reason") {
+    val words = mainText.values.flatMap("""\w+""".r.findAllIn(_))
+      .toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    // public names only, members and locals alike; an override is named by
+    // what it overrides, and a package-qualified private[x] counts as
+    // public because specs reach it
+    val decl = """(?m)^\s*((?:(?:final|lazy|implicit|override|private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*)(?:def|val)\s+([A-Za-z_]\w*)""".r
+    val hidden = """\b(private(?!\[)|protected|override)\b""".r
+    val once = mainText.toSeq.flatMap { case (f, text) =>
+      decl.findAllMatchIn(text).collect {
+        case m if hidden.findFirstIn(m.group(1)).isEmpty && words(m.group(2)) == 1 => m.group(2) -> f
+      }
+    }.toMap
+    val unlisted = once.keySet -- definedOnce.keySet
+    assert(unlisted.isEmpty,
+      s"public names src/main uses only at their definition: ${unlisted.toSeq.sorted.map(n => s"$n (${once(n)})")}")
+    val stale = definedOnce.keySet -- once.keySet
+    assert(stale.isEmpty, s"allowlisted names that are no longer defined once: ${stale.toSeq.sorted}")
   }
 }
