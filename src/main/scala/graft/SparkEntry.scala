@@ -28,7 +28,7 @@ object SparkEntry {
     graft.queries.SketchQueries.defs
 
   // the maps below would silently drop a gate on a name collision — with
-  // 200+ defs across 14 files, fail loudly at first touch instead
+  // 160 defs across 13 files, fail loudly at first touch instead
   require(all.map(_.name).distinct.size == all.size,
     "duplicate gate names: " + all.groupBy(_.name).collect {
       case (n, ds) if ds.size > 1 => n }.mkString(","))

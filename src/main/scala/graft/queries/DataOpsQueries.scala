@@ -292,8 +292,9 @@ object DataOpsQueries {
     // 0.7·rel − (1−0.7)·max-cos-to-picked; first pick is pure relevance.
     // Selection compares scores ROUNDED to 6 with the smaller-id tiebreak
     // (the q_emb_outliers engine-independence rule). The oracle unrolls
-    // the 5 greedy steps as chained CTEs; (1 - 0.7) is spelled identically in both engines so the
-    // IEEE value of the diversity weight matches bit-for-bit.
+    // the 5 greedy steps as chained CTEs; (1 - 0.7) is spelled
+    // identically in both engines so the IEEE value of the diversity
+    // weight matches bit-for-bit.
     QueryDef("q_retrieval_mmr",
       """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings WHERE vec_id < 4),
