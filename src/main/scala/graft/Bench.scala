@@ -197,8 +197,10 @@ object Bench {
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       // operators persist reused intermediates (signatures, LSH buckets);
       // release them between queries so a 150-query session doesn't
-      // accumulate cached corpora
+      // accumulate cached corpora. Resolved parquet relations go too, so
+      // each timed gate pays for its own listing and schema inference
       spark.catalog.clearCache()
+      Tables.dropResolved(spark)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9

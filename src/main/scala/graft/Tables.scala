@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,25 +29,80 @@ object Tables {
     */
   val EventsSortCols: Seq[String] = Seq("event_type", "user_id")
 
-  /** Day-partitioned archive of `events`, built lazily once per (sfDir,
-    * source fingerprint) under `target/graft-archive` and reused by every
-    * query. This is the DEFAULT storage layout for the fact table — the
-    * reference serves queries from day-partitioned sorted archive batches
-    * (/root/reference/memstore/archiving.go:59-141), and the Spark
-    * equivalent is a day-partitioned parquet directory whose partition
-    * column Catalyst statically prunes. At 100 TB the raw single-file
-    * layout full-scans every time-filtered query (the nanos `ts` is a
-    * computed column whose range filters cannot push down); the archive
-    * layout reads only the filtered days.
+  /** Every file under `path` (recursively; `path` itself when it is a
+    * file) as (qualified path, length, mtime), sorted, with no filter —
+    * `_SUCCESS`, hidden and staging files count, so any write under the
+    * directory changes it. One `listStatus` per directory, because
+    * Hadoop's `listFiles(dir, recursive = true)` is far slower on the
+    * local filesystem (CHANGES.md has the measurement). A missing path
+    * has no files.
     */
-  /** (size, mtime) fingerprint of a source parquet — layout caches key on
-    * it so a regenerated fixture invalidates every derived layout.
+  private def leafFiles(fs: FileSystem, path: Path): Vector[(String, Long, Long)] = {
+    def walk(p: Path): Vector[(String, Long, Long)] =
+      fs.listStatus(p).toVector.flatMap { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else Vector((st.getPath.toString, st.getLen, st.getModificationTime))
+      }
+    try walk(path).sorted
+    catch { case _: java.io.FileNotFoundException => Vector.empty }
+  }
+
+  /** One resolved parquet relation per (session, qualified dir,
+    * mergeSchema), with the files it was resolved over. */
+  private final case class Resolved(files: Vector[(String, Long, Long)], df: DataFrame)
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, Boolean), Resolved]()
+
+  /** The parquet relation under `dir`, resolved once per file set: every
+    * call walks `dir` ([[leafFiles]]) and returns the DataFrame of the last
+    * call whose walk found the same files, else resolves it with
+    * `spark.read` (a listing plus a footer-schema inference job) and keeps
+    * that instead. The file set IS the table version, so writers in this
+    * JVM and in others (a peer's drain into a shared archive, a
+    * rebalance process) invalidate it by writing, with no hook.
+    *
+    * A resolve is kept only when a second walk after it finds the files
+    * the first one did, so a kept DataFrame never lists files that a later
+    * walk could match without them. Files are still walked once per call,
+    * where a fresh `spark.read` listed them: a file deleted after that
+    * point fails the read, and a retry that calls here again sees the new
+    * file set.
+    */
+  def parquet(spark: SparkSession, dir: String,
+      mergeSchema: Boolean = false): DataFrame = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = leafFiles(fs, p)
+    val key = (spark, fs.makeQualified(p).toString, mergeSchema)
+    Option(resolved.get(key)).filter(_.files == files).map(_.df).getOrElse {
+      val reader = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
+      val df = reader.parquet(dir)
+      if (leafFiles(fs, p) == files) resolved.put(key, Resolved(files, df))
+      else resolved.remove(key)
+      df
+    }
+  }
+
+  /** Forget `spark`'s resolved relations, so the next read of each dir
+    * pays its listing and schema inference again. */
+  def dropResolved(spark: SparkSession): Unit =
+    resolved.keySet.removeIf(_._1 eq spark)
+
+  private lazy val fixtureConf = new Configuration()
+
+  /** Fingerprint of a source parquet file or directory over its
+    * [[leafFiles]] — layout caches key on it so a regenerated fixture,
+    * or one part file rewritten in place, invalidates every derived layout.
     */
   private def sourceFingerprint(dir: String, srcTable: String): String = {
-    val src = java.nio.file.Paths.get(dir, s"$srcTable.parquet")
-    if (java.nio.file.Files.exists(src))
-      s"${java.nio.file.Files.size(src)}-${java.nio.file.Files.getLastModifiedTime(src).toMillis}"
-    else "missing"
+    val src = new Path(dir, s"$srcTable.parquet")
+    val files = leafFiles(src.getFileSystem(fixtureConf), src)
+    if (files.isEmpty) "missing"
+    else {
+      val digest = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(files.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      digest.take(8).map(b => f"$b%02x").mkString
+    }
   }
 
   def eventsArchivePath(dir: String): String = {
@@ -64,13 +121,24 @@ object Tables {
   private def layoutMonitor(key: String): Object =
     layoutMonitors.getOrElseUpdate(key, new Object)
 
+  /** Day-partitioned archive of `events`, built lazily once per (sfDir,
+    * source fingerprint) under `target/graft-archive` and reused by every
+    * query. This is the DEFAULT storage layout for the fact table — the
+    * reference serves queries from day-partitioned sorted archive batches
+    * (/root/reference/memstore/archiving.go:59-141), and the Spark
+    * equivalent is a day-partitioned parquet directory whose partition
+    * column Catalyst statically prunes. At 100 TB the raw single-file
+    * layout full-scans every time-filtered query (the nanos `ts` is a
+    * computed column whose range filters cannot push down); the archive
+    * layout reads only the filtered days.
+    */
   def eventsArchived(spark: SparkSession, dir: String): DataFrame = {
     val out = eventsArchivePath(dir)
     layoutMonitor(out).synchronized {
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS")))
         graft.ingest.Archiver.archive(events(spark, dir), "ts", EventsSortCols, out)
     }
-    spark.read.parquet(out)
+    parquet(spark, out)
   }
 
   /** Bucket count for the user-keyed events layout. Matches the bench
@@ -235,7 +303,7 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
 
   /** `events.ts` has shipped in two parquet layouts across driver
     * generations: TIMESTAMP(NANOS) — which Spark's TimestampType (µs)
@@ -250,7 +318,7 @@ object Tables {
     * session timezone every entrypoint pins.
     */
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/events.parquet")
+    parquet(spark, s"$dir/events.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

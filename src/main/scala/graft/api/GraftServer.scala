@@ -264,7 +264,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     val under =
       if (sliceServed.contains(name)) base(s)
       else drained.get(name).fold(base(s))(dir =>
-        s.read.option("mergeSchema", "true").parquet(dir))
+        graft.Tables.parquet(s, dir, mergeSchema = true))
     pending.get(name).fold(under)(overlay(name, under, _, s))
   }
 
@@ -336,8 +336,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
         // commit)
         graft.exec.ArchiveEpoch.note(name, graft.ingest.DrainMarker
           .read(sharedDir, s.sparkContext.hadoopConfiguration))
-        val sharedKeys = s.read.option("mergeSchema", "true")
-          .parquet(sharedDir)
+        val sharedKeys = graft.Tables.parquet(s, sharedDir, mergeSchema = true)
           .where(col(graft.ingest.Archiver.DayCol).isin(moved: _*))
           .select(td.primaryKey.map(col): _*)
         delta.where(dayOf.isin(days.filter(ownedPred): _*)).unionByName(
@@ -657,12 +656,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     val conf = spark.sparkContext.hadoopConfiguration
     segs match {
       case table :: "days" :: Nil =>
-        val root = new org.apache.hadoop.fs.Path(bootstrapRoot(table))
-        val fs = root.getFileSystem(conf)
-        val prefix = s"${graft.ingest.Archiver.DayCol}="
-        val days = fs.listStatus(root).filter(_.isDirectory)
-          .map(_.getPath.getName).filter(_.startsWith(prefix))
-          .map(_.stripPrefix(prefix)).sorted
+        val days = graft.exec.SliceBootstrap.localDays(spark, bootstrapRoot(table))
         http.respond(ex, 200, JsonMethods.compact(JsonMethods.render(
           JArray(days.map(JString(_)).toList))))
       case table :: day :: "files" :: Nil =>

@@ -252,5 +252,5 @@ object SliceBootstrap {
   }
 
   private def loadLocal(dir: String, ev: TableDef): SparkSession => DataFrame =
-    s => s.read.parquet(dir)
+    s => graft.Tables.parquet(s, dir)
 }

@@ -398,10 +398,11 @@ object SliceRebalance {
             stale.contains(d) && !purged.contains(d))
           val localScan =
             if (localDays.isEmpty || fromLocal.isEmpty) None
-            else Some(s.read.parquet(localDir).where(col(dayCol).isin(fromLocal: _*)))
+            else Some(graft.Tables.parquet(s, localDir)
+              .where(col(dayCol).isin(fromLocal: _*)))
           val sharedScan =
             if (fromShared.isEmpty) None
-            else Some(s.read.parquet(sharedArchiveDir)
+            else Some(graft.Tables.parquet(s, sharedArchiveDir)
               .where(col(dayCol).isin(fromShared: _*)))
           (localScan, sharedScan) match {
             case (Some(l), Some(sh)) => l.unionByName(sh)
@@ -411,7 +412,7 @@ object SliceRebalance {
           }
         case None =>
           noteServed(0L) // pre-assignment deployment: version 0 by convention
-          s.read.parquet(localDir)
+          graft.Tables.parquet(s, localDir)
       }
     })))
   }

@@ -2,7 +2,6 @@ package graft.ingest
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -53,16 +52,6 @@ final class HostMemoryManager(spark: SparkSession, budgetBytes: Long) {
   private val lock = new Object
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Day partitions present under `archiveDir` (yyyy-MM-dd, sorted). */
-  def archiveDays(archiveDir: String): Seq[String] = {
-    val p = new Path(archiveDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val prefix = s"${Archiver.DayCol}="
-    fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix)).sorted.toSeq
-  }
-
   /** Pin the most recent `preloadingDays` day partitions of `table` at
     * `priority`, then evict to budget. Returns the days newly cached by
     * THIS call (already-resident days are refreshed in place if the
@@ -71,7 +60,7 @@ final class HostMemoryManager(spark: SparkSession, budgetBytes: Long) {
   def preload(table: String, archiveDir: String, preloadingDays: Int,
       priority: Long = 0): Seq[String] = lock.synchronized {
     require(preloadingDays >= 0, s"preloadingDays $preloadingDays must be >= 0")
-    val hot = archiveDays(archiveDir).takeRight(preloadingDays)
+    val hot = graft.exec.SliceBootstrap.localDays(spark, archiveDir).takeRight(preloadingDays)
     val added = Seq.newBuilder[String]
     hot.foreach { day =>
       entries.get((table, day)) match {
@@ -94,7 +83,7 @@ final class HostMemoryManager(spark: SparkSession, budgetBytes: Long) {
     */
   def pin(table: String, archiveDir: String, day: String,
       priority: Long = 0): Boolean = lock.synchronized {
-    if (!archiveDays(archiveDir).contains(day)) return false
+    if (!graft.exec.SliceBootstrap.localDays(spark, archiveDir).contains(day)) return false
     entries.get((table, day)) match {
       case Some(e) => e.priority = priority
       case None =>

@@ -125,4 +125,28 @@ class QueryServiceSpec extends SparkSpec {
     // and a query that finishes inside the deadline is untouched
     assert(svc.withDeadline { 7 } == 7)
   }
+
+  test("a plan whose listed file vanishes before it runs is answered by exactly one retry") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_stale").resolve("t")
+    Seq((1L, "2024-01-01"), (2L, "2024-01-02"), (4L, "2024-01-03")).toDF("v", "day")
+      .coalesce(1).write.partitionBy("day").parquet(dir.toString)
+    def dayFiles(day: String) = java.nio.file.Files.list(dir.resolve(s"day=$day"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    // the first load hands out the resolved relation, then the day file
+    // goes; the retry must resolve the remaining files, not reuse it
+    graft.Tables.parquet(spark, dir.toString)
+    val loads = new java.util.concurrent.atomic.AtomicInteger
+    val cat = Catalog(Map("t" -> graft.aql.TableDef("t", isFact = false, load = s => {
+      val df = graft.Tables.parquet(s, dir.toString)
+      if (loads.incrementAndGet() == 1) dayFiles("2024-01-02").foreach(java.nio.file.Files.delete)
+      df
+    })))
+    val q = AqlJson.parseQuery("""{"table": "t",
+      "measures": [{"alias": "s", "sqlExpression": "sum(v)"}]}""")
+    val answer = new QueryService(cat, spark).answer(q, "aql")
+    assert(loads.get == 2, s"${loads.get} loads")
+    assert(answer == JObject("s" -> JDouble(5.0)), answer)
+  }
 }

@@ -4,6 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import graft.{SparkSpec, Tables}
+import graft.exec.SliceBootstrap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -47,7 +48,7 @@ class HostMemoryManagerSpec extends SparkSpec {
     val dir = archiveDir
     val mgr = new HostMemoryManager(spark, budgetBytes = 1L << 30)
     try {
-      val days = mgr.archiveDays(dir)
+      val days = SliceBootstrap.localDays(spark, dir)
       assert(days.length >= 3, s"fixture needs several days, got $days")
       val added = mgr.preload("events", dir, preloadingDays = 2)
       assert(added == days.takeRight(2), s"$added vs ${days.takeRight(2)}")
@@ -81,7 +82,7 @@ class HostMemoryManagerSpec extends SparkSpec {
 
   test("over-budget preload evicts oldest-first at equal priority and stays identical") {
     val dir = archiveDir
-    val days = new HostMemoryManager(spark, 1L << 30).archiveDays(dir)
+    val days = SliceBootstrap.localDays(spark, dir)
     assert(days.length >= 3)
     // budget ≈ 2.5 days: preloading the full range must shed the oldest
     val mgr = new HostMemoryManager(spark, budgetBytes = oneDayBytes * 5 / 2)
@@ -101,7 +102,7 @@ class HostMemoryManagerSpec extends SparkSpec {
 
   test("priority outranks age in the eviction order") {
     val dir = archiveDir
-    val days = new HostMemoryManager(spark, 1L << 30).archiveDays(dir)
+    val days = SliceBootstrap.localDays(spark, dir)
     // budget ≈ 1.5 days: pin the OLDEST day at priority 10, then preload
     // the newest at priority 0 — the second pin pushes residency over
     // budget and the priority-0 NEWEST day must be the one evicted
@@ -235,7 +236,7 @@ class HostMemoryManagerSpec extends SparkSpec {
     Archiver.archive(ev, "ts", Seq("event_type"), dir)
     val mgr = new HostMemoryManager(spark, budgetBytes = 1L << 30)
     try {
-      val day = mgr.archiveDays(dir).last
+      val day = SliceBootstrap.localDays(spark, dir).last
       assert(mgr.pin("events", dir, day))
       // patch the pinned day in place
       val corrections = ev
