@@ -52,10 +52,7 @@ class ScopeLedgerSpec extends AnyFunSuite {
     "kmvEstimate" -> "test hook: SketchesSpec checks the KMV estimate; the gates pin the sketch contents instead",
     "normalizeTextRegex" -> "test hook: the regex baseline TextNormSpec holds TextNorm's kernel equal to",
     "shingleHash60Col" -> "test hook: GramHashSpec's equality baseline; its last src/main caller left with TextRank, and it goes with GramHash",
-    "upsertStream" -> "test hook: KafkaShapedIngestSpec runs the Kafka-shaped upsert stream, which no server starts (ROADMAP item 8)",
-    "wrapCatalog" -> ("defect, not a test hook: ServerMain attaches a HostMemoryManager and a column-config PUT pins days, " +
-      "but no served catalog is wrapped, so no query reads the cached days; wrapping it as it stands would serve " +
-      "stale days, since no drain or compaction calls invalidate (ROADMAP Carried)"))
+    "upsertStream" -> "test hook: KafkaShapedIngestSpec runs the Kafka-shaped upsert stream, which no server starts (ROADMAP item 8)")
 
   test("the ledger names exactly the registered gates") {
     val named = """`(q_[a-z0-9_]+)`""".r.findAllMatchIn(live).map(_.group(1)).toSet
