@@ -195,9 +195,8 @@ object Bench {
       scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Double)]
     var noisy = 0
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // operators persist reused intermediates (signatures, LSH buckets);
-      // release them between queries so a 150-query session doesn't
-      // accumulate cached corpora. Resolved parquet relations go too, so
+      // drop anything a gate cached between queries, so a long session
+      // doesn't accumulate cached frames. Resolved parquet relations go too, so
       // each timed gate pays for its own listing and schema inference
       spark.catalog.clearCache()
       Tables.dropResolved(spark)

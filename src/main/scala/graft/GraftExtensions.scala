@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 import graft.functions.{BloomAggregate, CmsAggregate, FreqItemsAggregate, GetHllValue, HllAggregate, HllFromRegistersAggregate, HllMergeAggregate, KmvAggregate}
-import org.apache.spark.sql.graftbridge.{CosineSim, CosineSimDouble}
 
 /** SQL surface for the custom Catalyst expressions: registered through
   * `SparkSessionExtensions` (`spark.sql.extensions=graft.GraftExtensions`
@@ -75,12 +74,6 @@ object GraftExtensions {
       (es: Seq[Expression]) =>
         CmsAggregate(es.head, intArg(es(1), "cms_sketch width"),
           intArg(es(2), "cms_sketch depth")).toAggregateExpression()),
-    ("cosine_sim",
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (es: Seq[Expression]) => CosineSim(es.head, es(1))),
-    ("cosine_sim_d",
-      new ExpressionInfo(classOf[CosineSimDouble].getName, "cosine_sim_d"),
-      (es: Seq[Expression]) => CosineSimDouble(es.head, es(1))),
     // text kernels (the byte-walk family) for SQL-only pipelines
     ("tokenize_ws",
       new ExpressionInfo(classOf[graft.functions.TokenizeWsExpr].getName,
@@ -93,22 +86,7 @@ object GraftExtensions {
     ("normalize_text",
       new ExpressionInfo(classOf[graft.functions.NormalizeTextExpr].getName,
         "normalize_text"),
-      (es: Seq[Expression]) => graft.functions.NormalizeTextExpr(es.head)),
-    ("shingle_hash60",
-      new ExpressionInfo(classOf[graft.functions.ShingleHash60Expr].getName,
-        "shingle_hash60"),
-      (es: Seq[Expression]) => graft.functions.ShingleHash60Expr(es.head,
-        intArg(es(1), "shingle_hash60 n"))),
-    ("jl_project",
-      new ExpressionInfo(classOf[graft.operators.JlProject].getName,
-        "jl_project"),
-      (es: Seq[Expression]) => graft.operators.JlProject(
-        // the Column API casts to array<double> before the kernel; the
-        // SQL path must too (a float embedding column is the norm)
-        org.apache.spark.sql.catalyst.expressions.Cast(es.head,
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)),
-        intArg(es(1), "jl_project inDim"), intArg(es(2), "jl_project outDim"))))
+      (es: Seq[Expression]) => graft.functions.NormalizeTextExpr(es.head)))
 
   /** Imperative form for an already-running session (same builders the
     * extensions path injects).

@@ -17,9 +17,7 @@ object SparkEntry {
     graft.queries.TimeQueries.defs ++
     graft.queries.FunctionQueries.defs ++
     graft.queries.PipelineQueries.defs ++
-    graft.queries.VectorQueries.defs ++
     graft.queries.DataOpsQueries.defs ++
-    graft.queries.PackQueries.defs ++
     graft.queries.ExtensionQueries.defs ++
     graft.queries.AqlQueries.defs ++
     graft.queries.IngestQueries.defs ++
@@ -28,7 +26,7 @@ object SparkEntry {
     graft.queries.SketchQueries.defs
 
   // the maps below would silently drop a gate on a name collision — with
-  // 160 defs across 13 files, fail loudly at first touch instead
+  // 140 defs across 11 files, fail loudly at first touch instead
   require(all.map(_.name).distinct.size == all.size,
     "duplicate gate names: " + all.groupBy(_.name).collect {
       case (n, ds) if ds.size > 1 => n }.mkString(","))

@@ -4,24 +4,21 @@ import org.apache.spark.sql.DataFrame
 
 /** Session-scoped staging for eager operator results.
   *
-  * The pipeline operators persist large intermediates (minhash signatures,
-  * LSH bucket assignments, corpus stage boundaries) that are consumed
-  * several times while the operator computes. Returning a LAZY frame would
-  * pin those intermediates for the caller's lifetime — the caller may
-  * materialize (or re-materialize) at any point, so the operator could
-  * never safely unpersist, and a long-lived server accumulated cached
-  * corpora monotonically. Instead the operators materialize their SMALL
-  * result here (one parquet round-trip under `target/graft-staged/<jvm>`)
-  * and release every intermediate before returning. The returned frame is
-  * a plain parquet scan with no cache footprint:
-  * `sparkContext.getPersistentRDDs` is empty after each operator returns
-  * (PersistLifecycleSpec pins this for the gates).
+  * An operator that consumes one intermediate several times (the
+  * per-user event-type sets of `Sessions.coOccurrenceLift`) materializes it
+  * instead of caching it. A cached LAZY frame would stay pinned for the
+  * caller's lifetime — the caller may materialize (or re-materialize) at
+  * any point, so the operator could never safely unpersist, and a
+  * long-lived server would accumulate cached frames monotonically.
+  * Instead the SMALL result takes one parquet round-trip under
+  * `target/graft-staged/<jvm>`, and the returned frame is a plain parquet
+  * scan with no cache footprint.
   *
   * This mirrors the production shape — stage outputs land on storage at
   * job boundaries (the reference archives its batches the same way,
   * /root/reference/memstore/archiving.go:59-141). Staged results are
-  * bounded (near-dup pairs, component maps, pack manifests — never the
-  * corpus); the per-JVM directory is removed on exit.
+  * bounded (per-user sets, never the event stream); the per-JVM directory
+  * is removed on exit.
   */
 object Staged {
   // The staging root is created AND removed through the Hadoop FileSystem

@@ -1,131 +1,20 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Similarity, TextOps}
+import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 
-/** Gate queries for the training-data-pipeline operator suite: embedding
-  * cosine near-dup pairs, similarity search (brute-force + LSH ANN), text
-  * analysis (lang-id, quality, token counts, fingerprints).
+/** Gate queries for the text-analysis operator suite: heavy hitters,
+  * lang-id, quality, token counts and fingerprints.
   *
-  * Hash-based operators (LSH/fingerprints) are engine-specific, so their
+  * Hash-based operators (fingerprints) are engine-specific, so their
   * gates emit exact pinnable values (planted counts, corpus sizes) plus
-  * recall/invariant flags the DuckDB oracle asserts; set algebra, counts,
-  * md5 fingerprints and cosine rankings are directly SQL-expressible.
-  * Every entry is oracle-checked.
+  * invariant flags the DuckDB oracle asserts; counts and md5 fingerprints
+  * are directly SQL-expressible. Every entry is oracle-checked.
   */
 object PipelineQueries {
 
   val defs: Seq[QueryDef] = Seq(
-    // --- dedup: embedding cosine pairs (double math → exact-enough oracle;
-    // ids only, no float in the output)
-    // BOUNDED-SUBSET CONTRACT: exact all-pairs is inherently O(n²)·d — the
-    // gate runs it on a fixed-size id slice so its cost is scale-invariant
-    // (the cap, not the sf, bounds the pair space). The scale path for
-    // full-corpus near-dup is lshNearPairs (q_ann_lsh).
-    QueryDef("q_emb_near_dup",
-      """SELECT a.vec_id AS a_id, b.vec_id AS b_id
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE a.vec_id < 4000 AND b.vec_id < 4000
-        |  AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                             CAST(b.embedding AS DOUBLE[])) >= 0.42
-        |ORDER BY a_id NULLS FIRST, b_id NULLS FIRST""".stripMargin) { (s, d) =>
-      Similarity.exactPairsBlocked(
-          Tables.embeddings(s, d).where(col("vec_id") < 4000),
-          "vec_id", "embedding", 0.42)
-        .select("a_id", "b_id")
-        .orderBy("a_id", "b_id")
-    },
-
-    // --- similarity search: brute-force cosine top-k ------------------------
-    QueryDef("q_ann_topk",
-      """SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |                                      CAST(c.embedding AS DOUBLE[])) DESC,
-        |               c.vec_id) AS rank
-        |  FROM embeddings q, embeddings c
-        |  WHERE q.vec_id < 5 AND c.vec_id != q.vec_id)
-        |WHERE rank <= 3
-        |ORDER BY query_id NULLS FIRST, rank NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      Similarity.topKCosine(emb, "vec_id", "embedding",
-        emb.where(col("vec_id") < 5), 3)
-        .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-    },
-
-    // --- similarity search: LSH-bucketed ANN (scale path). Planted signal:
-    // a lightly-perturbed copy of each vector (cos ≈ 0.999) that multi-table
-    // LSH must recover at ≥90% recall; the oracle pins the corpus size and
-    // asserts the recall flag.
-    QueryDef("q_ann_lsh",
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors, TRUE AS recall_ok
-        |FROM embeddings""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val perturbed = emb
-        .withColumn("vec_id", col("vec_id") + 100000)
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            (x.cast("double") + sin(i.cast("double") * 0.7) * 0.03).cast("float")))
-      Similarity.lshNearPairs(emb.unionByName(perturbed), "vec_id", "embedding",
-          dim = 64, threshold = 0.9)
-        .where(col("b_id") === col("a_id") + 100000)
-        .agg(count(lit(1)).as("found"))
-        .crossJoin(emb.agg(count(lit(1)).as("n_vectors")))
-        .select(col("n_vectors"),
-          (col("found") >= col("n_vectors") * 0.9).as("recall_ok"))
-    },
-
-    // --- similarity search: IVF ANN (the other scale path). Planted
-    // signal: each query is a lightly-perturbed copy of a corpus vector
-    // (cos ≈ 0.999 with its source), which shares the source's coarse cell
-    // with overwhelming probability — IVF must surface the source in its
-    // top-k while probing only nProbe/nlist of the corpus. The flag-based
-    // oracle pins the query set and asserts every planted source is found
-    // (the HLL-tolerance gate pattern).
-    QueryDef("q_ann_ivf",
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, TRUE AS found_planted
-        |FROM embeddings WHERE vec_id < 20
-        |ORDER BY query_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      // id shift keeps the planted source visible (ivfTopK drops self-ids)
-      val queries = emb.where(col("vec_id") < 20)
-        .withColumn("vec_id", col("vec_id") + 100000)
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            (x.cast("double") + sin(i.cast("double") * 1.3) * 0.01).cast("float")))
-      val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding", queries, 5,
-          nlist = 32, nProbe = 4)
-      ivf.groupBy("query_id")
-        .agg(max(col("neighbor_id") === col("query_id") - 100000).as("found_planted"))
-        .select((col("query_id") - 100000).as("query_id"), col("found_planted"))
-        .orderBy("query_id")
-    },
-
-    // --- similarity search: JL-reduce → IVF candidates → exact rerank
-    // (the wide-embedding composition: index small projected vectors,
-    // score survivors on the originals). Same planted contract as
-    // q_ann_ivf; the rerank makes rank-1 exact for planted twins.
-    QueryDef("q_ann_jl_rerank",
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, TRUE AS found_planted
-        |FROM embeddings WHERE vec_id < 20
-        |ORDER BY query_id NULLS FIRST""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 20)
-        .withColumn("vec_id", col("vec_id") + 100000)
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            (x.cast("double") + sin(i.cast("double") * 1.3) * 0.01).cast("float")))
-      Similarity.jlRerankTopK(emb, "vec_id", "embedding", queries, k = 5,
-          inDim = 64, outDim = 16, candK = 20, nlist = 32, nProbe = 8)
-        .groupBy("query_id")
-        .agg(max(col("neighbor_id") === col("query_id") - 100000).as("found_planted"))
-        .select((col("query_id") - 100000).as("query_id"), col("found_planted"))
-        .orderBy("query_id")
-    },
-
     // --- corpus statistics: Misra–Gries heavy hitters (mergeable top-k
     // frequency summary, the cardinality-HLL's frequency sibling). A
     // planted token at ~n/4 occurrences dwarfs the MG error bound

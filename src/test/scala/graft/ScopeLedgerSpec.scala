@@ -51,7 +51,6 @@ class ScopeLedgerSpec extends AnyFunSuite {
     "enableJobType" -> "test hook: JobSchedulerSpec switches a job type off and on (the reference scheduler's job toggle)",
     "kmvEstimate" -> "test hook: SketchesSpec checks the KMV estimate; the gates pin the sketch contents instead",
     "normalizeTextRegex" -> "test hook: the regex baseline TextNormSpec holds TextNorm's kernel equal to",
-    "shingleHash60Col" -> "test hook: GramHashSpec's equality baseline; its last src/main caller left with TextRank, and it goes with GramHash",
     "upsertStream" -> "test hook: KafkaShapedIngestSpec runs the Kafka-shaped upsert stream, which no server starts (ROADMAP item 8)")
 
   test("the ledger names exactly the registered gates") {

@@ -30,35 +30,6 @@ class OperatorPlanSpec extends SparkSpec {
       .map(_.treeString).mkString("\n")
   }
 
-  test("brute-force ANN broadcasts the query set") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val plan = planString(Similarity.topKCosine(emb, "vec_id", "embedding",
-      emb.where(org.apache.spark.sql.functions.col("vec_id") < 3), 2))
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
-      plan.take(2000))
-    assert(!plan.contains("SortMergeJoin"), plan.take(2000))
-  }
-
-  test("rangeSearch broadcasts queries and stays shuffle-free") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val plan = planString(Similarity.rangeSearch(emb, "vec_id", "embedding",
-      emb.where(org.apache.spark.sql.functions.col("vec_id") < 3), 0.3))
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
-      plan.take(2000))
-    assert(!plan.contains("Exchange hashpartitioning") && !plan.contains("SortMergeJoin"),
-      s"rangeSearch must not shuffle the corpus:\n${plan.take(2000)}")
-  }
-
-  test("clusterBalance caps hot cells below the exchange (WindowGroupLimit)") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = Array.tabulate(4)(j => Array.tabulate(64)(i =>
-      if (i == j) 1.0 else 0.0))
-    val plan = planString(
-      Similarity.clusterBalance(emb, "vec_id", "embedding", centroids, cap = 10))
-    assert(plan.contains("WindowGroupLimit"),
-      s"per-cell cap must push a partial group limit below the shuffle:\n${plan.take(2000)}")
-  }
-
   test("decayedCount is a plain partial/final aggregate — one exchange") {
     val plan = planString(Sessions.decayedCount(
       Tables.events(spark, sfDir), "ts", Seq("event_type"),

@@ -13,9 +13,9 @@ import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
   * its BROADCAST side is structurally bounded — a global aggregate
   * (exactly one row: the decimal-exact scalar threshold/max/avg pattern)
   * or a literal LocalTableScan (driver-computed boundary grids) — or the
-  * gate is on the named allowlist of bounded-QUERY-set broadcasts (ANN
-  * probes and planted-signal joins whose build side is a filtered
-  * handful of rows, pinned by their own family audits).
+  * gate is on the named allowlist of bounded-QUERY-set broadcasts (joins
+  * whose build side is a filtered handful of rows, pinned by their own
+  * gate oracle).
   *
   * This is the sweep version of OperatorPlanSpec's per-family audits: a
   * future gate that degrades to an unbounded nested loop fails HERE even
@@ -25,13 +25,9 @@ import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 class PlanGuardSpec extends SparkSpec {
 
   /** Bounded-query-set broadcasts: the build side is a filtered tiny
-    * frame (planted queries, probe ids) rather than a scalar — each is
-    * pinned by its family's dedicated audit or fixture contract.
+    * frame rather than a scalar, pinned by the gate's oracle.
     */
   private val boundedQueryGates: Set[String] = Set(
-    "q_ann_topk", "q_ann_range",
-    "q_retrieval_mmr", "q_hard_negatives", "q_margin_mining",
-    "q_emb_near_dup", "q_emb_centroid_sep",
     // per-lang sketch frames theta-joined lang_a < lang_b: bounded by
     // language cardinality (~5 rows a side), pinned by the gate oracle
     "q_sketch_kmv")
