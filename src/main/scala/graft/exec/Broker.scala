@@ -213,7 +213,8 @@ final class Broker private (sliceProvider: () => Seq[Seq[String]],
   def aql(queryJson: String): String =
     JsonMethods.compact(JsonMethods.render(merged(AqlJson.parseQuery(queryJson))))
 
-  def merged(q0: AqlQuery): JValue = {
+  def merged(request: AqlQuery): JValue = {
+    val q0 = Broker.pinNow(request)
     require(q0.measures.length == 1,
       "broker merges single-measure queries (the reference compiler enforces the same)")
     ExprParser.parse(q0.measures.head.sqlExpression) match {
@@ -376,7 +377,7 @@ final class Broker private (sliceProvider: () => Seq[Seq[String]],
     * the broker's response unchanged.
     */
   def aqlHllBinary(q0: AqlQuery): Array[Byte] = {
-    val q = stripSort(q0)
+    val q = stripSort(Broker.pinNow(q0))
     ExprParser.parse(q.measures.head.sqlExpression) match {
       case Expr.Call(op, _) if Broker.HllOps(op) =>
       case _ => throw new IllegalArgumentException(
@@ -532,6 +533,16 @@ object Broker {
 
   private val FoldOps = Set("sum", "count", "min", "max")
   private val HllOps = Set("countdistincthll", "hll")
+
+  /** The request with `now` fixed once, at the broker's epoch second when
+    * the client gave none. Every member and every component wave (avg's
+    * sum and count, a derived measure's aggregates) then resolves relative
+    * times such as `-1d`, `today` or a missing `to` against the same
+    * instant; without it each compile falls back to its own clock and a
+    * request straddling a second or a day boundary merges mixed windows.
+    */
+  private def pinNow(q: AqlQuery): AqlQuery =
+    if (q.now.isDefined) q else q.copy(now = Some(System.currentTimeMillis() / 1000))
 
   /** The reference's avg split (splitAvgQuery, query_plan_agg.go:439-469):
     * `avg(a)` becomes `sum(a) / count(a)`, the null-skipping count the

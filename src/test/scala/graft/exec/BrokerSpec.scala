@@ -454,6 +454,48 @@ class BrokerSpec extends SparkSpec {
     } finally stub.stop(0)
   }
 
+  test("the broker pins one now per request and passes a client's now through") {
+    // stub members record every request body and answer with no rows, so
+    // the case needs no clock control and no sleeps: an avg over two
+    // slices scatters sum and count to each, four bodies in all
+    val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def stub() = {
+      val srv = com.sun.net.httpserver.HttpServer.create(
+        new java.net.InetSocketAddress("localhost", 0), 0)
+      srv.createContext("/query/aql", exchange => {
+        bodies.add(new String(exchange.getRequestBody.readAllBytes()))
+        val empty = """{"results":[{}],"errors":[null]}""".getBytes
+        exchange.sendResponseHeaders(200, empty.length)
+        exchange.getResponseBody.write(empty)
+        exchange.close()
+      })
+      srv.start()
+      srv
+    }
+    val stubs = Seq(stub(), stub())
+    try {
+      val b = new Broker(stubs.map(s => s"http://localhost:${s.getAddress.getPort}"))
+      def nows(queryJson: String): Seq[Option[BigInt]] = {
+        bodies.clear()
+        b.aql(queryJson)
+        import scala.jdk.CollectionConverters._
+        bodies.asScala.toSeq.map(body => (JsonMethods.parse(body) \ "queries")(0) \ "now" match {
+          case JInt(n) => Some(n)
+          case _ => None
+        })
+      }
+      val noNow = """{"table": "events",
+        "measures": [{"alias": "value", "sqlExpression": "avg(value)"}],
+        "dimensions": [{"alias": "et", "sqlExpression": "event_type"}],
+        "timeFilter": {"from": "-1d"}}"""
+      val pinned = nows(noNow)
+      assert(pinned.size == 4, pinned)
+      assert(pinned.forall(_.isDefined) && pinned.distinct.size == 1,
+        s"every member and component wave must carry one now: $pinned")
+      assert(nows(query("avg(value)")) == Seq.fill(4)(Some(BigInt(1706659200))))
+    } finally stubs.foreach(_.stop(0))
+  }
+
   test("dynamic topology: instances join the fan-out at runtime, stale members demote") {
     // three disjoint day slices; p3 is NOT registered at first
     val D1 = "2024-01-10"
