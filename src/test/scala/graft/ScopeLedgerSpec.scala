@@ -6,7 +6,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** SCOPE.md, the scope ledger, stays in step with the code: the gates it
-  * names above "Retired" are exactly the registered gates, every unit file
+  * names above "Retired" are exactly the registered gates, its
+  * "Registered gates: N." line counts them, every unit file
   * under the ledger directories has exactly one ledger row whose Lines
   * column is the file's line count, every caller an anchor names is a
   * live file, no "retire later" unit is called by a "keep" unit or the
@@ -52,6 +53,12 @@ class ScopeLedgerSpec extends AnyFunSuite {
     "kmvEstimate" -> "test hook: SketchesSpec checks the KMV estimate; the gates pin the sketch contents instead",
     "normalizeTextRegex" -> "test hook: the regex baseline TextNormSpec holds TextNorm's kernel equal to",
     "upsertStream" -> "test hook: KafkaShapedIngestSpec runs the Kafka-shaped upsert stream, which no server starts (ROADMAP item 8)")
+
+  test("the ledger's gate count is the number of registered gates") {
+    val counted = """(?m)^Registered gates: (\d+)\.$""".r.findFirstMatchIn(live).map(_.group(1).toInt)
+    assert(counted.contains(SparkEntry.all.size),
+      s"SCOPE.md says 'Registered gates: ${counted.getOrElse("?")}.', SparkEntry.all has ${SparkEntry.all.size}")
+  }
 
   test("the ledger names exactly the registered gates") {
     val named = """`(q_[a-z0-9_]+)`""".r.findAllMatchIn(live).map(_.group(1)).toSet
