@@ -67,6 +67,11 @@ import org.apache.spark.sql.SparkSession
   *                           /data batches append here before apply and
   *                           replay on restart, so HTTP-ingested rows
   *                           survive a crash; drains truncate it
+  *   SPARK_GRAFT_CACHE_BUDGET  hot-partition cache budget in bytes
+  *                           (0/unset = no cache manager); column-config
+  *                           preloadingDays/priority updates then pin
+  *                           recent archive days in executor memory
+  *                           (HostMemoryManager, /dbg/cache)
   */
 object ServerMain {
   def main(args: Array[String]): Unit = {
@@ -143,6 +148,11 @@ object ServerMain {
         case _ => None
       })
     server.start()
+    sys.env.get("SPARK_GRAFT_CACHE_BUDGET").flatMap(_.toLongOption)
+      .filter(_ > 0).foreach { budget =>
+        server.memoryManager = Some(new graft.ingest.HostMemoryManager(spark, budget))
+        println(s"[graft] hot-partition cache manager attached, budget $budget bytes")
+      }
     // slice-mode drain→serve loop: with a shared archive configured,
     // events drains land in the SHARED archive (delta-promoted) and each
     // member pulls down the days it serves — immediately after its own

@@ -409,13 +409,6 @@ class GraftServerSpec extends SparkSpec {
     val upd = put("/schema/tables/rides/columns/tip", """{"priority": 5}""")
     assert(upd.statusCode() == 200)
     assert((JsonMethods.parse(upd.body()) \ "version").extract[Int] == v0 + 1)
-    // the reference's nested config form; both knobs survive a read-back
-    val cfg = put("/schema/tables/rides/columns/tip",
-      """{"config": {"preloadingDays": 1, "priority": 7}}""")
-    assert(cfg.statusCode() == 200, cfg.body())
-    val readBack = get("/schema/tables/rides").body()
-    assert(readBack.contains(""""preloadingDays":1""") &&
-      readBack.contains(""""priority":7"""), readBack)
   }
 
   test("drain folds the live overlay into a day-partitioned archive") {
