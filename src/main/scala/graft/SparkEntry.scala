@@ -16,14 +16,10 @@ object SparkEntry {
     graft.queries.CoreQueries.defs ++
     graft.queries.TimeQueries.defs ++
     graft.queries.FunctionQueries.defs ++
-    graft.queries.PipelineQueries.defs ++
-    graft.queries.DataOpsQueries.defs ++
     graft.queries.ExtensionQueries.defs ++
     graft.queries.AqlQueries.defs ++
     graft.queries.IngestQueries.defs ++
-    graft.queries.ArrayQueries.defs ++
-    graft.queries.CorpusQueries.defs ++
-    graft.queries.SketchQueries.defs
+    graft.queries.ArrayQueries.defs
 
   // the maps below would silently drop a gate on a name collision — with
   // 140 defs across 11 files, fail loudly at first touch instead

@@ -50,8 +50,6 @@ class ScopeLedgerSpec extends AnyFunSuite {
     "advanceGroupForTest" -> "test hook: FunnelEquivalenceSpec drives StreamingFunnel's per-user step directly",
     "beatNow" -> "test hook: the topology specs heartbeat a registration on demand instead of waiting",
     "enableJobType" -> "test hook: JobSchedulerSpec switches a job type off and on (the reference scheduler's job toggle)",
-    "kmvEstimate" -> "test hook: SketchesSpec checks the KMV estimate; the gates pin the sketch contents instead",
-    "normalizeTextRegex" -> "test hook: the regex baseline TextNormSpec holds TextNorm's kernel equal to",
     "upsertStream" -> "test hook: KafkaShapedIngestSpec runs the Kafka-shaped upsert stream, which no server starts (ROADMAP item 8)",
     "wrapCatalog" -> ("defect, not a test hook: ServerMain attaches a HostMemoryManager and a column-config PUT pins days, " +
       "but no served catalog is wrapped, so no query reads the cached days; wrapping it as it stands would serve " +
