@@ -593,34 +593,6 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     }
   }
 
-  /** Attached hot-partition cache manager; its residency report serves
-    * at GET /dbg/cache — the reference's host-memory-manager debug
-    * surface (memstore/host_memory_manager.go totalMemorySize /
-    * managedMemorySize accounting via api/debug_handler.go).
-    */
-  @volatile var memoryManager: Option[graft.ingest.HostMemoryManager] = None
-  http.mount("/dbg/cache") { ex =>
-    http.respond(ex, 200, memoryManager.map(_.statusJson).getOrElse("{}"))
-  }
-
-  /** The reference fires a preloadJob when a column's
-    * preloadingDays/priority config changes (host_memory_manager.go's
-    * preloadJobChan); here the table-level effective policy is the max
-    * over active columns (Spark's columnar cache gives per-column
-    * residency within a cached day for free) applied to the table's
-    * archive, when one exists and a manager is attached.
-    */
-  private def applyPreloadPolicy(table: String, schema: AqlTableSchema): Unit =
-    for {
-      mgr <- memoryManager
-      dir <- archiveDir(table)
-    } {
-      val active = schema.activeColumns
-      val days = active.map(_.preloadingDays).maxOption.getOrElse(0)
-      val prio = active.map(_.priority).maxOption.getOrElse(0L)
-      if (days > 0) mgr.preload(table, dir, days, prio)
-    }
-
   /** Archive roots served to bootstrapping peers (table → local archive
     * dir) — set by the deployment (ServerMain wires the scheduler's
     * archive root); tables drained at runtime serve from [[drained]]
@@ -1070,9 +1042,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
         ok(SchemaStore.renderTable(
           schemaStore.addColumn(t, SchemaStore.parseColumn(j), addToSort)))
       case ("PUT", t :: "columns" :: c :: Nil) =>
-        val updated = schemaStore.updateColumn(t, c, body())
-        applyPreloadPolicy(t, updated)
-        ok(SchemaStore.renderTable(updated))
+        ok(SchemaStore.renderTable(schemaStore.updateColumn(t, c, body())))
       case ("DELETE", t :: "columns" :: c :: Nil) =>
         ok(SchemaStore.renderTable(schemaStore.deleteColumn(t, c)))
       case ("GET", t :: "columns" :: c :: "enum-cases" :: Nil) =>

@@ -74,9 +74,6 @@ object OpenApi {
     "/dbg/jobs" -> JObject("get" -> op(
       "Periodic-job scheduler details (per-table archive/backfill/" +
         "snapshot/purge run records)")),
-    "/dbg/cache" -> JObject("get" -> op(
-      "Hot-partition cache residency: byte budget, resident bytes, " +
-        "per-day entries with priority")),
     "/dbg/trigger/{table}/{job}" -> JObject(
       pathParams("table", "job"),
       "post" -> op("Manually kick one scheduler job INLINE (response " +

@@ -18,9 +18,8 @@ import graft.aql.ParseException
 /** @param preloadingDays / @param priority the reference's per-column
   *   ColumnConfig eviction knobs (model.go:20-36) — how many recent days
   *   to pin in host memory and the eviction priority (high number = high
-  *   priority). Honored by [[graft.ingest.HostMemoryManager]] at
-  *   table-level granularity (Spark's columnar cache stores per-column
-  *   batches, so per-column residency is the cache format's job).
+  *   priority). Outside clients send them, so they are stored and echoed
+  *   back on the wire; nothing here acts on them.
   */
 final case class AqlColumn(
     name: String,
@@ -305,9 +304,8 @@ final class SchemaStore {
     }
 
   /** Update a column's config — only preloadingDays/priority are
-    * updatable (schema_request.go:82-94's ColumnConfig). The stored knobs
-    * drive [[graft.ingest.HostMemoryManager]] preloading (the reference's
-    * preloadJob fires on exactly this update, host_memory_manager.go:30-35).
+    * updatable (schema_request.go:82-94's ColumnConfig). The knobs are
+    * stored and rendered back; no cache or preload acts on them.
     */
   def updateColumn(name: String, colName: String,
       configBody: String = "{}"): AqlTableSchema = synchronized {

@@ -50,10 +50,7 @@ class ScopeLedgerSpec extends AnyFunSuite {
     "advanceGroupForTest" -> "test hook: FunnelEquivalenceSpec drives StreamingFunnel's per-user step directly",
     "beatNow" -> "test hook: the topology specs heartbeat a registration on demand instead of waiting",
     "enableJobType" -> "test hook: JobSchedulerSpec switches a job type off and on (the reference scheduler's job toggle)",
-    "upsertStream" -> "test hook: KafkaShapedIngestSpec runs the Kafka-shaped upsert stream, which no server starts (ROADMAP item 8)",
-    "wrapCatalog" -> ("defect, not a test hook: ServerMain attaches a HostMemoryManager and a column-config PUT pins days, " +
-      "but no served catalog is wrapped, so no query reads the cached days; wrapping it as it stands would serve " +
-      "stale days, since no drain or compaction calls invalidate (ROADMAP Carried)"))
+    "upsertStream" -> "test hook: KafkaShapedIngestSpec runs the Kafka-shaped upsert stream, which no server starts (ROADMAP item 8)")
 
   test("the ledger's gate count is the number of registered gates") {
     val counted = """(?m)^Registered gates: (\d+)\.$""".r.findFirstMatchIn(live).map(_.group(1).toInt)
