@@ -21,8 +21,8 @@ object SparkEntry {
     graft.queries.IngestQueries.defs ++
     graft.queries.ArrayQueries.defs
 
-  // the maps below would silently drop a gate on a name collision — with
-  // 140 defs across 11 files, fail loudly at first touch instead
+  // the maps below would silently drop a gate on a name collision; fail
+  // loudly at first touch instead
   require(all.map(_.name).distinct.size == all.size,
     "duplicate gate names: " + all.groupBy(_.name).collect {
       case (n, ds) if ds.size > 1 => n }.mkString(","))

@@ -12,10 +12,8 @@ import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
   * CartesianProduct, and a BroadcastNestedLoopJoin is legal only when
   * its BROADCAST side is structurally bounded — a global aggregate
   * (exactly one row: the decimal-exact scalar threshold/max/avg pattern)
-  * or a literal LocalTableScan (driver-computed boundary grids) — or the
-  * gate is on the named allowlist of bounded-QUERY-set broadcasts (joins
-  * whose build side is a filtered handful of rows, pinned by their own
-  * gate oracle).
+  * or a literal LocalTableScan (driver-computed boundary grids). No gate
+  * is exempt.
   *
   * This is the sweep version of OperatorPlanSpec's per-family audits: a
   * future gate that degrades to an unbounded nested loop fails HERE even
@@ -23,14 +21,6 @@ import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
   * AQE's initial planning but not executed.
   */
 class PlanGuardSpec extends SparkSpec {
-
-  /** Bounded-query-set broadcasts: the build side is a filtered tiny
-    * frame rather than a scalar, pinned by the gate's oracle.
-    */
-  private val boundedQueryGates: Set[String] = Set(
-    // per-lang sketch frames theta-joined lang_a < lang_b: bounded by
-    // language cardinality (~5 rows a side), pinned by the gate oracle
-    "q_sketch_kmv")
 
   private def walk(p: SparkPlan): Seq[SparkPlan] = {
     val nested: Seq[SparkPlan] = p match {
@@ -86,7 +76,7 @@ class PlanGuardSpec extends SparkSpec {
             case BuildLeft => b.left
             case BuildRight => b.right
           }
-          if (!boundedBuildSide(bcast) && !boundedQueryGates(name))
+          if (!boundedBuildSide(bcast))
             violations += s"$name: BNLJ with unbounded build side:\n" +
               bcast.treeString.take(500)
         }
